@@ -30,10 +30,12 @@ EXCEPTIONS = 2
 NUM_RUNS = 5  # runs of 256, 128, 64, 32, 16 zeros -> codes 2..6
 RESERVED = EXCEPTIONS + NUM_RUNS  # 7
 BLOCK_SIZE = 256
-# decode_long_lists_batch size-class boundary: lists below this posting
-# count take the cross-list vectorized pass (measured ~2x there); lists at
-# or above it keep the per-list cross-block pass (measured faster there)
-CROSS_LIST_MAX_N = 1024
+# decode_blocks' one size rule: a BIC lane set smaller than this takes the
+# recursive bic_decode, since the lockstep DFS pays ~2*max(m) numpy rounds
+# whatever its width. Measured crossover on a 4-core host: the recursion
+# wins up to ~1k lanes (14x at 32 lanes), the lockstep from ~1-2k lanes
+# (1.5x at 4k)
+BIC_LOCKSTEP_MIN_LANES = 1024
 MAX_ENTRY_SIZE = 16
 NUM_ENTRIES = 65536
 TARGET_SIZES = (16, 8, 4, 2, 1)
@@ -172,17 +174,21 @@ def _vbyte_decode_single(data: bytes, pos: int) -> tuple[int, int]:
         shift += 7
 
 
-def _vbyte_decode_batch(buf: np.ndarray, pos: np.ndarray
+def _vbyte_decode_batch(buf: np.ndarray, pos: np.ndarray, lim: np.ndarray
                         ) -> tuple[np.ndarray, np.ndarray]:
     """Decode one TightVariableByte value at each of many positions in one
-    lockstep pass (<= 10 byte rounds for u64 values; 1-2 in practice for
-    block sums). Returns (values, end_positions)."""
+    lockstep pass (1-2 byte rounds in practice for block sums). Value i
+    must end by byte lim[i] and fit 7 bytes (block sums are < 2^40), else
+    ValueError. Returns (values, end_positions)."""
     pos = np.asarray(pos, dtype=np.int64)
     vals = np.zeros(len(pos), dtype=np.int64)
     ends = pos.copy()
     live = np.arange(len(pos))
     shift = 0
     while len(live):
+        if shift > 42 or (ends[live] >= lim[live]).any():
+            raise ValueError("corrupt DINT payload: vbyte sum runs past "
+                             "its block")
         b = buf[ends[live]].astype(np.int64)
         vals[live] |= (b & 0x7F) << shift
         ends[live] += 1
@@ -222,14 +228,16 @@ def bic_decode(data: bytes, pos: int, n: int, sum_of_values: int
 
 
 def bic_decode_batch(buf: np.ndarray, bit_pos: np.ndarray, ns: np.ndarray,
-                     sums: np.ndarray) -> np.ndarray:
+                     sums: np.ndarray, end_bits: np.ndarray | None = None
+                     ) -> np.ndarray:
     """Decode MANY interpolative-coded value blocks in one vectorized pass.
 
     buf: concatenated little-endian byte buffer (u8, padded with >= 8 zero
     bytes); bit_pos[i]: absolute starting BIT offset of block i's stream;
     ns[i]: value count; sums[i]: known sum (vbyte prefixes already
     consumed by the caller). Returns the concatenated per-block values
-    (the gap/f-1 streams, like bic_decode), int64.
+    (the gap/f-1 streams, like bic_decode), int64. With ``end_bits``, a
+    block whose reads pass its end bit raises ValueError.
 
     The recursion order of read_interpolative is a preorder DFS whose bit
     offsets are data-dependent, so blocks cannot be decoded level-by-level
@@ -321,7 +329,8 @@ def bic_decode_batch(buf: np.ndarray, bit_pos: np.ndarray, ns: np.ndarray,
         if extra.any():
             e = idx[extra]
             p2 = pos[e]
-            bit = (buf[p2 >> 3].astype(np.int64) >> (p2 & 7)) & 1
+            byte = buf[np.minimum(p2 >> 3, len(buf) - 1)]
+            bit = (byte.astype(np.int64) >> (p2 & 7)) & 1
             val[extra] = (val[extra] << 1) + bit - m[extra]
             pos[e] = p2 + 1
         val = val + lo
@@ -350,101 +359,14 @@ def bic_decode_batch(buf: np.ndarray, bit_pos: np.ndarray, ns: np.ndarray,
             stf[3, kl] = val[lm]
             sp[lft] = t + 1
 
+    if end_bits is not None and (pos > end_bits).any():
+        raise ValueError("corrupt DINT payload: BIC block reads past its "
+                         "span")
     # prefix values -> per-block gaps (out[1:] -= out[:-1] within blocks)
     gaps = np.empty_like(out)
     gaps[1:] = out[1:] - out[:-1]
     gaps[base] = out[base]
     return gaps
-
-
-def decode_short_lists_batch(payloads: list, ns: np.ndarray,
-                             last_docids: np.ndarray,
-                             freq_starts: np.ndarray,
-                             want_freqs: bool = True
-                             ) -> tuple[np.ndarray, np.ndarray | None,
-                                        np.ndarray]:
-    """Batch-decode many SHORT (n < BLOCK_SIZE, single-block BIC) posting
-    lists. Returns (docs_concat, freqs_concat|None, offsets). The docs
-    stream starts at byte 0 with known universe = last_docid - (n-1); the
-    freqs stream starts at freq_starts with a vbyte sum prefix."""
-    L = len(payloads)
-    ns = np.asarray(ns, dtype=np.int64)
-    last_docids = np.asarray(last_docids, dtype=np.int64)
-    freq_starts = np.asarray(freq_starts, dtype=np.int64)
-
-    # iteration count of the lockstep DFS is max(n) over the batch, so a
-    # few long-tail lists would make every iteration past the typical n
-    # pure overhead: split into size classes (n<=32 holds the bulk of a
-    # Zipfian vocabulary), and fall back to the per-list python decoder
-    # when a class is too small to amortize the vectorized loop.
-    # Window the input CONTIGUOUSLY (~8k lists) and size-class within each
-    # window: a global sort would scatter every window's output writes
-    # across the whole result array, and the cache-miss traffic measured
-    # 7x slower at 60k lists on this host class.
-    win = 8192
-    offsets = np.zeros(L + 1, dtype=np.int64)
-    np.cumsum(ns, out=offsets[1:])
-    docs_out = np.empty(int(offsets[-1]), dtype=np.int64)
-    freqs_out = np.empty(int(offsets[-1]), dtype=np.int64) if want_freqs else None
-
-    def _decode_class(idx: np.ndarray) -> None:
-        if not len(idx):
-            return
-        if len(idx) < 64:  # too few to amortize: per-list python path
-            for i in idx:
-                i = int(i)
-                n = int(ns[i])
-                universe = int(last_docids[i]) - (n - 1)
-                gaps, _ = bic_decode(payloads[i], 0, n, universe)
-                docs_out[offsets[i]: offsets[i + 1]] = (
-                    np.cumsum(gaps.astype(np.int64) + 1) - 1)
-                if want_freqs:
-                    fv, _ = bic_decode(payloads[i], int(freq_starts[i]), n, -1)
-                    freqs_out[offsets[i]: offsets[i + 1]] = (
-                        fv.astype(np.int64) + 1)
-            return
-        pls = [payloads[int(i)] for i in idx]
-        sub_ns = ns[idx]
-        lens = np.fromiter((len(p) for p in pls), dtype=np.int64,
-                           count=len(pls))
-        starts = np.zeros(len(pls), dtype=np.int64)
-        np.cumsum(lens[:-1], out=starts[1:])
-        buf = np.frombuffer(b"".join(pls) + b"\x00" * 16, dtype=np.uint8)
-        universes = last_docids[idx] - (sub_ns - 1)
-        sub_off = np.zeros(len(pls) + 1, dtype=np.int64)
-        np.cumsum(sub_ns, out=sub_off[1:])
-        scatter = (np.repeat(offsets[idx] - sub_off[:-1], sub_ns)
-                   + np.arange(int(sub_off[-1])))
-        if want_freqs:
-            # ONE lockstep run for BOTH streams: each list's docs stream
-            # and freqs stream enter as independent DFS lanes (same n,
-            # freq sums from the lockstep vbyte prefix pass), halving
-            # the iteration count at double the vector width — the
-            # iteration overhead, not the data, is what the loop pays
-            fpos = starts + freq_starts[idx]
-            fsums, fends = _vbyte_decode_batch(buf, fpos)
-            both = bic_decode_batch(
-                buf,
-                np.concatenate([starts * 8, fends * 8]),
-                np.concatenate([sub_ns, sub_ns]),
-                np.concatenate([universes, fsums]))
-            half = int(sub_off[-1])
-            gaps = both[:half]
-            freqs_out[scatter] = both[half:] + 1
-        else:
-            gaps = bic_decode_batch(buf, starts * 8, sub_ns, universes)
-        # segmented cumsum of (gap + 1) - 1 = docids, restarting per list
-        g1 = gaps + 1
-        c = np.cumsum(g1)
-        seg_base = np.repeat(c[sub_off[:-1]] - g1[sub_off[:-1]], sub_ns)
-        docs_out[scatter] = c - seg_base - 1
-
-    for s in range(0, L, win):
-        sub = np.arange(s, min(s + win, L))
-        order = sub[np.argsort(ns[sub], kind="stable")]
-        _decode_class(order[ns[order] <= 32])
-        _decode_class(order[ns[order] > 32])
-    return docs_out, freqs_out, offsets
 
 
 def bic_encode_batch(vals: np.ndarray, ns: np.ndarray, sums: np.ndarray
@@ -985,9 +907,13 @@ def encode_full_blocks_batch(vals2d: np.ndarray, dct,
 # --------------------------------------------------------------------------
 
 def _decode_codes(codes: np.ndarray, n: int, table2d: np.ndarray,
-                  sizes: np.ndarray) -> tuple[np.ndarray, int]:
+                  sizes: np.ndarray, block_slots: np.ndarray | None = None
+                  ) -> tuple[np.ndarray, int]:
     """Decode exactly n ints from an array of u16 codeword slots; returns
-    (values, slots_consumed).
+    (values, slots_consumed). ``block_slots`` marks the slots as whole
+    full blocks back to back (cumulative slot ends): each must decode to
+    exactly BLOCK_SIZE ints with no exception reaching past its last slot,
+    else ValueError.
 
     Two passes: (1) a Python scan over only the *flagged* slots (code < 2)
     resolves which are real exception codes vs. literal value slots that
@@ -1029,8 +955,16 @@ def _decode_codes(codes: np.ndarray, n: int, table2d: np.ndarray,
         out_w[vs[vs < nslots]] = 0
         big = real[widths == 3] + 2
         out_w[big[big < nslots]] = 0
-
     cum = np.cumsum(out_w)
+    if block_slots is not None:
+        spill = (real is not None and len(real) and (
+            real + widths
+            > block_slots[np.searchsorted(block_slots, real, "right")]).any())
+        if spill or (np.concatenate(([0], cum))[block_slots] != BLOCK_SIZE
+                     * np.arange(1, len(block_slots) + 1)).any():
+            raise ValueError("corrupt DINT payload: a full block's "
+                             "codewords do not decode to BLOCK_SIZE ints")
+
     k = int(np.searchsorted(cum, n, side="left")) + 1
     k = min(k, nslots)
     total_out = int(cum[k - 1]) if k else 0
@@ -1120,10 +1054,9 @@ def _check_u32_domain(docs: np.ndarray, freqs: np.ndarray, n: int) -> None:
 def _bic_encode_groups(blocks: list[np.ndarray], sums: list[int],
                        win: int = 8192) -> list[bytes]:
     """bic_encode_batch over heterogeneous blocks: contiguous windows,
-    size-classed within each window (same layout rationale as
-    decode_short_lists_batch — the lockstep step count is max(n) of the
-    batch, so one long tail would make every step past the typical n pure
-    overhead)."""
+    size-classed within each window (the lockstep step count is max(n)
+    of the batch, so one long tail would make every step past the typical
+    n pure overhead)."""
     L = len(blocks)
     out: list[bytes] = [b""] * L
     if not L:
@@ -1380,351 +1313,253 @@ def encode_value_streams_batch(streams: list[np.ndarray], dct,
     return out
 
 
-def decode_value_stream(payload: bytes, n: int, endpoints: np.ndarray,
-                        dct) -> np.ndarray:
-    """Decode a full value stream written by encode_value_streams_batch.
-    Full blocks decode in one vectorized cross-block pass (the same
-    _decode_grouped gather as the freqs stream); the tail via the per-block
-    path (decode_block with the self-delimiting sum=-1 convention)."""
-    payload = bytes(payload)
-    endpoints = np.asarray(endpoints, dtype=np.int64)
-    nblocks = (n + BLOCK_SIZE - 1) // BLOCK_SIZE
-    nfull = n // BLOCK_SIZE
-    parts: list[np.ndarray] = []
-    if nfull:
-        starts = endpoints[:nfull]
-        ends = np.empty(nfull, dtype=np.int64)
-        ends[:-1] = endpoints[1:nfull]
-        ends[-1] = endpoints[nfull] if nblocks > nfull else len(payload)
-        parts.append(_decode_grouped(payload, starts, ends, dct,
-                                     BLOCK_SIZE).astype(np.int64))
-    if nblocks > nfull:
-        tail_n = n - nfull * BLOCK_SIZE
-        vals, _ = decode_block(payload, int(endpoints[nfull]), tail_n, -1,
-                               dct)
-        parts.append(vals.astype(np.int64))
-    if not parts:
-        return np.empty(0, dtype=np.int64)
-    return parts[0] if len(parts) == 1 else np.concatenate(parts)
+# --------------------------------------------------------------------------
+# the block decoder: one batch of block descriptors, every consumer
+# --------------------------------------------------------------------------
+
+def _corrupt(what: str) -> ValueError:
+    return ValueError(f"corrupt DINT payload: {what}")
 
 
-def _concat_decode(payload: bytes, starts: np.ndarray, ends: np.ndarray,
-                   table2d: np.ndarray, sizes: np.ndarray,
-                   count_per_block: int) -> np.ndarray:
-    """Decode several byte-spans of u16 codewords (one per full block) in a
-    single vectorized pass over their concatenation. Each span must decode to
-    exactly ``count_per_block`` ints."""
-    arr8 = np.frombuffer(payload, dtype=np.uint8)
-    lens = ends - starts  # even: u16 codeword streams
-    cum = np.cumsum(lens)
-    total = int(cum[-1])
-    # gather all span bytes with one fancy-index (no per-span frombuffer)
-    idx = np.arange(total, dtype=np.int64)
+def _decode_full_blocks(arr: np.ndarray, starts: np.ndarray,
+                        ends: np.ndarray, dct, out: np.ndarray,
+                        offs: np.ndarray) -> None:
+    """Full blocks of one dictionary: one _decode_codes pass over their
+    concatenated codeword spans [starts, ends), block j written to
+    out[offs[j]:offs[j] + BLOCK_SIZE]."""
+    lens = ends - starts
+    if (lens & 1).any():
+        raise _corrupt("odd-length codeword span")
+    cum = lens.cumsum()
+    idx = np.arange(int(cum[-1]), dtype=np.int64)
     idx += np.repeat(starts - (cum - lens), lens)
-    codes = arr8[idx].view(_U16)
-    vals, _ = _decode_codes(codes, count_per_block * len(starts), table2d,
-                            sizes)
-    return vals
+    vals, _ = _decode_codes(arr[idx].view(_U16), BLOCK_SIZE * len(starts),
+                            dct.table2d, dct.sizes, block_slots=cum >> 1)
+    if offs[-1] - offs[0] == BLOCK_SIZE * (len(offs) - 1):  # contiguous
+        out[offs[0]:offs[0] + len(vals)] = vals
+    else:
+        out[(offs[:, None] + np.arange(BLOCK_SIZE)).ravel()] = vals
 
 
-def _decode_grouped(payload: bytes, starts: np.ndarray, ends: np.ndarray,
-                    dct, count_per_block: int) -> np.ndarray:
-    """Like _concat_decode but dispatching per-block dictionary selectors for
-    MultiDictionary streams (1 selector byte per block,
-    ref include/dint/dint_codecs.hpp:410-432)."""
-    dicts = getattr(dct, "dicts", None)
-    if dicts is None:
-        return _concat_decode(payload, starts, ends, dct.table2d, dct.sizes,
-                              count_per_block)
-    sel = np.frombuffer(payload, dtype=np.uint8)[starts]
-    out = np.empty(count_per_block * len(starts), dtype=np.uint32)
-    span = np.arange(count_per_block)
-    for s in np.unique(sel):
-        idx = np.flatnonzero(sel == s)
-        d = dicts[int(s)]
-        vals = _concat_decode(payload, starts[idx] + 1, ends[idx], d.table2d,
-                              d.sizes, count_per_block)
-        out[(idx[:, None] * count_per_block + span[None, :]).ravel()] = vals
+def _decode_bic_blocks(buf: bytes, out: np.ndarray, offs: np.ndarray,
+                       m: np.ndarray, start: np.ndarray, end: np.ndarray,
+                       total: np.ndarray) -> None:
+    """The BIC blocks of a decode_blocks call, every stream's, as one lane
+    set: block i of stream s decodes into out[s, offs[i]:offs[i] + m[i]].
+    A set too small to amortize the lockstep rounds takes the recursive
+    bic_decode block by block."""
+    S = len(out)
+    if S * len(m) < BIC_LOCKSTEP_MIN_LANES:
+        for s in range(S):
+            for o, n, p, e, t in zip(offs.tolist(), m.tolist(),
+                                     start[s].tolist(), end[s].tolist(),
+                                     total[s].tolist()):
+                if not 0 <= p <= e <= len(buf):
+                    raise _corrupt("block span outside the payload")
+                data = buf[p:e]
+                try:
+                    q = 0
+                    if t < 0:
+                        t, q = _vbyte_decode_single(data, 0)
+                    if t >= 1 << 48:
+                        raise _corrupt("BIC block sum out of range")
+                    vals, used = bic_decode(data, q, n, t)
+                except IndexError:  # ran off the span's padded copy
+                    used = e - p + 1
+                if used > e - p:
+                    raise _corrupt("BIC block reads past its span")
+                out[s, o:o + n] = vals
+        return
+    start, end, sums = start.ravel(), end.ravel(), total.ravel()
+    if (((end - start) | start | (len(buf) - end)) < 0).any():
+        raise _corrupt("block span outside the payload")
+    arr = np.frombuffer(buf + b"\x00" * 16, dtype=np.uint8)
+    pos, sums = start.copy(), sums.copy()
+    vb = sums < 0
+    if vb.any():
+        sums[vb], pos[vb] = _vbyte_decode_batch(arr, pos[vb], end[vb])
+    if (sums >= 1 << 48).any():
+        raise _corrupt("BIC block sum out of range")
+    lanes_m = np.concatenate([m] * S)
+    vals = bic_decode_batch(arr, pos * 8, lanes_m, sums, end_bits=end * 8)
+    lane_offs = (offs + out.shape[1] * np.arange(S)[:, None]).ravel()
+    out.reshape(-1)[np.repeat(lane_offs - (lanes_m.cumsum() - lanes_m),
+                              lanes_m) + np.arange(len(vals))] = vals
+
+
+def decode_blocks(buf: bytes, dicts: list, m: np.ndarray, start: np.ndarray,
+                  end: np.ndarray, total: np.ndarray) -> np.ndarray:
+    """Decode a batch of blocks: the one decoder behind cursors, list and
+    subset decode, positions and the decode-rate protocol.
+
+    Block i holds m[i] values in each stream s < len(dicts), coded in
+    buf[start[s, i]:end[s, i]]. A full block (m == BLOCK_SIZE) is u16
+    codewords of dicts[s], after a 1-byte selector for a MultiDictionary;
+    any other block (0 < m < BLOCK_SIZE) is BIC with total[s, i] its known
+    sum, or -1 when a vbyte sum prefixes it. Full blocks take one
+    _decode_codes pass per dictionary; every BIC block of every stream
+    joins one lane set. Returns the values as int64 rows, one per stream,
+    blocks in order. Raises ValueError when a block's reads leave its
+    span, so a cut or corrupt payload never decodes to plausible wrong
+    values."""
+    S = len(dicts)
+    ends = m.cumsum()
+    offs = ends - m
+    T = int(ends[-1]) if len(m) else 0
+    out = np.empty((S, T), dtype=np.int64)
+    full = m == BLOCK_SIZE
+    fi = full.nonzero()[0]
+    if len(fi) < len(m):  # an all-BIC batch takes views, no gather
+        bi = (~full).nonzero()[0] if len(fi) else slice(None)
+        _decode_bic_blocks(buf, out, offs[bi], m[bi], start[:, bi],
+                           end[:, bi], total[:, bi])
+    if not len(fi):
+        return out
+    arr = np.frombuffer(buf, dtype=np.uint8)
+    for s, dct in enumerate(dicts):
+        b0, b1 = start[s, fi], end[s, fi]
+        # 0 <= b0 < b1 <= len(buf): a full block holds at least one byte
+        if (((b1 - b0 - 1) | b0 | (len(buf) - b1)) < 0).any():
+            raise _corrupt("block span outside the payload")
+        subs = getattr(dct, "dicts", None)
+        if subs is None:
+            _decode_full_blocks(arr, b0, b1, dct, out[s], offs[fi])
+            continue
+        sel = arr[b0]
+        if (sel >= len(subs)).any():
+            raise _corrupt("dictionary selector out of range")
+        for k, d in enumerate(subs):
+            j = (sel == k).nonzero()[0]
+            if len(j):
+                _decode_full_blocks(arr, b0[j] + 1, b1[j], d, out[s],
+                                    offs[fi[j]])
     return out
 
 
-def decode_blocks_bulk(payload: bytes, n: int, block_maxs: np.ndarray,
-                       endpoints: np.ndarray, freq_offsets: np.ndarray,
-                       blocks: np.ndarray, docs_dict, freqs_dict=None
-                       ) -> tuple[np.ndarray, np.ndarray | None]:
-    """Decode a sorted subset of a list's blocks, vectorized ACROSS blocks.
+def posting_blocks(payloads: list, ns, block_maxs: list, endpoints: list,
+                   freq_offsets: list) -> tuple[bytes, np.ndarray]:
+    """The block table of many posting lists, for decode_posting_blocks.
+    Per list i: payloads[i], ns[i] >= 1 postings and the encode_list arrays
+    block_maxs[i], endpoints[i], freq_offsets[i]. Returns (buf, table):
+    the payloads joined, and the int64 rows (m, prev, docs start, freqs
+    start, freqs end, docs total, freqs total) of every block in list
+    order, laid out for decode_blocks: prev is the docid before the block,
+    the docs total its gap sum, the freqs total -1 (vbyte-prefixed).
+    Raises ValueError when the metadata leaves its payload. Built with
+    plain ints: a few per block, far below the decode's own cost, and
+    free of numpy's per-call overhead on one-block lists."""
+    rows: list[tuple] = []
+    base = 0
+    for payload, n, bm, ep, fo in zip(payloads, ns, block_maxs, endpoints,
+                                      freq_offsets):
+        n = int(n)
+        bm, ep, fo = (np.asarray(a).tolist() for a in (bm, ep, fo))
+        nb = (n + BLOCK_SIZE - 1) // BLOCK_SIZE
+        if n < 1 or not len(bm) == len(ep) == len(fo) == nb:
+            raise _corrupt("block metadata does not match the posting "
+                           "count")
+        size = len(payload)
+        ends = ep[1:] + [size]
+        prev = -1
+        for b in range(nb):
+            m = min(n - b * BLOCK_SIZE, BLOCK_SIZE)
+            universe = bm[b] - prev - m
+            if universe < 0 or ends[b] > size:
+                raise _corrupt("block metadata outside the payload")
+            rows.append((m, prev, base + ep[b], base + fo[b], base + ends[b],
+                         universe, -1))
+            prev = bm[b]
+        base += size
+    table = np.array(rows, dtype=np.int64).reshape(-1, 7).T.copy()
+    return (bytes(payloads[0]) if len(payloads) == 1
+            else b"".join(payloads)), table
 
-    Returns (docids, freqs-or-None) concatenated in block order. Full
-    256-int blocks are decoded in one numpy pass over their concatenated
-    codeword spans (the "SIMD-style Arrow batch decode" path — per-block
-    numpy call overhead was the decode bottleneck, ~100us/block); the tail
-    block and BIC-coded short lists use the per-block path. Skipping freqs
-    keeps frequency decoding lazy (ref dict_posting_list.hpp:164-169).
-    """
-    payload = bytes(payload)
-    blocks = np.asarray(blocks, dtype=np.int64)
-    nblocks = len(block_maxs)
-    ends = np.empty(nblocks, dtype=np.int64)
-    ends[:-1] = np.asarray(endpoints, dtype=np.int64)[1:]
-    ends[-1] = len(payload)
 
-    full = blocks[(blocks + 1) * BLOCK_SIZE <= n]
-    tail = blocks[(blocks + 1) * BLOCK_SIZE > n]
-    docs_parts: list[np.ndarray] = []
-    freqs_parts: list[np.ndarray] = []
-
-    if len(full):
-        starts = np.asarray(endpoints, dtype=np.int64)[full]
-        mids = np.asarray(freq_offsets, dtype=np.int64)[full]
-        gaps = _decode_grouped(payload, starts, mids, docs_dict, BLOCK_SIZE)
-        g = gaps.astype(np.int64) + 1
-        S = np.cumsum(g)
-        base = np.where(full > 0,
-                        np.asarray(block_maxs, dtype=np.int64)[full - 1] + 1,
-                        0)
-        # docid[i in block j] = base_j - 1 + (S[i] - S[start_j - 1])
-        sprev = np.empty(len(full), dtype=np.int64)
-        sprev[0] = 0
-        sprev[1:] = S[np.arange(1, len(full)) * BLOCK_SIZE - 1]
-        docs_parts.append(S + np.repeat(base - 1 - sprev, BLOCK_SIZE))
-        if freqs_dict is not None:
-            fvals = _decode_grouped(payload, mids, ends[full], freqs_dict,
-                                    BLOCK_SIZE)
-            freqs_parts.append(fvals.astype(np.int64) + 1)
-
-    for b in tail:
-        docids, pos = decode_docs_block(payload, int(b), n, block_maxs,
-                                        endpoints, docs_dict)
-        docs_parts.append(docids)
-        if freqs_dict is not None:
-            freqs_parts.append(decode_freqs_block(
-                payload, int(freq_offsets[int(b)]), len(docids), freqs_dict))
-
-    docs = (np.concatenate(docs_parts) if len(docs_parts) != 1
-            else docs_parts[0])
-    if freqs_dict is None:
-        return docs, None
-    freqs = (np.concatenate(freqs_parts) if len(freqs_parts) != 1
-             else freqs_parts[0])
+def decode_posting_blocks(buf: bytes, table: np.ndarray, docs_dict,
+                          freqs_dict, blocks=None
+                          ) -> tuple[np.ndarray | None, np.ndarray | None]:
+    """Docids and freqs of the posting_blocks table columns ``blocks`` (an
+    index array or slice; None: every block) through one decode_blocks
+    call, gaps turned into docids by one segmented cumsum. A stream whose
+    dictionary is None is skipped and returned as None (lazy freqs)."""
+    if blocks is not None:
+        table = table[:, blocks]
+    # stream rows: docs is stream 0, freqs stream 1 (start, end, total)
+    lo = 0 if docs_dict is not None else 1
+    hi = 2 if freqs_dict is not None else 1
+    vals = decode_blocks(buf, [docs_dict, freqs_dict][lo:hi], table[0],
+                         table[2 + lo:2 + hi], table[3 + lo:3 + hi],
+                         table[5 + lo:5 + hi])
+    m, prev = table[0], table[1]
+    docs = freqs = None
+    if docs_dict is not None:
+        # docid = prev + running sum of (gap + 1), restarting per block
+        g1 = vals[0] + 1
+        docs = g1.cumsum()
+        b0 = m.cumsum() - m
+        docs += np.repeat(prev - docs[b0] + g1[b0], m)
+    if freqs_dict is not None:
+        freqs = vals[-1] + 1
     return docs, freqs
+
+
+def decode_postings(payloads: list, ns, block_maxs: list, endpoints: list,
+                    freq_offsets: list, docs_dict, freqs_dict
+                    ) -> tuple[np.ndarray | None, np.ndarray | None,
+                               np.ndarray]:
+    """Every posting of many lists (posting_blocks' arguments) in one
+    decode_posting_blocks pass. Returns (docs, freqs, offsets), list i's
+    postings being [offsets[i], offsets[i + 1])."""
+    docs, freqs = decode_posting_blocks(
+        *posting_blocks(payloads, ns, block_maxs, endpoints, freq_offsets),
+        docs_dict, freqs_dict)
+    offsets = np.zeros(len(ns) + 1, dtype=np.int64)
+    np.cumsum(ns, out=offsets[1:])
+    return docs, freqs, offsets
 
 
 def decode_list_bulk(payload: bytes, n: int, block_maxs: np.ndarray,
                      endpoints: np.ndarray, freq_offsets: np.ndarray,
                      docs_dict, freqs_dict
                      ) -> tuple[np.ndarray, np.ndarray]:
-    """Full-list decode through the bulk cross-block path."""
-    if n < BLOCK_SIZE:
-        # short BIC list: skip the block-subset machinery entirely (these
-        # lists are per-list-overhead-bound; see BASELINE.md decode notes)
-        base = 0
-        universe = int(block_maxs[0]) - (n - 1)
-        gaps, pos = bic_decode(bytes(payload), 0, n, universe)
-        docids = np.cumsum(gaps.astype(np.int64) + 1) - 1
-        fvals, _ = bic_decode(bytes(payload), int(freq_offsets[0]), n, -1)
-        return docids, fvals.astype(np.int64) + 1
-    nblocks = (n + BLOCK_SIZE - 1) // BLOCK_SIZE
-    docs, freqs = decode_blocks_bulk(
-        payload, n, np.asarray(block_maxs, dtype=np.int64),
-        np.asarray(endpoints, dtype=np.int64),
-        np.asarray(freq_offsets, dtype=np.int64),
-        np.arange(nblocks), docs_dict, freqs_dict)
-    return docs, freqs
+    """Full-list (docs, freqs) through decode_posting_blocks."""
+    return decode_posting_blocks(
+        *posting_blocks([payload], [n], [block_maxs], [endpoints],
+                        [freq_offsets]), docs_dict, freqs_dict)
 
 
-def decode_long_lists_batch(payloads: list, ns: np.ndarray,
-                            block_maxs_l: list, endpoints_l: list,
-                            freq_offsets_l: list, docs_dict,
-                            freqs_dict=None
-                            ) -> tuple[np.ndarray, np.ndarray | None,
-                                       np.ndarray]:
-    """Decode MANY long (n >= BLOCK_SIZE) posting lists in a handful of
-    vectorized passes — the cross-LIST generalization of
-    decode_blocks_bulk (which batches across the blocks of ONE list),
-    mirroring encode_blocks_dint_batch on the decode side: every FULL
-    256-int DINT block of every list in the batch goes through ONE u16
-    codeword gather + ONE exception pass per stream (docs, freqs), and
-    every BIC tail block rides the lockstep bic_decode_batch DFS. The
-    per-list numpy-call overhead (~20 array ops per list in
-    decode_list_bulk) amortizes across the batch the same way the short
-    lists' did in decode_short_lists_batch.
-
-    Size-class routing, measured on real engine indexes (20k-doc and
-    1M-doc corpora): the cross-list pass wins ~2x for 1-3-block lists
-    (the bulk of a Zipfian vocabulary's long lists by count — per-list
-    call overhead and the BIC tail dominate them), is at parity around
-    4-8 blocks, and LOSES ~0.7x for multi-thousand-posting lists (whose
-    per-list cross-BLOCK pass already amortizes overhead, and the giant
-    2D gather/scatter temps only add memory traffic). Lists with
-    n >= CROSS_LIST_MAX_N therefore decode their FULL blocks through the
-    per-list cross-block pass — but their BIC tails join the SAME
-    lockstep batch DFS as every other list (round-5: the per-list tail
-    previously fell back to the recursive-python bic_decode, which
-    profiled as ~40% of the whole batch wall).
-
-    Returns (docs_concat, freqs_concat|None, offsets) with lists in
-    input order, byte-identical to per-list decode_list_bulk calls.
-    """
-    L = len(payloads)
-    ns = np.asarray(ns, dtype=np.int64)
-
-    offsets = np.zeros(L + 1, dtype=np.int64)
-    np.cumsum(ns, out=offsets[1:])
-    total = int(offsets[-1])
-    docs_out = np.empty(total, dtype=np.int64)
-    freqs_out = (np.empty(total, dtype=np.int64)
-                 if freqs_dict is not None else None)
-
-    # bookkeeping over ALL lists (both size classes share the tail DFS)
-    lens = np.fromiter((len(p) for p in payloads), dtype=np.int64, count=L)
-    pbase = np.zeros(L, dtype=np.int64)
-    np.cumsum(lens[:-1], out=pbase[1:])
-    big_b = b"".join(bytes(p) for p in payloads) + b"\x00" * 16
-    big = np.frombuffer(big_b, dtype=np.uint8)
-
-    nf = ns // BLOCK_SIZE           # full blocks per list
-    tail_n = ns % BLOCK_SIZE
-    nb = (ns + BLOCK_SIZE - 1) // BLOCK_SIZE
-    eoff = np.zeros(L, dtype=np.int64)
-    np.cumsum(nb[:-1], out=eoff[1:])
-    ep_flat = np.concatenate(
-        [np.asarray(e, dtype=np.int64) for e in endpoints_l])
-    fo_flat = np.concatenate(
-        [np.asarray(f, dtype=np.int64) for f in freq_offsets_l])
-    bm_flat = np.concatenate(
-        [np.asarray(b, dtype=np.int64) for b in block_maxs_l])
-    out_off = offsets[:-1]
-    small = ns < CROSS_LIST_MAX_N
-
-    # ---- huge lists' FULL blocks: per-list cross-block pass --------------
-    for i in np.flatnonzero(~small):
-        i = int(i)
-        nfi = int(nf[i])
-        if not nfi:
-            continue
-        d, f = decode_blocks_bulk(
-            payloads[i], int(ns[i]),
-            np.asarray(block_maxs_l[i], dtype=np.int64),
-            np.asarray(endpoints_l[i], dtype=np.int64),
-            np.asarray(freq_offsets_l[i], dtype=np.int64),
-            np.arange(nfi), docs_dict, freqs_dict)
-        docs_out[offsets[i]:offsets[i] + nfi * BLOCK_SIZE] = d
-        if freqs_out is not None:
-            freqs_out[offsets[i]:offsets[i] + nfi * BLOCK_SIZE] = f
-
-    # ---- small lists' full blocks: ONE cross-list decode per stream ------
-    nf_s = np.where(small, nf, 0)
-    NBf = int(nf_s.sum())
-    if NBf:
-        li = np.repeat(np.arange(L), nf_s)
-        bi = np.arange(NBf) - np.repeat(np.cumsum(nf_s) - nf_s, nf_s)
-        fi = eoff[li] + bi
-        doc_starts = pbase[li] + ep_flat[fi]
-        doc_ends = pbase[li] + fo_flat[fi]
-        gaps = _decode_grouped(big_b, doc_starts, doc_ends, docs_dict,
-                               BLOCK_SIZE)
-        base = np.where(bi > 0, bm_flat[np.maximum(fi - 1, 0)] + 1, 0)
-        G = gaps.astype(np.int64).reshape(NBf, BLOCK_SIZE) + 1
-        S = np.cumsum(G, axis=1)
-        scatter = ((out_off[li] + bi * BLOCK_SIZE)[:, None]
-                   + np.arange(BLOCK_SIZE)[None, :]).ravel()
-        docs_out[scatter] = (S + (base - 1)[:, None]).ravel()
-        if freqs_dict is not None:
-            has_next = bi + 1 < nb[li]
-            f_ends = pbase[li] + np.where(
-                has_next, ep_flat[np.minimum(fi + 1, len(ep_flat) - 1)],
-                lens[li])
-            fvals = _decode_grouped(big_b, doc_ends, f_ends, freqs_dict,
-                                    BLOCK_SIZE)
-            freqs_out[scatter] = fvals.astype(np.int64).ravel() + 1
-
-    # ---- ALL BIC tail blocks (both size classes): lockstep batch DFS -----
-    # (a HANDFUL of tails can't amortize the lockstep loop's per-iteration
-    # numpy overhead — ~2*max(m) iterations regardless of batch width —
-    # so tiny tail batches take the recursive per-block decoder instead;
-    # crossover measured ~8 on this host class)
-    tl = np.flatnonzero(tail_n > 0)
-    if 0 < len(tl) < 8:
-        for i in tl:
-            i = int(i)
-            nfi = int(nf[i])
-            pay = payloads[i]
-            bmi = np.asarray(block_maxs_l[i], dtype=np.int64)
-            epi = np.asarray(endpoints_l[i], dtype=np.int64)
-            foi = np.asarray(freq_offsets_l[i], dtype=np.int64)
-            d, _ = decode_docs_block(pay, nfi, int(ns[i]), bmi, epi,
-                                     docs_dict)
-            o0 = int(out_off[i]) + nfi * BLOCK_SIZE
-            docs_out[o0:o0 + len(d)] = d
-            if freqs_out is not None:
-                freqs_out[o0:o0 + len(d)] = decode_freqs_block(
-                    pay, int(foi[nfi]), len(d), freqs_dict)
-        tl = tl[:0]
-    if len(tl):
-        m = tail_n[tl]
-        tfi = eoff[tl] + nf[tl]         # tail block's flat index
-        base_t = bm_flat[tfi - 1] + 1   # nf >= 1 for every long list
-        universes = bm_flat[tfi] - base_t - (m - 1)
-        dpos = pbase[tl] + ep_flat[tfi]
-        sub_off = np.zeros(len(tl) + 1, dtype=np.int64)
-        np.cumsum(m, out=sub_off[1:])
-        half = int(sub_off[-1])
-        scatter_t = (np.repeat(
-            out_off[tl] + nf[tl] * BLOCK_SIZE - sub_off[:-1], m)
-            + np.arange(half))
-        if freqs_dict is not None:
-            # docs + freqs tails as independent lanes of ONE lockstep run
-            fpos = pbase[tl] + fo_flat[tfi]
-            fsums, fends = _vbyte_decode_batch(big, fpos)
-            both = bic_decode_batch(
-                big, np.concatenate([dpos * 8, fends * 8]),
-                np.concatenate([m, m]), np.concatenate([universes, fsums]))
-            gaps_t = both[:half]
-            freqs_out[scatter_t] = both[half:] + 1
-        else:
-            gaps_t = bic_decode_batch(big, dpos * 8, m, universes)
-        g1 = gaps_t + 1
-        c = np.cumsum(g1)
-        seg_base = np.repeat(c[sub_off[:-1]] - g1[sub_off[:-1]], m)
-        docs_out[scatter_t] = (c - seg_base - 1 + np.repeat(base_t, m))
-
-    return docs_out, freqs_out, offsets
-
-
-def decode_docs_block(payload: bytes, b: int, n: int, block_maxs: np.ndarray,
-                      endpoints: np.ndarray, docs_dict
-                      ) -> tuple[np.ndarray, int]:
-    """Decode block b's docIDs. Returns (docids, end_of_docs_byte_pos)."""
-    lo = b * BLOCK_SIZE
-    hi = min(lo + BLOCK_SIZE, n)
-    m = hi - lo
-    base = (int(block_maxs[b - 1]) + 1) if b > 0 else 0
-    universe = int(block_maxs[b]) - base - (m - 1)
-    gaps, pos = decode_block(payload, int(endpoints[b]), m, universe,
-                             docs_dict)
-    docids = base - 1 + np.cumsum(gaps.astype(np.int64) + 1)
-    return docids, pos
-
-
-def decode_freqs_block(payload: bytes, pos: int, m: int, freqs_dict
-                       ) -> np.ndarray:
-    fvals, _ = decode_block(payload, pos, m, -1, freqs_dict)
-    return fvals.astype(np.int64) + 1
+def decode_value_stream(payload: bytes, n: int, endpoints: np.ndarray,
+                        dct) -> np.ndarray:
+    """Decode a value stream written by encode_value_streams_batch (the
+    freqs-stream layout: every block vbyte-sum-prefixed when short)."""
+    payload = bytes(payload)
+    start = np.asarray(endpoints, dtype=np.int64)
+    nb = len(start)
+    if nb != (n + BLOCK_SIZE - 1) // BLOCK_SIZE:
+        raise _corrupt("block metadata does not match the value count")
+    m = np.minimum(n - BLOCK_SIZE * np.arange(nb), BLOCK_SIZE)
+    end = np.append(start[1:], len(payload))[:nb]
+    return decode_blocks(payload, [dct], m, start[None], end[None],
+                         np.full((1, nb), -1))[0]
 
 
 def decode_list(payload: bytes, n: int, block_maxs: np.ndarray,
                 endpoints: np.ndarray, docs_dict, freqs_dict
                 ) -> tuple[np.ndarray, np.ndarray]:
-    """Full-list decode (the vroom decode benchmark protocol + check_index)."""
-    nblocks = (n + BLOCK_SIZE - 1) // BLOCK_SIZE
+    """Per-block reference decode (the vroom decode benchmark protocol +
+    check_index): decode_block over each block in turn, the freqs stream
+    read from where the docs stream ends. decode_blocks is pinned to it."""
     docs_out = np.empty(n, dtype=np.int64)
     freqs_out = np.empty(n, dtype=np.int64)
-    for b in range(nblocks):
-        lo = b * BLOCK_SIZE
-        hi = min(lo + BLOCK_SIZE, n)
-        docids, pos = decode_docs_block(payload, b, n, block_maxs, endpoints,
-                                        docs_dict)
-        docs_out[lo:hi] = docids
-        freqs_out[lo:hi] = decode_freqs_block(payload, pos, hi - lo,
-                                              freqs_dict)
+    prev = -1
+    for lo in range(0, n, BLOCK_SIZE):
+        b = lo // BLOCK_SIZE
+        m = min(BLOCK_SIZE, n - lo)
+        last = int(block_maxs[b])
+        gaps, pos = decode_block(payload, int(endpoints[b]), m,
+                                 last - prev - m, docs_dict)
+        docs_out[lo:lo + m] = prev + np.cumsum(gaps.astype(np.int64) + 1)
+        fvals, _ = decode_block(payload, pos, m, -1, freqs_dict)
+        freqs_out[lo:lo + m] = fvals.astype(np.int64) + 1
+        prev = last
     return docs_out, freqs_out

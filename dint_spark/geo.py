@@ -125,6 +125,9 @@ def distance_threshold_ordinate(radius_m: float) -> int:
     same threshold bit-exactly."""
     if radius_m < 0:
         raise ValueError("radius must be >= 0")
+    # past the antipodal distance pi*R every point is within the radius;
+    # unclamped, sin(r / 2R) would fall again and shrink the threshold
+    radius_m = min(radius_m, np.pi * EARTH_RADIUS_M)
     s = np.sin(radius_m / (2.0 * EARTH_RADIUS_M))
     return int(np.floor(s * s * HAV_QUANT))
 

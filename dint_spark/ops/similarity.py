@@ -543,8 +543,10 @@ def exact_topk_blas(eqs: DataFrame, query_mod: int = QUERY_MOD,
             out_q, out_v, out_c = [], [], []
             for j in range(len(qi)):  # per query: batch-local top-k
                 col = cq[:, j]
-                sel = np.argpartition(-col, kk - 1)[:kk] if len(col) > kk \
-                    else np.arange(len(col))
+                # keep every row tied with the batch's k-th value: the
+                # global cut breaks cos_q ties by vec_id, not this batch
+                kth = np.partition(col, len(col) - kk)[len(col) - kk]
+                sel = np.flatnonzero(col >= kth)
                 out_q.append(np.full(len(sel), qi[j], dtype=np.int64))
                 out_v.append(vid[sel])
                 out_c.append(col[sel])

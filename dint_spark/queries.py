@@ -39,18 +39,22 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from dint_spark.bm25 import BM25
-from dint_spark.dint.codec import BLOCK_SIZE, decode_block, decode_docs_block
+from dint_spark.dint.codec import (BLOCK_SIZE, decode_posting_blocks,
+                                   decode_postings, posting_blocks)
 
 
 class Cursor:
-    """Enumerator over one compressed posting list."""
+    """Enumerator over one compressed posting list. Blocks decode only when
+    the scalar walk (docid/next/next_geq/move/freq) reaches them: the vec
+    kernels read the list through the block-max arrays and get_span, so a
+    cursor they never walk decodes nothing."""
 
     __slots__ = (
         "n", "block_maxs", "endpoints", "freq_offsets", "payload", "universe",
         "docs_dict", "freqs_dict",
         "nblocks", "cur_block", "pos", "docids", "freqs", "cur_docid",
         "q_weight", "max_weight", "block_max_scores", "term_id", "bound_scale",
-        "_ckey",
+        "_ckey", "_table",
     )
 
     def __init__(self, n, block_maxs, endpoints, freq_offsets, payload,
@@ -78,23 +82,43 @@ class Cursor:
         # marginally less pruning)
         self.bound_scale = np.float32(1.0)
         self._ckey = None
-        self._decode_block(0)
+        self._table = None
+        # not yet walked: no block decoded, cur_docid below every docid
+        self.cur_block = -1
+        self.pos = 0
+        self.docids = self.freqs = None
+        self.cur_docid = -1
+
+    def block_table(self) -> tuple[bytes, np.ndarray]:
+        """The list's codec.posting_blocks table, built on first use."""
+        if self._table is None:
+            self._table = posting_blocks(
+                [self.payload], [self.n], [self.block_maxs],
+                [self.endpoints], [self.freq_offsets])
+        return self._table
+
+    def _decode(self, b: int, docs: bool) -> np.ndarray:
+        """Block b's docids (docs=True) or freqs through the block decoder."""
+        d, f = decode_posting_blocks(
+            *self.block_table(), self.docs_dict if docs else None,
+            None if docs else self.freqs_dict, blocks=slice(b, b + 1))
+        return d if docs else f
 
     def _decode_block(self, b: int) -> None:
-        docids, _ = decode_docs_block(
-            self.payload, b, self.n, self.block_maxs, self.endpoints,
-            self.docs_dict,
-        )
-        self.docids = docids
+        self.docids = self._decode(b, True)
         self.freqs = None  # lazy (ref dict_posting_list.hpp:164-169)
         self.cur_block = b
         self.pos = 0
-        self.cur_docid = int(docids[0])
+        self.cur_docid = int(self.docids[0])
 
     def docid(self) -> int:
+        if self.cur_docid < 0:
+            self._decode_block(0)
         return self.cur_docid
 
     def next(self) -> None:
+        if self.cur_docid < 0:
+            self._decode_block(0)
         self.pos += 1
         if self.pos == len(self.docids):
             if self.cur_block + 1 == self.nblocks:
@@ -105,7 +129,9 @@ class Cursor:
             self.cur_docid = int(self.docids[self.pos])
 
     def next_geq(self, lb: int) -> None:
-        if lb > int(self.block_maxs[self.cur_block]):
+        if self.cur_docid >= lb:
+            return
+        if self.cur_block < 0 or lb > int(self.block_maxs[self.cur_block]):
             if lb > int(self.block_maxs[-1]):
                 self.cur_docid = self.universe
                 return
@@ -127,13 +153,10 @@ class Cursor:
         self.cur_docid = int(self.docids[self.pos])
 
     def freq(self) -> int:
+        if self.cur_docid < 0:
+            self._decode_block(0)
         if self.freqs is None:
-            m = len(self.docids)
-            fvals, _ = decode_block(
-                self.payload, int(self.freq_offsets[self.cur_block]), m, -1,
-                self.freqs_dict,
-            )
-            self.freqs = fvals.astype(np.int64) + 1
+            self.freqs = self._decode(self.cur_block, False)
         return int(self.freqs[self.pos])
 
     def decode_all(self) -> tuple[np.ndarray, np.ndarray]:
@@ -420,10 +443,8 @@ def _cached_full_decode(c: "Cursor") -> tuple[np.ndarray, np.ndarray]:
     if hit is not None:
         _LIST_CACHE.move_to_end(key)
         return hit
-    from dint_spark.dint.codec import decode_list_bulk
-
-    docs, freqs = decode_list_bulk(c.payload, c.n, c.block_maxs, c.endpoints,
-                                   c.freq_offsets, c.docs_dict, c.freqs_dict)
+    docs, freqs = decode_posting_blocks(*c.block_table(), c.docs_dict,
+                                        c.freqs_dict)
     _LIST_CACHE[key] = (docs, freqs)
     _LIST_CACHE_BYTES += docs.nbytes + freqs.nbytes
     while _LIST_CACHE_BYTES > _LIST_CACHE_CAP and _LIST_CACHE:
@@ -902,8 +923,6 @@ def block_max_wand_vec(cursors, norm_lens, num_docs: int, k: int,
 
     from dint_spark.dint.codec import BLOCK_SIZE as _BS
 
-    from dint_spark.dint.codec import decode_blocks_bulk as _dbb
-
     # per-cursor decoded-span state: (sorted block ids, concat docs, concat
     # freqs or None). Served from the worker-level full-list LRU when the
     # list is hot or mostly needed; otherwise a subset bulk-decode.
@@ -942,9 +961,9 @@ def block_max_wand_vec(cursors, norm_lens, num_docs: int, k: int,
             # keep freqs once decoded so a later regrow can't lose them
             want_freqs = want_freqs or (have is not None
                                         and sc["freqs"] is not None)
-            docs, freqs = _dbb(c.payload, c.n, c.block_maxs, c.endpoints,
-                               c.freq_offsets, union, c.docs_dict,
-                               c.freqs_dict if want_freqs else None)
+            docs, freqs = decode_posting_blocks(
+                *c.block_table(), c.docs_dict,
+                c.freqs_dict if want_freqs else None, blocks=union)
             sc["blocks"], sc["docs"], sc["freqs"] = union, docs, freqs
         return _slice_blocks(c, sc["docs"], sc["freqs"], sc["blocks"], blocks)
 
@@ -3026,53 +3045,22 @@ def bucket_decode_metrics(index, parallelism: int | None = None
     compression ratios — Index.record_decode_metrics runs this job,
     verifies the decoded posting counts against the encode-time manifest
     counts, and persists the result into manifest.json."""
-    import time as _time
-
-    from dint_spark.dint.codec import BLOCK_SIZE
-
     docs_dict_bc = shared_index_bc(index.spark, index, "docs_dict",
                                    lambda: index.docs_dict)
     freqs_dict_bc = shared_index_bc(index.spark, index, "freqs_dict",
                                     lambda: index.freqs_dict)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        dd = docs_dict_bc.value
-        fd = freqs_dict_bc.value
         # bucket -> [lists, postings, secs, checksum(u64 as python int)]
         per: dict[int, list] = {}
-        bufs: dict[int, _ShortListBuffer] = {}
-        lbufs: dict[int, _LongListBuffer] = {}
-
-        def flush(b: int, which: dict) -> None:
-            buf = which[b]
+        for b, rows, docs, freqs, secs in _decode_segment_rows(
+                batches, docs_dict_bc.value, freqs_dict_bc.value,
+                by="bucket"):
             acc = per.setdefault(b, [0, 0, 0.0, 0])
-            t0 = _time.perf_counter()
-            docs, freqs, _, ns, _ = buf._take()
-            acc[2] += _time.perf_counter() - t0
-            acc[0] += len(ns)
-            acc[1] += int(ns.sum())
+            acc[0] += len(rows)
+            acc[1] += len(docs)
+            acc[2] += secs
             acc[3] = (acc[3] + _decode_checksum(docs, freqs)) & _U64_MASK
-
-        for pdf in batches:
-            for b, sub in pdf.groupby("bucket"):
-                b = int(b)
-                per.setdefault(b, [0, 0, 0.0, 0])
-                ns = sub["n"].to_numpy()
-                sm = ns < BLOCK_SIZE
-                if sm.any():
-                    buf = bufs.setdefault(b, _ShortListBuffer())
-                    buf.add(sub, sm, ns)
-                    if buf.count >= 8192:
-                        flush(b, bufs)
-                if (~sm).any():
-                    lbuf = lbufs.setdefault(b, _LongListBuffer(dd, fd))
-                    lbuf.add(sub, ~sm, ns)
-                    if lbuf.postings >= 1 << 20:
-                        flush(b, lbufs)
-        for which in (bufs, lbufs):
-            for b, buf in which.items():
-                if buf.count:
-                    flush(b, which)
         if per:
             # u64 checksum -> signed i64 for the Long column (re-wrapped
             # on the driver side)
@@ -3108,118 +3096,43 @@ def bucket_decode_metrics(index, parallelism: int | None = None
     return out
 
 
-class _ShortListBuffer:
-    """Accumulates short (single-block BIC) segment rows across Arrow
-    batches so the vectorized multi-list decode gets large batches even
-    under the 32-row columnar reader batch size. Memory-bounded: short
-    payloads are <= ~1 KiB each and the buffer flushes every ~8k lists."""
-
-    __slots__ = ("payloads", "ns", "lasts", "fstarts", "term_ids", "count")
-
-    def __init__(self):
-        self.payloads: list[bytes] = []
-        self.ns: list = []
-        self.lasts: list = []
-        self.fstarts: list = []
-        self.term_ids: list = []
-        self.count = 0
-
-    def add(self, pdf: pd.DataFrame, sm: np.ndarray, ns: np.ndarray) -> None:
-        self.payloads.extend(bytes(p) for p in pdf["payload"][sm])
-        self.ns.append(ns[sm])
-        self.lasts.extend(b[0] for b in pdf["block_maxs"][sm])
-        self.fstarts.extend(f[0] for f in pdf["freq_offsets"][sm])
-        if "term_id" in pdf.columns:
-            self.term_ids.append(pdf["term_id"].to_numpy()[sm])
-        self.count = len(self.payloads)
-
-    def _take(self):
-        from dint_spark.dint.codec import decode_short_lists_batch
-
-        ns = np.concatenate(self.ns).astype(np.int64)
-        docs, freqs, offs = decode_short_lists_batch(
-            self.payloads, ns,
-            np.asarray(self.lasts, dtype=np.int64),
-            np.asarray(self.fstarts, dtype=np.int64))
-        tids = (np.concatenate(self.term_ids) if self.term_ids else None)
-        self.__init__()
-        return docs, freqs, offs, ns, tids
-
-    def flush_decode(self) -> int:
-        """Decode and discard (rate protocol); returns postings decoded."""
-        _, _, _, ns, _ = self._take()
-        return int(ns.sum())
-
-    def flush_rows(self) -> pd.DataFrame:
-        docs, freqs, offs, ns, tids = self._take()
-        return pd.DataFrame({
-            "term_id": np.repeat(tids, ns), "doc_id": docs, "freq": freqs,
-        })
+_FLUSH_BLOCKS = 8192  # blocks gathered per decode pass (bounds memory)
 
 
-class _LongListBuffer:
-    """Accumulates LONG (>= BLOCK_SIZE) segment rows across Arrow batches
-    and decodes them through codec.decode_long_lists_batch: the full
-    256-int DINT blocks of every few-block list in the batch go through
-    ONE u16 codeword gather + ONE exception pass per stream, and every
-    BIC tail block rides one lockstep batch DFS — the cross-LIST mirror
-    of the encode side's encode_blocks_dint_batch. Multi-thousand-
-    posting lists route back to the per-list cross-block pass inside the
-    batch call (measured faster there). Flushes every ~1M postings to
-    bound memory."""
+def _decode_segment_rows(batches: Iterator[pd.DataFrame], docs_dict,
+                         freqs_dict, by: str | None = None):
+    """The one decode buffer behind the segment scans. Rows gather across
+    Arrow batches (the columnar reader hands over ~32 at a time), per
+    ``by`` group, until _FLUSH_BLOCKS blocks; each gathering then decodes
+    in one codec.decode_postings pass. Yields (group, rows, docs, freqs,
+    decode_secs), the seconds timing only the decode call."""
+    import time as _time
 
-    __slots__ = ("dd", "fd", "payloads", "ns", "bmaxs", "endps", "foffs",
-                 "term_ids", "postings")
+    pending: dict = {}
 
-    def __init__(self, docs_dict, freqs_dict):
-        self.dd = docs_dict
-        self.fd = freqs_dict
-        self._reset()
+    def take(g):
+        rows = pd.concat(pending.pop(g)[1], ignore_index=True)
+        payloads = list(rows["payload"])
+        t0 = _time.perf_counter()
+        docs, freqs, _ = decode_postings(
+            payloads, rows["n"].to_numpy(), list(rows["block_maxs"]),
+            list(rows["endpoints"]), list(rows["freq_offsets"]), docs_dict,
+            freqs_dict)
+        return g, rows, docs, freqs, _time.perf_counter() - t0
 
-    def _reset(self):
-        self.payloads: list[bytes] = []
-        self.ns: list = []
-        self.bmaxs: list = []
-        self.endps: list = []
-        self.foffs: list = []
-        self.term_ids: list = []
-        self.postings = 0
-
-    @property
-    def count(self) -> int:
-        return len(self.payloads)
-
-    def add(self, pdf: pd.DataFrame, lg: np.ndarray, ns: np.ndarray) -> None:
-        self.payloads.extend(bytes(p) for p in pdf["payload"][lg])
-        self.ns.append(ns[lg])
-        self.bmaxs.extend(pdf["block_maxs"][lg])
-        self.endps.extend(pdf["endpoints"][lg])
-        self.foffs.extend(pdf["freq_offsets"][lg])
-        if "term_id" in pdf.columns:
-            self.term_ids.append(pdf["term_id"].to_numpy()[lg])
-        self.postings += int(ns[lg].sum())
-
-    def _take(self):
-        from dint_spark.dint.codec import decode_long_lists_batch
-
-        ns = np.concatenate(self.ns).astype(np.int64)
-        docs, freqs, offs = decode_long_lists_batch(
-            self.payloads, ns, self.bmaxs, self.endps, self.foffs,
-            self.dd, self.fd)
-        tids = (np.concatenate(self.term_ids) if self.term_ids else None)
-        self._reset()
-        return docs, freqs, offs, ns, tids
-
-    def flush_decode(self) -> int:
-        """Decode and discard (rate protocol); returns postings decoded."""
-        _, _, _, ns, _ = self._take()
-        return int(ns.sum())
-
-    def flush_rows(self) -> pd.DataFrame:
-        docs, freqs, offs, ns, tids = self._take()
-        return pd.DataFrame({
-            "term_id": np.repeat(tids, ns), "doc_id": docs, "freq": freqs,
-        })
+    for pdf in batches:
+        for g, sub in (pdf.groupby(by) if by else [(None, pdf)]):
+            if not len(sub):
+                continue
+            g = None if by is None else int(g)
+            acc = pending.setdefault(g, [0, []])
+            acc[0] += int(((sub["n"].to_numpy() + BLOCK_SIZE - 1)
+                           // BLOCK_SIZE).sum())
+            acc[1].append(sub)
+            if acc[0] >= _FLUSH_BLOCKS:
+                yield take(g)
+    for g in list(pending):
+        yield take(g)
 
 
 def decode_rate_stats(index, parallelism: int | None = None) -> dict:
@@ -3231,49 +3144,18 @@ def decode_rate_stats(index, parallelism: int | None = None) -> dict:
     decode rate, independent of Spark job overhead (which dominates
     wall-clock at small scale and is amortized at any real one).
     """
-    import time as _time
-
-    from dint_spark.dint.codec import BLOCK_SIZE
-
     docs_dict_bc = shared_index_bc(index.spark, index, "docs_dict",
                                    lambda: index.docs_dict)
     freqs_dict_bc = shared_index_bc(index.spark, index, "freqs_dict",
                                     lambda: index.freqs_dict)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        dd = docs_dict_bc.value
-        fd = freqs_dict_bc.value
         ints = 0
         secs = 0.0
-        # short single-block BIC lists AND long lists both buffer across
-        # Arrow batches (the 32-row columnar reader batches would defeat
-        # the vectorization) and decode in multi-list passes — the
-        # per-list python path was the mixed-corpus decode bottleneck
-        buf = _ShortListBuffer()
-        lbuf = _LongListBuffer(dd, fd)
-        for pdf in batches:
-            ns = pdf["n"].to_numpy()
-            sm = ns < BLOCK_SIZE
-            if sm.any():
-                buf.add(pdf, sm, ns)
-            if buf.count >= 8192:
-                t0 = _time.perf_counter()
-                n_dec = buf.flush_decode()
-                secs += _time.perf_counter() - t0
-                ints += 2 * n_dec
-            if (~sm).any():
-                lbuf.add(pdf, ~sm, ns)
-            if lbuf.postings >= 1 << 20:
-                t0 = _time.perf_counter()
-                n_dec = lbuf.flush_decode()
-                secs += _time.perf_counter() - t0
-                ints += 2 * n_dec
-        for b in (buf, lbuf):
-            if b.count:
-                t0 = _time.perf_counter()
-                n_dec = b.flush_decode()
-                secs += _time.perf_counter() - t0
-                ints += 2 * n_dec
+        for _, _, docs, _, dt in _decode_segment_rows(
+                batches, docs_dict_bc.value, freqs_dict_bc.value):
+            ints += 2 * len(docs)
+            secs += dt
         yield pd.DataFrame({"n_ints": [ints], "decode_secs": [secs]})
 
     seg = index.segments.select(
@@ -3300,36 +3182,19 @@ def decoded_postings(index, parallelism: int | None = None,
     ``term_ids`` restricts the decode to a term subset with the filter
     pushed into the segments scan (consumers like rankeval.judged_rel
     decode a handful of query terms, not the index)."""
-    from dint_spark.dint.codec import BLOCK_SIZE
-
     docs_dict_bc = shared_index_bc(index.spark, index, "docs_dict",
                                    lambda: index.docs_dict)
     freqs_dict_bc = shared_index_bc(index.spark, index, "freqs_dict",
                                     lambda: index.freqs_dict)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        dd = docs_dict_bc.value
-        fd = freqs_dict_bc.value
-        buf = _ShortListBuffer()
-        # long lists buffer across Arrow batches too and decode through
-        # the cross-list batch (one frame out per ~1M postings — never a
-        # pd.DataFrame per list or a pd.concat per 32-row Arrow batch)
-        lbuf = _LongListBuffer(dd, fd)
-        for pdf in batches:
-            ns = pdf["n"].to_numpy()
-            sm = ns < BLOCK_SIZE
-            if sm.any():
-                buf.add(pdf, sm, ns)
-            if buf.count >= 8192:
-                yield buf.flush_rows()
-            if (~sm).any():
-                lbuf.add(pdf, ~sm, ns)
-            if lbuf.postings >= 1 << 20:
-                yield lbuf.flush_rows()
-        if lbuf.count:
-            yield lbuf.flush_rows()
-        if buf.count:
-            yield buf.flush_rows()
+        for _, rows, docs, freqs, _ in _decode_segment_rows(
+                batches, docs_dict_bc.value, freqs_dict_bc.value):
+            yield pd.DataFrame({
+                "term_id": np.repeat(rows["term_id"].to_numpy(),
+                                     rows["n"].to_numpy()),
+                "doc_id": docs, "freq": freqs,
+            })
 
     base = index.segments
     if term_ids is not None:

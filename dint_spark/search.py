@@ -331,13 +331,16 @@ def expand_regex_trigram(spark: SparkSession, index, pattern: str,
     count-match aggregate — both vocabulary-shaped), then the full
     pattern post-filters exactly like expand_regex, so the result is
     identical by construction. Falls back to expand_regex when the
-    pattern guarantees no trigram (e.g. top-level alternation) or the
+    pattern guarantees no trigram (e.g. top-level alternation), carries an
+    inline-flag group such as ``(?i)`` (the extracted literals are
+    case-sensitive, so the pruning could drop matching terms), or the
     sidecar is absent."""
     import os
 
     tris = regex_required_trigrams(pattern)
     path = os.path.join(index.dir, TRIGRAM_SIDECAR)
-    if not tris or not os.path.exists(path):
+    if (not tris or re.search(r"\(\?[-a-zA-Z]", pattern)
+            or not os.path.exists(path)):
         return expand_regex(index, pattern, max_terms=max_terms)
     t = spark.read.parquet(path).where(F.col("tri").isin(list(tris)))
     cand = (t.groupBy("term_id").agg(F.count("*").alias("nt"))

@@ -7,6 +7,11 @@ sys.path.insert(0, os.path.dirname(__file__))
 sys.path.insert(0, os.path.dirname(os.path.dirname(__file__)))
 
 
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers", "slow: a long-running test (e.g. a spark-submit run)")
+
+
 @pytest.fixture(scope="session")
 def spark():
     from dint_spark.session import get_spark

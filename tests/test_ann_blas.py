@@ -141,3 +141,30 @@ def test_kmeans_par_blas_rounds_match_jvm(spark, tmp_path):
     b = ivf_init_kmeans_par(eqs, 40, blas=True).toPandas().sort_values(
         "cent_id").reset_index(drop=True)
     assert len(a) == 40 and a.equals(b)
+
+
+def test_exact_blas_tie_heavy_matches_lexsort(spark):
+    """Quantized-cosine ties at the k-th value: every batch keeps all its
+    tied rows, so the global (cos_q desc, vec_id asc) cut equals a full
+    lexsort. Rows arrive in descending vec_id order, so a batch cut that
+    kept an arbitrary k of the tied rows would lose the smallest ids."""
+    import pandas as pd
+
+    from dint_spark.ops.similarity import TOPK
+
+    dirs = np.array([[3, 0], [0, 3], [2, 2]], dtype=np.int64)
+    n = 12 * QUERY_MOD
+    vid = np.arange(n, dtype=np.int64)[::-1]
+    V = dirs[vid % 3]
+    n2 = (V * V).sum(axis=1)
+    pdf = pd.DataFrame({"vec_id": vid, "eq": list(V), "n2": n2})
+    eqs = spark.createDataFrame(pdf, "vec_id long, eq array<long>, n2 long")
+    got = exact_topk_blas(eqs).toPandas().sort_values(["query_id", "rank"])
+    want = []
+    for q in np.flatnonzero(vid % QUERY_MOD == 0):
+        cq = np.floor((V @ V[q]) / np.sqrt(n2 * n2[q]) * 1000000.0)
+        top = np.lexsort((vid, -cq))[:TOPK]
+        want += [(vid[q], r + 1, vid[j], cq[j]) for r, j in enumerate(top)]
+    want = pd.DataFrame(want, columns=["query_id", "rank", "vec_id", "cos_q"]
+                        ).sort_values(["query_id", "rank"])
+    assert (got.values == want.values).all()

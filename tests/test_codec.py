@@ -7,10 +7,12 @@ import pytest
 from dint_spark.dint.codec import (
     bic_decode,
     bic_encode,
-    decode_blocks_bulk,
     decode_list,
     decode_list_bulk,
+    decode_posting_blocks,
+    decode_postings,
     encode_list,
+    posting_blocks,
 )
 from dint_spark.dint.dictionary import DintDictionary
 
@@ -42,14 +44,16 @@ def roundtrip(docs, freqs, docs_dict, freqs_dict, optimal):
     if nblocks > 1:
         rng = np.random.default_rng(len(docs))
         sub = np.unique(rng.integers(0, nblocks, size=min(nblocks, 3)))
-        ds, fs = decode_blocks_bulk(payload, len(docs), bmax, endp, foff,
-                                    sub, docs_dict, freqs_dict)
+        buf, table = posting_blocks([payload], [len(docs)], [bmax], [endp],
+                                    [foff])
+        ds, fs = decode_posting_blocks(buf, table, docs_dict, freqs_dict,
+                                       blocks=sub)
         exp_d = np.concatenate([docs[b * 256:(b + 1) * 256] for b in sub])
         exp_f = np.concatenate([freqs[b * 256:(b + 1) * 256] for b in sub])
         assert np.array_equal(ds, exp_d) and np.array_equal(fs, exp_f)
         # docs-only (lazy freqs) subset
-        ds2, fs2 = decode_blocks_bulk(payload, len(docs), bmax, endp, foff,
-                                      sub, docs_dict, None)
+        ds2, fs2 = decode_posting_blocks(buf, table, docs_dict, None,
+                                         blocks=sub)
         assert np.array_equal(ds2, exp_d) and fs2 is None
     return payload
 
@@ -408,12 +412,11 @@ def test_pattern_stats_vectorized_oracle():
 
 @pytest.mark.parametrize("multi", [False, True])
 def test_long_lists_batch_matches_per_list(multi):
-    """decode_long_lists_batch (cross-LIST full-block batching + lockstep
-    BIC tails) must be byte-identical to per-list decode_list_bulk for a
+    """decode_postings (cross-LIST full-block batching + one BIC lane
+    set) must be byte-identical to per-list decode_list_bulk for a
     mixed batch: exact-multiple-of-256 lengths (no tail), tail of 1,
     short-as-possible long lists (n=256), multi-block lists, single- and
     multi-dictionary payloads, freqs with exceptions."""
-    from dint_spark.dint.codec import decode_long_lists_batch
     from dint_spark.dint.dictionary import MultiDictionary, default_class_map
 
     rng = np.random.default_rng(777 + int(multi))
@@ -455,7 +458,7 @@ def test_long_lists_batch_matches_per_list(multi):
     bmaxs = [lists[i][3] for i in order]
     endps = [lists[i][4] for i in order]
     foffs = [lists[i][5] for i in order]
-    docs_c, freqs_c, offs = decode_long_lists_batch(
+    docs_c, freqs_c, offs = decode_postings(
         payloads, ns, bmaxs, endps, foffs, dd, fd)
     for k, i in enumerate(order):
         exp_d, exp_f = lists[i][0], lists[i][1]
@@ -467,7 +470,7 @@ def test_long_lists_batch_matches_per_list(multi):
         assert np.array_equal(got_d, exp_d) and np.array_equal(got_d, ref_d)
         assert np.array_equal(got_f, exp_f) and np.array_equal(got_f, ref_f)
     # docs-only (lazy freqs) path
-    docs_c2, f2, offs2 = decode_long_lists_batch(
+    docs_c2, f2, offs2 = decode_postings(
         payloads, ns, bmaxs, endps, foffs, dd, None)
     assert f2 is None and np.array_equal(docs_c2, docs_c)
 
@@ -477,7 +480,6 @@ def test_long_lists_batch_all_exception_path():
     the cross-list batch must still be byte-identical to per-list decode
     (the B14 all-exception path, batch form), including values above
     2^16 (3-slot escapes)."""
-    from dint_spark.dint.codec import decode_long_lists_batch
 
     rng = np.random.default_rng(13)
     empty = DintDictionary.build([])
@@ -489,7 +491,7 @@ def test_long_lists_batch_all_exception_path():
         freqs = rng.integers(1, 90000, size=n).astype(np.int64)
         payload, bmax, endp, foff = encode_list(docs, freqs, empty, empty)
         lists.append((n, docs, freqs, payload, bmax, endp, foff))
-    docs_c, freqs_c, offs = decode_long_lists_batch(
+    docs_c, freqs_c, offs = decode_postings(
         [l[3] for l in lists], np.array([l[0] for l in lists]),
         [l[4] for l in lists], [l[5] for l in lists],
         [l[6] for l in lists], empty, empty)
@@ -499,18 +501,16 @@ def test_long_lists_batch_all_exception_path():
 
 
 def test_long_lists_batch_tiny_tail_routing():
-    """A batch with fewer than 8 BIC tails routes them through the
-    per-block recursive decoder (the lockstep DFS can't amortize there)
-    — byte-identical to per-list decode_list_bulk either way."""
+    """A batch with fewer than BIC_LOCKSTEP_MIN_LANES BIC blocks routes
+    them through the per-block recursive decoder (the lockstep DFS can't
+    amortize there) — byte-identical to per-list decode either way."""
     import numpy as np
 
     import sys as _sys
     _sys.path.insert(0, "tests")
     from fixtures import build_dicts, gen_collection
 
-    from dint_spark.dint.codec import (BLOCK_SIZE, decode_list_bulk,
-                                       decode_long_lists_batch,
-                                       encode_list)
+    from dint_spark.dint.codec import BLOCK_SIZE, encode_list
 
     plists, _, _, _ = gen_collection(num_docs=6000, seed=9, vocab=800)
     rows = []
@@ -519,7 +519,7 @@ def test_long_lists_batch_tiny_tail_routing():
             p, bm, ep, fo = encode_list(docs, freqs, *build_dicts(
                 {t: (docs, freqs)}))
             rows.append((bytes(p), len(docs), bm, ep, fo, docs, freqs))
-        if len(rows) == 3:  # < 8 tails -> the tiny-batch path
+        if len(rows) == 3:  # 3 docs + 3 freqs tails -> the recursive path
             break
     assert rows, "fixture produced no tailed long lists"
     dd, fd = build_dicts(plists)
@@ -531,8 +531,53 @@ def test_long_lists_batch_tiny_tail_routing():
         payloads.append(bytes(p)); ns.append(n)
         bml.append(bm); epl.append(ep); fol.append(fo)
         want.append((docs, freqs))
-    d, f, off = decode_long_lists_batch(
+    d, f, off = decode_postings(
         payloads, np.array(ns), bml, epl, fol, dd, fd)
     for i, (wd, wf) in enumerate(want):
         assert np.array_equal(d[off[i]:off[i + 1]], wd)
         assert np.array_equal(f[off[i]:off[i + 1]], wf)
+
+
+@pytest.mark.parametrize("n", [100, 700])
+def test_truncated_payload_fails_closed(n):
+    """A cut payload raises ValueError: a 1-byte cut must not decode to
+    wrong freqs, a cut of a third must not surface as an IndexError —
+    on a short (single BIC block) and a multi-block list."""
+    rng = np.random.default_rng(n)
+    docs = np.sort(rng.choice(20 * n, size=n, replace=False)).astype(np.int64)
+    freqs = rng.integers(1, 40, size=n).astype(np.int64)
+    gaps = np.diff(docs, prepend=-1) - 1
+    dd = DintDictionary.build(mkpats(gaps.astype(np.uint32)))
+    fd = DintDictionary.build(mkpats((freqs - 1).astype(np.uint32)))
+    payload, bmax, endp, foff = encode_list(docs, freqs, dd, fd)
+    for cut in (1, len(payload) // 3):
+        with pytest.raises(ValueError):
+            decode_list_bulk(payload[:-cut], n, bmax, endp, foff, dd, fd)
+
+
+def test_truncated_payload_fails_closed_in_batch():
+    """The same cut inside a multi-list batch (BIC blocks on the lockstep
+    lanes, full blocks on the cross-list codeword pass) raises too, and
+    the uncut batch decodes exactly."""
+    from dint_spark.dint.codec import (BIC_LOCKSTEP_MIN_LANES,
+                                       encode_lists_batch)
+
+    rng = np.random.default_rng(11)
+    empty = DintDictionary.build([])
+    # two BIC lanes (docs, freqs) per list: enough lists for the lockstep
+    sizes = [256, 300, 700] + [3, 40, 100] * (BIC_LOCKSTEP_MIN_LANES // 6 + 1)
+    docs = [np.sort(rng.choice(20 * n, size=n, replace=False)).astype(np.int64)
+            for n in sizes]
+    freqs = [rng.integers(1, 40, size=n).astype(np.int64) for n in sizes]
+    enc = encode_lists_batch(docs, freqs, empty, empty)
+    payloads = [e[0] for e in enc]
+    args = [[e[j] for e in enc] for j in (1, 2, 3)]
+    docs_c, freqs_c, offs = decode_postings(payloads, sizes, *args, empty,
+                                            empty)
+    assert np.array_equal(docs_c, np.concatenate(docs))
+    assert np.array_equal(freqs_c, np.concatenate(freqs))
+    for i in (0, 1, 2, 3, 4):
+        for cut in (1, len(payloads[i]) // 3):
+            bad = payloads[:i] + [payloads[i][:-cut]] + payloads[i + 1:]
+            with pytest.raises(ValueError):
+                decode_postings(bad, sizes, *args, empty, empty)

@@ -201,3 +201,15 @@ def test_geo_rings_bucketing_matches_brute(spark, sidx, docs_pdf, geo):
                     want[(qid, b)] = want.get((qid, b), 0) + 1
                     break
     assert got == want
+
+
+def test_distance_threshold_clamped_past_antipode():
+    """Past pi*R (~20,015 km) every point is within the radius: the
+    threshold stays monotone and saturates at HAV_QUANT."""
+    from dint_spark.geo import EARTH_RADIUS_M, HAV_QUANT
+
+    radii = [19_000e3, 20_000e3, 20_015e3, np.pi * EARTH_RADIUS_M,
+             20_100e3, 21_000e3, 40_000e3]
+    thr = [distance_threshold_ordinate(r) for r in radii]
+    assert thr == sorted(thr)
+    assert distance_threshold_ordinate(21_000e3) == HAV_QUANT

@@ -530,6 +530,19 @@ def test_expand_regex_trigram_equals_plain(spark, sidx):
             == expand_regex(sidx, ".*0003", max_terms=3))
 
 
+def test_expand_regex_trigram_inline_flags(spark, sidx):
+    """Inline-flag patterns fall back to expand_regex: the case-sensitive
+    trigram literals must not prune terms that (?i) matches."""
+    from dint_spark.search import (build_trigram_index, expand_regex,
+                                  expand_regex_trigram)
+
+    build_trigram_index(spark, sidx)
+    assert expand_regex(sidx, "(?i)W00001.", max_terms=64)
+    for pat in ("(?i)tion", "(?i)W00001.", "(?i).*0003"):
+        assert (expand_regex_trigram(spark, sidx, pat, max_terms=64)
+                == expand_regex(sidx, pat, max_terms=64)), pat
+
+
 def test_search_regexp_trigram_equals_search_regexp(spark, sidx):
     from dint_spark.search import search_regexp, search_regexp_trigram
 
