@@ -228,16 +228,16 @@ def bic_decode(data: bytes, pos: int, n: int, sum_of_values: int
 
 
 def bic_decode_batch(buf: np.ndarray, bit_pos: np.ndarray, ns: np.ndarray,
-                     sums: np.ndarray, end_bits: np.ndarray | None = None
-                     ) -> np.ndarray:
+                     sums: np.ndarray, end_bits: np.ndarray) -> np.ndarray:
     """Decode MANY interpolative-coded value blocks in one vectorized pass.
 
     buf: concatenated little-endian byte buffer (u8, padded with >= 8 zero
     bytes); bit_pos[i]: absolute starting BIT offset of block i's stream;
     ns[i]: value count; sums[i]: known sum (vbyte prefixes already
     consumed by the caller). Returns the concatenated per-block values
-    (the gap/f-1 streams, like bic_decode), int64. With ``end_bits``, a
-    block whose reads pass its end bit raises ValueError.
+    (the gap/f-1 streams, like bic_decode), int64. end_bits[i]: the bit
+    where block i's span ends; a block whose reads pass it raises
+    ValueError.
 
     The recursion order of read_interpolative is a preorder DFS whose bit
     offsets are data-dependent, so blocks cannot be decoded level-by-level
@@ -359,7 +359,7 @@ def bic_decode_batch(buf: np.ndarray, bit_pos: np.ndarray, ns: np.ndarray,
             stf[3, kl] = val[lm]
             sp[lft] = t + 1
 
-    if end_bits is not None and (pos > end_bits).any():
+    if (pos > end_bits).any():
         raise ValueError("corrupt DINT payload: BIC block reads past its "
                          "span")
     # prefix values -> per-block gaps (out[1:] -= out[:-1] within blocks)
@@ -1341,6 +1341,48 @@ def _decode_full_blocks(arr: np.ndarray, starts: np.ndarray,
         out[(offs[:, None] + np.arange(BLOCK_SIZE)).ravel()] = vals
 
 
+def _bic_block(buf: bytes, n: int, p: int, e: int, t: int) -> np.ndarray:
+    """One BIC block of n values in buf[p:e] (t its known sum, or -1 when
+    a vbyte sum prefixes it) through the recursive bic_decode, its reads
+    checked against the span."""
+    if not 0 <= p <= e <= len(buf):
+        raise _corrupt("block span outside the payload")
+    data = buf[p:e]
+    try:
+        q = 0
+        if t < 0:
+            t, q = _vbyte_decode_single(data, 0)
+        if t >= 1 << 48:
+            raise _corrupt("BIC block sum out of range")
+        vals, used = bic_decode(data, q, n, t)
+    except IndexError:  # ran off the span's padded copy
+        used = e - p + 1
+    if used > e - p:
+        raise _corrupt("BIC block reads past its span")
+    return vals
+
+
+def _full_block(buf: bytes, p: int, e: int, dct) -> np.ndarray:
+    """One full block: the u16 codewords in buf[p:e] (after a 1-byte
+    selector for a MultiDictionary) through _decode_codes, which must
+    use exactly the span."""
+    if not 0 <= p < e <= len(buf):
+        raise _corrupt("block span outside the payload")
+    subs = getattr(dct, "dicts", None)
+    if subs is not None:
+        if buf[p] >= len(subs):
+            raise _corrupt("dictionary selector out of range")
+        dct = subs[buf[p]]
+        p += 1
+    if (e - p) & 1:
+        raise _corrupt("odd-length codeword span")
+    slots = (e - p) >> 1
+    vals, _ = _decode_codes(np.frombuffer(buf, _U16, slots, p), BLOCK_SIZE,
+                            dct.table2d, dct.sizes,
+                            block_slots=np.array([slots]))
+    return vals
+
+
 def _decode_bic_blocks(buf: bytes, out: np.ndarray, offs: np.ndarray,
                        m: np.ndarray, start: np.ndarray, end: np.ndarray,
                        total: np.ndarray) -> None:
@@ -1354,21 +1396,7 @@ def _decode_bic_blocks(buf: bytes, out: np.ndarray, offs: np.ndarray,
             for o, n, p, e, t in zip(offs.tolist(), m.tolist(),
                                      start[s].tolist(), end[s].tolist(),
                                      total[s].tolist()):
-                if not 0 <= p <= e <= len(buf):
-                    raise _corrupt("block span outside the payload")
-                data = buf[p:e]
-                try:
-                    q = 0
-                    if t < 0:
-                        t, q = _vbyte_decode_single(data, 0)
-                    if t >= 1 << 48:
-                        raise _corrupt("BIC block sum out of range")
-                    vals, used = bic_decode(data, q, n, t)
-                except IndexError:  # ran off the span's padded copy
-                    used = e - p + 1
-                if used > e - p:
-                    raise _corrupt("BIC block reads past its span")
-                out[s, o:o + n] = vals
+                out[s, o:o + n] = _bic_block(buf, n, p, e, t)
         return
     start, end, sums = start.ravel(), end.ravel(), total.ravel()
     if (((end - start) | start | (len(buf) - end)) < 0).any():
@@ -1403,6 +1431,15 @@ def decode_blocks(buf: bytes, dicts: list, m: np.ndarray, start: np.ndarray,
     span, so a cut or corrupt payload never decodes to plausible wrong
     values."""
     S = len(dicts)
+    if len(m) == 1:  # one block (a cursor step): plain ints, no batching
+        n = int(m[0])
+        out = np.empty((S, n), dtype=np.int64)
+        for s, (p, e, t) in enumerate(zip(start[:, 0].tolist(),
+                                          end[:, 0].tolist(),
+                                          total[:, 0].tolist())):
+            out[s] = (_full_block(buf, p, e, dicts[s]) if n == BLOCK_SIZE
+                      else _bic_block(buf, n, p, e, t))
+        return out
     ends = m.cumsum()
     offs = ends - m
     T = int(ends[-1]) if len(m) else 0
@@ -1437,7 +1474,8 @@ def decode_blocks(buf: bytes, dicts: list, m: np.ndarray, start: np.ndarray,
 
 
 def posting_blocks(payloads: list, ns, block_maxs: list, endpoints: list,
-                   freq_offsets: list) -> tuple[bytes, np.ndarray]:
+                   freq_offsets: list, blocks=None
+                   ) -> tuple[bytes, np.ndarray]:
     """The block table of many posting lists, for decode_posting_blocks.
     Per list i: payloads[i], ns[i] >= 1 postings and the encode_list arrays
     block_maxs[i], endpoints[i], freq_offsets[i]. Returns (buf, table):
@@ -1445,30 +1483,32 @@ def posting_blocks(payloads: list, ns, block_maxs: list, endpoints: list,
     start, freqs end, docs total, freqs total) of every block in list
     order, laid out for decode_blocks: prev is the docid before the block,
     the docs total its gap sum, the freqs total -1 (vbyte-prefixed).
-    Raises ValueError when the metadata leaves its payload. Built with
-    plain ints: a few per block, far below the decode's own cost, and
-    free of numpy's per-call overhead on one-block lists."""
+    ``blocks`` (one list only) describes just those block indices of it,
+    in order, so a cursor's table costs what the cursor decodes. Raises
+    ValueError when the described metadata leaves its payload. Built with
+    plain ints, a few per described block, free of numpy's per-call
+    overhead on one-block lists and cursor steps."""
     rows: list[tuple] = []
     base = 0
     for payload, n, bm, ep, fo in zip(payloads, ns, block_maxs, endpoints,
                                       freq_offsets):
         n = int(n)
-        bm, ep, fo = (np.asarray(a).tolist() for a in (bm, ep, fo))
         nb = (n + BLOCK_SIZE - 1) // BLOCK_SIZE
         if n < 1 or not len(bm) == len(ep) == len(fo) == nb:
             raise _corrupt("block metadata does not match the posting "
                            "count")
+        if blocks is None:  # every block: plain lists index fastest
+            bm, ep, fo = (np.asarray(a).tolist() for a in (bm, ep, fo))
         size = len(payload)
-        ends = ep[1:] + [size]
-        prev = -1
-        for b in range(nb):
+        for b in (range(nb) if blocks is None else blocks):
             m = min(n - b * BLOCK_SIZE, BLOCK_SIZE)
-            universe = bm[b] - prev - m
-            if universe < 0 or ends[b] > size:
+            prev = int(bm[b - 1]) if b else -1
+            end = int(ep[b + 1]) if b + 1 < nb else size
+            universe = int(bm[b]) - prev - m
+            if universe < 0 or end > size:
                 raise _corrupt("block metadata outside the payload")
-            rows.append((m, prev, base + ep[b], base + fo[b], base + ends[b],
-                         universe, -1))
-            prev = bm[b]
+            rows.append((m, prev, base + int(ep[b]), base + int(fo[b]),
+                         base + end, universe, -1))
         base += size
     table = np.array(rows, dtype=np.int64).reshape(-1, 7).T.copy()
     return (bytes(payloads[0]) if len(payloads) == 1
@@ -1476,14 +1516,12 @@ def posting_blocks(payloads: list, ns, block_maxs: list, endpoints: list,
 
 
 def decode_posting_blocks(buf: bytes, table: np.ndarray, docs_dict,
-                          freqs_dict, blocks=None
+                          freqs_dict
                           ) -> tuple[np.ndarray | None, np.ndarray | None]:
-    """Docids and freqs of the posting_blocks table columns ``blocks`` (an
-    index array or slice; None: every block) through one decode_blocks
-    call, gaps turned into docids by one segmented cumsum. A stream whose
-    dictionary is None is skipped and returned as None (lazy freqs)."""
-    if blocks is not None:
-        table = table[:, blocks]
+    """Docids and freqs of the blocks of a posting_blocks table through one
+    decode_blocks call, gaps turned into docids by one segmented cumsum. A
+    stream whose dictionary is None is skipped and returned as None (lazy
+    freqs)."""
     # stream rows: docs is stream 0, freqs stream 1 (start, end, total)
     lo = 0 if docs_dict is not None else 1
     hi = 2 if freqs_dict is not None else 1
@@ -1494,10 +1532,12 @@ def decode_posting_blocks(buf: bytes, table: np.ndarray, docs_dict,
     docs = freqs = None
     if docs_dict is not None:
         # docid = prev + running sum of (gap + 1), restarting per block
-        g1 = vals[0] + 1
-        docs = g1.cumsum()
-        b0 = m.cumsum() - m
-        docs += np.repeat(prev - docs[b0] + g1[b0], m)
+        docs = vals[0] + 1
+        docs[0] += prev[0]
+        np.cumsum(docs, out=docs)
+        if len(m) > 1:
+            b1 = m.cumsum()[:-1]  # where each later block starts
+            docs[m[0]:] += np.repeat(prev[1:] - docs[b1 - 1], m[1:])
     if freqs_dict is not None:
         freqs = vals[-1] + 1
     return docs, freqs

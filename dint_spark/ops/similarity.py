@@ -543,10 +543,14 @@ def exact_topk_blas(eqs: DataFrame, query_mod: int = QUERY_MOD,
             out_q, out_v, out_c = [], [], []
             for j in range(len(qi)):  # per query: batch-local top-k
                 col = cq[:, j]
-                # keep every row tied with the batch's k-th value: the
-                # global cut breaks cos_q ties by vec_id, not this batch
+                # the batch's top-kk under the global order (cos_q desc,
+                # vec_id asc): rows tied with the kk-th value are cut by
+                # vec_id, as the window does, not by partition order
                 kth = np.partition(col, len(col) - kk)[len(col) - kk]
-                sel = np.flatnonzero(col >= kth)
+                above = np.flatnonzero(col > kth)
+                tied = np.flatnonzero(col == kth)
+                tied = tied[np.argsort(vid[tied])[:kk - len(above)]]
+                sel = np.concatenate([above, tied])
                 out_q.append(np.full(len(sel), qi[j], dtype=np.int64))
                 out_v.append(vid[sel])
                 out_c.append(col[sel])

@@ -54,7 +54,7 @@ class Cursor:
         "docs_dict", "freqs_dict",
         "nblocks", "cur_block", "pos", "docids", "freqs", "cur_docid",
         "q_weight", "max_weight", "block_max_scores", "term_id", "bound_scale",
-        "_ckey", "_table",
+        "_ckey", "_blk",
     )
 
     def __init__(self, n, block_maxs, endpoints, freq_offsets, payload,
@@ -81,31 +81,23 @@ class Cursor:
         # float64-computed scores (never causes false exclusion, only
         # marginally less pruning)
         self.bound_scale = np.float32(1.0)
-        self._ckey = None
-        self._table = None
+        self._ckey = self._blk = None
         # not yet walked: no block decoded, cur_docid below every docid
         self.cur_block = -1
         self.pos = 0
         self.docids = self.freqs = None
         self.cur_docid = -1
 
-    def block_table(self) -> tuple[bytes, np.ndarray]:
-        """The list's codec.posting_blocks table, built on first use."""
-        if self._table is None:
-            self._table = posting_blocks(
-                [self.payload], [self.n], [self.block_maxs],
-                [self.endpoints], [self.freq_offsets])
-        return self._table
-
-    def _decode(self, b: int, docs: bool) -> np.ndarray:
-        """Block b's docids (docs=True) or freqs through the block decoder."""
-        d, f = decode_posting_blocks(
-            *self.block_table(), self.docs_dict if docs else None,
-            None if docs else self.freqs_dict, blocks=slice(b, b + 1))
-        return d if docs else f
+    def block_table(self, blocks=None) -> tuple[bytes, np.ndarray]:
+        """codec.posting_blocks of ``blocks`` (None: every block): built
+        per call, for only the blocks about to be decoded."""
+        return posting_blocks([self.payload], [self.n], [self.block_maxs],
+                              [self.endpoints], [self.freq_offsets], blocks)
 
     def _decode_block(self, b: int) -> None:
-        self.docids = self._decode(b, True)
+        self._blk = self.block_table((b,))  # kept for the lazy freqs
+        self.docids, _ = decode_posting_blocks(*self._blk, self.docs_dict,
+                                               None)
         self.freqs = None  # lazy (ref dict_posting_list.hpp:164-169)
         self.cur_block = b
         self.pos = 0
@@ -156,7 +148,8 @@ class Cursor:
         if self.cur_docid < 0:
             self._decode_block(0)
         if self.freqs is None:
-            self.freqs = self._decode(self.cur_block, False)
+            _, self.freqs = decode_posting_blocks(*self._blk, None,
+                                                  self.freqs_dict)
         return int(self.freqs[self.pos])
 
     def decode_all(self) -> tuple[np.ndarray, np.ndarray]:
@@ -962,8 +955,8 @@ def block_max_wand_vec(cursors, norm_lens, num_docs: int, k: int,
             want_freqs = want_freqs or (have is not None
                                         and sc["freqs"] is not None)
             docs, freqs = decode_posting_blocks(
-                *c.block_table(), c.docs_dict,
-                c.freqs_dict if want_freqs else None, blocks=union)
+                *c.block_table(union.tolist()), c.docs_dict,
+                c.freqs_dict if want_freqs else None)
             sc["blocks"], sc["docs"], sc["freqs"] = union, docs, freqs
         return _slice_blocks(c, sc["docs"], sc["freqs"], sc["blocks"], blocks)
 

@@ -144,9 +144,9 @@ def test_kmeans_par_blas_rounds_match_jvm(spark, tmp_path):
 
 
 def test_exact_blas_tie_heavy_matches_lexsort(spark):
-    """Quantized-cosine ties at the k-th value: every batch keeps all its
-    tied rows, so the global (cos_q desc, vec_id asc) cut equals a full
-    lexsort. Rows arrive in descending vec_id order, so a batch cut that
+    """Quantized-cosine ties at the k-th value: every batch cuts its tied
+    rows by vec_id, so the global (cos_q desc, vec_id asc) cut equals a
+    full lexsort. Rows arrive in descending vec_id order, so a batch cut that
     kept an arbitrary k of the tied rows would lose the smallest ids."""
     import pandas as pd
 

@@ -45,15 +45,13 @@ def roundtrip(docs, freqs, docs_dict, freqs_dict, optimal):
         rng = np.random.default_rng(len(docs))
         sub = np.unique(rng.integers(0, nblocks, size=min(nblocks, 3)))
         buf, table = posting_blocks([payload], [len(docs)], [bmax], [endp],
-                                    [foff])
-        ds, fs = decode_posting_blocks(buf, table, docs_dict, freqs_dict,
-                                       blocks=sub)
+                                    [foff], blocks=sub.tolist())
+        ds, fs = decode_posting_blocks(buf, table, docs_dict, freqs_dict)
         exp_d = np.concatenate([docs[b * 256:(b + 1) * 256] for b in sub])
         exp_f = np.concatenate([freqs[b * 256:(b + 1) * 256] for b in sub])
         assert np.array_equal(ds, exp_d) and np.array_equal(fs, exp_f)
         # docs-only (lazy freqs) subset
-        ds2, fs2 = decode_posting_blocks(buf, table, docs_dict, None,
-                                         blocks=sub)
+        ds2, fs2 = decode_posting_blocks(buf, table, docs_dict, None)
         assert np.array_equal(ds2, exp_d) and fs2 is None
     return payload
 
@@ -264,7 +262,8 @@ def test_bic_decode_batch_property():
     lens = np.array([len(p) for p in payloads])
     starts = np.concatenate([[0], np.cumsum(lens)[:-1]])
     buf = np.frombuffer(b"".join(payloads) + b"\x00" * 16, dtype=np.uint8)
-    got = bic_decode_batch(buf, starts * 8, np.array(ns), np.array(sums))
+    got = bic_decode_batch(buf, starts * 8, np.array(ns), np.array(sums),
+                           (starts + lens) * 8)
     offs = np.concatenate([[0], np.cumsum(ns)])
     for i, e in enumerate(expect):
         assert np.array_equal(got[offs[i]:offs[i + 1]], e), i
@@ -542,7 +541,9 @@ def test_long_lists_batch_tiny_tail_routing():
 def test_truncated_payload_fails_closed(n):
     """A cut payload raises ValueError: a 1-byte cut must not decode to
     wrong freqs, a cut of a third must not surface as an IndexError —
-    on a short (single BIC block) and a multi-block list."""
+    on a short (single BIC block) and a multi-block list. A cursor step
+    decodes one block alone: a block the cut reaches raises too, a block
+    before the cut decodes exactly."""
     rng = np.random.default_rng(n)
     docs = np.sort(rng.choice(20 * n, size=n, replace=False)).astype(np.int64)
     freqs = rng.integers(1, 40, size=n).astype(np.int64)
@@ -550,9 +551,22 @@ def test_truncated_payload_fails_closed(n):
     dd = DintDictionary.build(mkpats(gaps.astype(np.uint32)))
     fd = DintDictionary.build(mkpats((freqs - 1).astype(np.uint32)))
     payload, bmax, endp, foff = encode_list(docs, freqs, dd, fd)
+    ends = list(endp[1:]) + [len(payload)]  # block b's bytes end here
     for cut in (1, len(payload) // 3):
+        short = payload[:-cut]
         with pytest.raises(ValueError):
-            decode_list_bulk(payload[:-cut], n, bmax, endp, foff, dd, fd)
+            decode_list_bulk(short, n, bmax, endp, foff, dd, fd)
+        for b in range(len(bmax)):
+            def one():
+                return decode_posting_blocks(*posting_blocks(
+                    [short], [n], [bmax], [endp], [foff], blocks=[b]), dd, fd)
+            if ends[b] > len(short):
+                with pytest.raises(ValueError):
+                    one()
+                continue
+            d, f = one()
+            assert np.array_equal(d, docs[b * 256:(b + 1) * 256])
+            assert np.array_equal(f, freqs[b * 256:(b + 1) * 256])
 
 
 def test_truncated_payload_fails_closed_in_batch():
