@@ -19,18 +19,21 @@ topk queue's strict `>` insertion (queries.hpp:150-188), so every optimized
 operator reproduces ranked_or's top-k (doc_id, score) exactly. A float64
 mode exists for cross-checking against SQL oracles.
 
-Distributed execution: queries x segments are joined on term_id (parquet
-term_id pushdown prunes the scan), then one applyInPandas group per query
-runs the kernel; per-query top-k rows come back — the executor->driver
-traffic is k rows per query, mirroring the reference's q/s protocol.
+Distributed execution: run_queries pins the index's segments executor-side
+once per handle and runs LPT-balanced query bins, one task per core,
+against them; per-query top-k rows come back — the executor->driver
+traffic is k rows per query, mirroring the reference's q/s protocol. An
+index over the pin budget falls back to joining queries x segments on
+term_id, one applyInPandas group per query.
 """
 
 from __future__ import annotations
 
 import heapq
 import os
+import threading
 from collections import OrderedDict
-from typing import Iterator
+from typing import Iterator, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -638,26 +641,35 @@ def _compacted_scores(lists, norm_lens, DT, live=None):
     return union, scores
 
 
+_INDEX_CACHE_LOCK = threading.RLock()  # make() may nest (pin -> dicts)
+
+
+def _index_cached(spark, index, name: str, make):
+    """``make()``, computed once per index handle and Spark application,
+    also under concurrent callers. Keyed by applicationId so a restarted
+    session rebuilds instead of reusing dead broadcasts; the cache lives
+    on the Index handle, whose lifetime already matches the payloads'. A
+    cached None counts."""
+    with _INDEX_CACHE_LOCK:
+        cache = getattr(index, "_bc_cache", None)
+        if cache is None:
+            cache = {}
+            try:
+                index._bc_cache = cache
+            except AttributeError:  # exotic index-like objects: no caching
+                return make()
+        key = (spark.sparkContext.applicationId, name)
+        if key not in cache:
+            cache[key] = make()
+        return cache[key]
+
+
 def shared_index_bc(spark, index, name: str, build):
     """Per-index broadcast cache for the payloads every kernel op ships
-    (docs/freqs dictionaries, norm arrays): run_queries used to
-    re-broadcast them on every call (round-2 residual), which a gate or
-    bench run pays ~80x. Keyed by Spark applicationId so a restarted
-    session re-broadcasts instead of reusing a dead handle; the cache
-    lives on the Index handle, whose lifetime already matches the
-    payloads'."""
-    cache = getattr(index, "_bc_cache", None)
-    if cache is None:
-        cache = {}
-        try:
-            index._bc_cache = cache
-        except AttributeError:  # exotic index-like objects: no caching
-            return spark.sparkContext.broadcast(build())
-    key = (spark.sparkContext.applicationId, name)
-    bc = cache.get(key)
-    if bc is None:
-        bc = cache[key] = spark.sparkContext.broadcast(build())
-    return bc
+    (docs/freqs dictionaries, norm arrays), so repeated calls on one
+    handle broadcast each payload once."""
+    return _index_cached(spark, index, name,
+                         lambda: spark.sparkContext.broadcast(build()))
 
 
 def kernel_query_join(spark: SparkSession, index, queries):
@@ -1251,19 +1263,29 @@ def read_query_log(path: str, vocab_mod: int | None = None
 def run_queries(
     spark: SparkSession,
     index,
-    queries: DataFrame | list,
+    queries: list,
     algo: str = "block_max_wand",
     k: int = 10,
     dtype: str = "float32",
     df_overrides: dict | None = None,
     idf_docs: int | None = None,
-    qpart_mult: int = 2,
     doc_filter: DocMask | None = None,
     avg_len_override: float | None = None,
     weighted: bool = False,
 ) -> DataFrame:
-    """Distributed batch retrieval. queries: DataFrame(query_id, terms
-    array<long>) or list[list[int]]. Returns (query_id, rank, doc_id, score).
+    """Distributed batch retrieval. queries: list[list[int]] of term ids;
+    duplicate ids within a query fold into its qf. Returns (query_id,
+    rank, doc_id, score), query_id being the position in ``queries``.
+
+    Runs against the index's executor-pinned segments, built on the
+    handle's first call (per Spark application) and reused by every later
+    call; queries go out in LPT-balanced bins, one task per core (see
+    _serve_topk). An index whose segments exceed PIN_BUDGET_BYTES takes
+    the shuffle fallback instead (_shuffle_topk), with identical results.
+    Every argument below is per call: one pin serves them all.
+
+    ``df_overrides``/``idf_docs``: global statistics for sharded serving
+    (see build_cursors).
 
     ``weighted=True``: queries is a list of [(term_id, weight), ...] lists
     with FLOAT per-term weights replacing the integer qf in the BM25
@@ -1280,103 +1302,63 @@ def run_queries(
 
     ``doc_filter``: optional DocMask (build_doc_filter) restricting results
     to eligible docs — filtered search (lang/domain/date/length predicates)
-    with corpus-wide BM25 statistics; combined with tombstones into one
-    broadcast bitmap.
-
-    ``qpart_mult``: query partitions = defaultParallelism * qpart_mult.
-    More partitions bound per-query skew (the unluckiest partition); fewer
-    pay less of Spark's fixed per-task cost (~170 ms of python-runner
-    machinery per task on this host — scripts/serve_profile.py). The
-    round-1 default of 8 (~2-4 queries/task) optimized skew only and left
-    >1s of pure task overhead on a 500-query batch; measured best on the
-    bench corpus is 1 (500q 2.13 -> 1.02s, 2000q 2.89 -> 1.86s), but 2 is
-    the default for skew headroom on head-term-heavy batches (within 15%
-    of 1). The steady-state serving path (BroadcastQueryServer) minimizes
-    task count via LPT bins instead of hash spreading.
+    with corpus-wide BM25 statistics; combined with the handle's current
+    tombstones into one broadcast bitmap.
     """
-    local_terms = None
-    qterms_weighted = None
-    if weighted:
-        if isinstance(queries, DataFrame):
-            raise ValueError("weighted=True takes [(term_id, weight)] lists")
-        local_terms = sorted({int(t) for ts in queries for t, _ in ts})
-        rows = [(i, int(t), float(w))
-                for i, ts in enumerate(queries) for t, w in ts]
-        qterms_weighted = (
-            spark.createDataFrame(
-                rows,
-                schema=T.StructType([
-                    T.StructField("query_id", T.LongType(), False),
-                    T.StructField("term_id", T.LongType(), False),
-                    T.StructField("qf", T.DoubleType(), False),
-                ]),
-            )
-            .groupBy("query_id", "term_id")
-            .agg(F.sum("qf").alias("qf"))
-        )
-    elif not isinstance(queries, DataFrame):
-        local_terms = sorted({int(t) for ts in queries for t in ts})
-        queries = spark.createDataFrame(
-            [(i, [int(t) for t in ts]) for i, ts in enumerate(queries)],
-            schema=T.StructType([
-                T.StructField("query_id", T.LongType(), False),
-                T.StructField("terms", T.ArrayType(T.LongType()), False),
-            ]),
-        )
-
+    folded = [_fold_query(q, weighted) for q in queries]
     DT = np.float32 if dtype == "float32" else np.float64
-    num_docs = index.num_docs
-    bound_inflate = 1.0
-    if avg_len_override is not None:
-        norms = index.norm_lens_for(float(avg_len_override), dtype)
-        baked = (index.avg_len_f64 if dtype == "float64"
-                 else float(index.avg_len))
-        ratio = float(avg_len_override) / baked
-        if ratio != 1.0:
-            # ratio > 1: true weights can exceed stored bounds by up to
-            # that factor. ratio < 1: bounds stay valid in real arithmetic,
-            # but the norms were recomputed through different f32 roundings
-            # than the build saw — keep the 1e-5 margin either way.
-            bound_inflate = max(ratio, 1.0) * (1.0 + 1e-5)
-    else:
-        norms = index.norm_lens if dtype == "float32" else index.norm_lens64
-    if avg_len_override is None:
-        norm_bc = shared_index_bc(spark, index, f"norms-{dtype}",
-                                  lambda: norms)
-    else:  # override norms are call-specific: never cache on the index
-        norm_bc = spark.sparkContext.broadcast(norms)
-    docs_dict_bc = shared_index_bc(spark, index, "docs_dict",
-                                   lambda: index.docs_dict)
-    freqs_dict_bc = shared_index_bc(spark, index, "freqs_dict",
-                                    lambda: index.freqs_dict)
-    tomb_bc = _live_bc(spark, index, doc_filter)
-    kernel = KERNELS[algo]
+    norms, bound_inflate = _bm25_norms(index, dtype, avg_len_override)
+    stats = _Stats(
+        shared_index_bc(
+            spark, index,
+            f"norms-{dtype}" if avg_len_override is None
+            else f"norms-{dtype}-{float(avg_len_override)!r}",
+            lambda: norms),
+        bound_inflate,
+        (spark.sparkContext.broadcast(df_overrides)
+         if df_overrides is not None else None),
+        idf_docs)
+    live_bc = _live_bc(spark, index, doc_filter)
+    pin = _index_pin(spark, index)
+    if pin is None:
+        return _shuffle_topk(spark, index, folded, algo, k, DT, stats,
+                             live_bc)
+    return _serve_topk(spark, pin, folded, algo, k, DT, stats, live_bc)
 
-    if qterms_weighted is not None:
-        qterms = qterms_weighted
-    else:
-        qterms = (
-            queries.select("query_id", F.explode("terms").alias("term_id"))
-            .groupBy("query_id", "term_id")
-            .agg(F.count("*").alias("qf"))
-        )
+
+def _shuffle_topk(spark, index, folded: list, algo: str, k: int, DT,
+                  stats: _Stats, live_bc) -> DataFrame:
+    """run_queries' fallback for an index over PIN_BUDGET_BYTES: the
+    batch's (query_id, term_id, qf) rows join the term-pruned segment
+    scan, hash-partition on query_id, and one applyInPandas group per
+    query runs the kernel through build_cursors."""
+    rows = [(i, t, float(w)) for i, (tids, qfs) in enumerate(folded)
+            for t, w in zip(tids, qfs)]
+    qterms = spark.createDataFrame(rows, schema=T.StructType([
+        T.StructField("query_id", T.LongType(), False),
+        T.StructField("term_id", T.LongType(), False),
+        T.StructField("qf", T.DoubleType(), False),
+    ]))
+    local_terms = sorted({t for _, t, _ in rows})
     # explicit projection: positional indexes carry a pos_payload column
     # that BM25 kernels never read — keep it out of the scan + shuffle
     joined = qterms.join(
         _pruned_segments(index, qterms, local_terms).select(*_BM25_SEG_COLS),
         "term_id")
-    # fine-grained explicit hash partitioning on query_id: per-query kernel
-    # cost is heavily skewed (head-term queries cost 10-100x tail ones), so
-    # a batch of Q queries over only `shuffle.partitions` partitions is
-    # bounded by its unluckiest partition. ~2-4 queries per partition keeps
-    # every core busy; groupBy reuses this partitioning (no extra exchange),
-    # and AQE does not coalesce user-specified repartitions.
+    # per-query kernel cost is heavily skewed (head-term queries cost
+    # 10-100x tail ones): ~2 partitions per core bound the unluckiest one;
+    # groupBy reuses this partitioning, and AQE does not coalesce it
     joined = joined.repartition(
-        spark.sparkContext.defaultParallelism * qpart_mult, "query_id")
+        spark.sparkContext.defaultParallelism * 2, "query_id")
 
+    num_docs = index.num_docs
+    docs_dict_bc = shared_index_bc(spark, index, "docs_dict",
+                                   lambda: index.docs_dict)
+    freqs_dict_bc = shared_index_bc(spark, index, "freqs_dict",
+                                    lambda: index.freqs_dict)
+    kernel = KERNELS[algo]
     merge_chunks = algo in ("ranked_and",)
-    dfo_bc = (spark.sparkContext.broadcast(df_overrides)
-              if df_overrides is not None else None)
+    norm_bc, bound_inflate, dfo_bc, idf_docs = stats
 
     def run_one(pdf: pd.DataFrame) -> pd.DataFrame:
         if not len(pdf):
@@ -1388,7 +1370,7 @@ def run_queries(
                                 idf_docs=idf_docs,
                                 bound_inflate=bound_inflate)
         topk = kernel(cursors, norm_bc.value, num_docs, k, DT,
-                      live=tomb_bc.value if tomb_bc is not None else None)
+                      live=live_bc.value if live_bc is not None else None)
         return pd.DataFrame(
             {
                 "query_id": qid,
@@ -1510,24 +1492,198 @@ def run_queries_lm(
                                                     schema=TOPK_SCHEMA)
 
 
-def _serve_kernel_rows(qid_terms, segs: dict, dd, fd, norm, num_docs: int,
+PIN_BUDGET_BYTES = 1 << 29  # segment bytes one executor-side pin may hold
+
+
+class _Pin(NamedTuple):
+    """Segments pinned executor-side (_collect_segments' seg_map) and the
+    dictionaries their kernels decode with. ``term_cost``: driver-side
+    posting count per pinned term — the LPT cost model, and each term's
+    df."""
+    seg_bc: object
+    term_cost: dict
+    docs_dict_bc: object
+    freqs_dict_bc: object
+    num_docs: int
+
+
+class _Stats(NamedTuple):
+    """One call's BM25 statistics: the norm broadcast, the pruning-bound
+    inflation for an avg_len override, and the global (df, N) overrides
+    of sharded serving (build_cursors semantics)."""
+    norm_bc: object
+    bound_inflate: float
+    dfo_bc: object
+    idf_docs: int | None
+
+
+def _fold_query(query, weighted: bool = False) -> tuple[list, list]:
+    """(term ids asc, qfs) of one query: duplicate ids fold into an int
+    count, or with ``weighted`` ((term_id, weight) items) into the sum of
+    their float weights."""
+    qf: dict = {}
+    for item in query:
+        t, w = (int(item[0]), float(item[1])) if weighted else (int(item), 1)
+        qf[t] = qf.get(t, 0) + w
+    tids = sorted(qf)
+    return tids, [qf[t] for t in tids]
+
+
+def _bm25_norms(index, dtype: str, avg_len_override) -> tuple:
+    """(norm_lens, pruning-bound inflation) of one call, under an optional
+    override of the index's baked average doc length (run_queries)."""
+    if avg_len_override is None:
+        return (index.norm_lens if dtype == "float32"
+                else index.norm_lens64), 1.0
+    baked = (index.avg_len_f64 if dtype == "float64"
+             else float(index.avg_len))
+    ratio = float(avg_len_override) / baked
+    # ratio > 1: true weights can exceed stored bounds by up to that
+    # factor. ratio < 1: bounds stay valid in real arithmetic, but the
+    # norms were recomputed through different f32 roundings than the
+    # build saw — keep the 1e-5 margin either way.
+    inflate = 1.0 if ratio == 1.0 else max(ratio, 1.0) * (1.0 + 1e-5)
+    return index.norm_lens_for(float(avg_len_override), dtype), inflate
+
+
+def _collect_segments(pruned: DataFrame, with_positions: bool,
+                      budget: int):
+    """(seg_map, term_cost) of the segment rows of ``pruned``, or None
+    when they exceed ``budget`` bytes. seg_map: term_id -> seg_id-sorted
+    (seg_id, n, block_maxs, block_max_scores, endpoints, freq_offsets,
+    payload, max_weight[, pos_payload, pos_endpoints]) tuples. The size
+    pre-check runs BEFORE collecting, so an oversized set never hits the
+    driver's maxResultSize or memory."""
+    size_expr = F.sum(F.length("payload"))
+    if with_positions:
+        size_expr = size_expr + F.sum(F.length("pos_payload"))
+    est = pruned.agg(
+        size_expr.alias("b"), F.count("*").alias("c")
+    ).collect()[0]
+    if int(est["b"] or 0) + 200 * int(est["c"] or 0) > budget:
+        return None
+    cols = list(_BM25_SEG_COLS)
+    if with_positions:
+        cols += ["pos_payload", "pos_endpoints"]
+    seg_map: dict[int, list] = {}
+    for r in pruned.select(*cols).collect():
+        entry = (
+            int(r["seg_id"]),
+            int(r["n"]),
+            np.asarray(r["block_maxs"], dtype=np.int64),
+            np.asarray(r["block_max_scores"], dtype=np.float32),
+            np.asarray(r["endpoints"], dtype=np.int64),
+            np.asarray(r["freq_offsets"], dtype=np.int64),
+            bytes(r["payload"]),
+            float(r["max_weight"]),
+        )
+        if with_positions:
+            entry = entry + (bytes(r["pos_payload"]),
+                             np.asarray(r["pos_endpoints"], dtype=np.int64))
+        seg_map.setdefault(int(r["term_id"]), []).append(entry)
+    for parts in seg_map.values():
+        parts.sort(key=lambda p: p[0])
+    term_cost = {tid: sum(p[1] for p in parts)
+                 for tid, parts in seg_map.items()}
+    return seg_map, term_cost
+
+
+def _index_pin(spark, index) -> _Pin | None:
+    """run_queries' pin: the whole index's segments, collected and
+    broadcast on the handle's first call per Spark application. None when
+    they exceed PIN_BUDGET_BYTES — cached like a pin, so the size
+    pre-check also runs once per handle."""
+    def make():
+        got = _collect_segments(index.segments, False, PIN_BUDGET_BYTES)
+        if got is None:
+            return None
+        return _Pin(
+            spark.sparkContext.broadcast(got[0]), got[1],
+            shared_index_bc(spark, index, "docs_dict",
+                            lambda: index.docs_dict),
+            shared_index_bc(spark, index, "freqs_dict",
+                            lambda: index.freqs_dict),
+            index.num_docs)
+    return _index_cached(spark, index, "segments", make)
+
+
+def _lpt_bins(spark, items: list, term_lists: list, term_cost: dict,
+              partitions: int | None) -> list[list[tuple]]:
+    """(position, item) pairs of ``items`` in at most ``partitions``
+    (default: defaultParallelism) non-empty bins, LPT-balanced — heaviest
+    first onto the lightest bin — on a driver-side cost model: the sum of
+    the item's distinct ``term_lists`` terms' posting counts, plus a fixed
+    64 so empty and tail queries still count. Per-query kernel cost is
+    heavily skewed (head-term queries cost 10-100x tail ones)."""
+    nparts = partitions or spark.sparkContext.defaultParallelism
+    nparts = max(1, min(nparts, len(items)))
+    costs = [sum(term_cost.get(t, 0) for t in {int(t) for t in ts}) + 64
+             for ts in term_lists]
+    heap = [(0, b) for b in range(nparts)]
+    bins: list[list[tuple]] = [[] for _ in range(nparts)]
+    for i in sorted(range(len(items)), key=lambda i: -costs[i]):
+        load, b = heapq.heappop(heap)
+        bins[b].append((i, items[i]))
+        heapq.heappush(heap, (load + costs[i], b))
+    return [b for b in bins if b]
+
+
+def _map_bins(spark, bins: list, work, schema) -> DataFrame:
+    """One task per bin: ``work(bin)`` yields the bin's pandas frames.
+    A spark.range with one id per partition drives mapInPandas, and the
+    bins ride in the task closure (Spark broadcasts a large one), so no
+    query rows are scanned or shuffled and no session conf is touched."""
+    if not bins:
+        return spark.createDataFrame([], schema=schema)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            for b in pdf["id"]:
+                yield from work(bins[int(b)])
+
+    return (spark.range(0, len(bins), 1, len(bins))
+            .mapInPandas(run, schema=schema))
+
+
+def _serve_topk(spark, pin: _Pin, folded: list, algo: str, k: int, DT,
+                stats: _Stats, live_bc,
+                partitions: int | None = None) -> DataFrame:
+    """The execute step of run_queries and BroadcastQueryServer.serve:
+    _fold_query'd queries in LPT bins, one task per bin and one bin per
+    core — Spark's fixed per-task cost dominates small batches — each
+    bin through _serve_kernel_rows against the pinned segments.
+    Statistics and the eligible set (``live_bc``) are per-call inputs."""
+    bins = _lpt_bins(spark, folded, [t for t, _ in folded], pin.term_cost,
+                     partitions)
+    seg_bc, dd_bc, fd_bc = pin.seg_bc, pin.docs_dict_bc, pin.freqs_dict_bc
+    num_docs = pin.num_docs
+    norm_bc, bound_inflate, dfo_bc, idf_docs = stats
+
+    def work(rows):
+        outs = _serve_kernel_rows(
+            rows, seg_bc.value, dd_bc.value, fd_bc.value, norm_bc.value,
+            num_docs, DT, algo, k,
+            live=live_bc.value if live_bc is not None else None,
+            df_overrides=dfo_bc.value if dfo_bc is not None else None,
+            idf_docs=idf_docs, bound_inflate=bound_inflate)
+        if outs:
+            yield pd.DataFrame(outs, columns=TOPK_SCHEMA.fieldNames())
+
+    return _map_bins(spark, bins, work, TOPK_SCHEMA)
+
+
+def _serve_kernel_rows(rows, segs: dict, dd, fd, norm, num_docs: int,
                        DT, algo: str, k: int, live=None,
                        df_overrides: dict | None = None,
                        idf_docs: int | None = None,
                        bound_inflate: float = 1.0) -> list:
-    """Run the pinned-segment kernel over (query_id, terms) rows; returns
-    (query_id, rank, doc_id, score) tuples. This is the exact worker-side
-    body of BroadcastQueryServer.serve — factored out so the bench/profiler
-    can time the kernel alone (no Spark) against the same seg map.
+    """Run the pinned-segment kernel over (query_id, (term_ids, qfs))
+    rows (_fold_query form); returns (query_id, rank, doc_id, score)
+    tuples. The worker-side body of _serve_topk, callable without Spark
+    so a profiler can time the kernel alone against the same seg map.
 
     ``df_overrides``/``idf_docs``/``bound_inflate``: the same global-
-    statistics channel as build_cursors — sharded/appended serving
-    (sharding.ShardedQueryServer) hands every epoch the corpus-wide
-    (N, df) and, for epochs whose baked avg_len predates an append, the
-    certified pruning-bound inflation (norms are re-pinned at server
-    construction)."""
-    from collections import Counter
-
+    statistics channel as build_cursors (sharded/appended serving)."""
     kernel = KERNELS[algo]
     scale = DT(1.0 + 1e-5) if DT is np.float64 else DT(1.0)
     if bound_inflate != 1.0:
@@ -1535,9 +1691,9 @@ def _serve_kernel_rows(qid_terms, segs: dict, dd, fd, norm, num_docs: int,
     N = int(idf_docs) if idf_docs is not None else num_docs
     merge_chunks = algo in ("ranked_and",)
     outs = []
-    for qid, terms in qid_terms:
+    for qid, (tids, qfs) in rows:
         cursors = []
-        for tid, qf in sorted(Counter(int(t) for t in terms).items()):
+        for tid, qf in zip(tids, qfs):
             parts = segs.get(tid)
             if parts is None:
                 continue
@@ -1579,13 +1735,11 @@ class BroadcastQueryServer:
     in executor memory and every query fans out to all shards, whose local
     exact top-k merge into the global exact top-k. In this engine one
     shard = one index (docid sharding per README "Scale design" gives N
-    shards at 10^12 docs); the shuffle-based run_queries remains the path
-    for indexes too large to pin in memory. Compared to the join path a
-    served batch moves no posting bytes — the join duplicated every
-    head-term payload into every query's shuffle group, which dominated
-    batch wall time; compared to one-shot run_queries_broadcast the
-    collect + broadcast of the segments is paid once at construction, not
-    per batch.
+    shards at 10^12 docs). run_queries runs the same execute step
+    (_serve_topk) on a pin its Index handle owns; a server is the explicit
+    form: its own pin lifetime (close()), a term-subset pin, pinned
+    positions for the phrase/proximity paths, and statistics fixed at
+    construction.
 
     ``terms=None`` pins the whole index (subject to max_broadcast_bytes);
     a term list pins only those terms' segments.
@@ -1593,16 +1747,15 @@ class BroadcastQueryServer:
 
     def __init__(self, spark: SparkSession, index, terms: list | None = None,
                  dtype: str = "float32",
-                 max_broadcast_bytes: int = 1 << 29,
+                 max_broadcast_bytes: int = PIN_BUDGET_BYTES,
                  with_positions: bool = False,
                  df_overrides: dict | None = None,
                  idf_docs: int | None = None,
                  avg_len_override: float | None = None):
         """``df_overrides``/``idf_docs``/``avg_len_override``: global
         statistics for multi-epoch serving (sharding.ShardedQueryServer
-        passes them per shard) — same semantics as run_queries. The norm
-        array re-pins from raw lens under the override average, and the
-        pruning-bound inflation is fixed at construction."""
+        passes them per shard) — same semantics as run_queries, fixed for
+        every batch this server serves."""
         if with_positions and not getattr(index, "has_positions", False):
             raise ValueError("with_positions requires an index built with "
                              "IndexConfig(positions=True)")
@@ -1611,77 +1764,31 @@ class BroadcastQueryServer:
         else:
             pruned = _pruned_segments(index, None,
                                       sorted({int(t) for t in terms}))
-        # size pre-check BEFORE collecting: an oversized term set must raise
-        # the intended ValueError, not hit driver maxResultSize/OOM in
-        # collect()
-        size_expr = F.sum(F.length("payload"))
-        if with_positions:
-            size_expr = size_expr + F.sum(F.length("pos_payload"))
-        est = pruned.agg(
-            size_expr.alias("b"), F.count("*").alias("c")
-        ).collect()[0]
-        total = int(est["b"] or 0) + 200 * int(est["c"] or 0)
-        if total > max_broadcast_bytes:
+        got = _collect_segments(pruned, with_positions, max_broadcast_bytes)
+        if got is None:
             raise ValueError(
-                f"pruned segments ({total} bytes) exceed the broadcast "
-                "budget; use run_queries (shuffle path) or shard the index")
-        cols = ["term_id", "seg_id", "n", "block_maxs", "block_max_scores",
-                "endpoints", "freq_offsets", "payload", "max_weight"]
-        if with_positions:
-            cols += ["pos_payload", "pos_endpoints"]
-        rows = pruned.select(*cols).collect()
-        seg_map: dict[int, list] = {}
-        for r in rows:
-            payload = bytes(r["payload"])
-            entry = (
-                int(r["seg_id"]),
-                int(r["n"]),
-                np.asarray(r["block_maxs"], dtype=np.int64),
-                np.asarray(r["block_max_scores"], dtype=np.float32),
-                np.asarray(r["endpoints"], dtype=np.int64),
-                np.asarray(r["freq_offsets"], dtype=np.int64),
-                payload,
-                float(r["max_weight"]),
-            )
-            if with_positions:
-                entry = entry + (bytes(r["pos_payload"]),
-                                 np.asarray(r["pos_endpoints"],
-                                            dtype=np.int64))
-            seg_map.setdefault(int(r["term_id"]), []).append(entry)
-        for parts in seg_map.values():
-            parts.sort(key=lambda p: p[0])
+                "pruned segments exceed the broadcast budget "
+                f"({max_broadcast_bytes} bytes); use run_queries or shard "
+                "the index")
+        sc = spark.sparkContext
         self.with_positions = with_positions
-        self.pos_dict_bc = (spark.sparkContext.broadcast(index.pos_dict)
+        self.pos_dict_bc = (sc.broadcast(index.pos_dict)
                             if with_positions else None)
         self.spark = spark
         self.dtype = dtype
         self.DT = np.float32 if dtype == "float32" else np.float64
         self.num_docs = index.num_docs
-        # driver-side cost proxy for serve()'s balanced bins: per-term
-        # posting count (the kernel's dominant cost driver)
-        self.term_cost = {tid: sum(p[1] for p in parts)
-                          for tid, parts in seg_map.items()}
-        self.idf_docs = int(idf_docs) if idf_docs is not None else None
-        self.dfo_bc = (spark.sparkContext.broadcast(
-            {int(t): int(d) for t, d in df_overrides.items()})
-            if df_overrides is not None else None)
-        self.bound_inflate = 1.0
-        if avg_len_override is not None:
-            norms = index.norm_lens_for(float(avg_len_override), dtype)
-            baked = (index.avg_len_f64 if dtype == "float64"
-                     else float(index.avg_len))
-            ratio = float(avg_len_override) / baked
-            if ratio != 1.0:
-                self.bound_inflate = max(ratio, 1.0) * (1.0 + 1e-5)
-        else:
-            norms = (index.norm_lens if dtype == "float32"
-                     else index.norm_lens64)
         # the server owns its broadcasts (close() unpersists them), so it
         # deliberately does NOT use the shared_index_bc cache
-        self.seg_bc = spark.sparkContext.broadcast(seg_map)
-        self.norm_bc = spark.sparkContext.broadcast(norms)
-        self.docs_dict_bc = spark.sparkContext.broadcast(index.docs_dict)
-        self.freqs_dict_bc = spark.sparkContext.broadcast(index.freqs_dict)
+        self.pin = _Pin(sc.broadcast(got[0]), got[1],
+                        sc.broadcast(index.docs_dict),
+                        sc.broadcast(index.freqs_dict), index.num_docs)
+        norms, bound_inflate = _bm25_norms(index, dtype, avg_len_override)
+        self.stats = _Stats(
+            sc.broadcast(norms), bound_inflate,
+            (sc.broadcast({int(t): int(d) for t, d in df_overrides.items()})
+             if df_overrides is not None else None),
+            int(idf_docs) if idf_docs is not None else None)
         # tombstones snapshot at pin time: later delete_docs calls need a
         # new server (same contract as the pinned segments themselves)
         self.tomb_bc = _tombstones_bc(spark, index)
@@ -1716,108 +1823,25 @@ class BroadcastQueryServer:
     def serve(self, queries: list, algo: str = "block_max_wand_vec",
               k: int = 10, partitions: int | None = None,
               doc_filter: "DocMask | None" = None) -> DataFrame:
-        """One batch against the pinned segments. Only (query_id, terms)
-        rows move; kernels run executor-side against the broadcast.
-        ``doc_filter``: optional DocMask applied batch-wide (filtered
-        search with corpus-wide statistics); combined with the pin-time
-        tombstones and broadcast once per distinct filter object.
+        """One batch against the pinned segments (_serve_topk: LPT bins,
+        one task per bin, ``partitions`` bins at most — default
+        defaultParallelism). Only the query term ids move; kernels run
+        executor-side against the broadcast. ``doc_filter``: optional
+        DocMask applied batch-wide (filtered search with corpus-wide
+        statistics); combined with the pin-time tombstones and broadcast
+        once per distinct filter object."""
+        return self._serve(queries, algo, k, partitions, doc_filter,
+                           self.stats)
 
-        A served batch's wall is dominated by Spark's FIXED per-task cost
-        (measured ~170 ms of JVM<->python-runner machinery per mapInPandas
-        task on this host, independent of work: an empty 64-task
-        mapInPandas costs ~0.7 s warm — scripts/serve_profile.py), so the
-        batch runs in the FEWEST tasks that still use every core:
-        ``partitions`` defaults to defaultParallelism, and per-query skew
-        (head-term queries cost 10-100x tail ones) is handled by explicit
-        LPT bin-packing on a driver-side cost model (sum of the query's
-        term posting counts — the server already holds per-term n) instead
-        of by over-partitioning. Bins ride ONE Arrow batch each: queries
-        are laid out bin-contiguously in a pandas frame, padded with
-        query_id = -1 sentinel rows (empty term lists emit nothing) so
-        every bin is exactly max-bin-size rows, and
-        arrow.maxRecordsPerBatch is pinned to that size for the
-        createDataFrame — Arrow slicing makes one batch = one partition,
-        entirely JVM-side (the previous list-createDataFrame + repartition
-        paid a python-runner stage AND a shuffle before any kernel ran).
-        Round 2 -> 3 on the 2000q sf0.1 batch: 1,342 -> 2,500-3,900 q/s
-        (host-window dependent; kernel-share of wall 0.20 -> 0.29-0.45)."""
-        spark = self.spark
-        seg_bc, norm_bc = self.seg_bc, self.norm_bc
-        docs_dict_bc, freqs_dict_bc = self.docs_dict_bc, self.freqs_dict_bc
-        tomb_bc = self._live_for(doc_filter)
-        DT, num_docs = self.DT, self.num_docs
-        dfo_bc, idf_docs = self.dfo_bc, self.idf_docs
-        bound_inflate = self.bound_inflate
-
-        qdf = self._binned_query_df(queries, partitions)
-        if qdf is None:
-            return spark.createDataFrame([], schema=TOPK_SCHEMA)
-
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            segs = seg_bc.value
-            dd = docs_dict_bc.value
-            fd = freqs_dict_bc.value
-            norm = norm_bc.value
-            for pdf in batches:
-                outs = _serve_kernel_rows(
-                    zip(pdf["query_id"], pdf["terms"]), segs, dd, fd,
-                    norm, num_docs, DT, algo, k,
-                    live=tomb_bc.value if tomb_bc is not None else None,
-                    df_overrides=dfo_bc.value if dfo_bc else None,
-                    idf_docs=idf_docs, bound_inflate=bound_inflate)
-                if outs:
-                    yield pd.DataFrame(
-                        outs, columns=["query_id", "rank", "doc_id", "score"])
-
-        return qdf.mapInPandas(run, schema=TOPK_SCHEMA)
-
-    def _binned_query_df(self, queries: list, partitions: int | None):
-        """LPT-cost-balanced, one-Arrow-batch-per-bin query DataFrame (the
-        serve() layout, see its docstring); None for an empty batch."""
-        spark = self.spark
-        nparts = partitions or spark.sparkContext.defaultParallelism
-        nparts = max(1, min(nparts, max(1, len(queries))))
-        costs = [
-            sum(self.term_cost.get(int(t), 0) for t in set(map(int, ts)))
-            + 64  # per-query fixed work so empty/tail queries still count
-            for ts in queries
-        ]
-        # LPT: heaviest query first onto the lightest bin
-        heap = [(0, b) for b in range(nparts)]
-        heapq.heapify(heap)
-        bins: list[list[int]] = [[] for _ in range(nparts)]
-        for i in sorted(range(len(queries)), key=lambda i: -costs[i]):
-            load, b = heapq.heappop(heap)
-            bins[b].append(i)
-            heapq.heappush(heap, (load + costs[i], b))
-        m = max((len(b) for b in bins), default=0)
-        if m == 0:
-            return None
-        qids: list[int] = []
-        terms_col: list[list[int]] = []
-        for b in bins:
-            for i in b:
-                qids.append(i)
-                terms_col.append([int(t) for t in queries[i]])
-            qids.extend([-1] * (m - len(b)))
-            terms_col.extend([[]] * (m - len(b)))
-        pdf_in = pd.DataFrame({
-            "query_id": np.asarray(qids, dtype=np.int64),
-            "terms": terms_col,
-        })
-        rec_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-        old_rec = spark.conf.get(rec_key)
-        spark.conf.set(rec_key, str(m))
-        try:
-            return spark.createDataFrame(
-                pdf_in,
-                schema=T.StructType([
-                    T.StructField("query_id", T.LongType(), False),
-                    T.StructField("terms", T.ArrayType(T.LongType()), False),
-                ]),
-            )
-        finally:
-            spark.conf.set(rec_key, old_rec)
+    def _serve(self, queries: list, algo: str, k: int,
+               partitions: int | None, doc_filter: "DocMask | None",
+               stats: _Stats) -> DataFrame:
+        """serve() under a caller's statistics (ShardedQueryServer hands
+        every shard the global df map this way)."""
+        return _serve_topk(self.spark, self.pin,
+                           [_fold_query(q) for q in queries], algo, k,
+                           self.DT, stats, self._live_for(doc_filter),
+                           partitions)
 
     def _serve_positional(self, queries: list, kernel_fn,
                           partitions: int | None,
@@ -1828,59 +1852,57 @@ class BroadcastQueryServer:
         then ``kernel_fn(ord_keys) -> (docs, tfs)``."""
         if not self.with_positions:
             raise ValueError("server was built without with_positions=True")
-        spark = self.spark
-        seg_bc, pos_dict_bc = self.seg_bc, self.pos_dict_bc
-        docs_dict_bc, freqs_dict_bc = self.docs_dict_bc, self.freqs_dict_bc
+        seg_bc, pos_dict_bc = self.pin.seg_bc, self.pos_dict_bc
+        docs_dict_bc, freqs_dict_bc = (self.pin.docs_dict_bc,
+                                       self.pin.freqs_dict_bc)
         tomb_bc = self._live_for(doc_filter)
 
-        qdf = self._binned_query_df(queries, partitions)
-        if qdf is None:
-            return spark.createDataFrame([], schema=PHRASE_SCHEMA)
-
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def work(rows):
             segs = seg_bc.value
             dd, fd = docs_dict_bc.value, freqs_dict_bc.value
             pdict = pos_dict_bc.value
             live = tomb_bc.value if tomb_bc is not None else None
-            for pdf in batches:
-                out_q, out_d, out_t = [], [], []
-                for qid, terms in zip(pdf["query_id"], pdf["terms"]):
-                    if qid < 0 or not len(terms):
-                        continue
-                    keys, absent = {}, False
-                    for tid in {int(t) for t in terms}:
-                        parts = segs.get(tid)
-                        if parts is None:
-                            absent = True
-                            break
-                        # parts are seg_id-sorted disjoint increasing doc
-                        # ranges -> the concat is globally sorted
-                        per_seg = [
-                            _seg_occurrence_keys(
-                                tid, p[0], p[1], p[6], p[2], p[4], p[5],
-                                p[8], p[9], dd, fd, pdict)
-                            for p in parts
-                        ]
-                        keys[tid] = (per_seg[0] if len(per_seg) == 1
-                                     else np.concatenate(per_seg))
-                    if absent:
-                        continue
-                    docs, tfs = kernel_fn([keys[int(t)] for t in terms])
-                    if live is not None and len(docs):
-                        keep = live.mask[docs]
-                        docs, tfs = docs[keep], tfs[keep]
-                    if len(docs):
-                        out_q.append(np.full(len(docs), int(qid), np.int64))
-                        out_d.append(docs)
-                        out_t.append(tfs)
-                if out_q:
-                    yield pd.DataFrame({
-                        "query_id": np.concatenate(out_q),
-                        "doc_id": np.concatenate(out_d),
-                        "phrase_tf": np.concatenate(out_t),
-                    })
+            out_q, out_d, out_t = [], [], []
+            for qid, terms in rows:
+                if not len(terms):
+                    continue
+                keys, absent = {}, False
+                for tid in {int(t) for t in terms}:
+                    parts = segs.get(tid)
+                    if parts is None:
+                        absent = True
+                        break
+                    # parts are seg_id-sorted disjoint increasing doc
+                    # ranges -> the concat is globally sorted
+                    per_seg = [
+                        _seg_occurrence_keys(
+                            tid, p[0], p[1], p[6], p[2], p[4], p[5],
+                            p[8], p[9], dd, fd, pdict)
+                        for p in parts
+                    ]
+                    keys[tid] = (per_seg[0] if len(per_seg) == 1
+                                 else np.concatenate(per_seg))
+                if absent:
+                    continue
+                docs, tfs = kernel_fn([keys[int(t)] for t in terms])
+                if live is not None and len(docs):
+                    keep = live.mask[docs]
+                    docs, tfs = docs[keep], tfs[keep]
+                if len(docs):
+                    out_q.append(np.full(len(docs), int(qid), np.int64))
+                    out_d.append(docs)
+                    out_t.append(tfs)
+            if out_q:
+                yield pd.DataFrame({
+                    "query_id": np.concatenate(out_q),
+                    "doc_id": np.concatenate(out_d),
+                    "phrase_tf": np.concatenate(out_t),
+                })
 
-        return qdf.mapInPandas(run, schema=PHRASE_SCHEMA)
+        return _map_bins(self.spark,
+                         _lpt_bins(self.spark, queries, queries,
+                                   self.pin.term_cost, partitions),
+                         work, PHRASE_SCHEMA)
 
     def serve_phrases(self, phrases: list,
                       partitions: int | None = None,
@@ -1916,108 +1938,84 @@ class BroadcastQueryServer:
             raise ValueError("server was built without with_positions=True")
         from collections import Counter
 
-        spark = self.spark
-        seg_bc, pos_dict_bc = self.seg_bc, self.pos_dict_bc
-        docs_dict_bc, freqs_dict_bc = self.docs_dict_bc, self.freqs_dict_bc
-        norm_bc = self.norm_bc
+        seg_bc, pos_dict_bc = self.pin.seg_bc, self.pos_dict_bc
+        docs_dict_bc, freqs_dict_bc = (self.pin.docs_dict_bc,
+                                       self.pin.freqs_dict_bc)
+        norm_bc = self.stats.norm_bc
         tomb_bc = self._live_for(doc_filter)
         DT, num_docs = self.DT, self.num_docs
 
-        qdf = self._binned_query_df(phrases, partitions)
-        if qdf is None:
-            return spark.createDataFrame([], schema=TOPK_SCHEMA)
-
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def work(rows):
             segs = seg_bc.value
             dd, fd = docs_dict_bc.value, freqs_dict_bc.value
             pdict = pos_dict_bc.value
             norm = norm_bc.value
             live = tomb_bc.value if tomb_bc is not None else None
-            for pdf in batches:
-                outs = []
-                for qid, terms in zip(pdf["query_id"], pdf["terms"]):
-                    if qid < 0 or not len(terms):
-                        continue
-                    phrase = [int(t) for t in terms]
-                    keys, absent = {}, False
-                    for tid in set(phrase):
-                        parts = segs.get(tid)
-                        if parts is None:
-                            absent = True
-                            break
-                        per_seg = [
-                            _seg_occurrence_keys(
-                                tid, p[0], p[1], p[6], p[2], p[4], p[5],
-                                p[8], p[9], dd, fd, pdict)
-                            for p in parts
-                        ]
-                        keys[tid] = (per_seg[0] if len(per_seg) == 1
-                                     else np.concatenate(per_seg))
-                    if absent:
-                        continue
-                    docs, _tfs = phrase_match_kernel(
-                        [keys[t] for t in phrase])
-                    if live is not None and len(docs):
-                        docs = docs[live.mask[docs]]
-                    if not len(docs):
-                        continue
-                    counts = Counter(phrase)
-                    infos = []
-                    for tid in sorted(counts):
-                        parts = segs[tid]
-                        df_total = sum(p[1] for p in parts)
-                        dec = []
-                        for p in parts:
-                            c = Cursor(p[1], p[2], p[4], p[5], p[6],
-                                       num_docs, dd, fd, term_id=tid)
-                            dec.append(_cached_full_decode(c))
-                        dl = (dec[0][0] if len(dec) == 1
-                              else np.concatenate([d[0] for d in dec]))
-                        fl = (dec[0][1] if len(dec) == 1
-                              else np.concatenate([d[1] for d in dec]))
-                        infos.append((counts[tid], df_total, dl, fl))
-                    score = _bm25_score_matched(docs, infos, norm,
-                                                num_docs, DT)
-                    order = np.lexsort((docs, -score))[:k]
-                    for rank, i in enumerate(order, 1):
-                        outs.append((int(qid), rank, int(docs[i]),
-                                     float(score[i])))
-                if outs:
-                    yield pd.DataFrame(
-                        outs, columns=["query_id", "rank", "doc_id",
-                                       "score"])
+            outs = []
+            for qid, terms in rows:
+                if not len(terms):
+                    continue
+                phrase = [int(t) for t in terms]
+                keys, absent = {}, False
+                for tid in set(phrase):
+                    parts = segs.get(tid)
+                    if parts is None:
+                        absent = True
+                        break
+                    per_seg = [
+                        _seg_occurrence_keys(
+                            tid, p[0], p[1], p[6], p[2], p[4], p[5],
+                            p[8], p[9], dd, fd, pdict)
+                        for p in parts
+                    ]
+                    keys[tid] = (per_seg[0] if len(per_seg) == 1
+                                 else np.concatenate(per_seg))
+                if absent:
+                    continue
+                docs, _tfs = phrase_match_kernel([keys[t] for t in phrase])
+                if live is not None and len(docs):
+                    docs = docs[live.mask[docs]]
+                if not len(docs):
+                    continue
+                counts = Counter(phrase)
+                infos = []
+                for tid in sorted(counts):
+                    parts = segs[tid]
+                    df_total = sum(p[1] for p in parts)
+                    dec = []
+                    for p in parts:
+                        c = Cursor(p[1], p[2], p[4], p[5], p[6],
+                                   num_docs, dd, fd, term_id=tid)
+                        dec.append(_cached_full_decode(c))
+                    dl = (dec[0][0] if len(dec) == 1
+                          else np.concatenate([d[0] for d in dec]))
+                    fl = (dec[0][1] if len(dec) == 1
+                          else np.concatenate([d[1] for d in dec]))
+                    infos.append((counts[tid], df_total, dl, fl))
+                score = _bm25_score_matched(docs, infos, norm, num_docs, DT)
+                order = np.lexsort((docs, -score))[:k]
+                for rank, i in enumerate(order, 1):
+                    outs.append((int(qid), rank, int(docs[i]),
+                                 float(score[i])))
+            if outs:
+                yield pd.DataFrame(outs, columns=TOPK_SCHEMA.fieldNames())
 
-        return qdf.mapInPandas(run, schema=TOPK_SCHEMA)
+        return _map_bins(self.spark,
+                         _lpt_bins(self.spark, phrases, phrases,
+                                   self.pin.term_cost, partitions),
+                         work, TOPK_SCHEMA)
 
     def close(self) -> None:
         """Release the pinned broadcasts (call after all served DataFrames
         have been consumed — Spark broadcasts are lazy-referenced)."""
-        for bc in (self.seg_bc, self.norm_bc, self.docs_dict_bc,
-                   self.freqs_dict_bc, self.tomb_bc, self.pos_dict_bc,
+        for bc in (self.pin.seg_bc, self.pin.docs_dict_bc,
+                   self.pin.freqs_dict_bc, self.stats.norm_bc,
+                   self.stats.dfo_bc, self.tomb_bc, self.pos_dict_bc,
                    *self._filter_bcs.values()):
             try:
                 bc is not None and bc.unpersist()
             except Exception:
                 pass
-
-
-def run_queries_broadcast(
-    spark: SparkSession,
-    index,
-    queries: list,
-    algo: str = "block_max_wand_vec",
-    k: int = 10,
-    dtype: str = "float32",
-    max_broadcast_bytes: int = 1 << 29,
-) -> DataFrame:
-    """One-shot convenience wrapper: pin the batch's terms and serve it.
-    For steady-state serving construct a BroadcastQueryServer once and call
-    serve() per batch — the segment collect/broadcast then amortizes."""
-    srv = BroadcastQueryServer(
-        spark, index,
-        terms=sorted({int(t) for ts in queries for t in ts}),
-        dtype=dtype, max_broadcast_bytes=max_broadcast_bytes)
-    return srv.serve(queries, algo=algo, k=k)
 
 
 LATENCY_SCHEMA = T.StructType([
@@ -2030,7 +2028,7 @@ LATENCY_SCHEMA = T.StructType([
 def query_latency_stats(spark: SparkSession, index, queries: list,
                         algo: str = "block_max_wand", k: int = 10,
                         runs: int = 3, dtype: str = "float32",
-                        max_broadcast_bytes: int = 1 << 29) -> dict:
+                        max_broadcast_bytes: int = PIN_BUDGET_BYTES) -> dict:
     """The reference's per-query latency protocol (src/queries.cpp:25-60):
     each query op (cursor setup + kernel) executes ``runs + 1`` times
     worker-side against pinned segments; the first run is warmup (fills
@@ -2044,65 +2042,32 @@ def query_latency_stats(spark: SparkSession, index, queries: list,
         spark, index,
         terms=sorted({int(t) for ts in queries for t in ts}),
         dtype=dtype, max_broadcast_bytes=max_broadcast_bytes)
-    seg_bc, norm_bc = srv.seg_bc, srv.norm_bc
-    docs_dict_bc, freqs_dict_bc = srv.docs_dict_bc, srv.freqs_dict_bc
-    tomb_bc = srv.tomb_bc
-    DT, num_docs = srv.DT, srv.num_docs
-    kernel = KERNELS[algo]
+    seg_bc, dd_bc, fd_bc = (srv.pin.seg_bc, srv.pin.docs_dict_bc,
+                            srv.pin.freqs_dict_bc)
+    norm_bc, tomb_bc, DT, num_docs = (srv.stats.norm_bc, srv.tomb_bc,
+                                      srv.DT, srv.num_docs)
 
-    qdf = spark.createDataFrame(
-        [(i, [int(t) for t in ts]) for i, ts in enumerate(queries)],
-        schema=T.StructType([
-            T.StructField("query_id", T.LongType(), False),
-            T.StructField("terms", T.ArrayType(T.LongType()), False),
-        ]),
-    ).repartition(spark.sparkContext.defaultParallelism * 4)
+    def work(rows):
+        args = (seg_bc.value, dd_bc.value, fd_bc.value, norm_bc.value,
+                num_docs, DT, algo, k)
+        live = tomb_bc.value if tomb_bc is not None else None
+        outs = []
+        for row in rows:
+            # the full query op, reference-style: cursor setup + kernel;
+            # run 0 is the untimed warmup (queries.cpp:32-34)
+            _serve_kernel_rows([row], *args, live=live)
+            for r in range(1, runs + 1):
+                t0 = _time.perf_counter()
+                _serve_kernel_rows([row], *args, live=live)
+                outs.append((row[0], r, (_time.perf_counter() - t0) * 1e6))
+        if outs:
+            yield pd.DataFrame(outs, columns=LATENCY_SCHEMA.fieldNames())
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from collections import Counter
-
-        segs = seg_bc.value
-        dd = docs_dict_bc.value
-        fd = freqs_dict_bc.value
-        norm = norm_bc.value
-        scale = DT(1.0 + 1e-5) if DT is np.float64 else DT(1.0)
-
-        def one_op(terms):
-            # the full query op, reference-style: cursor setup + kernel
-            cursors = []
-            for tid, qf in sorted(Counter(int(t) for t in terms).items()):
-                parts = segs.get(tid)
-                if parts is None:
-                    continue
-                df_total = sum(p[1] for p in parts)
-                qw = _qtw(qf, df_total, num_docs, DT)
-                for _, n, bmax, bms, endp, foff, payload, mw in (
-                        p[:8] for p in parts):
-                    c = Cursor(n, bmax, endp, foff, payload, num_docs,
-                               dd, fd, block_max_scores=bms, term_id=tid)
-                    c.q_weight = qw
-                    c.bound_scale = scale
-                    c.max_weight = DT(qw * DT(mw) * c.bound_scale)
-                    cursors.append(c)
-            return (kernel(cursors, norm, num_docs, k, DT,
-                           live=tomb_bc.value if tomb_bc is not None
-                           else None)
-                    if cursors else [])
-
-        for pdf in batches:
-            outs = []
-            for qid, terms in zip(pdf["query_id"], pdf["terms"]):
-                one_op(terms)  # run 0: warmup, untimed (queries.cpp:32-34)
-                for r in range(1, runs + 1):
-                    t0 = _time.perf_counter()
-                    one_op(terms)
-                    el = (_time.perf_counter() - t0) * 1e6
-                    outs.append((int(qid), r, el))
-            if outs:
-                yield pd.DataFrame(outs,
-                                   columns=["query_id", "run", "usecs"])
-
-    samples = qdf.mapInPandas(run, schema=LATENCY_SCHEMA).toPandas()
+    folded = [_fold_query(q) for q in queries]
+    bins = _lpt_bins(spark, folded, [t for t, _ in folded],
+                     srv.pin.term_cost,
+                     spark.sparkContext.defaultParallelism * 4)
+    samples = _map_bins(spark, bins, work, LATENCY_SCHEMA).toPandas()
     us = np.sort(samples["usecs"].to_numpy())
     return {
         "avg_us": float(us.mean()),

@@ -26,6 +26,7 @@ the round-1 ceiling of one dense num_docs array on the driver.
 from __future__ import annotations
 
 import json
+import logging
 import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -34,10 +35,12 @@ from pyspark.sql import functions as F
 from dint_spark.ids import add_dense_index
 from dint_spark.index import (Index, IndexConfig, build_index, load_index,
                               vocab_ensure_ttf)
-from dint_spark.queries import run_queries
+from dint_spark.queries import PIN_BUDGET_BYTES, run_queries
 from dint_spark.tokenizer import assign_doc_ids, build_vocab, doclens, tokenize
 
 SHARD_MANIFEST = "shards.json"
+
+log = logging.getLogger(__name__)
 
 
 def build_sharded_index(
@@ -94,13 +97,19 @@ def build_sharded_index(
     bases = man["bases"]
     for s in range(man["num_shards"]):
         sdir = os.path.join(out_dir, f"shard={s}")
-        if os.path.exists(os.path.join(sdir, "manifest.json")):
+        smf = os.path.join(sdir, "manifest.json")
+        if os.path.exists(smf):
             try:
-                idx = load_index(spark, sdir)
-                if "meta" in idx.manifest["steps"]:
-                    continue
-            except Exception:
-                pass
+                load_index(spark, sdir)  # loads only once "meta" is done
+                continue
+            except Exception as e:
+                log.warning("shard %d (%s) does not load (%s: %s); "
+                            "rebuilding it", s, sdir, type(e).__name__, e)
+            try:
+                with open(smf) as f:
+                    json.load(f)
+            except ValueError:  # unreadable: no step in it can resume
+                os.remove(smf)
         if docs_all is None:
             docs_all = (
                 tokenize(assign_doc_ids(pages.select("url", "text")))
@@ -452,8 +461,8 @@ class ShardedQueryServer:
 
     Global statistics are fixed at construction: N = the manifest's
     num_docs, per-term df = the sum of every shard's pinned posting counts
-    (each shard's ``term_cost`` is exactly its build-time df per term — no
-    vocabulary scan), and epochs whose baked avg_len predates an append
+    (each shard pin's ``term_cost`` is exactly its build-time df per term —
+    no vocabulary scan), and epochs whose baked avg_len predates an append
     re-pin their norm array under the CURRENT global average with the
     certified pruning-bound inflation (queries.BroadcastQueryServer
     override channel). Results are bit-identical to run_queries_sharded
@@ -466,7 +475,7 @@ class ShardedQueryServer:
 
     def __init__(self, spark: SparkSession, sidx: ShardedIndex,
                  terms: list | None = None, dtype: str = "float32",
-                 max_broadcast_bytes: int = 1 << 29):
+                 max_broadcast_bytes: int = PIN_BUDGET_BYTES):
         from dint_spark.queries import BroadcastQueryServer
 
         self.spark = spark
@@ -481,12 +490,11 @@ class ShardedQueryServer:
                 idf_docs=sidx.num_docs, avg_len_override=avg_ovr))
         dfo: dict[int, int] = {}
         for srv in self.servers:
-            for t, n in srv.term_cost.items():
+            for t, n in srv.pin.term_cost.items():
                 dfo[t] = dfo.get(t, 0) + int(n)
-        # ONE broadcast of the global df map, shared by every shard server
-        dfo_bc = spark.sparkContext.broadcast(dfo)
-        for srv in self.servers:
-            srv.dfo_bc = dfo_bc
+        # ONE broadcast of the global df map, handed to every shard server
+        # through its per-call statistics
+        self.dfo_bc = spark.sparkContext.broadcast(dfo)
 
     def serve(self, queries: list, algo: str = "block_max_wand_vec",
               k: int = 10, partitions: int | None = None,
@@ -500,10 +508,10 @@ class ShardedQueryServer:
                 f"({len(self.servers)}), got {len(doc_filters)}")
         parts = []
         for s, srv in enumerate(self.servers):
-            r = srv.serve(
-                queries, algo=algo, k=k, partitions=partitions,
-                doc_filter=doc_filters[s] if doc_filters is not None
-                else None)
+            r = srv._serve(
+                queries, algo, k, partitions,
+                doc_filters[s] if doc_filters is not None else None,
+                srv.stats._replace(dfo_bc=self.dfo_bc))
             parts.append(r.select(
                 "query_id",
                 (F.col("doc_id") + self.sidx.bases[s]).alias("doc_id"),

@@ -64,14 +64,14 @@ def main() -> None:
     t_pin = time.time() - t0
 
     # --- pure kernel loop, single core, no Spark ---------------------------
-    from dint_spark.queries import _serve_kernel_rows
+    from dint_spark.queries import _fold_query, _serve_kernel_rows
 
     for _ in range(2):  # warmup decodes the LRU
         t0 = time.time()
         rows = _serve_kernel_rows(
-            list(enumerate(queries)), server.seg_bc.value,
-            server.docs_dict_bc.value,
-            server.freqs_dict_bc.value, server.norm_bc.value,
+            list(enumerate(map(_fold_query, queries))),
+            server.pin.seg_bc.value, server.pin.docs_dict_bc.value,
+            server.pin.freqs_dict_bc.value, server.stats.norm_bc.value,
             server.num_docs, server.DT, "block_max_wand_vec", 10)
         kernel_core_s = time.time() - t0
     n_rows = len(rows)

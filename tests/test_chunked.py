@@ -14,10 +14,10 @@ import pytest
 from dint_spark.corpus import generate_pages
 from dint_spark.index import IndexConfig, build_index
 from dint_spark.queries import (
+    BroadcastQueryServer,
     decoded_postings,
     run_boolean_queries,
     run_queries,
-    run_queries_broadcast,
 )
 
 N_DOCS = 400
@@ -81,7 +81,8 @@ def test_chunked_broadcast_identical(pair):
     idx1, idx2, queries = pair
     k = ["query_id", "rank"]
     spark = idx1.spark
-    rb = _pdf(run_queries_broadcast(spark, idx2, queries,
-                                    algo="block_max_wand_vec", k=10), k)
+    srv = BroadcastQueryServer(
+        spark, idx2, terms=sorted({t for ts in queries for t in ts}))
+    rb = _pdf(srv.serve(queries, algo="block_max_wand_vec", k=10), k)
     r1 = _pdf(run_queries(spark, idx1, queries, algo="ranked_or", k=10), k)
     assert rb.equals(r1)

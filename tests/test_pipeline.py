@@ -179,9 +179,9 @@ def test_config_mismatch_rejected(spark, index):
 
 
 def test_broadcast_serving_path_agrees(spark, index):
-    """run_queries_broadcast (document-sharded serving pattern, no payload
-    shuffle) must equal the shuffle path exactly."""
-    from dint_spark.queries import run_queries_broadcast
+    """A term-subset BroadcastQueryServer (document-sharded serving
+    pattern, no payload shuffle) must equal run_queries exactly."""
+    from dint_spark.queries import BroadcastQueryServer
 
     vocab = index.vocab().orderBy("term_id").limit(500).collect()
     tids = [r["term_id"] for r in vocab]
@@ -193,8 +193,10 @@ def test_broadcast_serving_path_agrees(spark, index):
     queries.append([10**9])  # unknown term -> no rows
     a = sorted(run_queries(spark, index, queries,
                            algo="block_max_wand_vec", k=10).collect())
-    b = sorted(run_queries_broadcast(spark, index, queries,
-                                     algo="block_max_wand_vec", k=10).collect())
+    srv = BroadcastQueryServer(
+        spark, index, terms=sorted({t for ts in queries for t in ts}))
+    b = sorted(srv.serve(queries, algo="block_max_wand_vec", k=10).collect())
+    srv.close()
     assert a == b
 
 

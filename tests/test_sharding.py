@@ -3,6 +3,8 @@ return top-k (doc_id AND score) identical to the single-shard build —
 per-shard kernels run with global (N, df, avg_len), so per-doc float32
 scores are bit-equal and the shard merge reproduces TopK's tie-breaks."""
 
+import logging
+import os
 import shutil
 
 import pytest
@@ -84,6 +86,27 @@ def test_sharded_resume(pair, spark):
     re = ShardedIndex(spark, sidx.dir)
     assert re.num_docs == sidx.num_docs
     assert re.bases == sidx.bases
+
+
+def test_sharded_resume_logs_rebuilt_shard(pair, spark, tmp_path, caplog):
+    """A shard whose manifest.json does not parse is rebuilt, and the
+    resume loop logs which shard and why."""
+    _, sidx, queries = pair
+    d = str(tmp_path / "copy")
+    shutil.copytree(sidx.dir, d)
+    with open(os.path.join(d, "shard=1", "manifest.json"), "w") as f:
+        f.write("{not json")
+    with caplog.at_level(logging.WARNING, logger="dint_spark.sharding"):
+        rebuilt = build_sharded_index(
+            spark, generate_pages(spark, N_DOCS, seed=11), d, num_shards=2,
+            config=IndexConfig(num_buckets=2, input_tag="shard"))
+    msgs = [r.getMessage() for r in caplog.records
+            if r.name == "dint_spark.sharding"]
+    assert len(msgs) == 1
+    assert "shard 1" in msgs[0] and "JSONDecodeError" in msgs[0]
+    k = ["query_id", "rank"]
+    assert _pdf(run_queries_sharded(spark, rebuilt, queries), k).equals(
+        _pdf(run_queries_sharded(spark, sidx, queries), k))
 
 
 def test_sharded_filters_match_unsharded(spark, pair):
