@@ -72,8 +72,9 @@ def get_spark(
                 str(1 << 17))
         # Preload numpy/pandas/pyarrow in the worker daemon so forked
         # python workers start warm (see dint_spark/daemon.py: the stock
-        # daemon paid ~2s import per worker, a 30-80s storm at local[32]),
-        # and keep idle workers alive between JVM-heavy phases.
+        # daemon paid ~2s import per worker, a 30-80s storm at local[32])
+        # and skip re-reading unchanged zip archives on every task, and
+        # keep idle workers alive between JVM-heavy phases.
         .config("spark.python.daemon.module", "dint_spark.daemon")
         # the daemon module must be importable in the spawned worker python
         # regardless of the driver's cwd (on a cluster --py-files covers it)

@@ -1,9 +1,10 @@
 """Spark-free kernel profile over the cached 1M-doc gate index: where do
 the ~15 ms/query go at 92.6M postings?
 
-At sf0.1 the served batch is scheduling-bound (serve_profile.py); at 1M
-docs SURVEY records the kernel IS the wall (66.9 q/s on 16 cores ~ 4.2
-q/s/core ~ 15.5 ms/query amortized). This profiler loads the index with
+At sf0.1 the served batch is scheduling-bound (see
+`perfbench/run.py --workload serve --trace 1`); at 1M docs SURVEY
+records the kernel IS the wall (66.9 q/s on 16 cores ~ 4.2 q/s/core ~
+15.5 ms/query amortized). This profiler loads the index with
 pyarrow only (no Spark, no JVM) and decomposes a query batch:
 
   cursor_build_s   seg-map lookup + Cursor construction
