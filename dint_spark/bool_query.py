@@ -10,15 +10,15 @@ Semantics (the ES contract):
   - the score is the BM25 sum over the doc's matched must AND should
     terms (must_not never scores).
 
-Kernel shape: one applyInPandas group per query over the pruned
-segment rows (the run_queries plumbing). All clause lists decode once
-(worker LRU), eligibility is three vectorized membership counts over
-the sorted match union (searchsorted scatter-adds — no per-doc Python),
-and scoring reuses the exact compacted accumulation shared with
-ranked_or/collapse/pagination (queries._compacted_scores), so scores
-are bit-identical to ranked_or over the same term multiset. Selection
-runs in floor(score*quant) integer space for cross-host and SQL-oracle
-reproducibility. Only |queries| x k rows leave the workers.
+Kernel shape: a per-query body on the one execute step
+(queries._execute: the index pin, one task per core). All clause lists
+decode once (worker LRU), eligibility is three vectorized membership
+counts over the sorted match union (searchsorted scatter-adds — no
+per-doc Python), and scoring reuses the exact compacted accumulation
+shared with ranked_or/collapse/pagination (queries._compacted_scores),
+so scores are bit-identical to ranked_or over the same term multiset.
+Selection runs in floor(score*quant) integer space for cross-host and
+SQL-oracle reproducibility. Only |queries| x k rows leave the workers.
 
 At 10^12 docs this composes like every other kernel op: per-shard
 num_docs bounds the arrays, docid sharding fans out via the existing
@@ -35,19 +35,18 @@ from __future__ import annotations
 from collections import Counter
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from dint_spark.queries import (
     DocMask,
+    _call_stats,
     _compacted_scores,
+    _execute,
+    _fold_query,
     _live_bc,
-    _pruned_segments,
-    _BM25_SEG_COLS,
-    build_cursors,
-    shared_index_bc,
+    _quantized_order,
+    _value,
 )
 
 BOOL_SCHEMA = T.StructType([
@@ -89,53 +88,26 @@ def run_bool_queries(
     """Top-``k`` per compound query by (score_q desc, doc_id asc).
     Returns (query_id, rank, doc_id, score_q)."""
     specs = [s if isinstance(s, BoolSpec) else BoolSpec(*s) for s in specs]
-    # all clauses feed the same qterms scan; clause membership rides a
-    # broadcast per-query map (term multisets, clause-disjoint qf counts)
-    rows = []
-    clause_map = {}
-    for qid, s in enumerate(specs):
+    # every clause's terms feed one cursor set (clause-disjoint qf
+    # counts); clause membership rides in the query's item
+    items = []
+    for s in specs:
         qf = Counter(s.must) + Counter(s.should)
         for t in set(s.must_not) - set(qf):
             qf[t] = 1  # weight unused for pure-negative terms
-        rows += [(qid, int(t), int(c)) for t, c in sorted(qf.items())]
-        clause_map[qid] = (frozenset(s.must), frozenset(s.should),
-                           frozenset(s.must_not), s.min_should)
-    local_terms = sorted({t for _, t, _ in rows})
-    qterms = spark.createDataFrame(
-        rows,
-        schema=T.StructType([
-            T.StructField("query_id", T.LongType(), False),
-            T.StructField("term_id", T.LongType(), False),
-            T.StructField("qf", T.LongType(), False),
-        ]),
-    )
-    num_docs = index.num_docs
+        tids = sorted(qf)
+        items.append((tids, [qf[t] for t in tids], frozenset(s.must),
+                      frozenset(s.should), frozenset(s.must_not),
+                      s.min_should))
     DT = np.float32 if dtype == "float32" else np.float64
-    norms = index.norm_lens if dtype == "float32" else index.norm_lens64
-    norm_bc = shared_index_bc(spark, index, f"norms-{dtype}",
-                              lambda: norms)
-    docs_dict_bc = shared_index_bc(spark, index, "docs_dict",
-                                   lambda: index.docs_dict)
-    freqs_dict_bc = shared_index_bc(spark, index, "freqs_dict",
-                                    lambda: index.freqs_dict)
-    tomb_bc = _live_bc(spark, index, doc_filter)
-    clause_bc = spark.sparkContext.broadcast(clause_map)
+    stats = _call_stats(spark, index, dtype)
+    norm_bc, live_bc = stats.norm_bc, _live_bc(spark, index, doc_filter)
 
-    joined = qterms.join(
-        _pruned_segments(index, qterms, local_terms).select(*_BM25_SEG_COLS),
-        "term_id")
-
-    def run_one(pdf: pd.DataFrame) -> pd.DataFrame:
-        cols = ["query_id", "rank", "doc_id", "score_q"]
-        if not len(pdf):
-            return pd.DataFrame(columns=cols)
-        qid = int(pdf["query_id"].iloc[0])
-        must, should, neg, min_should = clause_bc.value[qid]
-        cursors = build_cursors(pdf, docs_dict_bc.value,
-                                freqs_dict_bc.value, num_docs, DT)
+    def body(qid, item, cursors):
+        must, should, neg, min_should = item[2:]
         # a must term whose posting list is absent can never be satisfied
         if len({c.term_id for c in cursors} & must) < len(must):
-            return pd.DataFrame(columns=cols)
+            return None
         pos_lists, must_lists, should_lists, neg_docs = [], [], [], []
         for c in cursors:  # term_id asc — canonical accumulation order
             docs, freqs = c.decode_all()
@@ -150,8 +122,8 @@ def run_bool_queries(
             if c.term_id in neg:
                 neg_docs.append(docs)
         if not pos_lists:
-            return pd.DataFrame(columns=cols)
-        live = tomb_bc.value if tomb_bc is not None else None
+            return None
+        live = _value(live_bc)
         union, scores = _compacted_scores(pos_lists, norm_bc.value, DT,
                                           live)
         # vectorized clause counts over the sorted union
@@ -170,20 +142,11 @@ def run_bool_queries(
             ok &= ~np.isin(union, np.concatenate(neg_docs))
         docs, sq = union[ok], np.floor(
             scores[ok].astype(np.float64) * quant).astype(np.int64)
-        if len(docs) > 4 * k and k > 0:
-            # O(n) preselect, k-th-value ties kept (paging contract)
-            thr = -np.partition(-sq, k - 1)[k - 1]
-            sel = np.flatnonzero(sq >= thr)
-            docs, sq = docs[sel], sq[sel]
-        order = np.lexsort((docs, -sq))[:k]
-        return pd.DataFrame({
-            "query_id": qid,
-            "rank": np.arange(1, len(order) + 1, dtype=np.int32),
-            "doc_id": docs[order].astype(np.int64),
-            "score_q": sq[order],
-        })
+        order = _quantized_order(docs, sq, k)
+        return (np.arange(1, len(order) + 1, dtype=np.int32),
+                docs[order].astype(np.int64), sq[order])
 
-    return joined.groupBy("query_id").applyInPandas(run_one, BOOL_SCHEMA)
+    return _execute(spark, index, items, body, BOOL_SCHEMA, stats, DT)
 
 
 def run_boosting_queries(
@@ -204,50 +167,22 @@ def run_boosting_queries(
     concatenate + isin over their doc ids (decoded through the worker
     LRU's fused-lane pass — both streams decode together, only the doc
     lane is consumed). Returns (query_id, rank, doc_id, score_q)."""
-    import numpy as np
-
     nb = float(negative_boost)
-    rows = []
-    neg_map = {}
-    for qid, (pos, neg) in enumerate(specs):
+    items = []
+    for pos, neg in specs:
         qf = Counter(int(t) for t in pos)
         for t in set(int(x) for x in neg) - set(qf):
             qf[t] = 1  # decoded for the mark, never scored
-        rows += [(qid, int(t), int(c)) for t, c in sorted(qf.items())]
-        neg_map[qid] = (frozenset(int(t) for t in pos),
-                        frozenset(int(t) for t in neg))
-    local_terms = sorted({t for _, t, _ in rows})
-    qterms = spark.createDataFrame(
-        rows,
-        schema=T.StructType([
-            T.StructField("query_id", T.LongType(), False),
-            T.StructField("term_id", T.LongType(), False),
-            T.StructField("qf", T.LongType(), False),
-        ]))
-    num_docs = index.num_docs
+        tids = sorted(qf)
+        items.append((tids, [qf[t] for t in tids],
+                      frozenset(int(t) for t in pos),
+                      frozenset(int(t) for t in neg)))
     DT = np.float32 if dtype == "float32" else np.float64
-    norms = index.norm_lens if dtype == "float32" else index.norm_lens64
-    norm_bc = shared_index_bc(spark, index, f"norms-{dtype}",
-                              lambda: norms)
-    docs_dict_bc = shared_index_bc(spark, index, "docs_dict",
-                                   lambda: index.docs_dict)
-    freqs_dict_bc = shared_index_bc(spark, index, "freqs_dict",
-                                    lambda: index.freqs_dict)
-    tomb_bc = _live_bc(spark, index, doc_filter)
-    clause_bc = spark.sparkContext.broadcast(neg_map)
-    joined = qterms.join(
-        _pruned_segments(index, qterms, local_terms).select(*_BM25_SEG_COLS),
-        "term_id")
+    stats = _call_stats(spark, index, dtype)
+    norm_bc, live_bc = stats.norm_bc, _live_bc(spark, index, doc_filter)
 
-    def run_one(pdf: pd.DataFrame) -> pd.DataFrame:
-        cols = ["query_id", "rank", "doc_id", "score_q"]
-        if not len(pdf):
-            return pd.DataFrame(columns=cols)
-        qid = int(pdf["query_id"].iloc[0])
-        pos, neg = clause_bc.value[qid]
-        cursors = build_cursors(pdf, docs_dict_bc.value,
-                                freqs_dict_bc.value, num_docs, DT)
-        live = tomb_bc.value if tomb_bc is not None else None
+    def body(qid, item, cursors):
+        pos, neg = item[2:]
         pos_lists, neg_docs = [], []
         for c in cursors:
             if c.term_id in pos:
@@ -256,27 +191,19 @@ def run_boosting_queries(
             if c.term_id in neg:
                 neg_docs.append(c.decode_all()[0])
         if not pos_lists:
-            return pd.DataFrame(columns=cols)
+            return None
         union, scores = _compacted_scores(pos_lists, norm_bc.value, DT,
-                                          live)
+                                          _value(live_bc))
         mult = np.ones(len(union), dtype=np.float64)
         if neg_docs:
             mult[np.isin(union, np.concatenate(neg_docs))] = nb
         sq = np.floor(scores.astype(np.float64) * mult
                       * quant).astype(np.int64)
-        if len(union) > 4 * k and k > 0:
-            thr = -np.partition(-sq, k - 1)[k - 1]
-            sel = np.flatnonzero(sq >= thr)
-            union, sq = union[sel], sq[sel]
-        order = np.lexsort((union, -sq))[:k]
-        return pd.DataFrame({
-            "query_id": qid,
-            "rank": np.arange(1, len(order) + 1, dtype=np.int32),
-            "doc_id": union[order].astype(np.int64),
-            "score_q": sq[order],
-        })
+        order = _quantized_order(union, sq, k)
+        return (np.arange(1, len(order) + 1, dtype=np.int32),
+                union[order].astype(np.int64), sq[order])
 
-    return joined.groupBy("query_id").applyInPandas(run_one, BOOL_SCHEMA)
+    return _execute(spark, index, items, body, BOOL_SCHEMA, stats, DT)
 
 
 def run_terms_set_queries(
@@ -299,51 +226,19 @@ def run_terms_set_queries(
     match union) plus one doc-values lookup for the per-doc threshold;
     the i64 sidecar ships once per worker like norm_lens. Returns
     (query_id, rank, doc_id, score_q)."""
-    import numpy as np
-
     num_docs = index.num_docs
     if len(values) != num_docs:
         raise ValueError(
             f"values cover {len(values)} docs, index has {num_docs}")
-    rows = [(qid, int(t), 1) for qid, ts in enumerate(specs)
-            for t in sorted(set(int(x) for x in ts))]
-    local_terms = sorted({t for _, t, _ in rows})
-    qterms = spark.createDataFrame(
-        rows,
-        schema=T.StructType([
-            T.StructField("query_id", T.LongType(), False),
-            T.StructField("term_id", T.LongType(), False),
-            T.StructField("qf", T.LongType(), False),
-        ]))
     DT = np.float32 if dtype == "float32" else np.float64
-    norms = index.norm_lens if dtype == "float32" else index.norm_lens64
-    norm_bc = shared_index_bc(spark, index, f"norms-{dtype}",
-                              lambda: norms)
-    docs_dict_bc = shared_index_bc(spark, index, "docs_dict",
-                                   lambda: index.docs_dict)
-    freqs_dict_bc = shared_index_bc(spark, index, "freqs_dict",
-                                    lambda: index.freqs_dict)
-    tomb_bc = _live_bc(spark, index, doc_filter)
+    stats = _call_stats(spark, index, dtype)
+    norm_bc, live_bc = stats.norm_bc, _live_bc(spark, index, doc_filter)
     vals_bc = spark.sparkContext.broadcast(
         np.ascontiguousarray(values, dtype=np.int64))
-    joined = qterms.join(
-        _pruned_segments(index, qterms, local_terms).select(*_BM25_SEG_COLS),
-        "term_id")
 
-    def run_one(pdf: pd.DataFrame) -> pd.DataFrame:
-        cols = ["query_id", "rank", "doc_id", "score_q"]
-        if not len(pdf):
-            return pd.DataFrame(columns=cols)
-        qid = int(pdf["query_id"].iloc[0])
-        cursors = build_cursors(pdf, docs_dict_bc.value,
-                                freqs_dict_bc.value, num_docs, DT)
-        live = tomb_bc.value if tomb_bc is not None else None
-        pos_lists = []
-        for c in cursors:
-            docs, freqs = c.decode_all()
-            pos_lists.append((c, docs, freqs))
-        if not pos_lists:
-            return pd.DataFrame(columns=cols)
+    def body(qid, item, cursors):
+        live = _value(live_bc)
+        pos_lists = [(c, *c.decode_all()) for c in cursors]
         union, scores = _compacted_scores(pos_lists, norm_bc.value, DT,
                                           live)
         mc = np.zeros(len(union), dtype=np.int64)
@@ -355,16 +250,10 @@ def run_terms_set_queries(
         ok = (req >= 1) & (mc >= req)
         docs, sq = union[ok], np.floor(
             scores[ok].astype(np.float64) * quant).astype(np.int64)
-        if len(docs) > 4 * k and k > 0:
-            thr = -np.partition(-sq, k - 1)[k - 1]
-            sel = np.flatnonzero(sq >= thr)
-            docs, sq = docs[sel], sq[sel]
-        order = np.lexsort((docs, -sq))[:k]
-        return pd.DataFrame({
-            "query_id": qid,
-            "rank": np.arange(1, len(order) + 1, dtype=np.int32),
-            "doc_id": docs[order].astype(np.int64),
-            "score_q": sq[order],
-        })
+        order = _quantized_order(docs, sq, k)
+        return (np.arange(1, len(order) + 1, dtype=np.int32),
+                docs[order].astype(np.int64), sq[order])
 
-    return joined.groupBy("query_id").applyInPandas(run_one, BOOL_SCHEMA)
+    return _execute(spark, index,
+                    [_fold_query({int(t) for t in ts}) for ts in specs],
+                    body, BOOL_SCHEMA, stats, DT)

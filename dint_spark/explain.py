@@ -19,20 +19,12 @@ No reference counterpart: fanhualta/dint returns scores only
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from dint_spark.queries import (
-    DocMask,
-    _live_bc,
-    _pruned_segments,
-    _BM25_SEG_COLS,
-    build_cursors,
-    matched_scores,
-    shared_index_bc,
-)
+from dint_spark.queries import (DocMask, _call_stats, _execute, _fold_query,
+                                _live_bc, _quantized_order, _value,
+                                matched_scores)
 
 EXPLAIN_SCHEMA = T.StructType([
     T.StructField("query_id", T.LongType(), False),
@@ -55,61 +47,22 @@ def run_queries_explain(
     (tf, df) and quantized contribution floor(qw * dtw * quant). Terms
     the doc does not contain emit no row (their contribution is 0).
     Returns (query_id, rank, doc_id, term_id, tf, df, contrib_q)."""
-    local_terms = sorted({int(t) for ts in queries for t in ts})
-    qdf = spark.createDataFrame(
-        [(i, [int(t) for t in ts]) for i, ts in enumerate(queries)],
-        schema=T.StructType([
-            T.StructField("query_id", T.LongType(), False),
-            T.StructField("terms", T.ArrayType(T.LongType()), False),
-        ]),
-    )
     num_docs = index.num_docs
     DT = np.float32 if dtype == "float32" else np.float64
-    norms = index.norm_lens if dtype == "float32" else index.norm_lens64
-    norm_bc = shared_index_bc(spark, index, f"norms-{dtype}",
-                              lambda: norms)
-    docs_dict_bc = shared_index_bc(spark, index, "docs_dict",
-                                   lambda: index.docs_dict)
-    freqs_dict_bc = shared_index_bc(spark, index, "freqs_dict",
-                                    lambda: index.freqs_dict)
-    tomb_bc = _live_bc(spark, index, doc_filter)
+    stats = _call_stats(spark, index, dtype)
+    norm_bc, live_bc = stats.norm_bc, _live_bc(spark, index, doc_filter)
 
-    qterms = (
-        qdf.select("query_id", F.explode("terms").alias("term_id"))
-        .groupBy("query_id", "term_id")
-        .agg(F.count("*").alias("qf"))
-    )
-    joined = qterms.join(
-        _pruned_segments(index, qterms, local_terms).select(*_BM25_SEG_COLS),
-        "term_id")
-
-    def run_one(pdf: pd.DataFrame) -> pd.DataFrame:
-        cols = ["query_id", "rank", "doc_id", "term_id", "tf", "df",
-                "contrib_q"]
-        if not len(pdf):
-            return pd.DataFrame(columns=cols)
-        qid = int(pdf["query_id"].iloc[0])
-        # global df per term = sum over its segment-chunk rows; cursors
-        # merge chunks so each term probes as ONE sorted list
-        df_map = pdf.groupby("term_id")["n"].sum().to_dict()
-        cursors = build_cursors(pdf, docs_dict_bc.value,
-                                freqs_dict_bc.value, num_docs, DT,
-                                merge_chunks=True)
-        union, scores = matched_scores(
-            cursors, norm_bc.value, num_docs, DT,
-            live=tomb_bc.value if tomb_bc is not None else None)
-        if not len(union):
-            return pd.DataFrame(columns=cols)
+    def body(qid, item, cursors):
+        # cursors merge chunks, so each term probes as ONE sorted list
+        # whose length is the term's global df
+        union, scores = matched_scores(cursors, norm_bc.value, num_docs, DT,
+                                       live=_value(live_bc))
         sq = np.floor(scores.astype(np.float64) * quant).astype(np.int64)
-        if len(union) > 4 * k and k > 0:
-            thr = -np.partition(-sq, k - 1)[k - 1]
-            sel = np.flatnonzero(sq >= thr)
-            union, sq = union[sel], sq[sel]
-        order = np.lexsort((union, -sq))[:k]
+        order = _quantized_order(union, sq, k)
         top_docs = union[order].astype(np.int64)
         ranks = np.arange(1, len(order) + 1, dtype=np.int32)
         nl = np.asarray(norm_bc.value)[top_docs].astype(DT, copy=False)
-        out = {c: [] for c in cols}
+        out = [[] for _ in range(6)]
         for c in cursors:  # term_id asc
             docs, freqs = c.decode_all()
             pos = np.searchsorted(docs, top_docs)
@@ -123,22 +76,14 @@ def run_queries_explain(
             contrib = np.floor(
                 (c.q_weight * dtw).astype(np.float64) * quant
             ).astype(np.int64)
-            out["query_id"].append(np.full(int(hit.sum()), qid,
-                                           dtype=np.int64))
-            out["rank"].append(ranks[hit])
-            out["doc_id"].append(top_docs[hit])
-            out["term_id"].append(np.full(int(hit.sum()),
-                                          int(c.term_id),
-                                          dtype=np.int64))
-            out["tf"].append(freqs[pos_c[hit]].astype(np.int64))
-            out["df"].append(np.full(int(hit.sum()),
-                                     int(df_map[c.term_id]),
-                                     dtype=np.int64))
-            out["contrib_q"].append(contrib)
-        if not out["doc_id"]:
-            return pd.DataFrame(columns=cols)
-        return pd.DataFrame({c: np.concatenate(v)
-                             for c, v in out.items()})
+            nhit = int(hit.sum())
+            for col, v in zip(out, (
+                    ranks[hit], top_docs[hit],
+                    np.full(nhit, int(c.term_id), dtype=np.int64),
+                    freqs[pos_c[hit]].astype(np.int64),
+                    np.full(nhit, c.n, dtype=np.int64), contrib)):
+                col.append(v)
+        return [np.concatenate(col) for col in out] if out[0] else None
 
-    return joined.groupBy("query_id").applyInPandas(run_one,
-                                                    EXPLAIN_SCHEMA)
+    return _execute(spark, index, [_fold_query(q) for q in queries], body,
+                    EXPLAIN_SCHEMA, stats, DT, merge_chunks=True)

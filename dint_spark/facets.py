@@ -5,9 +5,10 @@ post-hoc join): a facet column is materialized once as a per-doc ordinal
 array (``DocFacets`` — u16/u32 ordinal per doc_id, built distributively
 like queries.build_doc_filter, shipped once per worker like norm_lens),
 and each query's matched docs are counted per ordinal with one bincount
-inside the same applyInPandas group that ran the boolean kernel. No
-(query_id, doc_id) match rows ever hit a shuffle or a join: the operator
-returns one row per (query, facet value) directly.
+inside the same per-query body that ran the boolean kernel — a body on
+the one execute step (queries._execute: the index pin, one task per
+core). No (query_id, doc_id) match rows ever hit a shuffle or a join:
+the operator returns one row per (query, facet value) directly.
 
 Scale shape at 10^12 docs: the ordinal array is 2-4 bytes/doc and
 shard-local under docid sharding — the exact bounding argument already
@@ -30,13 +31,10 @@ from pyspark.sql import types as T
 
 from dint_spark.queries import (
     DocMask,
-    _live_bc,
-    _pruned_segments,
-    _BM25_SEG_COLS,
-    boolean_and,
-    boolean_or,
-    build_cursors,
-    shared_index_bc,
+    _fold_query,
+    _match_op,
+    _quantized_order,
+    _scored_op,
 )
 
 _FACET_CHUNK = 1 << 19  # docs per aggregated chunk row (64 KiB-1 MiB each)
@@ -170,60 +168,29 @@ def run_facet_queries(
     The kernel appends one np.bincount over the matched ids' ordinals to
     the existing leapfrog — the match list never leaves the worker; the
     operator's output is |queries| x |facet values| rows."""
-    local_terms = sorted({int(t) for ts in queries for t in ts})
-    qdf = spark.createDataFrame(
-        [(i, [int(t) for t in ts]) for i, ts in enumerate(queries)],
-        schema=T.StructType([
-            T.StructField("query_id", T.LongType(), False),
-            T.StructField("terms", T.ArrayType(T.LongType()), False),
-        ]),
-    )
-    num_docs = index.num_docs
-    if len(facets.ords) != num_docs:
-        raise ValueError(
-            f"facets cover {len(facets.ords)} docs, index has {num_docs}")
-    docs_dict_bc = shared_index_bc(spark, index, "docs_dict",
-                                   lambda: index.docs_dict)
-    freqs_dict_bc = shared_index_bc(spark, index, "freqs_dict",
-                                    lambda: index.freqs_dict)
-    tomb_bc = _live_bc(spark, index, doc_filter)
+    _check_docs(index, facets.ords, "facets")
     ords_bc = spark.sparkContext.broadcast(facets.ords)
     nvals = facets.num_values
-    fn = boolean_and if mode == "and" else boolean_or
 
-    qterms = (
-        qdf.select("query_id", F.explode("terms").alias("term_id"))
-        .groupBy("query_id", "term_id")
-        .agg(F.count("*").alias("qf"))
-    )
-    joined = qterms.join(
-        _pruned_segments(index, qterms, local_terms).select(*_BM25_SEG_COLS),
-        "term_id")
-
-    def run_one(pdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(pdf):
-            return pd.DataFrame(
-                columns=["query_id", "facet_ord", "n_docs"])
-        qid = int(pdf["query_id"].iloc[0])
-        cursors = build_cursors(pdf, docs_dict_bc.value, freqs_dict_bc.value,
-                                num_docs, merge_chunks=(mode == "and"))
-        docs = fn(cursors, num_docs,
-                  live=tomb_bc.value if tomb_bc is not None else None)
-        counts = np.bincount(
-            ords_bc.value[np.asarray(docs, dtype=np.int64)],
-            minlength=nvals + 1)[:nvals]
+    def per_query(item, docs):
+        counts = np.bincount(ords_bc.value[docs],
+                             minlength=nvals + 1)[:nvals]
         nz = np.flatnonzero(counts)
-        return pd.DataFrame({
-            "query_id": qid,
-            "facet_ord": nz.astype(np.int64),
-            "n_docs": counts[nz].astype(np.int64),
-        })
+        return nz.astype(np.int64), counts[nz].astype(np.int64)
 
-    out = joined.groupBy("query_id").applyInPandas(run_one, FACET_SCHEMA)
+    out = _match_op(spark, index, [_fold_query(q) for q in queries], mode,
+                    doc_filter, per_query, FACET_SCHEMA)
     # parquet-sidecar dim join (never a driver value list); AQE
     # broadcasts the dimension-small case
     return (out.join(facets.dim(), "facet_ord")
             .select("query_id", "facet", "n_docs"))
+
+
+def _check_docs(index, arr, what: str) -> None:
+    """A per-doc sidecar must cover exactly the index's docs."""
+    if len(arr) != index.num_docs:
+        raise ValueError(
+            f"{what} cover {len(arr)} docs, index has {index.num_docs}")
 
 
 # ---------------------------------------------------------------------------
@@ -303,58 +270,16 @@ def run_collapsed_queries(
     Kernel shape: one exact scoring pass over the FULL match set
     (queries.matched_scores — the compacted ranked_or accumulation, no
     dense num_docs array), then per-group argmax + group ranking as two
-    numpy lexsorts, all inside the same applyInPandas group that decoded
+    numpy lexsorts, all inside the same per-query body that decoded
     the postings. Only |queries| x k rows leave the workers; the ordinal
     sidecar ships once per worker (2-4 B/doc, shard-local under docid
     sharding). Selection runs in floor(score*quant) integer space so
     ranking is reproducible across hosts and matches the quantized SQL
     oracle exactly."""
-    from dint_spark.queries import matched_scores
-
-    local_terms = sorted({int(t) for ts in queries for t in ts})
-    qdf = spark.createDataFrame(
-        [(i, [int(t) for t in ts]) for i, ts in enumerate(queries)],
-        schema=T.StructType([
-            T.StructField("query_id", T.LongType(), False),
-            T.StructField("terms", T.ArrayType(T.LongType()), False),
-        ]),
-    )
-    num_docs = index.num_docs
-    if len(facets.ords) != num_docs:
-        raise ValueError(
-            f"facets cover {len(facets.ords)} docs, index has {num_docs}")
-    DT = np.float32 if dtype == "float32" else np.float64
-    norms = index.norm_lens if dtype == "float32" else index.norm_lens64
-    norm_bc = shared_index_bc(spark, index, f"norms-{dtype}",
-                              lambda: norms)
-    docs_dict_bc = shared_index_bc(spark, index, "docs_dict",
-                                   lambda: index.docs_dict)
-    freqs_dict_bc = shared_index_bc(spark, index, "freqs_dict",
-                                    lambda: index.freqs_dict)
-    tomb_bc = _live_bc(spark, index, doc_filter)
+    _check_docs(index, facets.ords, "facets")
     ords_bc = spark.sparkContext.broadcast(facets.ords)
 
-    qterms = (
-        qdf.select("query_id", F.explode("terms").alias("term_id"))
-        .groupBy("query_id", "term_id")
-        .agg(F.count("*").alias("qf"))
-    )
-    joined = qterms.join(
-        _pruned_segments(index, qterms, local_terms).select(*_BM25_SEG_COLS),
-        "term_id")
-
-    def run_one(pdf: pd.DataFrame) -> pd.DataFrame:
-        cols = ["query_id", "rank", "facet_ord", "doc_id", "score_q"]
-        if not len(pdf):
-            return pd.DataFrame(columns=cols)
-        qid = int(pdf["query_id"].iloc[0])
-        cursors = build_cursors(pdf, docs_dict_bc.value,
-                                freqs_dict_bc.value, num_docs, DT)
-        docs, scores = matched_scores(
-            cursors, norm_bc.value, num_docs, DT,
-            live=tomb_bc.value if tomb_bc is not None else None)
-        if not len(docs):
-            return pd.DataFrame(columns=cols)
+    def per_query(item, docs, scores):
         sq = np.floor(scores.astype(np.float64) * quant).astype(np.int64)
         ords = ords_bc.value[docs].astype(np.int64)
         # best doc per group: first hit in (score desc, doc asc) order
@@ -363,15 +288,11 @@ def run_collapsed_queries(
         reps = order[np.sort(first)]
         # group ranking by the representative's (score desc, doc asc)
         gorder = reps[np.lexsort((docs[reps], -sq[reps]))][:k]
-        return pd.DataFrame({
-            "query_id": qid,
-            "rank": np.arange(1, len(gorder) + 1, dtype=np.int32),
-            "facet_ord": ords[gorder],
-            "doc_id": docs[gorder],
-            "score_q": sq[gorder],
-        })
+        return (np.arange(1, len(gorder) + 1, dtype=np.int32),
+                ords[gorder], docs[gorder], sq[gorder])
 
-    out = joined.groupBy("query_id").applyInPandas(run_one, COLLAPSE_SCHEMA)
+    out = _scored_op(spark, index, [_fold_query(q) for q in queries], dtype,
+                     doc_filter, per_query, COLLAPSE_SCHEMA)
     # left join on the parquet-sidecar dim: the missing-value group
     # (ordinal == num_values) has no dimension row and surfaces as facet
     # NULL, the ES null group
@@ -407,39 +328,12 @@ def run_grouped_topk(
     group over the score order + a vectorized within-group cumcount —
     no per-group Python. Output <= |queries| x k_groups x per_group
     rows."""
-    from dint_spark.queries import kernel_query_join, matched_scores
-
-    num_docs = index.num_docs
-    if len(facets.ords) != num_docs:
-        raise ValueError(
-            f"facets cover {len(facets.ords)} docs, index has {num_docs}")
+    _check_docs(index, facets.ords, "facets")
     if per_group < 1 or k_groups < 1:
         raise ValueError("k_groups and per_group must be >= 1")
-    DT = np.float32 if dtype == "float32" else np.float64
-    norms = index.norm_lens if dtype == "float32" else index.norm_lens64
-    norm_bc = shared_index_bc(spark, index, f"norms-{dtype}",
-                              lambda: norms)
-    docs_dict_bc = shared_index_bc(spark, index, "docs_dict",
-                                   lambda: index.docs_dict)
-    freqs_dict_bc = shared_index_bc(spark, index, "freqs_dict",
-                                    lambda: index.freqs_dict)
-    tomb_bc = _live_bc(spark, index, doc_filter)
     ords_bc = spark.sparkContext.broadcast(facets.ords)
-    joined = kernel_query_join(spark, index, queries)
 
-    def run_one(pdf: pd.DataFrame) -> pd.DataFrame:
-        cols = ["query_id", "rank", "group_rank", "facet_ord", "doc_id",
-                "score_q"]
-        if not len(pdf):
-            return pd.DataFrame(columns=cols)
-        qid = int(pdf["query_id"].iloc[0])
-        cursors = build_cursors(pdf, docs_dict_bc.value,
-                                freqs_dict_bc.value, num_docs, DT)
-        docs, scores = matched_scores(
-            cursors, norm_bc.value, num_docs, DT,
-            live=tomb_bc.value if tomb_bc is not None else None)
-        if not len(docs):
-            return pd.DataFrame(columns=cols)
+    def per_query(item, docs, scores):
         sq = np.floor(scores.astype(np.float64) * quant).astype(np.int64)
         ords = ords_bc.value[docs].astype(np.int64)
         # global score order, then stable re-sort by group: groups come
@@ -473,16 +367,11 @@ def run_grouped_topk(
                                pos_c[in_top])
         granks = rank_sorted[pos_c]
         out_order = np.lexsort((cum, granks))
-        return pd.DataFrame({
-            "query_id": qid,
-            "rank": granks[out_order],
-            "group_rank": (cum[out_order] + 1).astype(np.int32),
-            "facet_ord": g[out_order],
-            "doc_id": docs[rows[out_order]],
-            "score_q": sq[rows[out_order]],
-        })
+        return (granks[out_order], (cum[out_order] + 1).astype(np.int32),
+                g[out_order], docs[rows[out_order]], sq[rows[out_order]])
 
-    out = joined.groupBy("query_id").applyInPandas(run_one, GROUPED_SCHEMA)
+    out = _scored_op(spark, index, [_fold_query(q) for q in queries], dtype,
+                     doc_filter, per_query, GROUPED_SCHEMA)
     return (out.join(facets.dim(), "facet_ord", "left")
             .select("query_id", "rank", "group_rank", "facet", "doc_id",
                     "score_q"))
@@ -518,63 +407,21 @@ def run_range_facet_queries(
     edges_arr = np.asarray(edges, dtype=np.int64)
     if len(edges_arr) < 2 or np.any(np.diff(edges_arr) <= 0):
         raise ValueError("edges must be >=2 strictly increasing values")
-    local_terms = sorted({int(t) for ts in queries for t in ts})
-    qdf = spark.createDataFrame(
-        [(i, [int(t) for t in ts]) for i, ts in enumerate(queries)],
-        schema=T.StructType([
-            T.StructField("query_id", T.LongType(), False),
-            T.StructField("terms", T.ArrayType(T.LongType()), False),
-        ]),
-    )
-    num_docs = index.num_docs
-    if len(values) != num_docs:
-        raise ValueError(
-            f"values cover {len(values)} docs, index has {num_docs}")
-    docs_dict_bc = shared_index_bc(spark, index, "docs_dict",
-                                   lambda: index.docs_dict)
-    freqs_dict_bc = shared_index_bc(spark, index, "freqs_dict",
-                                    lambda: index.freqs_dict)
-    tomb_bc = _live_bc(spark, index, doc_filter)
-    vals_bc = spark.sparkContext.broadcast(
-        np.ascontiguousarray(values, dtype=np.int64))
+    vals_bc = _values_bc(spark, index, values)
     nbuckets = len(edges_arr) - 1
-    fn = boolean_and if mode == "and" else boolean_or
 
-    qterms = (
-        qdf.select("query_id", F.explode("terms").alias("term_id"))
-        .groupBy("query_id", "term_id")
-        .agg(F.count("*").alias("qf"))
-    )
-    joined = qterms.join(
-        _pruned_segments(index, qterms, local_terms).select(*_BM25_SEG_COLS),
-        "term_id")
-
-    def run_one(pdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(pdf):
-            return pd.DataFrame(
-                columns=["query_id", "bucket", "lo", "hi", "n_docs"])
-        qid = int(pdf["query_id"].iloc[0])
-        cursors = build_cursors(pdf, docs_dict_bc.value, freqs_dict_bc.value,
-                                num_docs, merge_chunks=(mode == "and"))
-        docs = fn(cursors, num_docs,
-                  live=tomb_bc.value if tomb_bc is not None else None)
-        v = vals_bc.value[np.asarray(docs, dtype=np.int64)]
+    def per_query(item, docs):
         # searchsorted 'right' maps edges[i] <= v < edges[i+1] -> i+1;
         # 0 (below, incl. the missing sentinel = i64 min) and
         # nbuckets+1 (>= edges[-1]) are dropped
-        b = np.searchsorted(edges_arr, v, side="right")
+        b = np.searchsorted(edges_arr, vals_bc.value[docs], side="right")
         counts = np.bincount(b, minlength=nbuckets + 2)[1:nbuckets + 1]
         nz = np.flatnonzero(counts)
-        return pd.DataFrame({
-            "query_id": qid,
-            "bucket": nz.astype(np.int32),
-            "lo": edges_arr[nz],
-            "hi": edges_arr[nz + 1],
-            "n_docs": counts[nz].astype(np.int64),
-        })
+        return (nz.astype(np.int32), edges_arr[nz], edges_arr[nz + 1],
+                counts[nz].astype(np.int64))
 
-    return joined.groupBy("query_id").applyInPandas(
-        run_one, RANGE_FACET_SCHEMA)
+    return _match_op(spark, index, [_fold_query(q) for q in queries], mode,
+                     doc_filter, per_query, RANGE_FACET_SCHEMA)
 
 
 STATS_SCHEMA = T.StructType([
@@ -607,71 +454,28 @@ def run_stats_queries(
     invariants caller-side (int64-safe up to ~2*10^6 docs at values
     <= ~2*10^6; beyond that the kernel would carry the sum in two
     limbs — same pattern, not needed at the gate's value domain)."""
-    local_terms = sorted({int(t) for ts in queries for t in ts})
-    qdf = spark.createDataFrame(
-        [(i, [int(t) for t in ts]) for i, ts in enumerate(queries)],
-        schema=T.StructType([
-            T.StructField("query_id", T.LongType(), False),
-            T.StructField("terms", T.ArrayType(T.LongType()), False),
-        ]),
-    )
-    num_docs = index.num_docs
-    if len(values) != num_docs:
-        raise ValueError(
-            f"values cover {len(values)} docs, index has {num_docs}")
-    docs_dict_bc = shared_index_bc(spark, index, "docs_dict",
-                                   lambda: index.docs_dict)
-    freqs_dict_bc = shared_index_bc(spark, index, "freqs_dict",
-                                    lambda: index.freqs_dict)
-    tomb_bc = _live_bc(spark, index, doc_filter)
-    vals_bc = spark.sparkContext.broadcast(
-        np.ascontiguousarray(values, dtype=np.int64))
-    fn = boolean_and if mode == "and" else boolean_or
-
-    qterms = (
-        qdf.select("query_id", F.explode("terms").alias("term_id"))
-        .groupBy("query_id", "term_id")
-        .agg(F.count("*").alias("qf"))
-    )
-    joined = qterms.join(
-        _pruned_segments(index, qterms, local_terms).select(*_BM25_SEG_COLS),
-        "term_id")
-
+    vals_bc = _values_bc(spark, index, values)
     out_schema = STATS_SCHEMA
     if extended:
         out_schema = T.StructType(
             list(STATS_SCHEMA.fields)
             + [T.StructField("vsumsq", T.LongType(), False)])
 
-    def run_one(pdf: pd.DataFrame) -> pd.DataFrame:
-        cols = [f.name for f in out_schema.fields]
-        if not len(pdf):
-            return pd.DataFrame(columns=cols)
-        qid = int(pdf["query_id"].iloc[0])
-        cursors = build_cursors(pdf, docs_dict_bc.value,
-                                freqs_dict_bc.value, num_docs,
-                                merge_chunks=(mode == "and"))
-        docs = np.asarray(
-            fn(cursors, num_docs,
-               live=tomb_bc.value if tomb_bc is not None else None),
-            dtype=np.int64)
+    def per_query(item, docs):
         if not len(docs):
-            return pd.DataFrame(columns=cols)
+            return None
         v = vals_bc.value[docs]
         v = v[v != _DV_MISSING]
-        row = {
-            "query_id": [qid],
-            "n_docs": [len(docs)],
-            "n_valued": [len(v)],
-            "vsum": [int(v.sum()) if len(v) else 0],
-            "vmin": [int(v.min()) if len(v) else None],
-            "vmax": [int(v.max()) if len(v) else None],
-        }
+        # object columns: a NULL min/max beside exact int64 values
+        row = [[len(docs)], [len(v)], [int(v.sum()) if len(v) else 0],
+               np.array([int(v.min()) if len(v) else None], dtype=object),
+               np.array([int(v.max()) if len(v) else None], dtype=object)]
         if extended:
-            row["vsumsq"] = [int((v * v).sum()) if len(v) else 0]
-        return pd.DataFrame(row)
+            row.append([int((v * v).sum()) if len(v) else 0])
+        return row
 
-    return joined.groupBy("query_id").applyInPandas(run_one, out_schema)
+    return _match_op(spark, index, [_fold_query(q) for q in queries], mode,
+                     doc_filter, per_query, out_schema)
 
 
 CARD_SCHEMA = T.StructType([
@@ -693,42 +497,16 @@ def run_cardinality_queries(
     carry one. One np.unique over the matched ids' values in-kernel;
     ONE row per query leaves the worker. Missing-value docs count in
     ``n_docs`` but contribute no value (ES missing semantics)."""
-    from dint_spark.queries import kernel_query_join
+    vals_bc = _values_bc(spark, index, values)
 
-    num_docs = index.num_docs
-    if len(values) != num_docs:
-        raise ValueError(
-            f"values cover {len(values)} docs, index has {num_docs}")
-    docs_dict_bc = shared_index_bc(spark, index, "docs_dict",
-                                   lambda: index.docs_dict)
-    freqs_dict_bc = shared_index_bc(spark, index, "freqs_dict",
-                                    lambda: index.freqs_dict)
-    tomb_bc = _live_bc(spark, index, doc_filter)
-    vals_bc = spark.sparkContext.broadcast(
-        np.ascontiguousarray(values, dtype=np.int64))
-    fn = boolean_and if mode == "and" else boolean_or
-    joined = kernel_query_join(spark, index, queries)
-
-    def run_one(pdf: pd.DataFrame) -> pd.DataFrame:
-        cols = ["query_id", "n_docs", "n_distinct"]
-        if not len(pdf):
-            return pd.DataFrame(columns=cols)
-        qid = int(pdf["query_id"].iloc[0])
-        cursors = build_cursors(pdf, docs_dict_bc.value,
-                                freqs_dict_bc.value, num_docs,
-                                merge_chunks=(mode == "and"))
-        docs = np.asarray(
-            fn(cursors, num_docs,
-               live=tomb_bc.value if tomb_bc is not None else None),
-            dtype=np.int64)
+    def per_query(item, docs):
         if not len(docs):
-            return pd.DataFrame(columns=cols)
+            return None
         v = vals_bc.value[docs]
-        v = v[v != _DV_MISSING]
-        return pd.DataFrame({"query_id": [qid], "n_docs": [len(docs)],
-                             "n_distinct": [len(np.unique(v))]})
+        return [len(docs)], [len(np.unique(v[v != _DV_MISSING]))]
 
-    return joined.groupBy("query_id").applyInPandas(run_one, CARD_SCHEMA)
+    return _match_op(spark, index, [_fold_query(q) for q in queries], mode,
+                     doc_filter, per_query, CARD_SCHEMA)
 
 
 def run_keyword_sorted_queries(
@@ -775,46 +553,19 @@ def run_percentile_queries(
         [T.StructField("query_id", T.LongType(), False),
          T.StructField("n_valued", T.LongType(), False)]
         + [T.StructField(c, T.LongType(), False) for c in pcols])
-    num_docs = index.num_docs
-    if len(values) != num_docs:
-        raise ValueError(
-            f"values cover {len(values)} docs, index has {num_docs}")
-    docs_dict_bc = shared_index_bc(spark, index, "docs_dict",
-                                   lambda: index.docs_dict)
-    freqs_dict_bc = shared_index_bc(spark, index, "freqs_dict",
-                                    lambda: index.freqs_dict)
-    tomb_bc = _live_bc(spark, index, doc_filter)
-    vals_bc = spark.sparkContext.broadcast(
-        np.ascontiguousarray(values, dtype=np.int64))
-    fn = boolean_and if mode == "and" else boolean_or
-    from dint_spark.queries import kernel_query_join
+    vals_bc = _values_bc(spark, index, values)
 
-    joined = kernel_query_join(spark, index, queries)
-
-    def run_one(pdf: pd.DataFrame) -> pd.DataFrame:
-        cols = ["query_id", "n_valued"] + pcols
-        if not len(pdf):
-            return pd.DataFrame(columns=cols)
-        qid = int(pdf["query_id"].iloc[0])
-        cursors = build_cursors(pdf, docs_dict_bc.value,
-                                freqs_dict_bc.value, num_docs,
-                                merge_chunks=(mode == "and"))
-        docs = np.asarray(
-            fn(cursors, num_docs,
-               live=tomb_bc.value if tomb_bc is not None else None),
-            dtype=np.int64)
-        v = vals_bc.value[docs] if len(docs) else docs
+    def per_query(item, docs):
+        v = vals_bc.value[docs]
         v = np.sort(v[v != _DV_MISSING])
-        if not len(v):
-            return pd.DataFrame(columns=cols)
         n = len(v)
-        row = {"query_id": [qid], "n_valued": [n]}
-        for p, c in zip(ps, pcols):
-            # nearest-rank: the value at 1-based rank ceil(p/100 * n)
-            row[c] = [int(v[-(-p * n // 100) - 1])]
-        return pd.DataFrame(row)
+        if not n:
+            return None
+        # nearest-rank: the value at 1-based rank ceil(p/100 * n)
+        return [[n]] + [[int(v[-(-p * n // 100) - 1])] for p in ps]
 
-    return joined.groupBy("query_id").applyInPandas(run_one, schema)
+    return _match_op(spark, index, [_fold_query(q) for q in queries], mode,
+                     doc_filter, per_query, schema)
 
 
 BOOSTED_SCHEMA = T.StructType([
@@ -917,37 +668,9 @@ def _function_score_queries(
     (missing values always take the neutral multiplier 1.0 / addend 0.0
     — neither fn ever sees the sentinel), quantized integer selection.
     Only |queries| x k rows leave the workers."""
-    from dint_spark.queries import kernel_query_join, matched_scores
+    vals_bc = _values_bc(spark, index, values)
 
-    num_docs = index.num_docs
-    if len(values) != num_docs:
-        raise ValueError(
-            f"values cover {len(values)} docs, index has {num_docs}")
-    DT = np.float32 if dtype == "float32" else np.float64
-    norms = index.norm_lens if dtype == "float32" else index.norm_lens64
-    norm_bc = shared_index_bc(spark, index, f"norms-{dtype}",
-                              lambda: norms)
-    docs_dict_bc = shared_index_bc(spark, index, "docs_dict",
-                                   lambda: index.docs_dict)
-    freqs_dict_bc = shared_index_bc(spark, index, "freqs_dict",
-                                    lambda: index.freqs_dict)
-    tomb_bc = _live_bc(spark, index, doc_filter)
-    vals_bc = spark.sparkContext.broadcast(
-        np.ascontiguousarray(values, dtype=np.int64))
-    joined = kernel_query_join(spark, index, queries)
-
-    def run_one(pdf: pd.DataFrame) -> pd.DataFrame:
-        cols = ["query_id", "rank", "doc_id", "score_q"]
-        if not len(pdf):
-            return pd.DataFrame(columns=cols)
-        qid = int(pdf["query_id"].iloc[0])
-        cursors = build_cursors(pdf, docs_dict_bc.value,
-                                freqs_dict_bc.value, num_docs, DT)
-        docs, scores = matched_scores(
-            cursors, norm_bc.value, num_docs, DT,
-            live=tomb_bc.value if tomb_bc is not None else None)
-        if not len(docs):
-            return pd.DataFrame(columns=cols)
+    def per_query(item, docs, scores):
         v = vals_bc.value[docs]
         mult = np.ones(len(v), dtype=np.float64)
         add = np.zeros(len(v), dtype=np.float64)
@@ -959,20 +682,12 @@ def _function_score_queries(
                 add[valued] = add_fn(v[valued])
         sq = np.floor((scores.astype(np.float64) * mult + add)
                       * quant).astype(np.int64)
-        if len(docs) > 4 * k and k > 0:
-            thr = -np.partition(-sq, k - 1)[k - 1]
-            sel = np.flatnonzero(sq >= thr)
-            docs, sq = docs[sel], sq[sel]
-        order = np.lexsort((docs, -sq))[:k]
-        return pd.DataFrame({
-            "query_id": qid,
-            "rank": np.arange(1, len(order) + 1, dtype=np.int32),
-            "doc_id": docs[order].astype(np.int64),
-            "score_q": sq[order],
-        })
+        order = _quantized_order(docs, sq, k)
+        return (np.arange(1, len(order) + 1, dtype=np.int32),
+                docs[order].astype(np.int64), sq[order])
 
-    return joined.groupBy("query_id").applyInPandas(run_one,
-                                                    BOOSTED_SCHEMA)
+    return _scored_op(spark, index, [_fold_query(q) for q in queries], dtype,
+                      doc_filter, per_query, BOOSTED_SCHEMA)
 
 
 SORTED_SCHEMA = T.StructType([
@@ -995,52 +710,13 @@ def run_sorted_queries(
     ids' values), and only |queries| x k rows leave the workers. Docs
     with a missing value never rank. Composes with tombstones/DocMask
     through the boolean kernel. Returns (query_id, rank, doc_id, val)."""
-    local_terms = sorted({int(t) for ts in queries for t in ts})
-    qdf = spark.createDataFrame(
-        [(i, [int(t) for t in ts]) for i, ts in enumerate(queries)],
-        schema=T.StructType([
-            T.StructField("query_id", T.LongType(), False),
-            T.StructField("terms", T.ArrayType(T.LongType()), False),
-        ]),
-    )
-    num_docs = index.num_docs
-    if len(values) != num_docs:
-        raise ValueError(
-            f"values cover {len(values)} docs, index has {num_docs}")
-    docs_dict_bc = shared_index_bc(spark, index, "docs_dict",
-                                   lambda: index.docs_dict)
-    freqs_dict_bc = shared_index_bc(spark, index, "freqs_dict",
-                                    lambda: index.freqs_dict)
-    tomb_bc = _live_bc(spark, index, doc_filter)
-    vals_bc = spark.sparkContext.broadcast(
-        np.ascontiguousarray(values, dtype=np.int64))
-    fn = boolean_and if mode == "and" else boolean_or
+    vals_bc = _values_bc(spark, index, values)
     sign = -1 if descending else 1
 
-    qterms = (
-        qdf.select("query_id", F.explode("terms").alias("term_id"))
-        .groupBy("query_id", "term_id")
-        .agg(F.count("*").alias("qf"))
-    )
-    joined = qterms.join(
-        _pruned_segments(index, qterms, local_terms).select(*_BM25_SEG_COLS),
-        "term_id")
-
-    def run_one(pdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(pdf):
-            return pd.DataFrame(
-                columns=["query_id", "rank", "doc_id", "val"])
-        qid = int(pdf["query_id"].iloc[0])
-        cursors = build_cursors(pdf, docs_dict_bc.value,
-                                freqs_dict_bc.value, num_docs,
-                                merge_chunks=(mode == "and"))
-        docs = np.asarray(
-            fn(cursors, num_docs,
-               live=tomb_bc.value if tomb_bc is not None else None),
-            dtype=np.int64)
-        v = vals_bc.value[docs] if len(docs) else docs
-        live = v != _DV_MISSING
-        docs, v = docs[live], v[live]
+    def per_query(item, docs):
+        v = vals_bc.value[docs]
+        valued = v != _DV_MISSING
+        docs, v = docs[valued], v[valued]
         if len(docs) > 4 * k and k > 0:
             # O(n) preselect on the value alone, then exact-order only
             # the survivors: keep EVERY doc at or above the k-th value so
@@ -1050,11 +726,15 @@ def run_sorted_queries(
             keep = np.flatnonzero(key <= thr)
             docs, v = docs[keep], v[keep]
         order = np.lexsort((docs, sign * v))[:k]
-        return pd.DataFrame({
-            "query_id": qid,
-            "rank": np.arange(1, len(order) + 1, dtype=np.int32),
-            "doc_id": docs[order],
-            "val": v[order],
-        })
+        return (np.arange(1, len(order) + 1, dtype=np.int32), docs[order],
+                v[order])
 
-    return joined.groupBy("query_id").applyInPandas(run_one, SORTED_SCHEMA)
+    return _match_op(spark, index, [_fold_query(q) for q in queries], mode,
+                     doc_filter, per_query, SORTED_SCHEMA)
+
+
+def _values_bc(spark, index, values):
+    """Broadcast of a per-doc i64 doc-values sidecar covering the index."""
+    _check_docs(index, values, "values")
+    return spark.sparkContext.broadcast(
+        np.ascontiguousarray(values, dtype=np.int64))

@@ -40,13 +40,12 @@ retrieval); ES-parity surface per the round-4 growth plan.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from dint_spark.facets import _DV_MISSING
-from dint_spark.queries import (DocMask, _live_bc, build_cursors,
-                                shared_index_bc)
+from dint_spark.queries import (DocMask, _fold_query, _quantized_order,
+                                _scored_op)
 
 NESTED_SCHEMA = T.StructType([
     T.StructField("query_id", T.LongType(), False),
@@ -70,48 +69,24 @@ def run_nested_queries(
     with fewer than ``min_children`` matching children dropped, top-k
     parents by (rolled score desc, parent_id asc). Returns (query_id,
     rank, parent_id, score_q, n_children)."""
-    from dint_spark.queries import kernel_query_join, matched_scores
-
     if score_mode not in SCORE_MODES:
         raise ValueError(f"score_mode must be one of {SCORE_MODES}")
     if min_children < 1:
         raise ValueError("min_children must be >= 1")
-    num_docs = index.num_docs
-    if len(parent_ords) != num_docs:
+    if len(parent_ords) != index.num_docs:
         raise ValueError(
             f"parent_ords cover {len(parent_ords)} docs, index has "
-            f"{num_docs}")
-    DT = np.float32 if dtype == "float32" else np.float64
-    norms = index.norm_lens if dtype == "float32" else index.norm_lens64
-    norm_bc = shared_index_bc(spark, index, f"norms-{dtype}",
-                              lambda: norms)
-    docs_dict_bc = shared_index_bc(spark, index, "docs_dict",
-                                   lambda: index.docs_dict)
-    freqs_dict_bc = shared_index_bc(spark, index, "freqs_dict",
-                                    lambda: index.freqs_dict)
-    tomb_bc = _live_bc(spark, index, doc_filter)
+            f"{index.num_docs}")
     par_bc = spark.sparkContext.broadcast(
         np.ascontiguousarray(parent_ords, dtype=np.int64))
-    joined = kernel_query_join(spark, index, queries)
     mode, minc = score_mode, int(min_children)
 
-    def run_one(pdf: pd.DataFrame) -> pd.DataFrame:
-        cols = ["query_id", "rank", "parent_id", "score_q", "n_children"]
-        if not len(pdf):
-            return pd.DataFrame(columns=cols)
-        qid = int(pdf["query_id"].iloc[0])
-        cursors = build_cursors(pdf, docs_dict_bc.value,
-                                freqs_dict_bc.value, num_docs, DT)
-        docs, scores = matched_scores(
-            cursors, norm_bc.value, num_docs, DT,
-            live=tomb_bc.value if tomb_bc is not None else None)
-        if not len(docs):
-            return pd.DataFrame(columns=cols)
+    def per_query(item, docs, scores):
         par = par_bc.value[docs]
         owned = par != _DV_MISSING  # orphan children never join
         par = par[owned]
         if not len(par):
-            return pd.DataFrame(columns=cols)
+            return None
         cq = np.floor(scores[owned].astype(np.float64)
                       * quant).astype(np.int64)
         # docs (hence par) arrive docid-ascending; children of a parent
@@ -131,22 +106,12 @@ def run_nested_queries(
                 rolled, inv, cq)
         keep = n_ch >= minc
         upar, rolled, n_ch = upar[keep], rolled[keep], n_ch[keep]
-        if not len(upar):
-            return pd.DataFrame(columns=cols)
-        if len(upar) > 4 * k and k > 0:
-            thr = -np.partition(-rolled, k - 1)[k - 1]
-            sel = np.flatnonzero(rolled >= thr)
-            upar, rolled, n_ch = upar[sel], rolled[sel], n_ch[sel]
-        order = np.lexsort((upar, -rolled))[:k]
-        return pd.DataFrame({
-            "query_id": qid,
-            "rank": np.arange(1, len(order) + 1, dtype=np.int32),
-            "parent_id": upar[order],
-            "score_q": rolled[order],
-            "n_children": n_ch[order],
-        })
+        order = _quantized_order(upar, rolled, k)
+        return (np.arange(1, len(order) + 1, dtype=np.int32), upar[order],
+                rolled[order], n_ch[order])
 
-    return joined.groupBy("query_id").applyInPandas(run_one, NESTED_SCHEMA)
+    return _scored_op(spark, index, [_fold_query(q) for q in queries], dtype,
+                      doc_filter, per_query, NESTED_SCHEMA)
 
 
 def children_of_parents_mask(parent_ords: np.ndarray,

@@ -11,8 +11,9 @@ is selection + transfer state, not collection.) The collection pass here
 is the exact compacted scorer shared with field collapsing
 (queries.matched_scores — bit-identical to ranked_or), and selection is
 an O(n) argpartition preselect + exact lexsort of the survivors, all
-inside the applyInPandas group that decoded the postings: only
-|queries| x k rows ever leave a worker.
+inside the per-query body that decoded the postings (a body on the one
+execute step, queries._execute): only |queries| x k rows ever leave a
+worker.
 
 Cursor comparisons run in floor(score*quant) integer space, the same
 quantization the oracle gate applies to every ranked entry — so a page-2
@@ -28,20 +29,11 @@ surface).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from dint_spark.queries import (
-    DocMask,
-    _live_bc,
-    _pruned_segments,
-    _BM25_SEG_COLS,
-    build_cursors,
-    matched_scores,
-    shared_index_bc,
-)
+from dint_spark.queries import (DocMask, _fold_query, _quantized_order,
+                                _scored_op)
 
 PAGE_SCHEMA = T.StructType([
     T.StructField("query_id", T.LongType(), False),
@@ -68,69 +60,21 @@ def run_queries_after(
     tiles the global ranking exactly. Tombstones/DocMask compose as in
     run_queries. Returns (query_id, rank, doc_id, score_q).
     """
-    after = after or []
-    local_terms = sorted({int(t) for ts in queries for t in ts})
-    qdf = spark.createDataFrame(
-        [(i, [int(t) for t in ts]) for i, ts in enumerate(queries)],
-        schema=T.StructType([
-            T.StructField("query_id", T.LongType(), False),
-            T.StructField("terms", T.ArrayType(T.LongType()), False),
-        ]),
-    )
-    num_docs = index.num_docs
-    DT = np.float32 if dtype == "float32" else np.float64
-    norms = index.norm_lens if dtype == "float32" else index.norm_lens64
-    norm_bc = shared_index_bc(spark, index, f"norms-{dtype}",
-                              lambda: norms)
-    docs_dict_bc = shared_index_bc(spark, index, "docs_dict",
-                                   lambda: index.docs_dict)
-    freqs_dict_bc = shared_index_bc(spark, index, "freqs_dict",
-                                    lambda: index.freqs_dict)
-    tomb_bc = _live_bc(spark, index, doc_filter)
-    cursors_by_qid = {
-        i: (int(c[0]), int(c[1]))
-        for i, c in enumerate(after) if c is not None
-    }
-    after_bc = spark.sparkContext.broadcast(cursors_by_qid)
+    after = list(after or [])
+    after += [None] * (len(queries) - len(after))
+    # each query's cursor rides in its item
+    items = [(*_fold_query(q), (int(c[0]), int(c[1])) if c is not None
+              else None) for q, c in zip(queries, after)]
 
-    qterms = (
-        qdf.select("query_id", F.explode("terms").alias("term_id"))
-        .groupBy("query_id", "term_id")
-        .agg(F.count("*").alias("qf"))
-    )
-    joined = qterms.join(
-        _pruned_segments(index, qterms, local_terms).select(*_BM25_SEG_COLS),
-        "term_id")
-
-    def run_one(pdf: pd.DataFrame) -> pd.DataFrame:
-        cols = ["query_id", "rank", "doc_id", "score_q"]
-        if not len(pdf):
-            return pd.DataFrame(columns=cols)
-        qid = int(pdf["query_id"].iloc[0])
-        cursors = build_cursors(pdf, docs_dict_bc.value,
-                                freqs_dict_bc.value, num_docs, DT)
-        docs, scores = matched_scores(
-            cursors, norm_bc.value, num_docs, DT,
-            live=tomb_bc.value if tomb_bc is not None else None)
+    def per_query(item, docs, scores):
         sq = np.floor(scores.astype(np.float64) * quant).astype(np.int64)
-        cur = after_bc.value.get(qid)
-        if cur is not None:
-            s_a, d_a = cur
+        if item[2] is not None:
+            s_a, d_a = item[2]
             keep = (sq < s_a) | ((sq == s_a) & (docs > d_a))
             docs, sq = docs[keep], sq[keep]
-        if len(docs) > 4 * k and k > 0:
-            # O(n) preselect on score alone; keep EVERY doc at or above
-            # the k-th score so doc_id tie-breaks at the boundary stay
-            # exact (the run_sorted_queries preselect contract)
-            thr = -np.partition(-sq, k - 1)[k - 1]
-            sel = np.flatnonzero(sq >= thr)
-            docs, sq = docs[sel], sq[sel]
-        order = np.lexsort((docs, -sq))[:k]
-        return pd.DataFrame({
-            "query_id": qid,
-            "rank": np.arange(1, len(order) + 1, dtype=np.int32),
-            "doc_id": docs[order],
-            "score_q": sq[order],
-        })
+        order = _quantized_order(docs, sq, k)
+        return (np.arange(1, len(order) + 1, dtype=np.int32), docs[order],
+                sq[order])
 
-    return joined.groupBy("query_id").applyInPandas(run_one, PAGE_SCHEMA)
+    return _scored_op(spark, index, items, dtype, doc_filter, per_query,
+                      PAGE_SCHEMA)

@@ -34,7 +34,7 @@ DEFAULT_SKEW_CHUNK = 1 << 18  # max postings per build task for one term
 # ceil(df/SEG_CHUNK) rows of disjoint increasing doc ranges instead of one
 # unbounded row (at 10^12 docs a stopword list is ~10^10 postings — one row
 # would be a multi-GB task). Cursors over chunk rows compose exactly (see
-# queries.build_cursors).
+# queries._cursors).
 DEFAULT_SEG_CHUNK = 1 << 20
 
 # Force-broadcast ceilings for the corpus-pass dimension joins (plan shape

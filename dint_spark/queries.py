@@ -19,17 +19,22 @@ topk queue's strict `>` insertion (queries.hpp:150-188), so every optimized
 operator reproduces ranked_or's top-k (doc_id, score) exactly. A float64
 mode exists for cross-checking against SQL oracles.
 
-Distributed execution: run_queries pins the index's segments executor-side
-once per handle and runs LPT-balanced query bins, one task per core,
-against them; per-query top-k rows come back — the executor->driver
-traffic is k rows per query, mirroring the reference's q/s protocol. An
-index over the pin budget falls back to joining queries x segments on
-term_id, one applyInPandas group per query.
+Distributed execution: every BM25-cursor op (run_queries, the boolean,
+LM, facet, bool-DSL, nested, paging and explain ops) is a per-query body
+run by one execute step (_execute). The step pins the index's segments
+executor-side once per handle and runs LPT-balanced query bins, one task
+per core, against them; only each query's output rows come back — k rows
+per query for top-k, mirroring the reference's q/s protocol. An index over
+the pin budget takes the one shuffle fallback (queries x segments joined
+on term_id, one applyInPandas group per query), which hands the same body
+the same cursors. The positional ops below keep their own join path: the
+pin carries no positions.
 """
 
 from __future__ import annotations
 
 import heapq
+import itertools
 import os
 import threading
 from collections import OrderedDict
@@ -606,7 +611,7 @@ def ranked_or_vec(cursors, norm_lens, num_docs: int, k: int, DT=np.float32,
     if not cursors:
         return []
     lists = []
-    for c in cursors:  # arrive sorted by term_id (build_cursors)
+    for c in cursors:  # arrive sorted by term_id (_cursors)
         docs, freqs = c.decode_all()
         lists.append((c, docs, freqs))
     if num_docs <= _DENSE_SCORE_MAX_DOCS:
@@ -672,29 +677,6 @@ def shared_index_bc(spark, index, name: str, build):
                          lambda: spark.sparkContext.broadcast(build()))
 
 
-def kernel_query_join(spark: SparkSession, index, queries):
-    """The shared front half of every term-spec kernel op: term-id specs
-    -> (query_id, term_id, qf) rows joined to the pruned BM25 segment
-    rows, ready for groupBy(query_id).applyInPandas. Duplicate terms in
-    a spec fold into qf."""
-    local_terms = sorted({int(t) for ts in queries for t in ts})
-    qdf = spark.createDataFrame(
-        [(i, [int(t) for t in ts]) for i, ts in enumerate(queries)],
-        schema=T.StructType([
-            T.StructField("query_id", T.LongType(), False),
-            T.StructField("terms", T.ArrayType(T.LongType()), False),
-        ]),
-    )
-    qterms = (
-        qdf.select("query_id", F.explode("terms").alias("term_id"))
-        .groupBy("query_id", "term_id")
-        .agg(F.count("*").alias("qf"))
-    )
-    return qterms.join(
-        _pruned_segments(index, qterms, local_terms).select(*_BM25_SEG_COLS),
-        "term_id")
-
-
 def matched_scores(cursors, norm_lens, num_docs: int, DT=np.float32,
                    live=None) -> tuple[np.ndarray, np.ndarray]:
     """(docids asc, exact BM25 scores) for the FULL OR match set — the
@@ -705,11 +687,23 @@ def matched_scores(cursors, norm_lens, num_docs: int, DT=np.float32,
     if not cursors:
         return (np.empty(0, dtype=np.int64), np.empty(0, dtype=DT))
     lists = []
-    for c in cursors:  # arrive sorted by term_id (build_cursors)
+    for c in cursors:  # arrive sorted by term_id (_cursors)
         docs, freqs = c.decode_all()
         lists.append((c, docs, freqs))
     union, scores = _compacted_scores(lists, norm_lens, DT, live)
     return union.astype(np.int64, copy=False), scores
+
+
+def _quantized_order(docs: np.ndarray, sq: np.ndarray, k: int
+                     ) -> np.ndarray:
+    """Indices of the top ``k`` by (sq desc, docs asc): an O(n)
+    preselect keeps EVERY entry at or above the k-th ``sq`` so doc_id
+    tie-breaks at the boundary stay exact, then the survivors lexsort."""
+    idx = np.arange(len(sq))
+    if len(sq) > 4 * k and k > 0:
+        thr = -np.partition(-sq, k - 1)[k - 1]
+        idx = np.flatnonzero(sq >= thr)
+    return idx[np.lexsort((docs[idx], -sq[idx]))[:k]]
 
 
 def ranked_and(cursors, norm_lens, num_docs: int, k: int, DT=np.float32,
@@ -1176,17 +1170,35 @@ def build_cursors(group: pd.DataFrame, docs_dict, freqs_dict, num_docs: int,
                   df_overrides: dict | None = None,
                   idf_docs: int | None = None,
                   bound_inflate: float = 1.0) -> list:
-    """group rows: one per (distinct query term x segment chunk row). A
-    term's chunk rows (seg_id asc) are disjoint increasing doc ranges; the
-    term's df for the query weight is the SUM of its rows' n. Union-style
-    kernels receive one cursor per chunk row (exact by disjointness);
-    intersection kernels (merge_chunks=True) receive one merged ArrayCursor
-    per multi-row term.
+    """Cursors of one query from its segment rows as pandas: one row per
+    (distinct query term x segment chunk row), each carrying the term's
+    qf. A thin adapter: the rows become _seg_map parts and go through
+    _cursors, the one builder every query op uses (see there for the
+    chunk, global-statistics and bound-inflation semantics)."""
+    qf = group.groupby("term_id", sort=True)["qf"].first()
+    return _cursors(_seg_map(group.to_dict("records")),
+                    [int(t) for t in qf.index], [float(q) for q in qf],
+                    num_docs, docs_dict, freqs_dict, DT, merge_chunks,
+                    df_overrides, idf_docs, bound_inflate)
 
-    Sharded serving (sharding.run_queries_sharded) passes GLOBAL statistics:
-    df_overrides maps term_id -> corpus-wide df and idf_docs is the global
-    N, so every shard computes the same query weights as the unsharded
-    index would.
+
+def _cursors(segs: dict, tids, qfs, num_docs: int, dd, fd, DT=np.float32,
+             merge_chunks: bool = False, df_overrides: dict | None = None,
+             idf_docs: int | None = None,
+             bound_inflate: float = 1.0) -> list:
+    """The one cursor builder: cursors of the query terms ``tids`` (asc,
+    with their ``qfs``) over the seg-map parts ``segs`` (_seg_map form:
+    term_id -> seg_id-sorted parts). Terms without parts get no cursor.
+    A term's parts are disjoint increasing doc ranges; the term's df for
+    the query weight is the SUM of their n. Union-style kernels receive
+    one cursor per part (exact by disjointness); intersection kernels
+    (merge_chunks=True) receive one merged ArrayCursor per multi-part
+    term.
+
+    Sharded serving (sharding.run_queries_sharded) passes GLOBAL
+    statistics: df_overrides maps term_id -> corpus-wide df and idf_docs
+    is the global N, so every shard computes the same query weights as
+    the unsharded index would.
 
     ``bound_inflate`` > 1 certifies PRUNING under stale stored bounds: the
     segment's max_weight / block_max_scores were computed at build time
@@ -1197,43 +1209,40 @@ def build_cursors(group: pd.DataFrame, docs_dict, freqs_dict, num_docs: int,
     that ratio (with a 1e-5 float-rounding margin) keeps WAND/BMW/maxscore
     skipping safe; final scores are unaffected (computed from recomputed
     norms, not bounds)."""
-    cols = ["term_id", "seg_id"] if "seg_id" in group.columns else ["term_id"]
-    group = group.sort_values(cols)
-    N = int(idf_docs) if idf_docs is not None else num_docs
-    base_scale = DT(1.0 + 1e-5) if DT is np.float64 else DT(1.0)
+    scale = DT(1.0 + 1e-5) if DT is np.float64 else DT(1.0)
     if bound_inflate != 1.0:
-        base_scale = DT(base_scale * DT(bound_inflate))
-    cursors: list = []
-    for term_id, rows in group.groupby("term_id", sort=True):
-        df_total = (int(df_overrides[int(term_id)]) if df_overrides
-                    else int(rows["n"].sum()))
+        scale = DT(scale * DT(bound_inflate))
+    N = int(idf_docs) if idf_docs is not None else num_docs
+    cursors = []
+    for tid, qf in zip(tids, qfs):
+        parts = segs.get(tid)
+        if parts is None:
+            continue
+        df_total = (int(df_overrides[tid]) if df_overrides
+                    else sum(p[1] for p in parts))
         # qf is an int count for plain queries, a float for weighted
         # (RM3-expanded) ones — DT() of an exact int float is bit-equal
-        # to DT() of the int, so the plain path is unchanged
-        qw = _qtw(float(rows["qf"].iloc[0]), df_total, N, DT)
-        scale = base_scale
+        # to DT() of the int
+        qw = _qtw(qf, df_total, N, DT)
         term_cursors = []
-        for row in rows.itertuples():
-            c = Cursor(
-                row.n, row.block_maxs, row.endpoints, row.freq_offsets,
-                row.payload, num_docs, docs_dict, freqs_dict,
-                block_max_scores=row.block_max_scores, term_id=int(term_id),
-            )
+        for _, n, bmax, bms, endp, foff, payload, mw in (
+                p[:8] for p in parts):  # pos-pinned servers carry 2 more
+            c = Cursor(n, bmax, endp, foff, payload, num_docs, dd, fd,
+                       block_max_scores=bms, term_id=tid)
             c.q_weight = qw
             c.bound_scale = scale
-            c.max_weight = DT(qw * DT(row.max_weight) * DT(scale))
+            c.max_weight = DT(qw * DT(mw) * scale)
             term_cursors.append(c)
         if merge_chunks and len(term_cursors) > 1:
-            parts = [c.decode_all() for c in term_cursors]
-            a = ArrayCursor(np.concatenate([p[0] for p in parts]),
-                            np.concatenate([p[1] for p in parts]),
-                            num_docs, int(term_id))
+            dec = [c.decode_all() for c in term_cursors]
+            a = ArrayCursor(np.concatenate([d[0] for d in dec]),
+                            np.concatenate([d[1] for d in dec]),
+                            num_docs, tid)
             a.q_weight = qw
             a.bound_scale = scale
             a.max_weight = max(c.max_weight for c in term_cursors)
-            cursors.append(a)
-        else:
-            cursors.extend(term_cursors)
+            term_cursors = [a]
+        cursors.extend(term_cursors)
     return cursors
 
 
@@ -1277,15 +1286,15 @@ def run_queries(
     duplicate ids within a query fold into its qf. Returns (query_id,
     rank, doc_id, score), query_id being the position in ``queries``.
 
-    Runs against the index's executor-pinned segments, built on the
-    handle's first call (per Spark application) and reused by every later
-    call; queries go out in LPT-balanced bins, one task per core (see
-    _serve_topk). An index whose segments exceed PIN_BUDGET_BYTES takes
-    the shuffle fallback instead (_shuffle_topk), with identical results.
-    Every argument below is per call: one pin serves them all.
+    Runs through _execute, the one execute step: the index's
+    executor-pinned segments, built on the handle's first call (per Spark
+    application) and reused by every later call, with queries in
+    LPT-balanced bins, one task per core. An index whose segments exceed
+    PIN_BUDGET_BYTES takes the step's shuffle fallback, with identical
+    results. Every argument below is per call: one pin serves them all.
 
     ``df_overrides``/``idf_docs``: global statistics for sharded serving
-    (see build_cursors).
+    (see _cursors).
 
     ``weighted=True``: queries is a list of [(term_id, weight), ...] lists
     with FLOAT per-term weights replacing the integer qf in the BM25
@@ -1297,7 +1306,7 @@ def run_queries(
     it differs from the one baked into this index at build time (an epoch
     built before sharding.append_docs grew the corpus). Norms recompute
     exactly from the raw lens (Index.norm_lens_for) and stored pruning
-    bounds inflate by avg_new/avg_old (see build_cursors) so results are
+    bounds inflate by avg_new/avg_old (see _cursors) so results are
     identical to a fresh build over the grown corpus.
 
     ``doc_filter``: optional DocMask (build_doc_filter) restricting results
@@ -1305,82 +1314,14 @@ def run_queries(
     with corpus-wide BM25 statistics; combined with the handle's current
     tombstones into one broadcast bitmap.
     """
-    folded = [_fold_query(q, weighted) for q in queries]
     DT = np.float32 if dtype == "float32" else np.float64
-    norms, bound_inflate = _bm25_norms(index, dtype, avg_len_override)
-    stats = _Stats(
-        shared_index_bc(
-            spark, index,
-            f"norms-{dtype}" if avg_len_override is None
-            else f"norms-{dtype}-{float(avg_len_override)!r}",
-            lambda: norms),
-        bound_inflate,
-        (spark.sparkContext.broadcast(df_overrides)
-         if df_overrides is not None else None),
-        idf_docs)
-    live_bc = _live_bc(spark, index, doc_filter)
-    pin = _index_pin(spark, index)
-    if pin is None:
-        return _shuffle_topk(spark, index, folded, algo, k, DT, stats,
-                             live_bc)
-    return _serve_topk(spark, pin, folded, algo, k, DT, stats, live_bc)
-
-
-def _shuffle_topk(spark, index, folded: list, algo: str, k: int, DT,
-                  stats: _Stats, live_bc) -> DataFrame:
-    """run_queries' fallback for an index over PIN_BUDGET_BYTES: the
-    batch's (query_id, term_id, qf) rows join the term-pruned segment
-    scan, hash-partition on query_id, and one applyInPandas group per
-    query runs the kernel through build_cursors."""
-    rows = [(i, t, float(w)) for i, (tids, qfs) in enumerate(folded)
-            for t, w in zip(tids, qfs)]
-    qterms = spark.createDataFrame(rows, schema=T.StructType([
-        T.StructField("query_id", T.LongType(), False),
-        T.StructField("term_id", T.LongType(), False),
-        T.StructField("qf", T.DoubleType(), False),
-    ]))
-    local_terms = sorted({t for _, t, _ in rows})
-    # explicit projection: positional indexes carry a pos_payload column
-    # that BM25 kernels never read — keep it out of the scan + shuffle
-    joined = qterms.join(
-        _pruned_segments(index, qterms, local_terms).select(*_BM25_SEG_COLS),
-        "term_id")
-    # per-query kernel cost is heavily skewed (head-term queries cost
-    # 10-100x tail ones): ~2 partitions per core bound the unluckiest one;
-    # groupBy reuses this partitioning, and AQE does not coalesce it
-    joined = joined.repartition(
-        spark.sparkContext.defaultParallelism * 2, "query_id")
-
-    num_docs = index.num_docs
-    docs_dict_bc = shared_index_bc(spark, index, "docs_dict",
-                                   lambda: index.docs_dict)
-    freqs_dict_bc = shared_index_bc(spark, index, "freqs_dict",
-                                    lambda: index.freqs_dict)
-    kernel = KERNELS[algo]
-    merge_chunks = algo in ("ranked_and",)
-    norm_bc, bound_inflate, dfo_bc, idf_docs = stats
-
-    def run_one(pdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(pdf):
-            return pd.DataFrame(columns=["query_id", "rank", "doc_id", "score"])
-        qid = int(pdf["query_id"].iloc[0])
-        cursors = build_cursors(pdf, docs_dict_bc.value, freqs_dict_bc.value,
-                                num_docs, DT, merge_chunks=merge_chunks,
-                                df_overrides=dfo_bc.value if dfo_bc else None,
-                                idf_docs=idf_docs,
-                                bound_inflate=bound_inflate)
-        topk = kernel(cursors, norm_bc.value, num_docs, k, DT,
-                      live=live_bc.value if live_bc is not None else None)
-        return pd.DataFrame(
-            {
-                "query_id": qid,
-                "rank": np.arange(1, len(topk) + 1, dtype=np.int32),
-                "doc_id": [d for d, _ in topk],
-                "score": [s for _, s in topk],
-            }
-        )
-
-    return joined.groupBy("query_id").applyInPandas(run_one, schema=TOPK_SCHEMA)
+    stats = _call_stats(spark, index, dtype, avg_len_override,
+                        df_overrides, idf_docs)
+    return _execute(
+        spark, index, [_fold_query(q, weighted) for q in queries],
+        _topk_body(algo, k, DT, index.num_docs, stats.norm_bc,
+                   _live_bc(spark, index, doc_filter)),
+        TOPK_SCHEMA, stats, DT, merge_chunks=algo == "ranked_and")
 
 
 def run_queries_lm(
@@ -1390,7 +1331,6 @@ def run_queries_lm(
     mu: float = 2000.0,
     k: int = 10,
     doc_filter: DocMask | None = None,
-    qpart_mult: int = 2,
 ) -> DataFrame:
     """Query-likelihood ranked retrieval with Dirichlet smoothing — the
     second classical ranking family next to BM25 (Zhai & Lafferty 2001;
@@ -1406,100 +1346,58 @@ def run_queries_lm(
     |q| = sum of qf over the query's in-index terms. All float64 with the
     exact operation order of the SQL oracle, so quantized ranks agree.
 
-    Execution shape: the same pruned-scan applyInPandas plan as
-    run_queries, scored EXHAUSTIVELY into a dense per-shard accumulator
-    (the dense-accumulator path of ranked_or) — cf_t comes free from the
-    full decode the exhaustive scorer performs anyway, and the raw lens
-    array ships instead of BM25 norms (LM needs lengths, not norms).
-    WAND-style pruning needs per-term LM upper bounds the index doesn't
-    store; at this engine's measured decode rates the exhaustive path is
-    the honest default, and the pruned BM25 kernels remain the serving
-    path. Tombstones/DocMask compose at selection time with build-time
-    collection statistics (the liveDocs stale-stats contract, like BM25).
+    Execution shape: run_queries' execute step, scored EXHAUSTIVELY into
+    a dense per-shard accumulator (the dense-accumulator path of
+    ranked_or) — cf_t comes free from the full decode the exhaustive
+    scorer performs anyway, and the raw lens array ships instead of BM25
+    norms (LM needs lengths, not norms). WAND-style pruning needs
+    per-term LM upper bounds the index doesn't store; at this engine's
+    measured decode rates the exhaustive path is the honest default, and
+    the pruned BM25 kernels remain the serving path. Tombstones/DocMask
+    compose at selection time with build-time collection statistics (the
+    liveDocs stale-stats contract, like BM25).
     """
-    local_terms = sorted({int(t) for ts in queries for t in ts})
-    qdf = spark.createDataFrame(
-        [(i, [int(t) for t in ts]) for i, ts in enumerate(queries)],
-        schema=T.StructType([
-            T.StructField("query_id", T.LongType(), False),
-            T.StructField("terms", T.ArrayType(T.LongType()), False),
-        ]),
-    )
     num_docs = index.num_docs
-    lens = index.lens
-    c_total = int(lens.sum())
-    lens_bc = spark.sparkContext.broadcast(lens)
-    docs_dict_bc = shared_index_bc(spark, index, "docs_dict",
-                                   lambda: index.docs_dict)
-    freqs_dict_bc = shared_index_bc(spark, index, "freqs_dict",
-                                    lambda: index.freqs_dict)
-    tomb_bc = _live_bc(spark, index, doc_filter)
+    c_total = int(index.lens.sum())
+    lens_bc = spark.sparkContext.broadcast(index.lens)
+    live_bc = _live_bc(spark, index, doc_filter)
     mu_f = float(mu)
 
-    qterms = (
-        qdf.select("query_id", F.explode("terms").alias("term_id"))
-        .groupBy("query_id", "term_id")
-        .agg(F.count("*").alias("qf"))
-    )
-    joined = qterms.join(
-        _pruned_segments(index, qterms, local_terms).select(*_BM25_SEG_COLS),
-        "term_id")
-    joined = joined.repartition(
-        spark.sparkContext.defaultParallelism * qpart_mult, "query_id")
-
-    def run_one(pdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(pdf):
-            return pd.DataFrame(columns=["query_id", "rank", "doc_id",
-                                         "score"])
-        qid = int(pdf["query_id"].iloc[0])
-        dd, fd = docs_dict_bc.value, freqs_dict_bc.value
-        dlen = lens_bc.value
+    def body(qid, item, cursors):
+        qf_of = dict(zip(item[0], item[1]))
         acc = np.zeros(num_docs, dtype=np.float64)
         matched = np.zeros(num_docs, dtype=bool)
         ql = 0
-        for term_id, rows in pdf.groupby("term_id", sort=True):
-            qf = int(rows["qf"].iloc[0])
+        for c in cursors:  # one merged cursor per term, term_id asc
+            qf = qf_of[c.term_id]
             ql += qf
-            parts = []
-            for row in rows.sort_values("seg_id").itertuples():
-                c = Cursor(row.n, row.block_maxs, row.endpoints,
-                           row.freq_offsets, row.payload, num_docs, dd, fd,
-                           block_max_scores=row.block_max_scores,
-                           term_id=int(term_id))
-                parts.append(c.decode_all())
-            docs = np.concatenate([p[0] for p in parts])
-            frs = np.concatenate([p[1] for p in parts])
+            docs, frs = c.decode_all()
             cf = int(frs.sum())
             x = frs.astype(np.float64) / (mu_f * (cf / c_total))
             # a posting list holds each doc once -> fancy += is exact
             acc[docs] += qf * np.log(1.0 + x)
             matched[docs] = True
-        live = tomb_bc.value if tomb_bc is not None else None
+        live = _value(live_bc)
         if live is not None:
             matched &= live.mask
         cand = np.nonzero(matched)[0]
-        scores = acc[cand] + ql * np.log(mu_f / (mu_f + dlen[cand]
+        scores = acc[cand] + ql * np.log(mu_f / (mu_f + lens_bc.value[cand]
                                                  .astype(np.float64)))
         order = np.lexsort((cand, -scores))[:k]
-        return pd.DataFrame({
-            "query_id": qid,
-            "rank": np.arange(1, len(order) + 1, dtype=np.int32),
-            "doc_id": cand[order],
-            "score": scores[order],
-        })
+        return (np.arange(1, len(order) + 1, dtype=np.int32), cand[order],
+                scores[order])
 
-    return joined.groupBy("query_id").applyInPandas(run_one,
-                                                    schema=TOPK_SCHEMA)
+    return _execute(spark, index, [_fold_query(q) for q in queries], body,
+                    TOPK_SCHEMA, merge_chunks=True)
 
 
 PIN_BUDGET_BYTES = 1 << 29  # segment bytes one executor-side pin may hold
 
 
 class _Pin(NamedTuple):
-    """Segments pinned executor-side (_collect_segments' seg_map) and the
-    dictionaries their kernels decode with. ``term_cost``: driver-side
-    posting count per pinned term — the LPT cost model, and each term's
-    df."""
+    """Segments pinned executor-side (_seg_map form) and the dictionaries
+    their kernels decode with. ``term_cost``: driver-side posting count
+    per pinned term — the LPT cost model, and each term's df."""
     seg_bc: object
     term_cost: dict
     docs_dict_bc: object
@@ -1510,11 +1408,19 @@ class _Pin(NamedTuple):
 class _Stats(NamedTuple):
     """One call's BM25 statistics: the norm broadcast, the pruning-bound
     inflation for an avg_len override, and the global (df, N) overrides
-    of sharded serving (build_cursors semantics)."""
+    of sharded serving (_cursors semantics)."""
     norm_bc: object
     bound_inflate: float
     dfo_bc: object
     idf_docs: int | None
+
+
+_NO_STATS = _Stats(None, 1.0, None, None)  # the index's own df and N
+
+
+def _value(bc):
+    """A broadcast's value; None for an absent broadcast."""
+    return bc.value if bc is not None else None
 
 
 def _fold_query(query, weighted: bool = False) -> tuple[list, list]:
@@ -1546,27 +1452,31 @@ def _bm25_norms(index, dtype: str, avg_len_override) -> tuple:
     return index.norm_lens_for(float(avg_len_override), dtype), inflate
 
 
-def _collect_segments(pruned: DataFrame, with_positions: bool,
-                      budget: int):
-    """(seg_map, term_cost) of the segment rows of ``pruned``, or None
-    when they exceed ``budget`` bytes. seg_map: term_id -> seg_id-sorted
-    (seg_id, n, block_maxs, block_max_scores, endpoints, freq_offsets,
-    payload, max_weight[, pos_payload, pos_endpoints]) tuples. The size
-    pre-check runs BEFORE collecting, so an oversized set never hits the
-    driver's maxResultSize or memory."""
-    size_expr = F.sum(F.length("payload"))
-    if with_positions:
-        size_expr = size_expr + F.sum(F.length("pos_payload"))
-    est = pruned.agg(
-        size_expr.alias("b"), F.count("*").alias("c")
-    ).collect()[0]
-    if int(est["b"] or 0) + 200 * int(est["c"] or 0) > budget:
-        return None
-    cols = list(_BM25_SEG_COLS)
-    if with_positions:
-        cols += ["pos_payload", "pos_endpoints"]
+def _call_stats(spark, index, dtype: str, avg_len_override=None,
+                df_overrides: dict | None = None,
+                idf_docs: int | None = None) -> _Stats:
+    """One call's _Stats on ``index``: its norms (broadcast once per
+    handle, dtype and avg_len override) plus the per-call overrides."""
+    norms, bound_inflate = _bm25_norms(index, dtype, avg_len_override)
+    return _Stats(
+        shared_index_bc(
+            spark, index,
+            f"norms-{dtype}" if avg_len_override is None
+            else f"norms-{dtype}-{float(avg_len_override)!r}",
+            lambda: norms),
+        bound_inflate,
+        (spark.sparkContext.broadcast(df_overrides)
+         if df_overrides is not None else None),
+        idf_docs)
+
+
+def _seg_map(records, with_positions: bool = False) -> dict:
+    """term_id -> seg_id-sorted (seg_id, n, block_maxs, block_max_scores,
+    endpoints, freq_offsets, payload, max_weight[, pos_payload,
+    pos_endpoints]) parts of segment ``records`` (Rows or dicts) — the
+    form _cursors reads, on the pin and in the fallback alike."""
     seg_map: dict[int, list] = {}
-    for r in pruned.select(*cols).collect():
+    for r in records:
         entry = (
             int(r["seg_id"]),
             int(r["n"]),
@@ -1583,13 +1493,34 @@ def _collect_segments(pruned: DataFrame, with_positions: bool,
         seg_map.setdefault(int(r["term_id"]), []).append(entry)
     for parts in seg_map.values():
         parts.sort(key=lambda p: p[0])
+    return seg_map
+
+
+def _collect_segments(pruned: DataFrame, with_positions: bool,
+                      budget: int):
+    """(seg_map, term_cost) of the segment rows of ``pruned`` (_seg_map
+    form), or None when they exceed ``budget`` bytes. The size pre-check
+    runs BEFORE collecting, so an oversized set never hits the driver's
+    maxResultSize or memory."""
+    size_expr = F.sum(F.length("payload"))
+    if with_positions:
+        size_expr = size_expr + F.sum(F.length("pos_payload"))
+    est = pruned.agg(
+        size_expr.alias("b"), F.count("*").alias("c")
+    ).collect()[0]
+    if int(est["b"] or 0) + 200 * int(est["c"] or 0) > budget:
+        return None
+    cols = list(_BM25_SEG_COLS)
+    if with_positions:
+        cols += ["pos_payload", "pos_endpoints"]
+    seg_map = _seg_map(pruned.select(*cols).collect(), with_positions)
     term_cost = {tid: sum(p[1] for p in parts)
                  for tid, parts in seg_map.items()}
     return seg_map, term_cost
 
 
 def _index_pin(spark, index) -> _Pin | None:
-    """run_queries' pin: the whole index's segments, collected and
+    """The execute step's pin: the whole index's segments, collected and
     broadcast on the handle's first call per Spark application. None when
     they exceed PIN_BUDGET_BYTES — cached like a pin, so the size
     pre-check also runs once per handle."""
@@ -1645,89 +1576,129 @@ def _map_bins(spark, bins: list, work, schema) -> DataFrame:
             .mapInPandas(run, schema=schema))
 
 
-def _serve_topk(spark, pin: _Pin, folded: list, algo: str, k: int, DT,
-                stats: _Stats, live_bc,
-                partitions: int | None = None) -> DataFrame:
-    """The execute step of run_queries and BroadcastQueryServer.serve:
-    _fold_query'd queries in LPT bins, one task per bin and one bin per
-    core, each bin through _serve_kernel_rows against the pinned segments.
-    That is the fewest tasks that still use every core: a job's fixed cost
-    grows with its task count and dominates small batches (an empty
-    mapInPandas job on a 4-core host: ~0.18 s with 4 tasks, ~0.13 s with
-    1). Statistics and the eligible set (``live_bc``) are per-call inputs."""
-    bins = _lpt_bins(spark, folded, [t for t, _ in folded], pin.term_cost,
-                     partitions)
+def _execute(spark, index, items: list, body, schema,
+             stats: _Stats = _NO_STATS, DT=np.float32,
+             merge_chunks: bool = False, pin: _Pin | None = None,
+             partitions: int | None = None) -> DataFrame:
+    """The one execute step of every BM25-cursor query op.
+
+    ``items``: one per query, ``(term_ids asc, qfs, *side)`` — the
+    _fold_query form plus the op's own per-query data; a query's
+    query_id is its position. Per query, _cursors builds the cursors
+    (``merge_chunks``, ``stats``' global df/N and bound inflation) and
+    ``body(qid, item, cursors)`` returns the query's output columns after
+    query_id — one sequence per remaining ``schema`` field — or None. A
+    query with no cursors (every term absent) yields no rows, as an inner
+    join of its terms with the segments would.
+
+    Runs on ``pin`` (default: the handle's _index_pin) in LPT bins, one
+    task per bin and one bin per core (``partitions`` bins at most): the
+    fewest tasks that still use every core. A job's fixed cost grows with
+    its task count and dominates small batches (an empty mapInPandas job
+    on a 4-core host: ~0.18 s with 4 tasks, ~0.13 s with 1). A handle
+    over PIN_BUDGET_BYTES has no pin and takes the one shuffle fallback
+    (_shuffle_execute); the two differ only in how the parts arrive."""
+    if pin is None:
+        pin = _index_pin(spark, index)
+        if pin is None:
+            return _shuffle_execute(spark, index, items, body, schema, stats,
+                                    DT, merge_chunks)
     seg_bc, dd_bc, fd_bc = pin.seg_bc, pin.docs_dict_bc, pin.freqs_dict_bc
-    num_docs = pin.num_docs
-    norm_bc, bound_inflate, dfo_bc, idf_docs = stats
+    num_docs, names = pin.num_docs, schema.fieldNames()
 
     def work(rows):
-        outs = _serve_kernel_rows(
-            rows, seg_bc.value, dd_bc.value, fd_bc.value, norm_bc.value,
-            num_docs, DT, algo, k,
-            live=live_bc.value if live_bc is not None else None,
-            df_overrides=dfo_bc.value if dfo_bc is not None else None,
-            idf_docs=idf_docs, bound_inflate=bound_inflate)
-        if outs:
-            yield pd.DataFrame(outs, columns=TOPK_SCHEMA.fieldNames())
+        cols = _run_rows(rows, seg_bc.value, dd_bc.value, fd_bc.value,
+                         num_docs, DT, body, merge_chunks, stats)
+        if cols:
+            yield _frame(names, cols)
 
-    return _map_bins(spark, bins, work, TOPK_SCHEMA)
+    return _map_bins(spark, _lpt_bins(spark, items, [it[0] for it in items],
+                                      pin.term_cost, partitions),
+                     work, schema)
 
 
-def _serve_kernel_rows(rows, segs: dict, dd, fd, norm, num_docs: int,
-                       DT, algo: str, k: int, live=None,
-                       df_overrides: dict | None = None,
-                       idf_docs: int | None = None,
-                       bound_inflate: float = 1.0) -> list:
-    """Run the pinned-segment kernel over (query_id, (term_ids, qfs))
-    rows (_fold_query form); returns (query_id, rank, doc_id, score)
-    tuples. The worker-side body of _serve_topk, callable without Spark
-    so a profiler can time the kernel alone against the same seg map.
+def _shuffle_execute(spark, index, items: list, body, schema, stats: _Stats,
+                     DT, merge_chunks: bool) -> DataFrame:
+    """_execute's fallback for an index over PIN_BUDGET_BYTES: the
+    batch's (query_id, term_id) rows join the term-pruned segment scan,
+    hash-partition on query_id, and each query's group of segment rows
+    becomes _seg_map parts for the same _run_rows and body."""
+    rows = [(i, t) for i, it in enumerate(items) for t in it[0]]
+    qterms = spark.createDataFrame(rows, schema=T.StructType([
+        T.StructField("query_id", T.LongType(), False),
+        T.StructField("term_id", T.LongType(), False),
+    ]))
+    # explicit projection: positional indexes carry a pos_payload column
+    # that BM25 kernels never read — keep it out of the scan + shuffle
+    joined = qterms.join(
+        _pruned_segments(index, qterms, sorted({t for _, t in rows}))
+        .select(*_BM25_SEG_COLS), "term_id")
+    # per-query kernel cost is heavily skewed (head-term queries cost
+    # 10-100x tail ones): ~2 partitions per core bound the unluckiest one;
+    # groupBy reuses this partitioning, and AQE does not coalesce it
+    joined = joined.repartition(
+        spark.sparkContext.defaultParallelism * 2, "query_id")
+    dd_bc = shared_index_bc(spark, index, "docs_dict",
+                            lambda: index.docs_dict)
+    fd_bc = shared_index_bc(spark, index, "freqs_dict",
+                            lambda: index.freqs_dict)
+    num_docs, names = index.num_docs, schema.fieldNames()
 
-    ``df_overrides``/``idf_docs``/``bound_inflate``: the same global-
-    statistics channel as build_cursors (sharded/appended serving)."""
+    def run_one(pdf: pd.DataFrame) -> pd.DataFrame:
+        qid = int(pdf["query_id"].iloc[0])
+        cols = _run_rows([(qid, items[qid])],
+                         _seg_map(pdf.to_dict("records")), dd_bc.value,
+                         fd_bc.value, num_docs, DT, body, merge_chunks, stats)
+        return _frame(names, cols) if cols else pd.DataFrame(columns=names)
+
+    return joined.groupBy("query_id").applyInPandas(run_one, schema=schema)
+
+
+def _run_rows(rows, segs: dict, dd, fd, num_docs: int, DT, body,
+              merge_chunks: bool = False, stats: _Stats = _NO_STATS) -> list:
+    """The worker side of _execute over (query_id, item) ``rows`` against
+    seg-map parts ``segs``: per-column lists of output parts, query_id
+    first, or [] when no query produced a row. Callable without Spark, so
+    a profiler can time cursor setup plus body alone."""
+    dfo = _value(stats.dfo_bc)
+    cols: list = []
+    for qid, item in rows:
+        cursors = _cursors(segs, item[0], item[1], num_docs, dd, fd, DT,
+                           merge_chunks, dfo, stats.idf_docs,
+                           stats.bound_inflate)
+        out = body(qid, item, cursors) if cursors else None
+        if out is None or not len(out[0]):
+            continue
+        if not cols:
+            cols = [[] for _ in range(len(out) + 1)]
+        cols[0].append(np.full(len(out[0]), qid, dtype=np.int64))
+        for acc, col in zip(cols[1:], out):
+            acc.append(col)
+    return cols
+
+
+def _frame(names: list, cols: list) -> pd.DataFrame:
+    """One frame of _run_rows' column parts: arrays concatenate, Python
+    lists chain."""
+    return pd.DataFrame({
+        n: (np.concatenate(parts)
+            if all(isinstance(p, np.ndarray) for p in parts)
+            else list(itertools.chain.from_iterable(parts)))
+        for n, parts in zip(names, cols)})
+
+
+def _topk_body(algo: str, k: int, DT, num_docs: int, norm_bc, live_bc):
+    """The per-query body of run_queries and BroadcastQueryServer.serve:
+    the ``algo`` kernel's top-k as (rank, doc_id, score) columns."""
     kernel = KERNELS[algo]
-    scale = DT(1.0 + 1e-5) if DT is np.float64 else DT(1.0)
-    if bound_inflate != 1.0:
-        scale = DT(scale * DT(bound_inflate))
-    N = int(idf_docs) if idf_docs is not None else num_docs
-    merge_chunks = algo in ("ranked_and",)
-    outs = []
-    for qid, (tids, qfs) in rows:
-        cursors = []
-        for tid, qf in zip(tids, qfs):
-            parts = segs.get(tid)
-            if parts is None:
-                continue
-            df_total = (int(df_overrides[tid]) if df_overrides
-                        else sum(p[1] for p in parts))
-            qw = _qtw(qf, df_total, N, DT)
-            term_cursors = []
-            for _, n, bmax, bms, endp, foff, payload, mw in (
-                    p[:8] for p in parts):  # pos-pinned servers carry 2 more
-                c = Cursor(n, bmax, endp, foff, payload,
-                           num_docs, dd, fd,
-                           block_max_scores=bms, term_id=tid)
-                c.q_weight = qw
-                c.bound_scale = scale
-                c.max_weight = DT(qw * DT(mw) * c.bound_scale)
-                term_cursors.append(c)
-            if merge_chunks and len(term_cursors) > 1:
-                dec = [c.decode_all() for c in term_cursors]
-                a = ArrayCursor(
-                    np.concatenate([d[0] for d in dec]),
-                    np.concatenate([d[1] for d in dec]),
-                    num_docs, tid)
-                a.q_weight = qw
-                a.bound_scale = scale
-                a.max_weight = max(c.max_weight for c in term_cursors)
-                term_cursors = [a]
-            cursors.extend(term_cursors)
-        topk = (kernel(cursors, norm, num_docs, k, DT, live=live)
-                if cursors else [])
-        for rank, (doc, score) in enumerate(topk, 1):
-            outs.append((int(qid), rank, doc, score))
-    return outs
+
+    def body(qid, item, cursors):
+        topk = kernel(cursors, norm_bc.value, num_docs, k, DT,
+                      live=_value(live_bc))
+        return (range(1, len(topk) + 1), [d for d, _ in topk],
+                [s for _, s in topk])
+
+    return body
 
 
 class BroadcastQueryServer:
@@ -1738,7 +1709,7 @@ class BroadcastQueryServer:
     exact top-k merge into the global exact top-k. In this engine one
     shard = one index (docid sharding per README "Scale design" gives N
     shards at 10^12 docs). run_queries runs the same execute step
-    (_serve_topk) on a pin its Index handle owns; a server is the explicit
+    (_execute) on a pin its Index handle owns; a server is the explicit
     form: its own pin lifetime (close()), a term-subset pin, pinned
     positions for the phrase/proximity paths, and statistics fixed at
     construction.
@@ -1825,7 +1796,7 @@ class BroadcastQueryServer:
     def serve(self, queries: list, algo: str = "block_max_wand_vec",
               k: int = 10, partitions: int | None = None,
               doc_filter: "DocMask | None" = None) -> DataFrame:
-        """One batch against the pinned segments (_serve_topk: LPT bins,
+        """One batch against the pinned segments (_execute: LPT bins,
         one task per bin, ``partitions`` bins at most — default
         defaultParallelism). Only the query term ids move; kernels run
         executor-side against the broadcast. ``doc_filter``: optional
@@ -1840,10 +1811,12 @@ class BroadcastQueryServer:
                stats: _Stats) -> DataFrame:
         """serve() under a caller's statistics (ShardedQueryServer hands
         every shard the global df map this way)."""
-        return _serve_topk(self.spark, self.pin,
-                           [_fold_query(q) for q in queries], algo, k,
-                           self.DT, stats, self._live_for(doc_filter),
-                           partitions)
+        return _execute(
+            self.spark, None, [_fold_query(q) for q in queries],
+            _topk_body(algo, k, self.DT, self.num_docs, stats.norm_bc,
+                       self._live_for(doc_filter)),
+            TOPK_SCHEMA, stats, self.DT, merge_chunks=algo == "ranked_and",
+            pin=self.pin, partitions=partitions)
 
     def _serve_positional(self, queries: list, kernel_fn,
                           partitions: int | None,
@@ -2046,21 +2019,20 @@ def query_latency_stats(spark: SparkSession, index, queries: list,
         dtype=dtype, max_broadcast_bytes=max_broadcast_bytes)
     seg_bc, dd_bc, fd_bc = (srv.pin.seg_bc, srv.pin.docs_dict_bc,
                             srv.pin.freqs_dict_bc)
-    norm_bc, tomb_bc, DT, num_docs = (srv.stats.norm_bc, srv.tomb_bc,
-                                      srv.DT, srv.num_docs)
+    DT, num_docs, stats = srv.DT, srv.num_docs, srv.stats
+    body = _topk_body(algo, k, DT, num_docs, stats.norm_bc, srv.tomb_bc)
 
     def work(rows):
-        args = (seg_bc.value, dd_bc.value, fd_bc.value, norm_bc.value,
-                num_docs, DT, algo, k)
-        live = tomb_bc.value if tomb_bc is not None else None
+        args = (seg_bc.value, dd_bc.value, fd_bc.value, num_docs, DT, body,
+                algo == "ranked_and", stats)
         outs = []
         for row in rows:
             # the full query op, reference-style: cursor setup + kernel;
             # run 0 is the untimed warmup (queries.cpp:32-34)
-            _serve_kernel_rows([row], *args, live=live)
+            _run_rows([row], *args)
             for r in range(1, runs + 1):
                 t0 = _time.perf_counter()
-                _serve_kernel_rows([row], *args, live=live)
+                _run_rows([row], *args)
                 outs.append((row[0], r, (_time.perf_counter() - t0) * 1e6))
         if outs:
             yield pd.DataFrame(outs, columns=LATENCY_SCHEMA.fieldNames())
@@ -2117,7 +2089,7 @@ BOOL_SCHEMA = T.StructType(
 
 
 def run_boolean_queries(
-    spark: SparkSession, index, queries, mode: str = "and",
+    spark: SparkSession, index, queries: list, mode: str = "and",
     doc_filter: DocMask | None = None,
 ) -> DataFrame:
     """Boolean AND (leapfrog intersection) / OR (k-way union) / AND-NOT
@@ -2125,91 +2097,78 @@ def run_boolean_queries(
     (query_id, doc_id). (ref queries.hpp:34-130; AND-NOT has no reference
     counterpart — Lucene MUST/MUST_NOT scope.)
 
-    ``queries``: for "and"/"or", a list of term-id lists (or a DataFrame
-    (query_id, terms)); for "and_not", a list of (pos_terms, neg_terms)
-    pairs. A term that appears on both sides of one query excludes every
-    match (x AND NOT x = empty), matching the SQL semantics.
-    ``doc_filter``: optional DocMask restricting results (see run_queries)."""
-    local_terms = None
-    if mode == "and_not":
-        if isinstance(queries, DataFrame):
-            raise ValueError("and_not takes (pos_terms, neg_terms) pairs")
-        local_terms = sorted({int(t) for pos, neg in queries
-                              for t in list(pos) + list(neg)})
-        rows = [(i, [int(t) for t in pos], [int(t) for t in neg])
-                for i, (pos, neg) in enumerate(queries)]
-        queries = spark.createDataFrame(
-            rows,
-            schema=T.StructType([
-                T.StructField("query_id", T.LongType(), False),
-                T.StructField("terms", T.ArrayType(T.LongType()), False),
-                T.StructField("neg_terms", T.ArrayType(T.LongType()), False),
-            ]),
-        )
-    elif not isinstance(queries, DataFrame):
-        local_terms = sorted({int(t) for ts in queries for t in ts})
-        queries = spark.createDataFrame(
-            [(i, [int(t) for t in ts]) for i, ts in enumerate(queries)],
-            schema=T.StructType([
-                T.StructField("query_id", T.LongType(), False),
-                T.StructField("terms", T.ArrayType(T.LongType()), False),
-            ]),
-        )
+    ``queries``: for "and"/"or", a list of term-id lists; for "and_not",
+    a list of (pos_terms, neg_terms) pairs. A term that appears on both
+    sides of one query excludes every match (x AND NOT x = empty),
+    matching the SQL semantics. Terms absent from the index are dropped
+    from the query. ``doc_filter``: optional DocMask restricting results
+    (see run_queries)."""
+    live_bc = _live_bc(spark, index, doc_filter)
     num_docs = index.num_docs
-    docs_dict_bc = shared_index_bc(spark, index, "docs_dict",
-                                   lambda: index.docs_dict)
-    freqs_dict_bc = shared_index_bc(spark, index, "freqs_dict",
-                                    lambda: index.freqs_dict)
-    tomb_bc = _live_bc(spark, index, doc_filter)
-
+    fn = boolean_and if mode == "and" else boolean_or
     if mode == "and_not":
-        pos = queries.select(
-            "query_id", F.explode("terms").alias("term_id")
-        ).withColumn("neg", F.lit(False))
-        neg = queries.select(
-            "query_id", F.explode("neg_terms").alias("term_id")
-        ).withColumn("neg", F.lit(True))
-        qterms = (
-            pos.unionByName(neg)
-            .groupBy("query_id", "term_id", "neg")
-            .agg(F.count("*").alias("qf"))
-        )
+        items = []
+        for pos, neg in queries:
+            pos, neg = {int(t) for t in pos}, {int(t) for t in neg}
+            items.append((*_fold_query(pos | neg), pos, neg))
     else:
-        qterms = (
-            queries.select("query_id", F.explode("terms").alias("term_id"))
-            .groupBy("query_id", "term_id")
-            .agg(F.count("*").alias("qf"))
-        )
-    joined = qterms.join(
-        _pruned_segments(index, qterms, local_terms).select(*_BM25_SEG_COLS),
-        "term_id")
+        items = [_fold_query(q) for q in queries]
+
+    def body(qid, item, cursors):
+        live = _value(live_bc)
+        if mode != "and_not":
+            return (fn(cursors, num_docs, live=live),)
+        pos, neg = item[2], item[3]
+        pos_c = [c for c in cursors if c.term_id in pos]
+        if not pos_c:
+            return None
+        if any(c.term_id in neg for c in pos_c):
+            # every match holds that term, so its negation excludes all
+            return None
+        return (boolean_and_not(pos_c,
+                                [c for c in cursors if c.term_id in neg],
+                                num_docs, live=live),)
+
+    return _execute(spark, index, items, body, BOOL_SCHEMA,
+                    merge_chunks=mode in ("and", "and_not"))
+
+
+def _match_op(spark, index, items: list, mode: str, doc_filter,
+              per_query, schema) -> DataFrame:
+    """The boolean-match ops' body on the one execute step: per query,
+    the AND (``mode="and"``) or OR match set as int64 doc ids, after
+    tombstones and ``doc_filter``, goes to ``per_query(item, docs)``,
+    which returns the query's output columns after query_id, or None."""
+    num_docs = index.num_docs
+    live_bc = _live_bc(spark, index, doc_filter)
     fn = boolean_and if mode == "and" else boolean_or
 
-    def run_one(pdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(pdf):
-            return pd.DataFrame(columns=["query_id", "doc_id"])
-        qid = int(pdf["query_id"].iloc[0])
-        live = tomb_bc.value if tomb_bc is not None else None
-        if mode == "and_not":
-            pos_pdf = pdf[~pdf["neg"]]
-            neg_pdf = pdf[pdf["neg"]]
-            if not len(pos_pdf):
-                return pd.DataFrame(columns=["query_id", "doc_id"])
-            cursors = build_cursors(
-                pos_pdf, docs_dict_bc.value, freqs_dict_bc.value,
-                num_docs, merge_chunks=True)
-            neg_cursors = build_cursors(
-                neg_pdf, docs_dict_bc.value, freqs_dict_bc.value,
-                num_docs, merge_chunks=True) if len(neg_pdf) else []
-            docs = boolean_and_not(cursors, neg_cursors, num_docs, live=live)
-        else:
-            cursors = build_cursors(
-                pdf, docs_dict_bc.value, freqs_dict_bc.value,
-                num_docs, merge_chunks=(mode == "and"))
-            docs = fn(cursors, num_docs, live=live)
-        return pd.DataFrame({"query_id": qid, "doc_id": docs})
+    def body(qid, item, cursors):
+        return per_query(item, np.asarray(
+            fn(cursors, num_docs, live=_value(live_bc)), dtype=np.int64))
 
-    return joined.groupBy("query_id").applyInPandas(run_one, schema=BOOL_SCHEMA)
+    return _execute(spark, index, items, body, schema,
+                    merge_chunks=mode == "and")
+
+
+def _scored_op(spark, index, items: list, dtype: str, doc_filter,
+               per_query, schema) -> DataFrame:
+    """The full-match-set scored ops' body on the one execute step: per
+    query, matched_scores' (docs asc, exact BM25 scores) over the OR
+    match set, after tombstones and ``doc_filter``, go to
+    ``per_query(item, docs, scores)`` when non-empty; it returns the
+    query's output columns after query_id, or None."""
+    num_docs = index.num_docs
+    DT = np.float32 if dtype == "float32" else np.float64
+    stats = _call_stats(spark, index, dtype)
+    norm_bc, live_bc = stats.norm_bc, _live_bc(spark, index, doc_filter)
+
+    def body(qid, item, cursors):
+        docs, scores = matched_scores(cursors, norm_bc.value, num_docs, DT,
+                                      live=_value(live_bc))
+        return per_query(item, docs, scores) if len(docs) else None
+
+    return _execute(spark, index, items, body, schema, stats, DT)
 
 
 # ---------------------------------------------------------------------------

@@ -206,7 +206,7 @@ def append_docs(
     (N, df) flow through the existing df_overrides/idf_docs channel, and
     epochs whose baked avg_len predates the append re-derive norms from
     raw lens (Index.norm_lens_for) with pruning bounds inflated by
-    avg_new/avg_old (build_cursors) — results are bit-identical to a
+    avg_new/avg_old (queries._cursors) — results are bit-identical to a
     fresh build over the union corpus (tests/test_append.py).
 
     Scale shape: one tokenize pass over ONLY the new batch, one hash join

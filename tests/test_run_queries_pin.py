@@ -1,10 +1,12 @@
-"""run_queries on the handle's pinned segments vs the shuffle fallback.
+"""Every BM25-cursor op on the handle's pinned segments vs the shuffle
+fallback.
 
-run_queries pins the index's segments executor-side once per handle and
-runs every call against them; an index over PIN_BUDGET_BYTES takes the
-join -> repartition -> applyInPandas fallback. Both must return the same
-rows bit for bit, statistics, filters and tombstones being per-call
-inputs of the pinned path."""
+The one execute step (queries._execute) pins the index's segments
+executor-side once per handle and runs every call of every op against
+them; an index over PIN_BUDGET_BYTES takes the join -> repartition ->
+applyInPandas fallback. Both must return the same rows bit for bit,
+statistics, filters and tombstones being per-call inputs of the pinned
+path."""
 
 from __future__ import annotations
 
@@ -15,9 +17,22 @@ import numpy as np
 import pytest
 
 from dint_spark import queries as Q
+from dint_spark.bool_query import (BoolSpec, run_bool_queries,
+                                   run_boosting_queries,
+                                   run_terms_set_queries)
 from dint_spark.corpus import generate_pages
+from dint_spark.explain import run_queries_explain
+from dint_spark.facets import (_DV_MISSING, build_doc_facets,
+                               run_boosted_queries, run_cardinality_queries,
+                               run_collapsed_queries, run_facet_queries,
+                               run_grouped_topk, run_percentile_queries,
+                               run_range_facet_queries, run_sorted_queries,
+                               run_stats_queries)
 from dint_spark.index import IndexConfig, build_index, delete_docs, load_index
-from dint_spark.queries import DocMask, run_queries
+from dint_spark.nested import run_nested_queries
+from dint_spark.paging import run_queries_after
+from dint_spark.queries import (DocMask, run_boolean_queries, run_queries,
+                                run_queries_lm)
 
 N_DOCS = 400
 
@@ -103,18 +118,158 @@ def test_pinned_matches_fallback(spark, built, monkeypatch, case):
     assert a == b
 
 
-def test_pinned_plan_has_no_exchange(spark, built, monkeypatch):
-    """The pinned call is one mapInPandas over a range: no scan, no
-    exchange, no grouped applyInPandas — those stay in the fallback."""
-    d, idx, queries, _ = built
-    plan = run_queries(spark, idx, queries)._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert "MapInPandas" in plan
-    assert "Exchange" not in plan and "FlatMapGroupsInPandas" not in plan
+@pytest.fixture(scope="module")
+def sidecars(spark, built):
+    """A facet column with missing docs, an i64 doc value with missing
+    docs, and parent ordinals in blocks of 3 with orphans."""
+    _, idx, _, _ = built
+    n = idx.num_docs
+    facet = [(i, None if i % 11 == 0 else f"f{i % 7}") for i in range(n)]
+    facets = build_doc_facets(
+        spark, spark.createDataFrame(facet, "doc_id long, f string"), n,
+        "f")
+    vals = np.random.default_rng(3).integers(0, 50, n).astype(np.int64)
+    vals[::9] = _DV_MISSING
+    parents = np.arange(n, dtype=np.int64) // 3
+    parents[::13] = _DV_MISSING
+    return facets, vals, parents
+
+
+def _op_cases(built, sidecars):
+    """op name -> (fn(spark, handle), query_id of the batch's last query,
+    whose terms are all absent). Term batches also hold an empty query."""
+    _, idx, queries, df = built
+    facets, vals, parents = sidecars
+    absent = [10**9, 10**9 + 1]
+    qs = queries + [absent]
+    t = sorted(df, key=lambda x: -df[x])
+    mask = np.random.default_rng(11).random(idx.num_docs) < 0.7
+    specs = [BoolSpec(must=[t[0]], should=[t[5], t[9]]),
+             BoolSpec(should=[t[1], t[2], t[40]], min_should=2),
+             BoolSpec(must=[t[3], 10**9], should=[t[4]]),  # absent must
+             BoolSpec(must=[t[2]], should=[t[7]], must_not=[t[6]]),
+             BoolSpec(should=absent)]
+    pairs = [([t[0], t[4]], [t[8]]), ([t[1]], [t[1]]), ([t[2]], [10**9]),
+             ([t[9], 10**9], [t[3], t[30]]), (absent, [t[0]])]
+    cases = {
+        "lm": lambda sp, h: run_queries_lm(sp, h, qs, k=5),
+        "boolean_and": lambda sp, h: run_boolean_queries(sp, h, qs, "and"),
+        "boolean_or_filter": lambda sp, h: run_boolean_queries(
+            sp, h, qs, "or", doc_filter=DocMask.from_mask(mask)),
+        "boolean_and_not": lambda sp, h: run_boolean_queries(
+            sp, h, pairs, "and_not"),
+        "bool": lambda sp, h: run_bool_queries(sp, h, specs, k=5),
+        "boosting": lambda sp, h: run_boosting_queries(sp, h, pairs, k=5),
+        "terms_set": lambda sp, h: run_terms_set_queries(
+            sp, h, qs, np.where(vals == _DV_MISSING, 1, vals % 3), k=5),
+        "facet": lambda sp, h: run_facet_queries(sp, h, qs, facets,
+                                                 mode="or"),
+        "collapsed": lambda sp, h: run_collapsed_queries(sp, h, qs, facets,
+                                                         k=4),
+        "grouped": lambda sp, h: run_grouped_topk(sp, h, qs, facets,
+                                                  k_groups=3, per_group=2),
+        "range_facet": lambda sp, h: run_range_facet_queries(
+            sp, h, qs, vals, [0, 10, 25, 50], mode="or"),
+        "stats": lambda sp, h: run_stats_queries(sp, h, qs, vals,
+                                                 extended=True),
+        "cardinality": lambda sp, h: run_cardinality_queries(
+            sp, h, qs, vals, mode="or"),
+        "percentile": lambda sp, h: run_percentile_queries(
+            sp, h, qs, vals, mode="or"),
+        "function_score": lambda sp, h: run_boosted_queries(
+            sp, h, qs, vals, factor=0.5, k=5),
+        "sorted": lambda sp, h: run_sorted_queries(sp, h, qs, vals, k=5,
+                                                   mode="or"),
+        "nested": lambda sp, h: run_nested_queries(sp, h, qs, parents,
+                                                   score_mode="avg", k=5),
+        "after": lambda sp, h: run_queries_after(
+            sp, h, qs, [None, (10**18, 0), None, (0, 10**9)], k=5),
+        "explain": lambda sp, h: run_queries_explain(sp, h, qs, k=3),
+    }
+    # specs and pairs both end in their all-absent query
+    return {op: (fn, len(specs) - 1 if op in ("bool", "boolean_and_not",
+                                                "boosting") else len(queries))
+            for op, fn in cases.items()}
+
+
+OPS = ["lm", "boolean_and", "boolean_or_filter", "boolean_and_not", "bool",
+       "boosting", "terms_set", "facet", "collapsed", "grouped",
+       "range_facet", "stats", "cardinality", "percentile",
+       "function_score", "sorted", "nested", "after", "explain"]
+
+
+def _all_rows(df):
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+@pytest.mark.parametrize("op", OPS)
+def test_op_pinned_matches_fallback(spark, built, sidecars, monkeypatch,
+                                    op):
+    """Every op on the one execute step returns the same rows pinned and
+    through the shuffle fallback; the all-absent query returns none on
+    either path."""
+    d, idx, _, _ = built
+    fn, absent = _op_cases(built, sidecars)[op]
+    pinned = _all_rows(fn(spark, idx))
     fb = _fallback_handle(spark, d, monkeypatch)
-    plan = run_queries(spark, fb, queries)._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert "FlatMapGroupsInPandas" in plan and "Exchange" in plan
+    fallback = _all_rows(fn(spark, fb))
+    assert pinned, "the batch must return rows"
+    assert pinned == fallback
+    assert not [r for r in pinned if r[0] == absent]
+    if op == "bool":  # spec 2's must clause holds an absent term
+        assert not [r for r in pinned if r[0] == 2]
+    if op == "boolean_and_not":  # pair 1 is x AND NOT x
+        assert not [r for r in pinned if r[0] == 1]
+
+
+def test_op_deletes_read_per_call(spark, built, monkeypatch, tmp_path):
+    """delete_docs between two run_bool_queries calls on one handle: the
+    second call excludes the new deletes, pinned and fallback alike."""
+    d, _, _, df = built
+    t = sorted(df, key=lambda x: -df[x])
+    specs = [BoolSpec(should=[t[0], t[1]]), BoolSpec(must=[t[2]],
+                                                     should=[t[3]])]
+    got = {}
+    for path in ("pinned", "fallback"):
+        copy = str(tmp_path / path)
+        shutil.copytree(d, copy)
+        if path == "fallback":
+            h = _fallback_handle(spark, copy, monkeypatch)
+        else:
+            h = load_index(spark, copy)
+        first = _all_rows(run_bool_queries(spark, h, specs, k=8))
+        assert (Q._index_pin(spark, h) is None) == (path == "fallback")
+        gone = sorted({doc for _, rank, doc, _ in first if rank <= 2})
+        assert delete_docs(spark, h, gone) == len(gone)
+        got[path] = again = _all_rows(run_bool_queries(spark, h, specs,
+                                                       k=8))
+        assert again and not {doc for _, _, doc, _ in again} & set(gone)
+    assert got["pinned"] == got["fallback"]
+
+
+def test_pinned_plan_has_no_exchange(spark, built, sidecars, monkeypatch):
+    """A pinned call is one mapInPandas over a range: no scan, no
+    exchange, no grouped applyInPandas — those stay in the fallback.
+    run_facet_queries then joins its facet dimension: a broadcast of that
+    small table is the only exchange its pinned plan has."""
+    d, idx, queries, _ = built
+    facets = sidecars[0]
+    specs = [BoolSpec(must=[queries[0][0]], should=queries[1])]
+
+    def plans(h):
+        return [df._jdf.queryExecution().executedPlan().toString()
+                for df in (run_queries(spark, h, queries),
+                           run_bool_queries(spark, h, specs),
+                           run_facet_queries(spark, h, queries, facets))]
+
+    q, b, f = plans(idx)
+    for plan in (q, b, f):
+        assert "MapInPandas" in plan
+        assert "FlatMapGroupsInPandas" not in plan
+    assert "Exchange" not in q and "Exchange" not in b
+    assert f.count("Exchange") == f.count("BroadcastExchange")
+    for plan in plans(_fallback_handle(spark, d, monkeypatch)):
+        assert "FlatMapGroupsInPandas" in plan and "Exchange" in plan
 
 
 def test_concurrent_calls_leave_session_conf(spark, built, monkeypatch):
