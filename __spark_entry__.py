@@ -15,9 +15,9 @@ integer columns.
 
 from __future__ import annotations
 
+import logging
 import os
 import shutil
-import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -54,32 +54,46 @@ QUERY_SPECS: list[list[int]] = [
 
 TOPK = 10
 
-_INDEX_CACHE: dict[str, object] = {}
+_INDEX_CACHE: dict[tuple, object] = {}
+_log = logging.getLogger(__name__)
+
+
+def _cached_entry_index(spark, sf_dir, suffix: str | None, build_fn,
+                        loader=load_index, marker: str = "manifest.json"):
+    """The load-or-build-or-rebuild idiom of every entry index: one
+    in-memory cache keyed by (sf dir, ``suffix``) over the version-tagged
+    dir /tmp/dint_spark_entry/<sf>[-<suffix>]-v<version>. A dir holding
+    ``marker`` opens through ``loader(spark, dir)``; one that fails to
+    open is corruption, not a cache miss: logged, cleared, rebuilt. A
+    loader may return None for a dir to clear silently (an uncommitted
+    build). ``build_fn(dir, tag)`` builds fresh."""
+    key = (os.path.abspath(sf_dir), suffix)
+    if key in _INDEX_CACHE:
+        return _INDEX_CACHE[key]
+    base = os.path.basename(key[0].rstrip("/"))
+    tag = (f"{base}-{suffix}" if suffix else base) + \
+        f"-v{dint_spark.__version__}"
+    d = os.path.join("/tmp/dint_spark_entry", tag)
+    idx = None
+    if os.path.exists(os.path.join(d, marker)):
+        try:
+            idx = loader(spark, d)
+        except Exception as e:
+            _log.warning("corrupt cached index at %s: %r; rebuilding", d, e)
+        if idx is None:
+            shutil.rmtree(d, ignore_errors=True)
+    if idx is None:
+        idx = build_fn(d, tag)
+    _INDEX_CACHE[key] = idx
+    return idx
 
 
 def _get_index(spark: SparkSession, sf_dir: str):
-    key = os.path.abspath(sf_dir)
-    if key in _INDEX_CACHE:
-        return _INDEX_CACHE[key]
-    tag = f"{os.path.basename(key.rstrip('/'))}-v{dint_spark.__version__}"
-    out = os.path.join("/tmp/dint_spark_entry", tag)
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    pages = pages_from_documents(docs)
-    cfg = IndexConfig(num_buckets=4, input_tag=tag)
-    if os.path.exists(os.path.join(out, "manifest.json")):
-        try:
-            idx = load_index(spark, out)
-            _INDEX_CACHE[key] = idx
-            return idx
-        except Exception as e:
-            # an existing manifest that fails to load is corruption, not a
-            # cache miss: surface it, clear it, and rebuild cleanly
-            print(f"[dint_spark] stale/corrupt cached index at {out}: "
-                  f"{e!r}; rebuilding", file=sys.stderr)
-            shutil.rmtree(out, ignore_errors=True)
-    idx = build_index(spark, pages, out, cfg)
-    _INDEX_CACHE[key] = idx
-    return idx
+    return _cached_entry_index(
+        spark, sf_dir, None,
+        lambda out, tag: build_index(
+            spark, pages_from_documents(_documents(spark, sf_dir)), out,
+            IndexConfig(num_buckets=4, input_tag=tag)))
 
 
 def _documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -527,28 +541,11 @@ def _entry_roundtrip(spark, sf_dir):
 
 def _get_variant_index(spark: SparkSession, sf_dir: str, variant_cfg: dict,
                        tag: str):
-    key = (os.path.abspath(sf_dir), tag)
-    if key in _INDEX_CACHE:
-        return _INDEX_CACHE[key]
-    base = f"{os.path.basename(key[0].rstrip('/'))}-{tag}-v{dint_spark.__version__}"
-    out = os.path.join("/tmp/dint_spark_entry", base)
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    pages = pages_from_documents(docs)
-    cfg = IndexConfig(num_buckets=4, input_tag=base, **variant_cfg)
-    if os.path.exists(os.path.join(out, "manifest.json")):
-        try:
-            idx = load_index(spark, out)
-            _INDEX_CACHE[key] = idx
-            return idx
-        except Exception as e:
-            # an existing manifest that fails to load is corruption, not a
-            # cache miss: surface it, clear it, and rebuild cleanly
-            print(f"[dint_spark] stale/corrupt cached index at {out}: "
-                  f"{e!r}; rebuilding", file=sys.stderr)
-            shutil.rmtree(out, ignore_errors=True)
-    idx = build_index(spark, pages, out, cfg)
-    _INDEX_CACHE[key] = idx
-    return idx
+    return _cached_entry_index(
+        spark, sf_dir, tag,
+        lambda out, base: build_index(
+            spark, pages_from_documents(_documents(spark, sf_dir)), out,
+            IndexConfig(num_buckets=4, input_tag=base, **variant_cfg)))
 
 
 def _entry_roundtrip_multi(spark, sf_dir):
@@ -595,28 +592,12 @@ def _entry_bm25_chunked(spark, sf_dir):
 def _get_sharded_index(spark: SparkSession, sf_dir: str):
     from dint_spark.sharding import ShardedIndex, build_sharded_index
 
-    key = (os.path.abspath(sf_dir), "sharded2")
-    if key in _INDEX_CACHE:
-        return _INDEX_CACHE[key]
-    base = f"{os.path.basename(key[0].rstrip('/'))}-sharded2-v{dint_spark.__version__}"
-    out = os.path.join("/tmp/dint_spark_entry", base)
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    pages = pages_from_documents(docs)
-    cfg = IndexConfig(num_buckets=2, input_tag=base)
-    if os.path.exists(os.path.join(out, "shards.json")):
-        try:
-            sidx = ShardedIndex(spark, out)
-            _INDEX_CACHE[key] = sidx
-            return sidx
-        except Exception as e:
-            # an existing manifest that fails to load is corruption, not a
-            # cache miss: surface it, clear it, and rebuild cleanly
-            print(f"[dint_spark] stale/corrupt cached index at {out}: "
-                  f"{e!r}; rebuilding", file=sys.stderr)
-            shutil.rmtree(out, ignore_errors=True)
-    sidx = build_sharded_index(spark, pages, out, num_shards=2, config=cfg)
-    _INDEX_CACHE[key] = sidx
-    return sidx
+    return _cached_entry_index(
+        spark, sf_dir, "sharded2",
+        lambda out, base: build_sharded_index(
+            spark, pages_from_documents(_documents(spark, sf_dir)), out,
+            num_shards=2, config=IndexConfig(num_buckets=2, input_tag=base)),
+        loader=ShardedIndex, marker="shards.json")
 
 
 def _entry_bm25_sharded(spark, sf_dir):
@@ -712,31 +693,23 @@ def _get_appended_index(spark: SparkSession, sf_dir: str):
     from dint_spark.sharding import (ShardedIndex, append_docs,
                                      build_sharded_index)
 
-    key = (os.path.abspath(sf_dir), "appended")
-    if key in _INDEX_CACHE:
-        return _INDEX_CACHE[key]
-    base = (f"{os.path.basename(key[0].rstrip('/'))}-appended-"
-            f"v{dint_spark.__version__}")
-    out = os.path.join("/tmp/dint_spark_entry", base)
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    pivot = (docs.count() * 3) // 5
-    cfg = IndexConfig(num_buckets=2, input_tag=base)
-    if os.path.exists(os.path.join(out, "shards.json")):
-        try:
-            sidx = ShardedIndex(spark, out)
-            if int(sidx.manifest["num_shards"]) == 2:  # append committed
-                _INDEX_CACHE[key] = sidx
-                return sidx
-        except Exception as e:
-            print(f"[dint_spark] stale/corrupt cached index at {out}: "
-                  f"{e!r}; rebuilding", file=sys.stderr)
-        shutil.rmtree(out, ignore_errors=True)
-    old = pages_from_documents(docs.where(F.col("doc_id") < pivot))
-    new = pages_from_documents(docs.where(F.col("doc_id") >= pivot))
-    sidx = build_sharded_index(spark, old, out, num_shards=1, config=cfg)
-    sidx = append_docs(spark, sidx, new)
-    _INDEX_CACHE[key] = sidx
-    return sidx
+    def load(sp, out):
+        sidx = ShardedIndex(sp, out)
+        # a dir whose append never committed rebuilds
+        return sidx if int(sidx.manifest["num_shards"]) == 2 else None
+
+    def build(out, base):
+        docs = _documents(spark, sf_dir)
+        pivot = (docs.count() * 3) // 5
+        sidx = build_sharded_index(
+            spark, pages_from_documents(docs.where(F.col("doc_id") < pivot)),
+            out, num_shards=1,
+            config=IndexConfig(num_buckets=2, input_tag=base))
+        return append_docs(spark, sidx, pages_from_documents(
+            docs.where(F.col("doc_id") >= pivot)))
+
+    return _cached_entry_index(spark, sf_dir, "appended", build,
+                               loader=load, marker="shards.json")
 
 
 def _entry_bm25_appended(spark, sf_dir):
@@ -993,31 +966,20 @@ def _entry_bm25_merged(spark, sf_dir):
     equality) and the oracle is the standard full-corpus top-k SQL."""
     from dint_spark.merge import merge_indexes
 
-    key = (os.path.abspath(sf_dir), "merged")
-    if key not in _INDEX_CACHE:
-        base = (f"{os.path.basename(key[0].rstrip('/'))}-merged"
-                f"-v{dint_spark.__version__}")
-        out = os.path.join("/tmp/dint_spark_entry", base)
-        if os.path.exists(os.path.join(out, "manifest.json")):
-            try:
-                _INDEX_CACHE[key] = load_index(spark, out)
-            except Exception as e:
-                print(f"[dint_spark] stale/corrupt cached index at {out}: "
-                      f"{e!r}; rebuilding", file=sys.stderr)
-                shutil.rmtree(out, ignore_errors=True)
-        if key not in _INDEX_CACHE:
-            docs = _documents(spark, sf_dir)
-            cut = docs.count() // 2
-            cfg = lambda t: IndexConfig(  # noqa: E731
-                num_buckets=4, input_tag=f"{base}-{t}")
-            build_index(spark, pages_from_documents(
-                docs.where(F.col("doc_id") < cut)), f"{out}-a", cfg("a"))
-            build_index(spark, pages_from_documents(
-                docs.where(F.col("doc_id") >= cut)), f"{out}-b", cfg("b"))
-            _INDEX_CACHE[key] = merge_indexes(
-                spark, f"{out}-a", f"{out}-b", out, cfg("m"))
-    raw = run_queries(spark, _INDEX_CACHE[key], QUERY_SPECS,
-                      algo="block_max_wand_vec", k=100, dtype="float64")
+    def build(out, base):
+        docs = _documents(spark, sf_dir)
+        cut = docs.count() // 2
+        cfg = lambda t: IndexConfig(  # noqa: E731
+            num_buckets=4, input_tag=f"{base}-{t}")
+        build_index(spark, pages_from_documents(
+            docs.where(F.col("doc_id") < cut)), f"{out}-a", cfg("a"))
+        build_index(spark, pages_from_documents(
+            docs.where(F.col("doc_id") >= cut)), f"{out}-b", cfg("b"))
+        return merge_indexes(spark, f"{out}-a", f"{out}-b", out, cfg("m"))
+
+    idx = _cached_entry_index(spark, sf_dir, "merged", build)
+    raw = run_queries(spark, idx, QUERY_SPECS, algo="block_max_wand_vec",
+                      k=100, dtype="float64")
     return _rank_quantized(raw)
 
 
@@ -1068,24 +1030,11 @@ def _entry_bm25_after_compact(spark, sf_dir):
     re-ranked doc ids, re-ranked vocabulary, refreshed N/df/avg_len) — the
     oracle recomputes every CTE over the filtered documents."""
     from dint_spark.compact import compact_index
-    from dint_spark.index import load_index
 
-    key = (os.path.abspath(sf_dir), "compacted")
-    if key not in _INDEX_CACHE:
-        base = (f"{os.path.basename(key[0].rstrip('/'))}-compacted"
-                f"-v{dint_spark.__version__}")
-        out = os.path.join("/tmp/dint_spark_entry", base)
-        if os.path.exists(os.path.join(out, "manifest.json")):
-            try:
-                _INDEX_CACHE[key] = load_index(spark, out)
-            except Exception as e:
-                print(f"[dint_spark] stale/corrupt cached index at {out}: "
-                      f"{e!r}; rebuilding", file=sys.stderr)
-                shutil.rmtree(out, ignore_errors=True)
-        if key not in _INDEX_CACHE:
-            _INDEX_CACHE[key] = compact_index(
-                spark, _get_deleted_index(spark, sf_dir), out)
-    idx = _INDEX_CACHE[key]
+    idx = _cached_entry_index(
+        spark, sf_dir, "compacted",
+        lambda out, _: compact_index(spark, _get_deleted_index(spark, sf_dir),
+                                     out))
     raw = run_queries(spark, idx, QUERY_SPECS, algo="block_max_wand_vec",
                       k=100, dtype="float64")
     return _rank_quantized(raw)
@@ -2045,32 +1994,6 @@ AN_QUERIES = ["the joins and rows", "tables of values",
               "scans with merges", "the windows and groups",
               "customers orders"]
 
-_AN_IDX_CACHE: dict[str, object] = {}
-
-
-def _cached_entry_index(spark, sf_dir, cache: dict, suffix: str, build_fn):
-    """The load-or-build-or-rebuild idiom shared by every derived entry
-    index (analyzed, reindexed): per-sf memory cache over a version-
-    tagged /tmp dir; a manifest that fails to load is corruption and
-    clears for a clean rebuild. ``build_fn(dir, tag)`` builds fresh."""
-    key = os.path.abspath(sf_dir)
-    if key in cache:
-        return cache[key]
-    tag = (f"{os.path.basename(key.rstrip('/'))}"
-           f"-{suffix}-v{dint_spark.__version__}")
-    d = os.path.join("/tmp/dint_spark_entry", tag)
-    idx = None
-    if os.path.exists(os.path.join(d, "manifest.json")):
-        try:
-            idx = load_index(spark, d)
-        except Exception:
-            shutil.rmtree(d, ignore_errors=True)
-    if idx is None:
-        idx = build_fn(d, tag)
-    cache[key] = idx
-    return idx
-
-
 def _get_analyzed_index(spark, sf_dir):
     """Index over the analyzer-chain transform of the driver documents
     (stopword drop + S-stem), built once per sf_dir and cached."""
@@ -2081,11 +2004,7 @@ def _get_analyzed_index(spark, sf_dir):
         return build_index(spark, pages_from_documents(adocs), adir,
                            IndexConfig(num_buckets=4, input_tag=tag))
 
-    return _cached_entry_index(spark, sf_dir, _AN_IDX_CACHE, "analyzed",
-                               build)
-
-
-_RI_IDX_CACHE: dict[str, object] = {}
+    return _cached_entry_index(spark, sf_dir, "analyzed", build)
 
 
 def _entry_search_reindexed(spark, sf_dir):
@@ -2100,7 +2019,7 @@ def _entry_search_reindexed(spark, sf_dir):
     from dint_spark.search import parse_queries
 
     idx = _cached_entry_index(
-        spark, sf_dir, _RI_IDX_CACHE, "reindexed",
+        spark, sf_dir, "reindexed",
         lambda rdir, tag: reindex_index(
             spark, _get_index(spark, sf_dir), rdir,
             token_transform=analyzed_tokens))
@@ -3122,41 +3041,27 @@ MM_QUERIES = ["join hash", "scan filter batch", "slow merge",
 MM_BOOSTS = {"title": 2.0, "body": 1.0}   # binary-exact boosts
 MM_TB = 0.25                              # binary-exact tie_breaker
 
-_FIELD_IDX_CACHE: dict[str, dict] = {}
-
-
 def _get_field_indexes(spark, sf_dir):
     """title/body per-field indexes over the driver documents (title =
     first MM_TITLE_N tokens under the pinned tokenizer, body = rest) —
     built once per sf_dir and cached like _get_index."""
-    key = os.path.abspath(sf_dir)
-    if key in _FIELD_IDX_CACHE:
-        return _FIELD_IDX_CACHE[key]
-    docs = _documents(spark, sf_dir)
     toks = F.filter(F.split(F.lower("text"), "[^0-9a-z]+"),
                     lambda x: x != F.lit(""))
     fields = {
         "title": F.concat_ws(" ", F.slice(toks, 1, MM_TITLE_N)),
         "body": F.concat_ws(" ", F.slice(toks, MM_TITLE_N + 1, 1 << 30)),
     }
-    out = {}
-    for fname, expr in fields.items():
-        tag = (f"{os.path.basename(key.rstrip('/'))}"
-               f"-{fname}-v{dint_spark.__version__}")
-        fdir = os.path.join("/tmp/dint_spark_entry", tag)
-        fdocs = docs.select("doc_id", expr.alias("text"),
-                            F.lit("xx").alias("lang"))
-        cfg = IndexConfig(num_buckets=4, input_tag=tag)
-        if os.path.exists(os.path.join(fdir, "manifest.json")):
-            try:
-                out[fname] = load_index(spark, fdir)
-                continue
-            except Exception:
-                shutil.rmtree(fdir, ignore_errors=True)
-        out[fname] = build_index(
-            spark, pages_from_documents(fdocs), fdir, cfg)
-    _FIELD_IDX_CACHE[key] = out
-    return out
+
+    def builder(expr):
+        def build(fdir, tag):
+            fdocs = _documents(spark, sf_dir).select(
+                "doc_id", expr.alias("text"), F.lit("xx").alias("lang"))
+            return build_index(spark, pages_from_documents(fdocs), fdir,
+                               IndexConfig(num_buckets=4, input_tag=tag))
+        return build
+
+    return {fname: _cached_entry_index(spark, sf_dir, fname, builder(expr))
+            for fname, expr in fields.items()}
 
 
 def _entry_search_multi_match(spark, sf_dir):

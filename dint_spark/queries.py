@@ -19,16 +19,18 @@ topk queue's strict `>` insertion (queries.hpp:150-188), so every optimized
 operator reproduces ranked_or's top-k (doc_id, score) exactly. A float64
 mode exists for cross-checking against SQL oracles.
 
-Distributed execution: every BM25-cursor op (run_queries, the boolean,
-LM, facet, bool-DSL, nested, paging and explain ops) is a per-query body
-run by one execute step (_execute). The step pins the index's segments
+Distributed execution: every query op (run_queries, the boolean, LM,
+facet, bool-DSL, nested, paging and explain ops, and the positional
+phrase, proximity, span, KWIC and highlight ops) is a per-query body run
+by one execute step (_execute). The step pins the index's segments
 executor-side once per handle and runs LPT-balanced query bins, one task
 per core, against them; only each query's output rows come back — k rows
-per query for top-k, mirroring the reference's q/s protocol. An index over
-the pin budget takes the one shuffle fallback (queries x segments joined
-on term_id, one applyInPandas group per query), which hands the same body
-the same cursors. The positional ops below keep their own join path: the
-pin carries no positions.
+per query for top-k, mirroring the reference's q/s protocol. BM25-cursor
+bodies get cursors; positional bodies get the query's segment parts with
+their position streams, from a second pin that carries positions. An
+index over the pin budget takes the one shuffle fallback (queries x
+segments joined on term_id, one applyInPandas group per query), which
+hands the same body the same input.
 """
 
 from __future__ import annotations
@@ -1160,9 +1162,10 @@ TOPK_SCHEMA = T.StructType(
 )
 
 # the segment columns the BM25/boolean cursor kernels read — positional
-# indexes add pos_payload/pos_endpoints, which only the phrase path needs
+# indexes add pos_payload/pos_endpoints, which only positional bodies need
 _BM25_SEG_COLS = ["term_id", "seg_id", "n", "block_maxs", "block_max_scores",
                   "endpoints", "freq_offsets", "payload", "max_weight"]
+_POS_SEG_COLS = ["pos_payload", "pos_endpoints"]
 
 
 def build_cursors(group: pd.DataFrame, docs_dict, freqs_dict, num_docs: int,
@@ -1226,7 +1229,7 @@ def _cursors(segs: dict, tids, qfs, num_docs: int, dd, fd, DT=np.float32,
         qw = _qtw(qf, df_total, N, DT)
         term_cursors = []
         for _, n, bmax, bms, endp, foff, payload, mw in (
-                p[:8] for p in parts):  # pos-pinned servers carry 2 more
+                p[:8] for p in parts):  # positions pins carry 2 more
             c = Cursor(n, bmax, endp, foff, payload, num_docs, dd, fd,
                        block_max_scores=bms, term_id=tid)
             c.q_weight = qw
@@ -1397,12 +1400,15 @@ PIN_BUDGET_BYTES = 1 << 29  # segment bytes one executor-side pin may hold
 class _Pin(NamedTuple):
     """Segments pinned executor-side (_seg_map form) and the dictionaries
     their kernels decode with. ``term_cost``: driver-side posting count
-    per pinned term — the LPT cost model, and each term's df."""
+    per pinned term — the LPT cost model, and each term's df.
+    ``pos_dict_bc``: the position dictionary of a pin whose parts carry
+    position streams; None on a pin without positions."""
     seg_bc: object
     term_cost: dict
     docs_dict_bc: object
     freqs_dict_bc: object
     num_docs: int
+    pos_dict_bc: object = None
 
 
 class _Stats(NamedTuple):
@@ -1510,22 +1516,22 @@ def _collect_segments(pruned: DataFrame, with_positions: bool,
     ).collect()[0]
     if int(est["b"] or 0) + 200 * int(est["c"] or 0) > budget:
         return None
-    cols = list(_BM25_SEG_COLS)
-    if with_positions:
-        cols += ["pos_payload", "pos_endpoints"]
+    cols = _BM25_SEG_COLS + (_POS_SEG_COLS if with_positions else [])
     seg_map = _seg_map(pruned.select(*cols).collect(), with_positions)
     term_cost = {tid: sum(p[1] for p in parts)
                  for tid, parts in seg_map.items()}
     return seg_map, term_cost
 
 
-def _index_pin(spark, index) -> _Pin | None:
+def _index_pin(spark, index, positions: bool = False) -> _Pin | None:
     """The execute step's pin: the whole index's segments, collected and
     broadcast on the handle's first call per Spark application. None when
     they exceed PIN_BUDGET_BYTES — cached like a pin, so the size
-    pre-check also runs once per handle."""
+    pre-check also runs once per handle. ``positions``: the positional
+    bodies' pin, a second one whose parts also carry the position streams
+    (its budget counts them too); the BM25 pin stays without them."""
     def make():
-        got = _collect_segments(index.segments, False, PIN_BUDGET_BYTES)
+        got = _collect_segments(index.segments, positions, PIN_BUDGET_BYTES)
         if got is None:
             return None
         return _Pin(
@@ -1534,8 +1540,11 @@ def _index_pin(spark, index) -> _Pin | None:
                             lambda: index.docs_dict),
             shared_index_bc(spark, index, "freqs_dict",
                             lambda: index.freqs_dict),
-            index.num_docs)
-    return _index_cached(spark, index, "segments", make)
+            index.num_docs,
+            shared_index_bc(spark, index, "pos_dict",
+                            lambda: index.pos_dict) if positions else None)
+    return _index_cached(spark, index,
+                         "positions" if positions else "segments", make)
 
 
 def _lpt_bins(spark, items: list, term_lists: list, term_cost: dict,
@@ -1579,8 +1588,9 @@ def _map_bins(spark, bins: list, work, schema) -> DataFrame:
 def _execute(spark, index, items: list, body, schema,
              stats: _Stats = _NO_STATS, DT=np.float32,
              merge_chunks: bool = False, pin: _Pin | None = None,
-             partitions: int | None = None) -> DataFrame:
-    """The one execute step of every BM25-cursor query op.
+             partitions: int | None = None,
+             positions: bool = False) -> DataFrame:
+    """The one execute step of every query op.
 
     ``items``: one per query, ``(term_ids asc, qfs, *side)`` — the
     _fold_query form plus the op's own per-query data; a query's
@@ -1589,26 +1599,31 @@ def _execute(spark, index, items: list, body, schema,
     ``body(qid, item, cursors)`` returns the query's output columns after
     query_id — one sequence per remaining ``schema`` field — or None. A
     query with no cursors (every term absent) yields no rows, as an inner
-    join of its terms with the segments would.
+    join of its terms with the segments would. A ``positions`` body gets
+    the query's _Positions (its present terms' parts with their position
+    streams) in place of cursors, under the same rules.
 
-    Runs on ``pin`` (default: the handle's _index_pin) in LPT bins, one
-    task per bin and one bin per core (``partitions`` bins at most): the
-    fewest tasks that still use every core. A job's fixed cost grows with
-    its task count and dominates small batches (an empty mapInPandas job
-    on a 4-core host: ~0.18 s with 4 tasks, ~0.13 s with 1). A handle
-    over PIN_BUDGET_BYTES has no pin and takes the one shuffle fallback
-    (_shuffle_execute); the two differ only in how the parts arrive."""
+    Runs on ``pin`` (default: the handle's _index_pin, with positions for
+    a ``positions`` body) in LPT bins, one task per bin and one bin per
+    core (``partitions`` bins at most): the fewest tasks that still use
+    every core. A job's fixed cost grows with its task count and
+    dominates small batches (an empty mapInPandas job on a 4-core host:
+    ~0.18 s with 4 tasks, ~0.13 s with 1). A handle over PIN_BUDGET_BYTES
+    has no pin and takes the one shuffle fallback (_shuffle_execute); the
+    two differ only in how the parts arrive."""
     if pin is None:
-        pin = _index_pin(spark, index)
+        pin = _index_pin(spark, index, positions)
         if pin is None:
             return _shuffle_execute(spark, index, items, body, schema, stats,
-                                    DT, merge_chunks)
+                                    DT, merge_chunks, positions)
     seg_bc, dd_bc, fd_bc = pin.seg_bc, pin.docs_dict_bc, pin.freqs_dict_bc
+    pos_bc = pin.pos_dict_bc if positions else None
     num_docs, names = pin.num_docs, schema.fieldNames()
 
     def work(rows):
         cols = _run_rows(rows, seg_bc.value, dd_bc.value, fd_bc.value,
-                         num_docs, DT, body, merge_chunks, stats)
+                         num_docs, DT, body, merge_chunks, stats,
+                         _value(pos_bc))
         if cols:
             yield _frame(names, cols)
 
@@ -1618,7 +1633,7 @@ def _execute(spark, index, items: list, body, schema,
 
 
 def _shuffle_execute(spark, index, items: list, body, schema, stats: _Stats,
-                     DT, merge_chunks: bool) -> DataFrame:
+                     DT, merge_chunks: bool, positions: bool) -> DataFrame:
     """_execute's fallback for an index over PIN_BUDGET_BYTES: the
     batch's (query_id, term_id) rows join the term-pruned segment scan,
     hash-partition on query_id, and each query's group of segment rows
@@ -1628,11 +1643,12 @@ def _shuffle_execute(spark, index, items: list, body, schema, stats: _Stats,
         T.StructField("query_id", T.LongType(), False),
         T.StructField("term_id", T.LongType(), False),
     ]))
-    # explicit projection: positional indexes carry a pos_payload column
-    # that BM25 kernels never read — keep it out of the scan + shuffle
+    # explicit projection: position streams only for positional bodies —
+    # BM25 kernels never read them, so they stay out of the scan + shuffle
     joined = qterms.join(
         _pruned_segments(index, qterms, sorted({t for _, t in rows}))
-        .select(*_BM25_SEG_COLS), "term_id")
+        .select(*_BM25_SEG_COLS, *(_POS_SEG_COLS if positions else [])),
+        "term_id")
     # per-query kernel cost is heavily skewed (head-term queries cost
     # 10-100x tail ones): ~2 partitions per core bound the unluckiest one;
     # groupBy reuses this partitioning, and AQE does not coalesce it
@@ -1642,31 +1658,46 @@ def _shuffle_execute(spark, index, items: list, body, schema, stats: _Stats,
                             lambda: index.docs_dict)
     fd_bc = shared_index_bc(spark, index, "freqs_dict",
                             lambda: index.freqs_dict)
+    pos_bc = (shared_index_bc(spark, index, "pos_dict",
+                              lambda: index.pos_dict) if positions else None)
     num_docs, names = index.num_docs, schema.fieldNames()
 
     def run_one(pdf: pd.DataFrame) -> pd.DataFrame:
         qid = int(pdf["query_id"].iloc[0])
         cols = _run_rows([(qid, items[qid])],
-                         _seg_map(pdf.to_dict("records")), dd_bc.value,
-                         fd_bc.value, num_docs, DT, body, merge_chunks, stats)
+                         _seg_map(pdf.to_dict("records"), positions),
+                         dd_bc.value, fd_bc.value, num_docs, DT, body,
+                         merge_chunks, stats, _value(pos_bc))
         return _frame(names, cols) if cols else pd.DataFrame(columns=names)
 
     return joined.groupBy("query_id").applyInPandas(run_one, schema=schema)
 
 
 def _run_rows(rows, segs: dict, dd, fd, num_docs: int, DT, body,
-              merge_chunks: bool = False, stats: _Stats = _NO_STATS) -> list:
+              merge_chunks: bool = False, stats: _Stats = _NO_STATS,
+              pos_dict=None) -> list:
     """The worker side of _execute over (query_id, item) ``rows`` against
     seg-map parts ``segs``: per-column lists of output parts, query_id
-    first, or [] when no query produced a row. Callable without Spark, so
-    a profiler can time cursor setup plus body alone."""
-    dfo = _value(stats.dfo_bc)
+    first, or [] when no query produced a row. With ``pos_dict`` (a
+    positional body, over parts that carry position streams) the body
+    gets the query's _Positions in place of cursors. Callable without
+    Spark, so a profiler can time cursor setup plus body alone."""
+    if pos_dict is None:
+        dfo = _value(stats.dfo_bc)
+
+        def view(item):
+            return _cursors(segs, item[0], item[1], num_docs, dd, fd, DT,
+                            merge_chunks, dfo, stats.idf_docs,
+                            stats.bound_inflate)
+    else:
+        def view(item):
+            parts = {t: segs[t] for t in item[0] if t in segs}
+            return (_Positions(parts, dd, fd, pos_dict, num_docs)
+                    if parts else None)
     cols: list = []
     for qid, item in rows:
-        cursors = _cursors(segs, item[0], item[1], num_docs, dd, fd, DT,
-                           merge_chunks, dfo, stats.idf_docs,
-                           stats.bound_inflate)
-        out = body(qid, item, cursors) if cursors else None
+        got = view(item)
+        out = body(qid, item, got) if got else None
         if out is None or not len(out[0]):
             continue
         if not cols:
@@ -1708,10 +1739,12 @@ class BroadcastQueryServer:
     in executor memory and every query fans out to all shards, whose local
     exact top-k merge into the global exact top-k. In this engine one
     shard = one index (docid sharding per README "Scale design" gives N
-    shards at 10^12 docs). run_queries runs the same execute step
-    (_execute) on a pin its Index handle owns; a server is the explicit
-    form: its own pin lifetime (close()), a term-subset pin, pinned
-    positions for the phrase/proximity paths, and statistics fixed at
+    shards at 10^12 docs). Every method runs the one execute step
+    (_execute) with the same body as its index op — serve as
+    run_queries, serve_phrases / serve_proximity / serve_phrases_ranked
+    as the positional ops — on the server's own pin instead of the
+    handle's: its own pin lifetime (close()), a term-subset pin, position
+    streams pinned with ``with_positions=True``, and statistics fixed at
     construction.
 
     ``terms=None`` pins the whole index (subject to max_broadcast_bytes);
@@ -1745,8 +1778,6 @@ class BroadcastQueryServer:
                 "the index")
         sc = spark.sparkContext
         self.with_positions = with_positions
-        self.pos_dict_bc = (sc.broadcast(index.pos_dict)
-                            if with_positions else None)
         self.spark = spark
         self.dtype = dtype
         self.DT = np.float32 if dtype == "float32" else np.float64
@@ -1755,7 +1786,9 @@ class BroadcastQueryServer:
         # deliberately does NOT use the shared_index_bc cache
         self.pin = _Pin(sc.broadcast(got[0]), got[1],
                         sc.broadcast(index.docs_dict),
-                        sc.broadcast(index.freqs_dict), index.num_docs)
+                        sc.broadcast(index.freqs_dict), index.num_docs,
+                        sc.broadcast(index.pos_dict)
+                        if with_positions else None)
         norms, bound_inflate = _bm25_norms(index, dtype, avg_len_override)
         self.stats = _Stats(
             sc.broadcast(norms), bound_inflate,
@@ -1818,75 +1851,20 @@ class BroadcastQueryServer:
             TOPK_SCHEMA, stats, self.DT, merge_chunks=algo == "ranked_and",
             pin=self.pin, partitions=partitions)
 
-    def _serve_positional(self, queries: list, kernel_fn,
-                          partitions: int | None,
-                          doc_filter: "DocMask | None" = None) -> DataFrame:
-        """Common served positional path: per query, occurrence keys per
-        distinct term from the pinned segments (worker-level _POS_CACHE
-        LRU amortizes head terms across the batch and across batches),
-        then ``kernel_fn(ord_keys) -> (docs, tfs)``."""
-        if not self.with_positions:
-            raise ValueError("server was built without with_positions=True")
-        seg_bc, pos_dict_bc = self.pin.seg_bc, self.pos_dict_bc
-        docs_dict_bc, freqs_dict_bc = (self.pin.docs_dict_bc,
-                                       self.pin.freqs_dict_bc)
-        tomb_bc = self._live_for(doc_filter)
-
-        def work(rows):
-            segs = seg_bc.value
-            dd, fd = docs_dict_bc.value, freqs_dict_bc.value
-            pdict = pos_dict_bc.value
-            live = tomb_bc.value if tomb_bc is not None else None
-            out_q, out_d, out_t = [], [], []
-            for qid, terms in rows:
-                if not len(terms):
-                    continue
-                keys, absent = {}, False
-                for tid in {int(t) for t in terms}:
-                    parts = segs.get(tid)
-                    if parts is None:
-                        absent = True
-                        break
-                    # parts are seg_id-sorted disjoint increasing doc
-                    # ranges -> the concat is globally sorted
-                    per_seg = [
-                        _seg_occurrence_keys(
-                            tid, p[0], p[1], p[6], p[2], p[4], p[5],
-                            p[8], p[9], dd, fd, pdict)
-                        for p in parts
-                    ]
-                    keys[tid] = (per_seg[0] if len(per_seg) == 1
-                                 else np.concatenate(per_seg))
-                if absent:
-                    continue
-                docs, tfs = kernel_fn([keys[int(t)] for t in terms])
-                if live is not None and len(docs):
-                    keep = live.mask[docs]
-                    docs, tfs = docs[keep], tfs[keep]
-                if len(docs):
-                    out_q.append(np.full(len(docs), int(qid), np.int64))
-                    out_d.append(docs)
-                    out_t.append(tfs)
-            if out_q:
-                yield pd.DataFrame({
-                    "query_id": np.concatenate(out_q),
-                    "doc_id": np.concatenate(out_d),
-                    "phrase_tf": np.concatenate(out_t),
-                })
-
-        return _map_bins(self.spark,
-                         _lpt_bins(self.spark, queries, queries,
-                                   self.pin.term_cost, partitions),
-                         work, PHRASE_SCHEMA)
-
     def serve_phrases(self, phrases: list,
                       partitions: int | None = None,
                       doc_filter: "DocMask | None" = None) -> DataFrame:
         """Exact-phrase retrieval against the pinned positional segments:
-        the phrase analogue of serve() — only (query_id, terms) rows move
-        per batch, the pos payloads having shipped once at pin time."""
-        return self._serve_positional(
-            phrases, phrase_match_kernel, partitions, doc_filter)
+        run_phrase_queries' body on the server's pin — only the query
+        terms move per batch, the pos payloads having shipped once at pin
+        time."""
+        if not self.with_positions:
+            raise ValueError("server was built without with_positions=True")
+        return _execute(
+            self.spark, None, _seq_items(phrases),
+            _match_body(phrase_match_kernel, self._live_for(doc_filter)),
+            PHRASE_SCHEMA, pin=self.pin, partitions=partitions,
+            positions=True)
 
     def serve_proximity(self, pairs: list, window: int = 8,
                         partitions: int | None = None,
@@ -1895,97 +1873,39 @@ class BroadcastQueryServer:
         segments (see serve_phrases)."""
         if any(len(p) != 2 for p in pairs):
             raise ValueError("proximity queries are ordered term PAIRS")
-        return self._serve_positional(
-            pairs,
-            lambda ks: proximity_pair_kernel(ks[0], ks[1], window),
-            partitions, doc_filter)
+        if not self.with_positions:
+            raise ValueError("server was built without with_positions=True")
+        return _execute(
+            self.spark, None, _seq_items(pairs),
+            _match_body(lambda ks: proximity_pair_kernel(*ks, window),
+                        self._live_for(doc_filter)),
+            PHRASE_SCHEMA, pin=self.pin, partitions=partitions,
+            positions=True)
 
     def serve_phrases_ranked(self, phrases: list, k: int = 10,
                              partitions: int | None = None,
                              doc_filter: "DocMask | None" = None
                              ) -> DataFrame:
         """BM25-ranked phrase search against the pinned positional
-        segments: match on the exact phrase, rank matches by the BM25
-        score of the phrase's terms (run_phrase_queries_ranked semantics).
-        Occurrence keys and full posting decodes both ride the worker
-        LRUs, so head phrase terms amortize across batches."""
+        segments: run_phrase_queries_ranked's body under the server's
+        norms. Occurrence keys and full posting decodes both ride the
+        worker LRUs, so head phrase terms amortize across batches."""
         if not self.with_positions:
             raise ValueError("server was built without with_positions=True")
-        from collections import Counter
-
-        seg_bc, pos_dict_bc = self.pin.seg_bc, self.pos_dict_bc
-        docs_dict_bc, freqs_dict_bc = (self.pin.docs_dict_bc,
-                                       self.pin.freqs_dict_bc)
-        norm_bc = self.stats.norm_bc
-        tomb_bc = self._live_for(doc_filter)
-        DT, num_docs = self.DT, self.num_docs
-
-        def work(rows):
-            segs = seg_bc.value
-            dd, fd = docs_dict_bc.value, freqs_dict_bc.value
-            pdict = pos_dict_bc.value
-            norm = norm_bc.value
-            live = tomb_bc.value if tomb_bc is not None else None
-            outs = []
-            for qid, terms in rows:
-                if not len(terms):
-                    continue
-                phrase = [int(t) for t in terms]
-                keys, absent = {}, False
-                for tid in set(phrase):
-                    parts = segs.get(tid)
-                    if parts is None:
-                        absent = True
-                        break
-                    per_seg = [
-                        _seg_occurrence_keys(
-                            tid, p[0], p[1], p[6], p[2], p[4], p[5],
-                            p[8], p[9], dd, fd, pdict)
-                        for p in parts
-                    ]
-                    keys[tid] = (per_seg[0] if len(per_seg) == 1
-                                 else np.concatenate(per_seg))
-                if absent:
-                    continue
-                docs, _tfs = phrase_match_kernel([keys[t] for t in phrase])
-                if live is not None and len(docs):
-                    docs = docs[live.mask[docs]]
-                if not len(docs):
-                    continue
-                counts = Counter(phrase)
-                infos = []
-                for tid in sorted(counts):
-                    parts = segs[tid]
-                    df_total = sum(p[1] for p in parts)
-                    dec = []
-                    for p in parts:
-                        c = Cursor(p[1], p[2], p[4], p[5], p[6],
-                                   num_docs, dd, fd, term_id=tid)
-                        dec.append(_cached_full_decode(c))
-                    dl = (dec[0][0] if len(dec) == 1
-                          else np.concatenate([d[0] for d in dec]))
-                    fl = (dec[0][1] if len(dec) == 1
-                          else np.concatenate([d[1] for d in dec]))
-                    infos.append((counts[tid], df_total, dl, fl))
-                score = _bm25_score_matched(docs, infos, norm, num_docs, DT)
-                order = np.lexsort((docs, -score))[:k]
-                for rank, i in enumerate(order, 1):
-                    outs.append((int(qid), rank, int(docs[i]),
-                                 float(score[i])))
-            if outs:
-                yield pd.DataFrame(outs, columns=TOPK_SCHEMA.fieldNames())
-
-        return _map_bins(self.spark,
-                         _lpt_bins(self.spark, phrases, phrases,
-                                   self.pin.term_cost, partitions),
-                         work, TOPK_SCHEMA)
+        return _execute(
+            self.spark, None, _seq_items(phrases),
+            _phrase_ranked_body(k, self.DT, self.num_docs,
+                                self.stats.norm_bc,
+                                self._live_for(doc_filter)),
+            TOPK_SCHEMA, pin=self.pin, partitions=partitions,
+            positions=True)
 
     def close(self) -> None:
         """Release the pinned broadcasts (call after all served DataFrames
         have been consumed — Spark broadcasts are lazy-referenced)."""
         for bc in (self.pin.seg_bc, self.pin.docs_dict_bc,
                    self.pin.freqs_dict_bc, self.stats.norm_bc,
-                   self.stats.dfo_bc, self.tomb_bc, self.pos_dict_bc,
+                   self.stats.dfo_bc, self.tomb_bc, self.pin.pos_dict_bc,
                    *self._filter_bcs.values()):
             try:
                 bc is not None and bc.unpersist()
@@ -2193,56 +2113,78 @@ _POS_CACHE: OrderedDict = OrderedDict()
 _POS_CACHE_ENTRIES = 256
 
 
-def _seg_occurrence_keys(term_id: int, seg_id: int, n: int, payload,
-                         block_maxs, endpoints, freq_offsets, pos_payload,
-                         pos_endpoints, docs_dict, freqs_dict, pos_dict
-                         ) -> np.ndarray:
-    """Sorted u64 (doc<<32|pos) occurrence keys of ONE segment chunk row,
-    via the worker-level positional decode LRU (shared by the shuffle and
-    the served phrase paths)."""
-    from dint_spark.dint.codec import (decode_list_bulk, decode_value_stream,
-                                       gaps_to_positions)
+class _Positions(NamedTuple):
+    """A positional body's input for one query (_execute with
+    ``positions``): ``parts`` maps each of its terms present in the index
+    to the term's seg-map parts, position streams included, and the
+    dictionaries decode them."""
+    parts: dict
+    dd: object
+    fd: object
+    pdict: object
+    num_docs: int
 
-    ckey = (int(term_id), int(seg_id), int(n),
-            len(pos_payload), hash(bytes(pos_payload)),
-            _dict_token(docs_dict), _dict_token(pos_dict))
-    hit = _POS_CACHE.get(ckey)
-    if hit is not None:
-        _POS_CACHE.move_to_end(ckey)
-        return hit
-    docs, freqs = decode_list_bulk(
-        payload, int(n),
-        np.asarray(block_maxs, dtype=np.int64),
-        np.asarray(endpoints, dtype=np.int64),
-        np.asarray(freq_offsets, dtype=np.int64),
-        docs_dict, freqs_dict)
-    npos = int(freqs.sum())
-    vals = decode_value_stream(
-        pos_payload, npos,
-        np.asarray(pos_endpoints, dtype=np.int64), pos_dict)
-    pos = gaps_to_positions(vals, freqs)
-    keys = (np.repeat(docs, freqs).astype(np.uint64)
-            << _POS_SHIFT) | pos.astype(np.uint64)
-    _POS_CACHE[ckey] = keys
-    while len(_POS_CACHE) > _POS_CACHE_ENTRIES:
-        _POS_CACHE.popitem(last=False)
-    return keys
+    def keys(self, tid: int) -> np.ndarray:
+        """Term ``tid``'s sorted u64 (doc<<32|pos) occurrence keys: the
+        parts are disjoint increasing doc ranges, so their concatenation
+        is sorted. Each part decodes once per worker through the _POS_CACHE
+        LRU, which head terms share across queries and batches."""
+        from dint_spark.dint.codec import (decode_list_bulk,
+                                           decode_value_stream,
+                                           gaps_to_positions)
+
+        out = []
+        for p in self.parts[tid]:
+            ckey = (tid, p[0], p[1], len(p[8]), hash(p[8]),
+                    _dict_token(self.dd), _dict_token(self.pdict))
+            keys = _POS_CACHE.get(ckey)
+            if keys is not None:
+                _POS_CACHE.move_to_end(ckey)
+            else:
+                docs, freqs = decode_list_bulk(p[6], p[1], p[2], p[4], p[5],
+                                               self.dd, self.fd)
+                pos = gaps_to_positions(
+                    decode_value_stream(p[8], int(freqs.sum()), p[9],
+                                        self.pdict), freqs)
+                keys = (np.repeat(docs, freqs).astype(np.uint64)
+                        << _POS_SHIFT) | pos.astype(np.uint64)
+                _POS_CACHE[ckey] = keys
+                while len(_POS_CACHE) > _POS_CACHE_ENTRIES:
+                    _POS_CACHE.popitem(last=False)
+            out.append(keys)
+        return out[0] if len(out) == 1 else np.concatenate(out)
 
 
-def _term_occurrence_keys(rows: pd.DataFrame, docs_dict, freqs_dict,
-                          pos_dict) -> np.ndarray:
-    """Sorted u64 (doc<<32|pos) occurrence keys of ONE term, concatenated
-    across its segment chunk rows (seg order = disjoint increasing doc
-    ranges, so the concatenation is globally sorted)."""
-    parts = []
-    for row in rows.sort_values("seg_id").itertuples():
-        parts.append(_seg_occurrence_keys(
-            row.term_id, row.seg_id, row.n, row.payload, row.block_maxs,
-            row.endpoints, row.freq_offsets, row.pos_payload,
-            row.pos_endpoints, docs_dict, freqs_dict, pos_dict))
-    if not parts:
-        return np.empty(0, dtype=np.uint64)
-    return parts[0] if len(parts) == 1 else np.concatenate(parts)
+def _seq_items(seqs: list) -> list:
+    """_execute items of the sequence ops (phrase, proximity, span): the
+    _fold_query form plus the ordered term sequence as side data."""
+    return [(*_fold_query(s), [int(t) for t in s]) for s in seqs]
+
+
+def _live_only(live_bc, docs: np.ndarray, *cols) -> tuple:
+    """``docs`` and their aligned ``cols`` without the docs that the
+    tombstones or filter in ``live_bc`` exclude."""
+    live = _value(live_bc)
+    if live is None or not len(docs):
+        return (docs, *cols)
+    keep = live.mask[docs]
+    return (docs[keep], *(c[keep] for c in cols))
+
+
+def _match_body(kernel, live_bc):
+    """The sequence ops' body: ``kernel`` over the occurrence keys of the
+    query's term sequence (item[2]; a repeated term decodes once) gives
+    (doc_ids, counts), less the docs ``live_bc`` excludes. A term absent
+    from the index matches nothing."""
+    def body(qid, item, q):
+        if len(q.parts) < len(item[0]):
+            return None
+        keys = {t: q.keys(t) for t in item[0]}
+        if not all(len(k) for k in keys.values()):
+            return None
+        return _live_only(live_bc, *kernel([keys[t] for t in item[2]]))
+
+    return body
 
 
 def phrase_match_kernel(term_keys: list[np.ndarray]
@@ -2292,6 +2234,12 @@ def proximity_pair_kernel(keys_a: np.ndarray, keys_b: np.ndarray,
     return d, sums
 
 
+def _require_positions(index, op: str) -> None:
+    if not getattr(index, "has_positions", False):
+        raise ValueError(f"{op} requires an index built with "
+                         "IndexConfig(positions=True)")
+
+
 def run_proximity_queries(spark: SparkSession, index, pairs: list,
                           window: int = 8,
                           doc_filter: DocMask | None = None) -> DataFrame:
@@ -2300,58 +2248,14 @@ def run_proximity_queries(spark: SparkSession, index, pairs: list,
     t1, with the exact ordered-pair count. Same plan shape and decode LRU
     as run_phrase_queries. Returns (query_id, doc_id, phrase_tf) —
     phrase_tf = the pair count (schema shared with the phrase op)."""
-    if not getattr(index, "has_positions", False):
-        raise ValueError("run_proximity_queries requires an index built "
-                         "with IndexConfig(positions=True)")
+    _require_positions(index, "run_proximity_queries")
     if any(len(p) != 2 for p in pairs):
         raise ValueError("proximity queries are ordered term PAIRS")
-    local_terms = sorted({int(t) for ts in pairs for t in ts})
-    qdf = spark.createDataFrame(
-        [(i, [int(t) for t in ts]) for i, ts in enumerate(pairs)],
-        schema=T.StructType([
-            T.StructField("query_id", T.LongType(), False),
-            T.StructField("terms", T.ArrayType(T.LongType()), False),
-        ]),
-    )
-    qterms = qdf.select(
-        "query_id", F.posexplode("terms").alias("ord", "term_id"))
-    segs = _pruned_segments(index, qterms, local_terms).select(
-        "term_id", "seg_id", "n", "block_maxs", "endpoints", "freq_offsets",
-        "payload", "pos_payload", "pos_endpoints")
-    joined = qterms.join(segs, "term_id").repartition(
-        spark.sparkContext.defaultParallelism * 2, "query_id")
-
-    docs_dict_bc = shared_index_bc(spark, index, "docs_dict",
-                                   lambda: index.docs_dict)
-    freqs_dict_bc = shared_index_bc(spark, index, "freqs_dict",
-                                    lambda: index.freqs_dict)
-    pos_dict_bc = spark.sparkContext.broadcast(index.pos_dict)
-    tomb_bc = _live_bc(spark, index, doc_filter)
-
-    def run_one(pdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(pdf):
-            return pd.DataFrame(columns=["query_id", "doc_id", "phrase_tf"])
-        qid = int(pdf["query_id"].iloc[0])
-        dd, fd, pdict = (docs_dict_bc.value, freqs_dict_bc.value,
-                         pos_dict_bc.value)
-        by_term = {
-            int(tid): _term_occurrence_keys(
-                rows.drop_duplicates(subset=["seg_id"]), dd, fd, pdict)
-            for tid, rows in pdf.groupby("term_id")
-        }
-        ords = pdf[["ord", "term_id"]].drop_duplicates().sort_values("ord")
-        if len(ords) < 2:
-            return pd.DataFrame(columns=["query_id", "doc_id", "phrase_tf"])
-        a, b = (by_term[int(t)] for t in ords["term_id"])
-        docs, cnts = proximity_pair_kernel(a, b, window)
-        if tomb_bc is not None and len(docs):
-            keep = tomb_bc.value.mask[docs]
-            docs, cnts = docs[keep], cnts[keep]
-        return pd.DataFrame(
-            {"query_id": qid, "doc_id": docs, "phrase_tf": cnts})
-
-    return joined.groupBy("query_id").applyInPandas(run_one,
-                                                    schema=PHRASE_SCHEMA)
+    return _execute(
+        spark, index, _seq_items(pairs),
+        _match_body(lambda ks: proximity_pair_kernel(*ks, window),
+                    _live_bc(spark, index, doc_filter)),
+        PHRASE_SCHEMA, positions=True)
 
 
 KWIC_SCHEMA = T.StructType(
@@ -2372,57 +2276,27 @@ def run_kwic_queries(spark: SparkSession, index, docs: DataFrame,
 
     ``docs``: DataFrame with (doc_id, text) — the corpus the index was
     built from. Returns (query_id, doc_id, pos, snippet). Plan shape: the
-    occurrence pass is the phrase path's pruned scan + one applyInPandas
-    group per term (only (query, doc, pos) rows leave the workers); the
+    occurrence pass is a positional body on the one execute step, one
+    query per term (only (query, doc, pos) rows leave the workers); the
     snippet pass is ONE hash join of those hit rows against the documents
     table, with tokenization and the window slice computed JVM-side on the
     joined (= matched-docs-only) stream — no text ever enters Python.
     Tombstoned docs are excluded like every other retrieval path."""
     from dint_spark.tokenizer import tokenize
 
-    if not getattr(index, "has_positions", False):
-        raise ValueError("run_kwic_queries requires an index built with "
-                         "IndexConfig(positions=True)")
-    local_terms = sorted({int(t) for t in terms})
-    qdf = spark.createDataFrame(
-        [(i, int(t)) for i, t in enumerate(terms)],
-        schema=T.StructType([
-            T.StructField("query_id", T.LongType(), False),
-            T.StructField("term_id", T.LongType(), False),
-        ]),
-    )
-    segs = _pruned_segments(index, qdf, local_terms).select(
-        "term_id", "seg_id", "n", "block_maxs", "endpoints", "freq_offsets",
-        "payload", "pos_payload", "pos_endpoints")
-    joined = qdf.join(segs, "term_id").repartition(
-        spark.sparkContext.defaultParallelism * 2, "query_id")
+    _require_positions(index, "run_kwic_queries")
+    live_bc = _tombstones_bc(spark, index)
 
-    docs_dict_bc = shared_index_bc(spark, index, "docs_dict",
-                                   lambda: index.docs_dict)
-    freqs_dict_bc = shared_index_bc(spark, index, "freqs_dict",
-                                    lambda: index.freqs_dict)
-    pos_dict_bc = spark.sparkContext.broadcast(index.pos_dict)
-    tomb_bc = _tombstones_bc(spark, index)
+    def body(qid, item, q):
+        keys = q.keys(item[0][0])
+        # keys sorted -> return_index gives each doc's first occurrence
+        docs_u, first = np.unique((keys >> _POS_SHIFT).astype(np.int64),
+                                  return_index=True)
+        return _live_only(live_bc, docs_u, (keys[first] & np.uint64(
+            0xFFFFFFFF)).astype(np.int64))
 
-    def run_one(pdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(pdf):
-            return pd.DataFrame(columns=["query_id", "doc_id", "pos"])
-        qid = int(pdf["query_id"].iloc[0])
-        keys = _term_occurrence_keys(
-            pdf.drop_duplicates(subset=["seg_id"]), docs_dict_bc.value,
-            freqs_dict_bc.value, pos_dict_bc.value)
-        d = (keys >> _POS_SHIFT).astype(np.int64)
-        p = (keys & np.uint64(0xFFFFFFFF)).astype(np.int64)
-        docs_u, first = np.unique(d, return_index=True)  # keys sorted ->
-        pos_u = p[first]                                 # first occurrence
-        if tomb_bc is not None and len(docs_u):
-            keep = tomb_bc.value.mask[docs_u]
-            docs_u, pos_u = docs_u[keep], pos_u[keep]
-        return pd.DataFrame(
-            {"query_id": qid, "doc_id": docs_u, "pos": pos_u})
-
-    occ = joined.groupBy("query_id").applyInPandas(run_one,
-                                                   schema=KWIC_SCHEMA)
+    occ = _execute(spark, index, [_fold_query([t]) for t in terms], body,
+                   KWIC_SCHEMA, positions=True)
     hit_docs = tokenize(occ.join(docs.select("doc_id", "text"), "doc_id"))
     lo = F.greatest(F.col("pos") + 1 - width, F.lit(1))
     return hit_docs.select(
@@ -2458,19 +2332,17 @@ def run_highlight_queries(spark: SparkSession, index, docs: DataFrame,
 
     Returns (query_id, rank, doc_id, score_q, start, n_terms, n_hits,
     snippet), one row per hit. Plan shape: retrieval is the standard
-    kernel; the occurrence pass rides the phrase path's pruned positional
-    scan with one applyInPandas group per query (the per-term decode LRU
-    amortizes head terms), restricted to the |Q| x k candidate docs
-    BEFORE any window work — at any corpus size the window scan touches
-    only result-page docs, the cost class of rendering the page. The
+    kernel; the occurrence pass is a positional body on the one execute
+    step (the per-term decode LRU amortizes head terms), restricted to
+    the |Q| x k candidate docs, which ride in each query's item, BEFORE
+    any window work — at any corpus size the window scan touches only
+    result-page docs, the cost class of rendering the page. The
     snippet slice is JVM-side on the hit-joined documents stream (no
     text enters Python). No reference counterpart (the reference stops
     at ranked retrieval); Lucene parity scope."""
     from dint_spark.tokenizer import tokenize
 
-    if not getattr(index, "has_positions", False):
-        raise ValueError("run_highlight_queries requires an index built "
-                         "with IndexConfig(positions=True)")
+    _require_positions(index, "run_highlight_queries")
     # ---- retrieval: quantized-integer top-k (fetch deep, re-rank) ----------
     raw = run_queries(spark, index, queries, algo=algo, k=max(10 * k, k),
                       dtype=dtype)
@@ -2490,57 +2362,30 @@ def run_highlight_queries(spark: SparkSession, index, docs: DataFrame,
                 for q, d in cand_map.items()}
 
     # ---- occurrences of the query's DISTINCT terms in candidate docs -------
-    qt_rows = sorted({(qid, int(t)) for qid, ts in enumerate(queries)
-                      for t in ts})
-    local_terms = sorted({t for _, t in qt_rows})
-    qdf = spark.createDataFrame(
-        qt_rows,
-        schema=T.StructType([
-            T.StructField("query_id", T.LongType(), False),
-            T.StructField("term_id", T.LongType(), False),
-        ]))
-    segs = _pruned_segments(index, qdf, local_terms).select(
-        "term_id", "seg_id", "n", "block_maxs", "endpoints", "freq_offsets",
-        "payload", "pos_payload", "pos_endpoints")
-    joined = qdf.join(segs, "term_id").repartition(
-        spark.sparkContext.defaultParallelism * 2, "query_id")
-    docs_dict_bc = shared_index_bc(spark, index, "docs_dict",
-                                   lambda: index.docs_dict)
-    freqs_dict_bc = shared_index_bc(spark, index, "freqs_dict",
-                                    lambda: index.freqs_dict)
-    pos_dict_bc = spark.sparkContext.broadcast(index.pos_dict)
-    cand_bc = spark.sparkContext.broadcast(cand_map)
     W = int(width)
 
-    def run_one(pdf: pd.DataFrame) -> pd.DataFrame:
-        cols = ["query_id", "doc_id", "start", "n_terms", "n_hits"]
-        if not len(pdf):
-            return pd.DataFrame(columns=cols)
-        qid = int(pdf["query_id"].iloc[0])
-        cdocs = cand_bc.value.get(qid)
-        if cdocs is None or not len(cdocs):
-            return pd.DataFrame(columns=cols)
+    def body(qid, item, q):
+        cdocs = item[2]
+        if cdocs is None:
+            return None
+        # each candidate doc's keys are one contiguous sorted run
+        # [doc<<32, (doc+1)<<32)
+        lo_k = cdocs.astype(np.uint64) << _POS_SHIFT
+        hi_k = (cdocs + 1).astype(np.uint64) << _POS_SHIFT
         key_parts, term_parts = [], []
-        for tid, sub in pdf.groupby("term_id"):
-            keys = _term_occurrence_keys(
-                sub.drop_duplicates(subset=["seg_id"]),
-                docs_dict_bc.value, freqs_dict_bc.value, pos_dict_bc.value)
-            if not len(keys):
+        for tid in item[0]:
+            if tid not in q.parts:
                 continue
-            # keep only candidate docs: each doc's keys are one
-            # contiguous sorted run [doc<<32, (doc+1)<<32)
-            lo = np.searchsorted(keys, cdocs.astype(np.uint64) << _POS_SHIFT)
-            hi = np.searchsorted(
-                keys, (cdocs + 1).astype(np.uint64) << _POS_SHIFT)
-            take = np.concatenate(
-                [np.arange(a, b) for a, b in zip(lo, hi)]) \
-                if len(cdocs) else np.empty(0, dtype=np.int64)
+            keys = q.keys(tid)
+            take = np.concatenate([
+                np.arange(a, b) for a, b in zip(np.searchsorted(keys, lo_k),
+                                                np.searchsorted(keys, hi_k))])
             if not len(take):
                 continue
             key_parts.append(keys[take])
-            term_parts.append(np.full(len(take), int(tid), dtype=np.int64))
+            term_parts.append(np.full(len(take), tid, dtype=np.int64))
         if not key_parts:
-            return pd.DataFrame(columns=cols)
+            return None
         keys = np.concatenate(key_parts)
         terms_l = np.concatenate(term_parts)
         order = np.argsort(keys, kind="stable")
@@ -2559,10 +2404,13 @@ def run_highlight_queries(spark: SparkSession, index, docs: DataFrame,
                 score = (nt, j - i, -int(pos[i]))
                 if score > best:
                     best = score
-            out.append((qid, int(d[s]), -best[2], best[0], best[1]))
-        return pd.DataFrame(out, columns=cols)
+            out.append((int(d[s]), -best[2], best[0], best[1]))
+        return tuple(zip(*out))
 
-    hl = joined.groupBy("query_id").applyInPandas(run_one, HIGHLIGHT_SCHEMA)
+    hl = _execute(spark, index,
+                  [(*_fold_query(qs), cand_map.get(i))
+                   for i, qs in enumerate(queries)],
+                  body, HIGHLIGHT_SCHEMA, positions=True)
     hit_docs = tokenize(
         hl.join(cand, ["query_id", "doc_id"])
           .join(docs.select("doc_id", "text"), "doc_id"))
@@ -2638,6 +2486,13 @@ def span_near_unordered_kernel(term_keys: list[np.ndarray], slop: int
     return d, c.astype(np.int64)
 
 
+SPAN_SCHEMA = T.StructType([
+    T.StructField("query_id", T.LongType(), False),
+    T.StructField("doc_id", T.LongType(), False),
+    T.StructField("n_spans", T.LongType(), False),
+])
+
+
 def run_span_near_queries(spark: SparkSession, index, phrases: list,
                           slop: int = 2, in_order: bool = True,
                           doc_filter: DocMask | None = None) -> DataFrame:
@@ -2651,74 +2506,23 @@ def run_span_near_queries(spark: SparkSession, index, phrases: list,
 
     ``phrases``: term_id sequences. Returns (query_id, doc_id, n_spans)
     for every doc containing all terms within total slack ``slop``.
-    Plan shape identical to run_phrase_queries: pruned positional scan,
-    one applyInPandas group per query, the worker decode LRU shared
-    with phrase/KWIC/highlight; only matching (doc, count) rows leave
-    the workers."""
-    if not getattr(index, "has_positions", False):
-        raise ValueError("run_span_near_queries requires an index built "
-                         "with IndexConfig(positions=True)")
-    qt_rows = sorted({(qid, int(t)) for qid, ts in enumerate(phrases)
-                      for t in ts})
-    local_terms = sorted({t for _, t in qt_rows})
-    qdf = spark.createDataFrame(
-        qt_rows,
-        schema=T.StructType([
-            T.StructField("query_id", T.LongType(), False),
-            T.StructField("term_id", T.LongType(), False),
-        ]))
-    segs = _pruned_segments(index, qdf, local_terms).select(
-        "term_id", "seg_id", "n", "block_maxs", "endpoints", "freq_offsets",
-        "payload", "pos_payload", "pos_endpoints")
-    joined = qdf.join(segs, "term_id").repartition(
-        spark.sparkContext.defaultParallelism * 2, "query_id")
-    docs_dict_bc = shared_index_bc(spark, index, "docs_dict",
-                                   lambda: index.docs_dict)
-    freqs_dict_bc = shared_index_bc(spark, index, "freqs_dict",
-                                    lambda: index.freqs_dict)
-    pos_dict_bc = spark.sparkContext.broadcast(index.pos_dict)
-    tomb_bc = _live_bc(spark, index, doc_filter)
-    phrase_bc = spark.sparkContext.broadcast(
-        {qid: [int(t) for t in ts] for qid, ts in enumerate(phrases)})
+    Plan shape identical to run_phrase_queries: a positional body on the
+    one execute step, the worker decode LRU shared with
+    phrase/KWIC/highlight; only matching (doc, count) rows leave the
+    workers."""
+    _require_positions(index, "run_span_near_queries")
+    items = _seq_items(phrases)
     sl = int(slop)
-    schema = T.StructType([
-        T.StructField("query_id", T.LongType(), False),
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("n_spans", T.LongType(), False),
-    ])
-
-    ordered = bool(in_order)
-
-    def run_one(pdf: pd.DataFrame) -> pd.DataFrame:
-        cols = ["query_id", "doc_id", "n_spans"]
-        if not len(pdf):
-            return pd.DataFrame(columns=cols)
-        qid = int(pdf["query_id"].iloc[0])
-        seq = phrase_bc.value[qid]
-        if not ordered:
-            # unordered windows cover DISTINCT terms (a repeat adds no
-            # constraint under per-start minimal enclosing windows)
-            seq = sorted(set(seq))
-        by_term = {int(t): sub for t, sub in pdf.groupby("term_id")}
-        term_keys = []
-        for t in seq:
-            sub = by_term.get(int(t))
-            if sub is None:
-                return pd.DataFrame(columns=cols)  # absent term: no doc
-            term_keys.append(_term_occurrence_keys(
-                sub.drop_duplicates(subset=["seg_id"]),
-                docs_dict_bc.value, freqs_dict_bc.value,
-                pos_dict_bc.value))
-        if any(not len(k) for k in term_keys):
-            return pd.DataFrame(columns=cols)
-        kern = span_near_kernel if ordered else span_near_unordered_kernel
-        d, c = kern(term_keys, sl)
-        if tomb_bc is not None and len(d):
-            keep = tomb_bc.value.mask[d]
-            d, c = d[keep], c[keep]
-        return pd.DataFrame({"query_id": qid, "doc_id": d, "n_spans": c})
-
-    return joined.groupBy("query_id").applyInPandas(run_one, schema)
+    if in_order:
+        kern = lambda ks: span_near_kernel(ks, sl)  # noqa: E731
+    else:
+        # unordered windows cover DISTINCT terms (a repeat adds no
+        # constraint under per-start minimal enclosing windows)
+        items = [(ts, qfs, ts) for ts, qfs, _ in items]
+        kern = lambda ks: span_near_unordered_kernel(ks, sl)  # noqa: E731
+    return _execute(spark, index, items,
+                    _match_body(kern, _live_bc(spark, index, doc_filter)),
+                    SPAN_SCHEMA, positions=True)
 
 
 def run_phrase_queries(spark: SparkSession, index, phrases: list,
@@ -2730,67 +2534,17 @@ def run_phrase_queries(spark: SparkSession, index, phrases: list,
     containing the full consecutive sequence, with the exact (overlap-
     counting) occurrence count.
 
-    Plan shape mirrors run_queries: the batch's distinct terms push into
-    the parquet scan (term_id IN pruning), segments join the per-phrase
-    (query_id, ord, term_id) rows, and one applyInPandas group per query
-    runs the kernel — per-term streams decode once per query even when the
-    phrase repeats a term, and a worker-level LRU amortizes head terms
-    across the batch. Only matching (doc, tf) rows leave the workers."""
-    if not getattr(index, "has_positions", False):
-        raise ValueError("run_phrase_queries requires an index built with "
-                         "IndexConfig(positions=True)")
-    local_terms = sorted({int(t) for ts in phrases for t in ts})
-    qdf = spark.createDataFrame(
-        [(i, [int(t) for t in ts]) for i, ts in enumerate(phrases)],
-        schema=T.StructType([
-            T.StructField("query_id", T.LongType(), False),
-            T.StructField("terms", T.ArrayType(T.LongType()), False),
-        ]),
-    )
-    qterms = qdf.select(
-        "query_id", F.size("terms").alias("plen"),
-        F.posexplode("terms").alias("ord", "term_id"))
-    segs = _pruned_segments(index, qterms, local_terms).select(
-        "term_id", "seg_id", "n", "block_maxs", "endpoints", "freq_offsets",
-        "payload", "pos_payload", "pos_endpoints")
-    joined = qterms.join(segs, "term_id").repartition(
-        spark.sparkContext.defaultParallelism * 2, "query_id")
-
-    docs_dict_bc = shared_index_bc(spark, index, "docs_dict",
-                                   lambda: index.docs_dict)
-    freqs_dict_bc = shared_index_bc(spark, index, "freqs_dict",
-                                    lambda: index.freqs_dict)
-    pos_dict_bc = spark.sparkContext.broadcast(index.pos_dict)
-    tomb_bc = _live_bc(spark, index, doc_filter)
-
-    def run_one(pdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(pdf):
-            return pd.DataFrame(columns=["query_id", "doc_id", "phrase_tf"])
-        qid = int(pdf["query_id"].iloc[0])
-        dd, fd, pdict = (docs_dict_bc.value, freqs_dict_bc.value,
-                         pos_dict_bc.value)
-        # decode once per DISTINCT term, then assemble the ord-ordered chain
-        # (a repeated phrase term joins its segment rows once per ord —
-        # drop the duplicates or the concatenated key stream doubles)
-        by_term = {
-            int(tid): _term_occurrence_keys(
-                rows.drop_duplicates(subset=["seg_id"]), dd, fd, pdict)
-            for tid, rows in pdf.groupby("term_id")
-        }
-        ords = pdf[["ord", "term_id"]].drop_duplicates().sort_values("ord")
-        if len(ords) < int(pdf["plen"].iloc[0]):
-            # a phrase term is absent from the index -> no matches
-            return pd.DataFrame(columns=["query_id", "doc_id", "phrase_tf"])
-        chain = [by_term[int(t)] for t in ords["term_id"]]
-        docs, tfs = phrase_match_kernel(chain)
-        if tomb_bc is not None and len(docs):
-            keep = tomb_bc.value.mask[docs]
-            docs, tfs = docs[keep], tfs[keep]
-        return pd.DataFrame(
-            {"query_id": qid, "doc_id": docs, "phrase_tf": tfs})
-
-    return joined.groupBy("query_id").applyInPandas(run_one,
-                                                    schema=PHRASE_SCHEMA)
+    Plan shape mirrors run_queries: a positional body on the one execute
+    step, over the handle's positions pin (or the shuffle fallback past
+    PIN_BUDGET_BYTES) — per-term streams decode once per query even when
+    the phrase repeats a term, and a worker-level LRU amortizes head
+    terms across the batch. Only matching (doc, tf) rows leave the
+    workers."""
+    _require_positions(index, "run_phrase_queries")
+    return _execute(spark, index, _seq_items(phrases),
+                    _match_body(phrase_match_kernel,
+                                _live_bc(spark, index, doc_filter)),
+                    PHRASE_SCHEMA, positions=True)
 
 
 def _bm25_score_matched(docs: np.ndarray, term_infos, norm_lens,
@@ -2810,29 +2564,42 @@ def _bm25_score_matched(docs: np.ndarray, term_infos, norm_lens,
     return score
 
 
-def _phrase_term_infos(phrase, pdf: pd.DataFrame, dd, fd, num_docs: int):
+def _phrase_term_infos(item, q: _Positions) -> list:
     """(qf, df_total, docs_t, freqs_t) per DISTINCT phrase term, term_id
-    asc; decode goes through the worker-level full-list LRU (head phrase
-    terms amortize across the batch exactly like the BM25 serve path)."""
-    from collections import Counter
-
-    counts = Counter(int(t) for t in phrase)
+    asc, from the query's parts; decode goes through the worker-level
+    full-list LRU (head phrase terms amortize across the batch exactly
+    like the BM25 serve path)."""
     infos = []
-    for tid in sorted(counts):
-        rows = (pdf[pdf["term_id"] == tid]
-                .drop_duplicates(subset=["seg_id"]).sort_values("seg_id"))
-        df_total = int(rows["n"].sum())
-        parts = []
-        for r in rows.itertuples():
-            c = Cursor(r.n, r.block_maxs, r.endpoints, r.freq_offsets,
-                       r.payload, num_docs, dd, fd, term_id=tid)
-            parts.append(_cached_full_decode(c))
-        dlist = (parts[0][0] if len(parts) == 1
-                 else np.concatenate([p[0] for p in parts]))
-        flist = (parts[0][1] if len(parts) == 1
-                 else np.concatenate([p[1] for p in parts]))
-        infos.append((counts[tid], df_total, dlist, flist))
+    for tid, qf in zip(item[0], item[1]):
+        parts = q.parts[tid]
+        dec = [_cached_full_decode(Cursor(p[1], p[2], p[4], p[5], p[6],
+                                          q.num_docs, q.dd, q.fd,
+                                          term_id=tid)) for p in parts]
+        docs, freqs = dec[0] if len(dec) == 1 else (
+            np.concatenate([d[0] for d in dec]),
+            np.concatenate([d[1] for d in dec]))
+        infos.append((qf, sum(p[1] for p in parts), docs, freqs))
     return infos
+
+
+def _phrase_ranked_body(k: int, DT, num_docs: int, norm_bc, live_bc):
+    """The body of run_phrase_queries_ranked and serve_phrases_ranked:
+    the phrase match set ranked by its terms' BM25, top ``k`` as (rank,
+    doc_id, score) columns."""
+    match = _match_body(phrase_match_kernel, live_bc)
+
+    def body(qid, item, q):
+        got = match(qid, item, q)
+        if got is None or not len(got[0]):
+            return None
+        docs = got[0]
+        score = _bm25_score_matched(docs, _phrase_term_infos(item, q),
+                                    norm_bc.value, num_docs, DT)
+        order = np.lexsort((docs, -score))[:k]
+        return (np.arange(1, len(order) + 1, dtype=np.int32), docs[order],
+                score[order].astype(np.float64))
+
+    return body
 
 
 def run_phrase_queries_ranked(
@@ -2847,74 +2614,15 @@ def run_phrase_queries_ranked(
     identical to the ranked kernels' rule. The phrase occurrence count
     gates matching only — standard BM25 does not reward repetition of the
     phrase beyond its terms' tf, keeping scores comparable with
-    run_queries over the same terms."""
-    if not getattr(index, "has_positions", False):
-        raise ValueError("run_phrase_queries_ranked requires an index "
-                         "built with IndexConfig(positions=True)")
+    run_queries over the same terms. Plan shape: run_phrase_queries'."""
+    _require_positions(index, "run_phrase_queries_ranked")
     DT = np.float32 if dtype == "float32" else np.float64
-    local_terms = sorted({int(t) for ts in phrases for t in ts})
-    qdf = spark.createDataFrame(
-        [(i, [int(t) for t in ts]) for i, ts in enumerate(phrases)],
-        schema=T.StructType([
-            T.StructField("query_id", T.LongType(), False),
-            T.StructField("terms", T.ArrayType(T.LongType()), False),
-        ]),
-    )
-    qterms = qdf.select(
-        "query_id", F.col("terms").alias("phrase"),
-        F.size("terms").alias("plen"),
-        F.posexplode("terms").alias("ord", "term_id"))
-    segs = _pruned_segments(index, qterms, local_terms).select(
-        "term_id", "seg_id", "n", "block_maxs", "endpoints", "freq_offsets",
-        "payload", "pos_payload", "pos_endpoints")
-    joined = qterms.join(segs, "term_id").repartition(
-        spark.sparkContext.defaultParallelism * 2, "query_id")
-
-    num_docs = index.num_docs
-    norm_bc = spark.sparkContext.broadcast(
-        index.norm_lens if dtype == "float32" else index.norm_lens64)
-    docs_dict_bc = shared_index_bc(spark, index, "docs_dict",
-                                   lambda: index.docs_dict)
-    freqs_dict_bc = shared_index_bc(spark, index, "freqs_dict",
-                                    lambda: index.freqs_dict)
-    pos_dict_bc = spark.sparkContext.broadcast(index.pos_dict)
-    tomb_bc = _live_bc(spark, index, doc_filter)
-
-    empty = pd.DataFrame(columns=["query_id", "rank", "doc_id", "score"])
-
-    def run_one(pdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(pdf):
-            return empty
-        qid = int(pdf["query_id"].iloc[0])
-        dd, fd, pdict = (docs_dict_bc.value, freqs_dict_bc.value,
-                         pos_dict_bc.value)
-        by_term = {
-            int(tid): _term_occurrence_keys(
-                rows.drop_duplicates(subset=["seg_id"]), dd, fd, pdict)
-            for tid, rows in pdf.groupby("term_id")
-        }
-        ords = pdf[["ord", "term_id"]].drop_duplicates().sort_values("ord")
-        if len(ords) < int(pdf["plen"].iloc[0]):
-            return empty  # a phrase term is absent from the index
-        phrase = [int(t) for t in ords["term_id"]]
-        docs, _tfs = phrase_match_kernel([by_term[t] for t in phrase])
-        if tomb_bc is not None and len(docs):
-            docs = docs[tomb_bc.value.mask[docs]]
-        if not len(docs):
-            return empty
-        infos = _phrase_term_infos(phrase, pdf, dd, fd, num_docs)
-        score = _bm25_score_matched(docs, infos, norm_bc.value,
-                                    num_docs, DT)
-        order = np.lexsort((docs, -score))[:k]
-        return pd.DataFrame({
-            "query_id": qid,
-            "rank": np.arange(1, len(order) + 1, dtype=np.int32),
-            "doc_id": docs[order],
-            "score": score[order].astype(np.float64),
-        })
-
-    return joined.groupBy("query_id").applyInPandas(run_one,
-                                                    schema=TOPK_SCHEMA)
+    return _execute(
+        spark, index, _seq_items(phrases),
+        _phrase_ranked_body(k, DT, index.num_docs,
+                            _call_stats(spark, index, dtype).norm_bc,
+                            _live_bc(spark, index, doc_filter)),
+        TOPK_SCHEMA, positions=True)
 
 
 DECODED_SCHEMA = T.StructType(

@@ -103,3 +103,40 @@ def test_gate_subset_sf0001(spark, entry_mod, name, monkeypatch):
     assert r["cols_match"], (r["spark_cols"], r["duck_cols"])
     assert r["rows"][0] == r["rows"][1], r["rows"]
     assert r["values_match"]
+
+
+def test_cached_entry_index_rebuilds_corrupt_dir_once(caplog, tmp_path):
+    """An entry index dir whose manifest fails to load is logged once,
+    cleared and rebuilt; later calls get the rebuilt index from memory."""
+    import logging
+
+    import __spark_entry__ as E
+    import dint_spark
+
+    sf = str(tmp_path / "sfprobe")
+    tag = f"sfprobe-corrupt-v{dint_spark.__version__}"
+    d = os.path.join("/tmp/dint_spark_entry", tag)
+    os.makedirs(d, exist_ok=True)
+    with open(os.path.join(d, "manifest.json"), "w") as f:
+        f.write("{")
+    builds = []
+
+    def bad_loader(spark, path):
+        raise ValueError("truncated manifest")
+
+    def build(out, t):
+        assert not os.path.exists(out)  # the corrupt dir was cleared
+        builds.append((out, t))
+        return "rebuilt"
+
+    try:
+        with caplog.at_level(logging.WARNING, logger="__spark_entry__"):
+            for _ in range(2):
+                assert E._cached_entry_index(
+                    None, sf, "corrupt", build, loader=bad_loader) == "rebuilt"
+        assert builds == [(d, tag)]
+        assert len([r for r in caplog.records
+                    if "corrupt cached index" in r.getMessage()]) == 1
+    finally:
+        E._INDEX_CACHE.pop((os.path.abspath(sf), "corrupt"), None)
+        shutil.rmtree(d, ignore_errors=True)

@@ -1,9 +1,9 @@
-"""Every BM25-cursor op on the handle's pinned segments vs the shuffle
-fallback.
+"""Every query op on the handle's pinned segments vs the shuffle fallback.
 
 The one execute step (queries._execute) pins the index's segments
-executor-side once per handle and runs every call of every op against
-them; an index over PIN_BUDGET_BYTES takes the join -> repartition ->
+executor-side once per handle (positional ops: a second pin that carries
+the position streams) and runs every call of every op against them; an
+index over PIN_BUDGET_BYTES takes the join -> repartition ->
 applyInPandas fallback. Both must return the same rows bit for bit,
 statistics, filters and tombstones being per-call inputs of the pinned
 path."""
@@ -31,8 +31,12 @@ from dint_spark.facets import (_DV_MISSING, build_doc_facets,
 from dint_spark.index import IndexConfig, build_index, delete_docs, load_index
 from dint_spark.nested import run_nested_queries
 from dint_spark.paging import run_queries_after
-from dint_spark.queries import (DocMask, run_boolean_queries, run_queries,
-                                run_queries_lm)
+from dint_spark.queries import (DocMask, run_boolean_queries,
+                                run_highlight_queries, run_kwic_queries,
+                                run_phrase_queries, run_phrase_queries_ranked,
+                                run_proximity_queries, run_queries,
+                                run_queries_lm, run_span_near_queries)
+from dint_spark.tokenizer import assign_doc_ids, tokenize
 
 N_DOCS = 400
 
@@ -247,28 +251,34 @@ def test_op_deletes_read_per_call(spark, built, monkeypatch, tmp_path):
     assert got["pinned"] == got["fallback"]
 
 
-def test_pinned_plan_has_no_exchange(spark, built, sidecars, monkeypatch):
+def test_pinned_plan_has_no_exchange(spark, built, sidecars, pos_built,
+                                     monkeypatch):
     """A pinned call is one mapInPandas over a range: no scan, no
     exchange, no grouped applyInPandas — those stay in the fallback.
     run_facet_queries then joins its facet dimension: a broadcast of that
-    small table is the only exchange its pinned plan has."""
+    small table is the only exchange its pinned plan has. The positional
+    run_phrase_queries plans the same way on its positions pin."""
     d, idx, queries, _ = built
+    pd_, pidx, phrases = pos_built[0], pos_built[1], pos_built[2]
     facets = sidecars[0]
     specs = [BoolSpec(must=[queries[0][0]], should=queries[1])]
 
-    def plans(h):
+    def plans(h, ph):
         return [df._jdf.queryExecution().executedPlan().toString()
                 for df in (run_queries(spark, h, queries),
                            run_bool_queries(spark, h, specs),
-                           run_facet_queries(spark, h, queries, facets))]
+                           run_facet_queries(spark, h, queries, facets),
+                           run_phrase_queries(spark, ph, phrases))]
 
-    q, b, f = plans(idx)
-    for plan in (q, b, f):
+    q, b, f, p = plans(idx, pidx)
+    for plan in (q, b, f, p):
         assert "MapInPandas" in plan
         assert "FlatMapGroupsInPandas" not in plan
     assert "Exchange" not in q and "Exchange" not in b
+    assert "Exchange" not in p
     assert f.count("Exchange") == f.count("BroadcastExchange")
-    for plan in plans(_fallback_handle(spark, d, monkeypatch)):
+    fb = _fallback_handle(spark, d, monkeypatch)
+    for plan in plans(fb, load_index(spark, pd_)):
         assert "FlatMapGroupsInPandas" in plan and "Exchange" in plan
 
 
@@ -327,3 +337,101 @@ def test_tombstones_read_per_call(spark, built, tmp_path):
     # equal to a handle that pins after the delete
     assert again == _rows(run_queries(spark, load_index(spark, copy),
                                       queries))
+
+
+@pytest.fixture(scope="module")
+def pos_built(spark, tmp_path_factory):
+    """A positional index whose head terms span several segment parts,
+    the (doc_id, text) corpus it was built from, and phrases cut from
+    its documents plus a repeated term, an absent term and an empty
+    phrase."""
+    d = str(tmp_path_factory.mktemp("pinpos") / "idx")
+    pages = generate_pages(spark, N_DOCS, seed=29)
+    idx = build_index(spark, pages, d,
+                      IndexConfig(num_buckets=2, input_tag="pinpos",
+                                  seg_chunk=64, skew_chunk=32,
+                                  positions=True))
+    docs = assign_doc_ids(pages.select("url", "text"))
+    inv = {r.term: r.term_id for r in idx.vocab().collect()}
+    rng = np.random.default_rng(13)
+    phrases = []
+    for r in tokenize(docs).select("tokens").limit(12).collect():
+        i = int(rng.integers(0, max(1, len(r.tokens) - 3)))
+        phrases.append([inv[t] for t in r.tokens[i:i + int(
+            rng.integers(2, 4))]])
+    phrases += [[0, 0], [3, 10**9], [], [1]]
+    return d, idx, phrases, docs.select("doc_id", "text")
+
+
+def _pos_cases(pos_built):
+    """op name -> (fn(spark, handle), query_ids that must return no row)."""
+    _, idx, phrases, docs = pos_built
+    mask = DocMask.from_mask(
+        np.random.default_rng(17).random(idx.num_docs) < 0.7)
+    pairs = [p[:2] for p in phrases if len(p) >= 2] + [[2, 2], [10**9, 0]]
+    none = [len(phrases) - 3, len(phrases) - 2]  # the absent, the empty
+    return {
+        "phrase": (lambda sp, h: run_phrase_queries(sp, h, phrases), none),
+        "phrase_filter": (lambda sp, h: run_phrase_queries(
+            sp, h, phrases, doc_filter=mask), none),
+        "phrase_ranked": (lambda sp, h: run_phrase_queries_ranked(
+            sp, h, phrases, k=5, doc_filter=mask), none),
+        "proximity": (lambda sp, h: run_proximity_queries(
+            sp, h, pairs, window=4), [len(pairs) - 1]),
+        "span_near": (lambda sp, h: run_span_near_queries(
+            sp, h, phrases, slop=2), none),
+        "span_near_unordered": (lambda sp, h: run_span_near_queries(
+            sp, h, phrases, slop=1, in_order=False, doc_filter=mask),
+            none),
+        "kwic": (lambda sp, h: run_kwic_queries(
+            sp, h, docs, [0, 10**9, 5, 40]), [1]),
+        "highlight": (lambda sp, h: run_highlight_queries(
+            sp, h, docs, phrases, k=3), [len(phrases) - 2]),
+    }
+
+
+POS_OPS = ["phrase", "phrase_filter", "phrase_ranked", "proximity",
+           "span_near", "span_near_unordered", "kwic", "highlight"]
+
+
+@pytest.mark.parametrize("op", POS_OPS)
+def test_positional_op_pinned_matches_fallback(spark, pos_built,
+                                               monkeypatch, op):
+    """Every positional op returns the same rows on the handle's
+    positions pin and through the shuffle fallback; a phrase with an
+    absent term and an empty phrase return none on either path."""
+    d, idx = pos_built[0], pos_built[1]
+    fn, none = _pos_cases(pos_built)[op]
+    pinned = _all_rows(fn(spark, idx))
+    assert Q._index_pin(spark, idx, positions=True) is not None
+    fb = _fallback_handle(spark, d, monkeypatch)
+    fallback = _all_rows(fn(spark, fb))
+    assert Q._index_pin(spark, fb, positions=True) is None
+    assert pinned, "the batch must return rows"
+    assert pinned == fallback
+    assert not [r for r in pinned if r[0] in none]
+
+
+def test_positional_deletes_read_per_call(spark, pos_built, monkeypatch,
+                                          tmp_path):
+    """delete_docs between two run_phrase_queries calls on one handle:
+    the second call excludes the new deletes, pinned and fallback
+    alike."""
+    d, _, phrases, _ = pos_built
+    got = {}
+    for path in ("pinned", "fallback"):
+        copy = str(tmp_path / path)
+        shutil.copytree(d, copy)
+        if path == "fallback":
+            h = _fallback_handle(spark, copy, monkeypatch)
+        else:
+            h = load_index(spark, copy)
+        first = _all_rows(run_phrase_queries(spark, h, phrases))
+        assert ((Q._index_pin(spark, h, positions=True) is None)
+                == (path == "fallback"))
+        gone = sorted({doc for _, doc, _ in first})[::3]
+        assert gone and delete_docs(spark, h, gone) == len(gone)
+        got[path] = again = _all_rows(run_phrase_queries(spark, h,
+                                                         phrases))
+        assert again and not {doc for _, doc, _ in again} & set(gone)
+    assert got["pinned"] == got["fallback"]
