@@ -180,7 +180,7 @@ def more_like_this(
     min_tf: int = 2,
     min_df: int = 2,
     max_df_frac: float = 0.25,
-    algo: str = "block_max_wand",
+    algo: str = "block_max_wand_vec",
     dtype: str = "float64",
     doc_filter: DocMask | None = None,
     exclude_self: bool = True,

@@ -11,6 +11,9 @@ the reference's DAAT operators (include/ds2i/queries.hpp):
   block_max_wand     WAND + per-block max-score upper bounds (our extension
                      of Q13 using the segments' block_max_scores metadata;
                      the north rule's required operator)
+  block_max_wand_vec the same top-k over numpy blocks, with a cost rule
+                     that scores densely when pruning cannot pay (the
+                     default ``algo`` of every op)
   maxscore           essential/non-essential list split (459-573)
 
 All scoring is float32 in the reference's accumulation order (cursor list
@@ -27,7 +30,9 @@ executor-side once per handle and runs LPT-balanced query bins, one task
 per core, against them; only each query's output rows come back — k rows
 per query for top-k, mirroring the reference's q/s protocol. BM25-cursor
 bodies get cursors; positional bodies get the query's segment parts with
-their position streams, from a second pin that carries positions. An
+their position streams. A handle holds one segment pin: the first
+positional op replaces its BM25 pin with one that carries positions,
+and BM25 bodies run on that from then on. An
 index over the pin budget takes the one shuffle fallback (queries x
 segments joined on term_id, one applyInPandas group per query), which
 hands the same body the same input.
@@ -261,6 +266,29 @@ _LIST_CACHE_CAP = int(os.environ.get("DINT_SPARK_DECODE_CACHE_MB", "256")) * 2**
 # materializes O(num_docs) state.
 _DENSE_SCORE_MAX_DOCS = int(
     os.environ.get("DINT_SPARK_DENSE_SCORE_MAX_DOCS", str(1 << 24)))
+
+
+# block_max_wand_vec's cost rule (_dense_pays), microseconds on a warm
+# decode LRU. Fitted on a 4-core x86 host from a per-query replay of the
+# perfbench fixture (generate_pages(10_000, seed=0), 4 buckets, 1,000
+# pool queries) and a generate_pages(100_000, seed=0) build (8 buckets,
+# 300 queries), each kernel timed best of 3:
+#   dense  = 77 + 0.0167 P + 0.0076 num_docs
+#            (ranked_or_vec, least squares; 0.15 ms + 17 ns/posting at
+#            10k docs, 0.84 ms + 17 ns/posting at 100k)
+#   pruned = 160 + 158 m + 1.42 m P / BLOCK_SIZE
+#            (_bmw_pruned, median regression: the bootstrap reads and
+#            scores a block per cursor, and the interval grid and its
+#            survivors cost per cursor and grid interval)
+# The pruned pass lost every one of the 10k queries (0.75 vs 0.25 ms
+# mean) and won 150 of the 300 at 100k (1.87 vs 1.79 ms mean; the wins
+# are the one- and two-term queries). With these constants the rule
+# scores all 10k queries densely and 39% of the 100k ones (the four- and
+# five-term queries), for 0.245 and 1.66 ms mean; fitting the pruned
+# pass's bootstrap and grid alone (its least cost) sent every 100k query
+# to the pruned pass, for 1.87 ms.
+_DENSE_US = (77.0, 0.0167, 0.0076)
+_PRUNED_US = (160.0, 158.0, 1.42)
 
 
 class Tombstones:
@@ -671,6 +699,18 @@ def _index_cached(spark, index, name: str, make):
         return cache[key]
 
 
+def _index_cache_peek(spark, index, name: str, pop: bool = False):
+    """What _index_cached holds under ``name`` for this handle and Spark
+    application, without making it (None when absent); ``pop`` also
+    drops it."""
+    cache = getattr(index, "_bc_cache", None)
+    if not cache:
+        return None
+    key = (spark.sparkContext.applicationId, name)
+    with _INDEX_CACHE_LOCK:
+        return cache.pop(key, None) if pop else cache.get(key)
+
+
 def shared_index_bc(spark, index, name: str, build):
     """Per-index broadcast cache for the payloads every kernel op ships
     (docs/freqs dictionaries, norm arrays), so repeated calls on one
@@ -890,7 +930,82 @@ def _bubble_down(ordered, i: int) -> None:
 
 
 def block_max_wand_vec(cursors, norm_lens, num_docs: int, k: int,
-                       DT=np.float32, live=None):
+                       DT=np.float32, live=None, counters=None):
+    """Block-max WAND top-k, exactly ranked_or's: a cost rule picks dense
+    exhaustive scoring or the pruned pass (_bmw_pruned) per query.
+
+    The rule runs before anything is decoded and reads only what the
+    cursors already hold: total postings P, cursor count m and num_docs
+    (_dense_pays). When the dense pass (ranked_or_vec: the O(P) scatter
+    plus the O(num_docs) accumulator scan) costs less than the pruned
+    pass, whose cost its bootstrap (a block per cursor) and its interval
+    grid (per cursor and block) set, the lists are scored densely;
+    otherwise the pruned pass runs. Measured crossover: on the 10k-doc
+    benchmark fixture dense scoring is cheaper for every query and the
+    rule takes it for all; at 100k docs the rule keeps the pruned pass
+    for one- to three-term queries (where it wins most often) and scores
+    four- and five-term ones densely; the num_docs term keeps the pruned
+    pass for large shards (1M+ docs: all but the longest head-term
+    queries), and past _DENSE_SCORE_MAX_DOCS it always runs. Both
+    branches are exact top-k with one tie order, so the choice never
+    changes a row.
+
+    ``counters``: a dict to fill with the query's work (branch, postings,
+    blocks total/read, postings read, candidates scored, final theta);
+    None (the default) costs nothing.
+    """
+    if not cursors:
+        return []
+    P = sum(c.n for c in cursors)
+    if not _dense_pays(P, len(cursors), num_docs):
+        return _bmw_pruned(cursors, norm_lens, num_docs, k, DT, live,
+                           counters)
+    top = ranked_or_vec(cursors, norm_lens, num_docs, k, DT, live)
+    if counters is not None:
+        _count(counters, cursors, "dense", k, top,
+               [np.arange(c.nblocks) for c in cursors],
+               _match_count(cursors, live))
+    return top
+
+
+def _dense_pays(P: int, m: int, num_docs: int) -> bool:
+    """block_max_wand_vec's cost rule: True when dense scoring is cheaper
+    than the pruned pass for P postings over m cursors. Costs are in
+    microseconds on a warm decode LRU; the fit is beside _DENSE_US."""
+    if num_docs > _DENSE_SCORE_MAX_DOCS:
+        return False  # past the dense ceiling the pruned pass stays
+    dense = _DENSE_US[0] + _DENSE_US[1] * P + _DENSE_US[2] * num_docs
+    pruned = (_PRUNED_US[0] + _PRUNED_US[1] * m
+              + _PRUNED_US[2] * m * P / BLOCK_SIZE)
+    return dense <= pruned
+
+
+def _match_count(cursors, live) -> int:
+    """Distinct (live) docs matching any cursor, read through the LRU."""
+    docs = np.unique(np.concatenate([c.decode_all()[0] for c in cursors]))
+    return int(live.mask[docs].sum()) if live is not None else len(docs)
+
+
+def _count(counters: dict, cursors, branch: str, k: int, top: list,
+           read: list, candidates: int, theta0=None) -> None:
+    """Fill block_max_wand_vec's ``counters``; ``read``: per cursor, the
+    distinct block ids whose postings the pass read (decoded or served
+    from the LRU)."""
+    counters.update(
+        branch=branch,
+        postings=sum(c.n for c in cursors),
+        blocks_total=sum(c.nblocks for c in cursors),
+        blocks_read=sum(len(r) for r in read),
+        postings_read=sum(
+            int((np.minimum((r + 1) * BLOCK_SIZE, c.n) - r * BLOCK_SIZE).sum())
+            for c, r in zip(cursors, read)),
+        candidates=candidates,
+        theta0=None if theta0 is None else float(theta0),
+        theta=float(top[k - 1][1]) if len(top) >= k else 0.0)
+
+
+def _bmw_pruned(cursors, norm_lens, num_docs: int, k: int, DT=np.float32,
+                live=None, counters=None):
     """Block-level vectorized BMW: exact same top-k as ranked_or, with the
     per-doc Python loop replaced by numpy over 256-int blocks.
 
@@ -911,16 +1026,14 @@ def block_max_wand_vec(cursors, norm_lens, num_docs: int, k: int,
          LOCAL maxima of every list, not global maxima of the others — which
          is what makes the pruning bite on skewed multi-term queries.
 
-    At 10^12-doc scale this is the operative query kernel: per-query Python
-    work is O(num_lists x num_blocks), all postings math is Arrow/numpy.
-    (ref block-max metadata: our extension of include/ds2i/wand_data.hpp;
-    pruning logic per Ding & Suel BMW.)
+    Per-query Python work is O(num_lists x num_blocks), all postings math
+    is Arrow/numpy. block_max_wand_vec runs it when its cost rule says
+    pruning can pay. (ref block-max metadata: our extension of
+    include/ds2i/wand_data.hpp; pruning logic per Ding & Suel BMW.)
     """
     if not cursors:
         return []
-    m = len(cursors)
     nl_arr = np.asarray(norm_lens)
-    mw = [c.max_weight for c in cursors]  # DT scalars, term_id order
 
     from dint_spark.dint.codec import BLOCK_SIZE as _BS
 
@@ -928,6 +1041,9 @@ def block_max_wand_vec(cursors, norm_lens, num_docs: int, k: int,
     # freqs or None). Served from the worker-level full-list LRU when the
     # list is hot or mostly needed; otherwise a subset bulk-decode.
     span_cache: list[dict] = [{"blocks": None} for _ in cursors]
+    # counters: per cursor, the distinct blocks read so far
+    read = (None if counters is None
+            else [np.empty(0, dtype=np.int64) for _ in cursors])
 
     def _slice_blocks(c, docs, freqs, have: np.ndarray, blocks: np.ndarray):
         """Select `blocks` out of arrays decoded for block set `have`."""
@@ -944,6 +1060,8 @@ def block_max_wand_vec(cursors, norm_lens, num_docs: int, k: int,
     def get_span(ci: int, blocks: np.ndarray, want_freqs: bool):
         """Concatenated (docs, freqs) of `blocks` (sorted), bulk-decoded."""
         c = cursors[ci]
+        if read is not None:
+            read[ci] = np.union1d(read[ci], blocks)
         all_blocks = np.arange(c.nblocks)
         key = _cache_key(c)
         hit = _LIST_CACHE.get(key)
@@ -1052,8 +1170,12 @@ def block_max_wand_vec(cursors, norm_lens, num_docs: int, k: int,
         for ci, c in enumerate(cursors):
             docs, freqs = get_span(ci, np.arange(c.nblocks), want_freqs=True)
             lists.append((c.q_weight, docs, freqs))
-        return _dense_topk(lists, nl_arr, num_docs, k, DT, floor=theta,
-                           live=live)
+        top = _dense_topk(lists, nl_arr, num_docs, k, DT, floor=theta,
+                          live=live)
+        if counters is not None:
+            _count(counters, cursors, "fallback", k, top, read,
+                   _match_count(cursors, live), theta)
+        return top
     for ci, c in enumerate(cursors):
         if exhaustive:
             docs, _ = get_span(ci, np.arange(c.nblocks), want_freqs=False)
@@ -1071,7 +1193,10 @@ def block_max_wand_vec(cursors, norm_lens, num_docs: int, k: int,
     allC = np.concatenate([C0, new])
     allS = np.concatenate([s0, s_new])
     order = np.lexsort((allC, -allS))[:k]
-    return [(int(allC[i]), float(allS[i])) for i in order]
+    top = [(int(allC[i]), float(allS[i])) for i in order]
+    if counters is not None:
+        _count(counters, cursors, "pruned", k, top, read, len(allC), theta)
+    return top
 
 
 def maxscore(cursors, norm_lens, num_docs: int, k: int, DT=np.float32,
@@ -1276,7 +1401,7 @@ def run_queries(
     spark: SparkSession,
     index,
     queries: list,
-    algo: str = "block_max_wand",
+    algo: str = "block_max_wand_vec",
     k: int = 10,
     dtype: str = "float32",
     df_overrides: dict | None = None,
@@ -1528,8 +1653,11 @@ def _index_pin(spark, index, positions: bool = False) -> _Pin | None:
     broadcast on the handle's first call per Spark application. None when
     they exceed PIN_BUDGET_BYTES — cached like a pin, so the size
     pre-check also runs once per handle. ``positions``: the positional
-    bodies' pin, a second one whose parts also carry the position streams
-    (its budget counts them too); the BM25 pin stays without them."""
+    bodies' pin, whose parts also carry the position streams (its budget
+    counts them too). A handle holds one segment pin: once it has a
+    positions pin, BM25 bodies run on it too (_cursors reads the first
+    eight fields of a part), and building it unpersists the BM25 pin.
+    Never destroyed: DataFrames returned earlier may still reference it."""
     def make():
         got = _collect_segments(index.segments, positions, PIN_BUDGET_BYTES)
         if got is None:
@@ -1543,8 +1671,18 @@ def _index_pin(spark, index, positions: bool = False) -> _Pin | None:
             index.num_docs,
             shared_index_bc(spark, index, "pos_dict",
                             lambda: index.pos_dict) if positions else None)
-    return _index_cached(spark, index,
-                         "positions" if positions else "segments", make)
+    with _INDEX_CACHE_LOCK:
+        pos_pin = _index_cache_peek(spark, index, "positions")
+        if pos_pin is not None:
+            return pos_pin
+        if not positions:
+            return _index_cached(spark, index, "segments", make)
+        pin = _index_cached(spark, index, "positions", make)
+        if pin is not None:
+            bm25 = _index_cache_peek(spark, index, "segments", pop=True)
+            if bm25 is not None:
+                bm25.seg_bc.unpersist()
+        return pin
 
 
 def _lpt_bins(spark, items: list, term_lists: list, term_cost: dict,
@@ -1921,7 +2059,7 @@ LATENCY_SCHEMA = T.StructType([
 
 
 def query_latency_stats(spark: SparkSession, index, queries: list,
-                        algo: str = "block_max_wand", k: int = 10,
+                        algo: str = "block_max_wand_vec", k: int = 10,
                         runs: int = 3, dtype: str = "float32",
                         max_broadcast_bytes: int = PIN_BUDGET_BYTES) -> dict:
     """The reference's per-query latency protocol (src/queries.cpp:25-60):
@@ -2308,7 +2446,9 @@ def run_kwic_queries(spark: SparkSession, index, docs: DataFrame,
 
 HIGHLIGHT_SCHEMA = T.StructType([
     T.StructField("query_id", T.LongType(), False),
+    T.StructField("rank", T.IntegerType(), False),
     T.StructField("doc_id", T.LongType(), False),
+    T.StructField("score_q", T.LongType(), False),
     T.StructField("start", T.LongType(), False),
     T.StructField("n_terms", T.IntegerType(), False),
     T.StructField("n_hits", T.IntegerType(), False),
@@ -2334,8 +2474,9 @@ def run_highlight_queries(spark: SparkSession, index, docs: DataFrame,
     snippet), one row per hit. Plan shape: retrieval is the standard
     kernel; the occurrence pass is a positional body on the one execute
     step (the per-term decode LRU amortizes head terms), restricted to
-    the |Q| x k candidate docs, which ride in each query's item, BEFORE
-    any window work — at any corpus size the window scan touches only
+    the |Q| x k candidate docs, which ride in each query's item with
+    their rank and score_q (the retrieval runs once), BEFORE any window
+    work — at any corpus size the window scan touches only
     result-page docs, the cost class of rendering the page. The
     snippet slice is JVM-side on the hit-joined documents stream (no
     text enters Python). No reference counterpart (the reference stops
@@ -2354,20 +2495,23 @@ def run_highlight_queries(spark: SparkSession, index, docs: DataFrame,
             .where(F.col("rank") <= k)
             .select("query_id", F.col("rank").cast("int").alias("rank"),
                     "doc_id", "score_q"))
-    cand_rows = cand.collect()  # |Q| x k rows — driver-tiny by contract
-    cand_map: dict[int, np.ndarray] = {}
-    for r in cand_rows:
-        cand_map.setdefault(int(r["query_id"]), []).append(int(r["doc_id"]))
-    cand_map = {q: np.sort(np.asarray(d, dtype=np.int64))
-                for q, d in cand_map.items()}
+    # |Q| x k rows — driver-tiny by contract. Collected once: each query's
+    # (doc_id, rank, score_q) triples ride in its item, so the retrieval
+    # never re-runs in the result's plan
+    cand_map: dict[int, list] = {}
+    for r in cand.collect():
+        cand_map.setdefault(int(r["query_id"]), []).append(
+            (int(r["doc_id"]), int(r["rank"]), int(r["score_q"])))
+    cand_map = {q: np.array(sorted(c), dtype=np.int64).T
+                for q, c in cand_map.items()}
 
     # ---- occurrences of the query's DISTINCT terms in candidate docs -------
     W = int(width)
 
     def body(qid, item, q):
-        cdocs = item[2]
-        if cdocs is None:
+        if item[2] is None:
             return None
+        cdocs, crank, cscore = item[2]  # doc_id ascending
         # each candidate doc's keys are one contiguous sorted run
         # [doc<<32, (doc+1)<<32)
         lo_k = cdocs.astype(np.uint64) << _POS_SHIFT
@@ -2404,16 +2548,16 @@ def run_highlight_queries(spark: SparkSession, index, docs: DataFrame,
                 score = (nt, j - i, -int(pos[i]))
                 if score > best:
                     best = score
-            out.append((int(d[s]), -best[2], best[0], best[1]))
+            c = int(np.searchsorted(cdocs, d[s]))
+            out.append((int(crank[c]), int(d[s]), int(cscore[c]), -best[2],
+                        best[0], best[1]))
         return tuple(zip(*out))
 
     hl = _execute(spark, index,
                   [(*_fold_query(qs), cand_map.get(i))
                    for i, qs in enumerate(queries)],
                   body, HIGHLIGHT_SCHEMA, positions=True)
-    hit_docs = tokenize(
-        hl.join(cand, ["query_id", "doc_id"])
-          .join(docs.select("doc_id", "text"), "doc_id"))
+    hit_docs = tokenize(hl.join(docs.select("doc_id", "text"), "doc_id"))
     return hit_docs.select(
         "query_id", "rank", "doc_id", "score_q", "start",
         "n_terms", "n_hits",

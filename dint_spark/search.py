@@ -1030,7 +1030,7 @@ def search_synonyms(
     queries: list[str],
     synonyms: dict[str, list[str]],
     syn_weight: float = 0.5,
-    algo: str = "block_max_wand",
+    algo: str = "block_max_wand_vec",
     k: int = 10,
     dtype: str = "float64",
     nfc: bool = False,
@@ -1087,7 +1087,7 @@ def rm3_relevance_model(
     docs_df: DataFrame,
     fb_docs: int = 10,
     fb_terms: int = 10,
-    algo: str = "block_max_wand",
+    algo: str = "block_max_wand_vec",
     dtype: str = "float64",
     doc_filter: DocMask | None = None,
 ) -> DataFrame:
@@ -1152,7 +1152,7 @@ def rm3_expand(
     fb_docs: int = 10,
     fb_terms: int = 10,
     orig_weight: float = 0.5,
-    algo: str = "block_max_wand",
+    algo: str = "block_max_wand_vec",
     dtype: str = "float64",
     doc_filter: DocMask | None = None,
 ) -> list:
@@ -1218,7 +1218,7 @@ def rm3_search(
     fb_terms: int = 10,
     orig_weight: float = 0.5,
     k: int = 10,
-    algo: str = "block_max_wand",
+    algo: str = "block_max_wand_vec",
     dtype: str = "float64",
     doc_filter: DocMask | None = None,
 ) -> DataFrame:
@@ -1244,7 +1244,7 @@ def hybrid_rrf(
     k: int = 10,
     k_each: int = 50,
     rrf_k: int = 60,
-    algo: str = "block_max_wand",
+    algo: str = "block_max_wand_vec",
     dtype: str = "float64",
     scale: int = 1 << 20,
     doc_filter: DocMask | None = None,
@@ -1343,7 +1343,7 @@ def rerank_by_embedding(
     query_vecs: DataFrame,
     n_candidates: int = 50,
     k: int = 10,
-    algo: str = "block_max_wand",
+    algo: str = "block_max_wand_vec",
     dtype: str = "float32",
     scale: int = 1 << 20,
     doc_filter: DocMask | None = None,

@@ -397,7 +397,7 @@ def run_queries_sharded(
     spark: SparkSession,
     sidx: ShardedIndex,
     queries: list,
-    algo: str = "block_max_wand",
+    algo: str = "block_max_wand_vec",
     k: int = 10,
     dtype: str = "float32",
     doc_filters: list | None = None,

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from dint_spark.corpus import generate_pages
 from dint_spark.index import IndexConfig, build_index, delete_docs
+from dint_spark import queries
 from dint_spark.queries import build_doc_filter, run_queries
 from dint_spark.sharding import (append_docs, build_doc_filters_sharded,
                                  build_sharded_index, delete_docs_sharded,
@@ -137,10 +138,24 @@ def test_vocab_extends_not_reranks(appended):
     assert int(row["term_id"].iloc[0]) >= len(old_vocab)
 
 
+def _pin_pruned(monkeypatch, algo: str) -> str:
+    """``algo``, with "bmw_pruned" run as block_max_wand_vec's pruned pass:
+    the cost rule scores these small indexes densely, and the inflated
+    and float64 bounds are only exercised when the pass prunes. The
+    kernel is looked up on the driver and ships by reference."""
+    if algo != "bmw_pruned":
+        return algo
+    monkeypatch.setitem(queries.KERNELS, "block_max_wand_vec",
+                        queries._bmw_pruned)
+    return "block_max_wand_vec"
+
+
 @pytest.mark.parametrize("algo", ["ranked_or", "block_max_wand",
-                                  "block_max_wand_vec", "maxscore"])
+                                  "block_max_wand_vec", "bmw_pruned",
+                                  "maxscore"])
 @pytest.mark.parametrize("dtype", ["float32", "float64"])
-def test_append_topk_identical(appended, algo, dtype):
+def test_append_topk_identical(appended, algo, dtype, monkeypatch):
+    algo = _pin_pruned(monkeypatch, algo)
     idx_full, sidx, _, tq = appended
     spark = idx_full.spark
     r1 = _pdf(run_queries(spark, idx_full, _resolve(idx_full, tq),
@@ -239,7 +254,7 @@ def test_filters_after_append(appended):
 
 
 @pytest.mark.parametrize("dtype", ["float32", "float64"])
-def test_sharded_server_over_epochs(appended, dtype):
+def test_sharded_server_over_epochs(appended, dtype, monkeypatch):
     """ShardedQueryServer (pinned per-epoch serving): global df from the
     summed pinned posting counts, N from the manifest, pre-append epoch
     norms re-pinned under the post-append average — served results equal
@@ -249,10 +264,12 @@ def test_sharded_server_over_epochs(appended, dtype):
     idx_full, sidx, _, tq = appended
     spark = idx_full.spark
     srv = ShardedQueryServer(spark, sidx, dtype=dtype)
-    for algo in ("block_max_wand_vec", "maxscore"):
-        r1 = _pdf(run_queries(spark, idx_full, _resolve(idx_full, tq),
-                              algo=algo, k=10, dtype=dtype))
-        r2 = _pdf(srv.serve(_resolve(sidx, tq), algo=algo, k=10))
+    for algo in ("block_max_wand_vec", "bmw_pruned", "maxscore"):
+        with monkeypatch.context() as mp:
+            algo = _pin_pruned(mp, algo)
+            r1 = _pdf(run_queries(spark, idx_full, _resolve(idx_full, tq),
+                                  algo=algo, k=10, dtype=dtype))
+            r2 = _pdf(srv.serve(_resolve(sidx, tq), algo=algo, k=10))
         assert r1.equals(r2)
 
 

@@ -19,7 +19,12 @@ import pytest
 from fixtures import (build_dicts, build_segments, gen_collection,
                       gen_queries, make_cursors, oracle_topk)
 
-from dint_spark.queries import KERNELS, Tombstones, boolean_and, boolean_or
+from dint_spark.queries import (KERNELS, Tombstones, _bmw_pruned, boolean_and,
+                                boolean_or)
+
+# the kernels plus block_max_wand_vec's pruned pass, which the cost rule
+# never picks on collections this small
+KERNELS = {**KERNELS, "bmw_pruned": _bmw_pruned}
 
 
 # ---------------------------------------------------------------------------
@@ -45,7 +50,7 @@ def _oracle_live(query, plists, doclens, num_docs, live_mask, k=10):
 
 @pytest.mark.parametrize("algo", ["ranked_or", "ranked_or_vec", "wand",
                                   "block_max_wand", "block_max_wand_vec",
-                                  "maxscore"])
+                                  "bmw_pruned", "maxscore"])
 def test_kernels_exclude_deleted_stale_stats(small, algo):
     plists, doclens, num_docs, dd, fd, segs, norm, queries = small
     rng = np.random.default_rng(5)
@@ -64,7 +69,8 @@ def test_kernels_exclude_deleted_stale_stats(small, algo):
 def test_kernels_all_docs_deleted(small):
     plists, doclens, num_docs, dd, fd, segs, norm, queries = small
     tomb = Tombstones(np.arange(num_docs), num_docs)
-    for algo in ("ranked_or_vec", "block_max_wand_vec", "maxscore"):
+    for algo in ("ranked_or_vec", "block_max_wand_vec", "bmw_pruned",
+                 "maxscore"):
         cursors = make_cursors(queries[0], segs, dd, fd, norm, num_docs)
         assert KERNELS[algo](cursors, norm, num_docs, 10, np.float32,
                              live=tomb) == []

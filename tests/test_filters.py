@@ -21,8 +21,12 @@ import pytest
 from fixtures import (build_dicts, build_segments, gen_collection,
                       gen_queries, make_cursors, oracle_topk)
 
-from dint_spark.queries import (DocMask, KERNELS, Tombstones, boolean_and,
-                                boolean_or, build_doc_filter)
+from dint_spark.queries import (DocMask, KERNELS, Tombstones, _bmw_pruned,
+                                boolean_and, boolean_or, build_doc_filter)
+
+# the kernels plus block_max_wand_vec's pruned pass, which the cost rule
+# never picks on collections this small
+KERNELS = {**KERNELS, "bmw_pruned": _bmw_pruned}
 
 
 # ---------------------------------------------------------------------------
@@ -60,7 +64,7 @@ def test_docmask_roundtrip_and_pickle():
 
 @pytest.mark.parametrize("algo", ["ranked_or", "ranked_or_vec", "wand",
                                   "block_max_wand", "block_max_wand_vec",
-                                  "maxscore"])
+                                  "bmw_pruned", "maxscore"])
 def test_kernels_respect_docmask(small, algo):
     plists, doclens, num_docs, dd, fd, segs, norm, queries = small
     rng = np.random.default_rng(6)
@@ -82,7 +86,8 @@ def test_kernels_highly_selective_filter(small):
     mask = np.zeros(num_docs, dtype=bool)
     mask[:: 100] = True
     dm = DocMask.from_mask(mask)
-    for algo in ("ranked_or_vec", "block_max_wand_vec", "maxscore"):
+    for algo in ("ranked_or_vec", "block_max_wand_vec", "bmw_pruned",
+                 "maxscore"):
         for q in queries[:10]:
             cursors = make_cursors(q, segs, dd, fd, norm, num_docs)
             got = KERNELS[algo](cursors, norm, num_docs, 10, np.float32,
@@ -94,7 +99,7 @@ def test_kernels_highly_selective_filter(small):
 def test_empty_filter_returns_nothing(small):
     plists, doclens, num_docs, dd, fd, segs, norm, queries = small
     dm = DocMask.from_mask(np.zeros(num_docs, dtype=bool))
-    for algo in ("ranked_or_vec", "block_max_wand_vec"):
+    for algo in ("ranked_or_vec", "block_max_wand_vec", "bmw_pruned"):
         cursors = make_cursors(queries[0], segs, dd, fd, norm, num_docs)
         assert KERNELS[algo](cursors, norm, num_docs, 10, np.float32,
                              live=dm) == []

@@ -15,6 +15,7 @@ from fixtures import (
     oracle_topk,
 )
 from dint_spark.queries import (
+    _bmw_pruned,
     block_max_wand_vec,
     boolean_and,
     boolean_or,
@@ -36,7 +37,8 @@ def collection():
 
 
 @pytest.mark.parametrize(
-    "algo", ["ranked_or", "ranked_or_vec", "wand", "bmw", "bmw_vec"])
+    "algo", ["ranked_or", "ranked_or_vec", "wand", "bmw", "bmw_vec",
+             "bmw_pruned"])
 def test_exact_float32_rank_identity(collection, algo):
     plists, doclens, N, queries, dd, fd, segs, norm = collection
     fn = {
@@ -45,11 +47,66 @@ def test_exact_float32_rank_identity(collection, algo):
         "wand": lambda cs: wand(cs, norm, N, 10),
         "bmw": lambda cs: wand(cs, norm, N, 10, block_max=True),
         "bmw_vec": lambda cs: block_max_wand_vec(cs, norm, N, 10),
+        "bmw_pruned": lambda cs: _bmw_pruned(cs, norm, N, 10),
     }[algo]
     for q in queries:
         oracle = oracle_topk(q, plists, doclens, N, k=10)
         cs = make_cursors(q, segs, dd, fd, norm, N)
         assert fn(cs) == oracle
+
+
+# num_docs the kernels are told: the collection's own (the cost rule
+# scores densely) and one so large that the dense accumulator cannot pay
+# for short lists (the rule takes the pruned pass); cursors and scores
+# are the collection's either way
+@pytest.mark.parametrize("told", [None, 10**7])
+def test_bmw_vec_branches_agree(collection, told):
+    plists, doclens, N, queries, dd, fd, segs, norm = collection
+    nd = told or N
+    branches = set()
+    for q in queries:
+        cs = lambda: make_cursors(q, segs, dd, fd, norm, N)  # noqa: E731
+        counters = {}
+        ruled = block_max_wand_vec(cs(), norm, nd, 10, counters=counters)
+        assert ruled == _bmw_pruned(cs(), norm, nd, 10)
+        assert ruled == ranked_or_vec(cs(), norm, nd, 10)
+        branches.add(counters.get("branch"))
+    if told is None:
+        assert branches - {None} == {"dense"}
+    else:  # "fallback": the pruned pass's own post-bootstrap dense pass
+        assert "pruned" in branches
+        assert branches - {None} <= {"pruned", "fallback"}
+
+
+def test_bmw_vec_counter_laws(collection):
+    """Pruned blocks read <= dense blocks read == every block; candidates
+    scored >= k, or every match when fewer than k docs match."""
+    plists, doclens, N, queries, dd, fd, segs, norm = collection
+    for k in (1, 10, 10**4):
+        for q in queries:
+            cs = lambda: make_cursors(q, segs, dd, fd, norm, N)  # noqa: E731
+            if not cs():
+                continue
+            dense, pruned = {}, {}
+            top = block_max_wand_vec(cs(), norm, N, k, counters=dense)
+            assert _bmw_pruned(cs(), norm, 10**7, k, counters=pruned) == top
+            assert dense["branch"] == "dense"
+            assert pruned["branch"] in ("pruned", "fallback")
+            matches = len(set().union(*(
+                plists[t][0].tolist() for t in set(map(int, q))
+                if t in plists)))
+            for ctr in (dense, pruned):
+                assert ctr["postings"] == sum(c.n for c in cs())
+                assert ctr["blocks_total"] == sum(c.nblocks for c in cs())
+                assert (ctr["candidates"] >= k if matches >= k
+                        else ctr["candidates"] == matches)
+                assert ctr["theta"] == (top[k - 1][1] if len(top) >= k
+                                        else 0.0)
+            assert dense["blocks_read"] == dense["blocks_total"]
+            assert dense["postings_read"] == dense["postings"]
+            assert dense["candidates"] == matches
+            assert pruned["blocks_read"] <= dense["blocks_read"]
+            assert pruned["postings_read"] <= dense["postings_read"]
 
 
 def test_maxscore_rank_identity(collection):

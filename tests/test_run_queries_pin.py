@@ -435,3 +435,48 @@ def test_positional_deletes_read_per_call(spark, pos_built, monkeypatch,
                                                          phrases))
         assert again and not {doc for _, doc, _ in again} & set(gone)
     assert got["pinned"] == got["fallback"]
+
+
+def test_highlight_retrieves_once(spark, pos_built):
+    """run_highlight_queries collects its retrieval once and carries each
+    candidate's rank and score_q in the query's item: besides the
+    documents frame's own, the result's plan holds the occurrence pass's
+    mapInPandas only."""
+    _, idx, phrases, docs = pos_built
+    df = run_highlight_queries(spark, idx, docs, phrases[:2], k=3)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    # the documents frame brings its own (doc-id assignment)
+    own = docs._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInPandas") == 1 + own.count("MapInPandas")
+    rows = df.collect()
+    assert rows and all(1 <= r["rank"] <= 3 for r in rows)
+
+
+def test_one_segment_pin_per_positional_handle(spark, pos_built,
+                                               monkeypatch):
+    """BM25 -> phrase -> BM25 on one handle: the positions pin replaces
+    the BM25 pin (unpersisted, not destroyed) and serves the second BM25
+    call, so one segment broadcast is live; every call's rows equal a
+    fresh handle's."""
+    d, _, phrases, _ = pos_built
+    queries = [p for p in phrases if p]
+    h = load_index(spark, d)
+    first = _rows(run_queries(spark, h, queries))
+    bm25_pin = Q._index_pin(spark, h)
+    unpersisted = []
+    unpersist = bm25_pin.seg_bc.unpersist
+    monkeypatch.setattr(bm25_pin.seg_bc, "unpersist",
+                        lambda *a, **kw: (unpersisted.append(a),
+                                          unpersist(*a, **kw)))
+    phrase = _all_rows(run_phrase_queries(spark, h, phrases))
+    again = _rows(run_queries(spark, h, queries))
+    pos_pin = Q._index_pin(spark, h, positions=True)
+    assert pos_pin is not None and pos_pin is not bm25_pin
+    assert Q._index_pin(spark, h) is pos_pin
+    assert len(unpersisted) == 1
+    assert [v for v in h._bc_cache.values()
+            if isinstance(v, Q._Pin)] == [pos_pin]
+    assert first and first == again
+    assert first == _rows(run_queries(spark, load_index(spark, d), queries))
+    assert phrase == _all_rows(run_phrase_queries(
+        spark, load_index(spark, d), phrases))
