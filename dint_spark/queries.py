@@ -11,9 +11,10 @@ the reference's DAAT operators (include/ds2i/queries.hpp):
   block_max_wand     WAND + per-block max-score upper bounds (our extension
                      of Q13 using the segments' block_max_scores metadata;
                      the north rule's required operator)
-  block_max_wand_vec the same top-k over numpy blocks, with a cost rule
-                     that scores densely when pruning cannot pay (the
-                     default ``algo`` of every op)
+  block_max_wand_vec the same top-k over numpy arrays: dense scoring
+                     whose selection a block-max floor certifies, the
+                     pruned pass past the dense ceiling (the default
+                     ``algo`` of every op)
   maxscore           essential/non-essential list split (459-573)
 
 All scoring is float32 in the reference's accumulation order (cursor list
@@ -266,29 +267,6 @@ _LIST_CACHE_CAP = int(os.environ.get("DINT_SPARK_DECODE_CACHE_MB", "256")) * 2**
 # materializes O(num_docs) state.
 _DENSE_SCORE_MAX_DOCS = int(
     os.environ.get("DINT_SPARK_DENSE_SCORE_MAX_DOCS", str(1 << 24)))
-
-
-# block_max_wand_vec's cost rule (_dense_pays), microseconds on a warm
-# decode LRU. Fitted on a 4-core x86 host from a per-query replay of the
-# perfbench fixture (generate_pages(10_000, seed=0), 4 buckets, 1,000
-# pool queries) and a generate_pages(100_000, seed=0) build (8 buckets,
-# 300 queries), each kernel timed best of 3:
-#   dense  = 77 + 0.0167 P + 0.0076 num_docs
-#            (ranked_or_vec, least squares; 0.15 ms + 17 ns/posting at
-#            10k docs, 0.84 ms + 17 ns/posting at 100k)
-#   pruned = 160 + 158 m + 1.42 m P / BLOCK_SIZE
-#            (_bmw_pruned, median regression: the bootstrap reads and
-#            scores a block per cursor, and the interval grid and its
-#            survivors cost per cursor and grid interval)
-# The pruned pass lost every one of the 10k queries (0.75 vs 0.25 ms
-# mean) and won 150 of the 300 at 100k (1.87 vs 1.79 ms mean; the wins
-# are the one- and two-term queries). With these constants the rule
-# scores all 10k queries densely and 39% of the 100k ones (the four- and
-# five-term queries), for 0.245 and 1.66 ms mean; fitting the pruned
-# pass's bootstrap and grid alone (its least cost) sent every 100k query
-# to the pruned pass, for 1.87 ms.
-_DENSE_US = (77.0, 0.0167, 0.0076)
-_PRUNED_US = (160.0, 158.0, 1.42)
 
 
 class Tombstones:
@@ -555,8 +533,8 @@ def ranked_or(cursors, norm_lens, num_docs: int, k: int, DT=np.float32,
     return q.finalize()
 
 
-def _dense_topk(lists, norm_lens, num_docs: int, k: int, DT, floor=None,
-                live=None):
+def _dense_topk(lists, norm_lens, num_docs: int, k: int, DT,
+                floor_docs=None, live=None):
     """Exhaustive BM25 top-k via a docid-indexed accumulator.
 
     ``lists`` is (q_weight, docs, freqs) per cursor in term_id order — the
@@ -593,15 +571,18 @@ def _dense_topk(lists, norm_lens, num_docs: int, k: int, DT, floor=None,
                 acc[excl] = DT(0)
         else:
             acc[~live.mask] = DT(0)
-    # ``floor``: any certified lower bound on the k-th best score (BMW
-    # passes its bootstrap theta — the k-th best of >= k exactly-scored
-    # docs, whose acc entries are bit-identical to those scores). A mask
-    # scan at the floor replaces the O(num_docs) introselect partition.
+    # ``floor_docs``: distinct docs whose accumulated (exact) scores
+    # certify a floor, since the k-th best of any k docs' scores is <= the
+    # k-th best overall. A mask scan at the floor replaces the
+    # O(num_docs) introselect partition.
     cand = None
-    if floor is not None and floor > 0:
-        cand = np.flatnonzero(acc >= floor)
-        if len(cand) < k:  # unreachable for a valid bound; stay safe
-            cand = None
+    if floor_docs is not None and len(floor_docs) >= k:
+        fv = acc[floor_docs]
+        floor = np.partition(fv, len(fv) - k)[len(fv) - k]
+        if floor > 0:
+            cand = np.flatnonzero(acc >= floor)
+            if len(cand) < k:  # unreachable for distinct docs; stay safe
+                cand = None
     if cand is None:
         # matched docs score strictly > 0 (q_weight is idf-floored
         # positive, dtw = f/(f+denom) with f >= 1 and finite denom — no
@@ -930,82 +911,38 @@ def _bubble_down(ordered, i: int) -> None:
 
 
 def block_max_wand_vec(cursors, norm_lens, num_docs: int, k: int,
-                       DT=np.float32, live=None, counters=None):
-    """Block-max WAND top-k, exactly ranked_or's: a cost rule picks dense
-    exhaustive scoring or the pruned pass (_bmw_pruned) per query.
+                       DT=np.float32, live=None):
+    """Block-max top-k, exactly ranked_or's.
 
-    The rule runs before anything is decoded and reads only what the
-    cursors already hold: total postings P, cursor count m and num_docs
-    (_dense_pays). When the dense pass (ranked_or_vec: the O(P) scatter
-    plus the O(num_docs) accumulator scan) costs less than the pruned
-    pass, whose cost its bootstrap (a block per cursor) and its interval
-    grid (per cursor and block) set, the lists are scored densely;
-    otherwise the pruned pass runs. Measured crossover: on the 10k-doc
-    benchmark fixture dense scoring is cheaper for every query and the
-    rule takes it for all; at 100k docs the rule keeps the pruned pass
-    for one- to three-term queries (where it wins most often) and scores
-    four- and five-term ones densely; the num_docs term keeps the pruned
-    pass for large shards (1M+ docs: all but the longest head-term
-    queries), and past _DENSE_SCORE_MAX_DOCS it always runs. Both
-    branches are exact top-k with one tie order, so the choice never
-    changes a row.
-
-    ``counters``: a dict to fill with the query's work (branch, postings,
-    blocks total/read, postings read, candidates scored, final theta);
-    None (the default) costs nothing.
+    Shards up to _DENSE_SCORE_MAX_DOCS score every list densely
+    (_dense_topk, ranked_or_vec's accumulator), and the block-max
+    metadata certifies the top-k threshold instead of pruning blocks: the
+    docs of each list's best block (by block_max_score, the pruned pass's
+    bootstrap set) hold exact scores in the accumulator, so their k-th
+    best is a floor under the k-th best overall, and a mask scan at that
+    floor replaces the O(num_docs) selection. Block skipping does not pay
+    there: on the generate_pages corpora (10k and 100k docs) the pruned
+    pass's bootstrap theta left more than half of all blocks alive on
+    nearly every query, so it fell back to this same dense pass after
+    paying for its bootstrap and interval grid. Larger shards run the
+    pruned pass (_bmw_pruned), which never materializes O(num_docs) state.
     """
     if not cursors:
         return []
-    P = sum(c.n for c in cursors)
-    if not _dense_pays(P, len(cursors), num_docs):
-        return _bmw_pruned(cursors, norm_lens, num_docs, k, DT, live,
-                           counters)
-    top = ranked_or_vec(cursors, norm_lens, num_docs, k, DT, live)
-    if counters is not None:
-        _count(counters, cursors, "dense", k, top,
-               [np.arange(c.nblocks) for c in cursors],
-               _match_count(cursors, live))
-    return top
-
-
-def _dense_pays(P: int, m: int, num_docs: int) -> bool:
-    """block_max_wand_vec's cost rule: True when dense scoring is cheaper
-    than the pruned pass for P postings over m cursors. Costs are in
-    microseconds on a warm decode LRU; the fit is beside _DENSE_US."""
     if num_docs > _DENSE_SCORE_MAX_DOCS:
-        return False  # past the dense ceiling the pruned pass stays
-    dense = _DENSE_US[0] + _DENSE_US[1] * P + _DENSE_US[2] * num_docs
-    pruned = (_PRUNED_US[0] + _PRUNED_US[1] * m
-              + _PRUNED_US[2] * m * P / BLOCK_SIZE)
-    return dense <= pruned
-
-
-def _match_count(cursors, live) -> int:
-    """Distinct (live) docs matching any cursor, read through the LRU."""
-    docs = np.unique(np.concatenate([c.decode_all()[0] for c in cursors]))
-    return int(live.mask[docs].sum()) if live is not None else len(docs)
-
-
-def _count(counters: dict, cursors, branch: str, k: int, top: list,
-           read: list, candidates: int, theta0=None) -> None:
-    """Fill block_max_wand_vec's ``counters``; ``read``: per cursor, the
-    distinct block ids whose postings the pass read (decoded or served
-    from the LRU)."""
-    counters.update(
-        branch=branch,
-        postings=sum(c.n for c in cursors),
-        blocks_total=sum(c.nblocks for c in cursors),
-        blocks_read=sum(len(r) for r in read),
-        postings_read=sum(
-            int((np.minimum((r + 1) * BLOCK_SIZE, c.n) - r * BLOCK_SIZE).sum())
-            for c, r in zip(cursors, read)),
-        candidates=candidates,
-        theta0=None if theta0 is None else float(theta0),
-        theta=float(top[k - 1][1]) if len(top) >= k else 0.0)
+        return _bmw_pruned(cursors, norm_lens, num_docs, k, DT, live)
+    lists, best = [], []
+    for c in cursors:  # arrive sorted by term_id (_cursors)
+        docs, freqs = c.decode_all()
+        lists.append((c.q_weight, docs, freqs))
+        b = int(np.argmax(c.block_max_scores)) * BLOCK_SIZE
+        best.append(docs[b:b + BLOCK_SIZE])
+    return _dense_topk(lists, norm_lens, num_docs, k, DT,
+                       floor_docs=np.unique(np.concatenate(best)), live=live)
 
 
 def _bmw_pruned(cursors, norm_lens, num_docs: int, k: int, DT=np.float32,
-                live=None, counters=None):
+                live=None):
     """Block-level vectorized BMW: exact same top-k as ranked_or, with the
     per-doc Python loop replaced by numpy over 256-int blocks.
 
@@ -1027,8 +964,8 @@ def _bmw_pruned(cursors, norm_lens, num_docs: int, k: int, DT=np.float32,
          is what makes the pruning bite on skewed multi-term queries.
 
     Per-query Python work is O(num_lists x num_blocks), all postings math
-    is Arrow/numpy. block_max_wand_vec runs it when its cost rule says
-    pruning can pay. (ref block-max metadata: our extension of
+    is Arrow/numpy. block_max_wand_vec runs it on shards past
+    _DENSE_SCORE_MAX_DOCS. (ref block-max metadata: our extension of
     include/ds2i/wand_data.hpp; pruning logic per Ding & Suel BMW.)
     """
     if not cursors:
@@ -1041,9 +978,6 @@ def _bmw_pruned(cursors, norm_lens, num_docs: int, k: int, DT=np.float32,
     # freqs or None). Served from the worker-level full-list LRU when the
     # list is hot or mostly needed; otherwise a subset bulk-decode.
     span_cache: list[dict] = [{"blocks": None} for _ in cursors]
-    # counters: per cursor, the distinct blocks read so far
-    read = (None if counters is None
-            else [np.empty(0, dtype=np.int64) for _ in cursors])
 
     def _slice_blocks(c, docs, freqs, have: np.ndarray, blocks: np.ndarray):
         """Select `blocks` out of arrays decoded for block set `have`."""
@@ -1060,8 +994,6 @@ def _bmw_pruned(cursors, norm_lens, num_docs: int, k: int, DT=np.float32,
     def get_span(ci: int, blocks: np.ndarray, want_freqs: bool):
         """Concatenated (docs, freqs) of `blocks` (sorted), bulk-decoded."""
         c = cursors[ci]
-        if read is not None:
-            read[ci] = np.union1d(read[ci], blocks)
         all_blocks = np.arange(c.nblocks)
         key = _cache_key(c)
         hit = _LIST_CACHE.get(key)
@@ -1170,12 +1102,8 @@ def _bmw_pruned(cursors, norm_lens, num_docs: int, k: int, DT=np.float32,
         for ci, c in enumerate(cursors):
             docs, freqs = get_span(ci, np.arange(c.nblocks), want_freqs=True)
             lists.append((c.q_weight, docs, freqs))
-        top = _dense_topk(lists, nl_arr, num_docs, k, DT, floor=theta,
-                          live=live)
-        if counters is not None:
-            _count(counters, cursors, "fallback", k, top, read,
-                   _match_count(cursors, live), theta)
-        return top
+        return _dense_topk(lists, nl_arr, num_docs, k, DT, floor_docs=C0,
+                           live=live)
     for ci, c in enumerate(cursors):
         if exhaustive:
             docs, _ = get_span(ci, np.arange(c.nblocks), want_freqs=False)
@@ -1193,10 +1121,7 @@ def _bmw_pruned(cursors, norm_lens, num_docs: int, k: int, DT=np.float32,
     allC = np.concatenate([C0, new])
     allS = np.concatenate([s0, s_new])
     order = np.lexsort((allC, -allS))[:k]
-    top = [(int(allC[i]), float(allS[i])) for i in order]
-    if counters is not None:
-        _count(counters, cursors, "pruned", k, top, read, len(allC), theta)
-    return top
+    return [(int(allC[i]), float(allS[i])) for i in order]
 
 
 def maxscore(cursors, norm_lens, num_docs: int, k: int, DT=np.float32,

@@ -140,7 +140,7 @@ def test_vocab_extends_not_reranks(appended):
 
 def _pin_pruned(monkeypatch, algo: str) -> str:
     """``algo``, with "bmw_pruned" run as block_max_wand_vec's pruned pass:
-    the cost rule scores these small indexes densely, and the inflated
+    block_max_wand_vec scores these small indexes densely, and the inflated
     and float64 bounds are only exercised when the pass prunes. The
     kernel is looked up on the driver and ships by reference."""
     if algo != "bmw_pruned":

@@ -11,6 +11,7 @@ import shutil
 
 import pytest
 
+from dint_spark import queries as Q
 from dint_spark.corpus import generate_pages
 from dint_spark.index import IndexConfig, build_index
 from dint_spark.queries import (
@@ -50,6 +51,17 @@ def _pdf(df, keys):
     return df.toPandas().sort_values(keys).reset_index(drop=True)
 
 
+def _pin_pruned(monkeypatch, algo: str) -> str:
+    """``algo``, with "bmw_pruned" run as block_max_wand_vec's pruned pass
+    (which it takes only past the dense ceiling), so the pass sees chunk
+    cursors: several disjoint parts per term. The kernel is looked up on
+    the driver and ships by reference."""
+    if algo != "bmw_pruned":
+        return algo
+    monkeypatch.setitem(Q.KERNELS, "block_max_wand_vec", Q._bmw_pruned)
+    return "block_max_wand_vec"
+
+
 def test_chunked_decode_identical(pair):
     idx1, idx2, _ = pair
     k = ["term_id", "doc_id"]
@@ -58,8 +70,9 @@ def test_chunked_decode_identical(pair):
 
 @pytest.mark.parametrize("algo", [
     "ranked_or", "ranked_or_vec", "wand", "block_max_wand",
-    "block_max_wand_vec", "maxscore", "ranked_and"])
-def test_chunked_topk_identical(pair, algo):
+    "block_max_wand_vec", "bmw_pruned", "maxscore", "ranked_and"])
+def test_chunked_topk_identical(pair, algo, monkeypatch):
+    algo = _pin_pruned(monkeypatch, algo)
     idx1, idx2, queries = pair
     k = ["query_id", "rank"]
     spark = idx1.spark
@@ -77,12 +90,14 @@ def test_chunked_boolean_identical(pair, mode):
         _pdf(run_boolean_queries(spark, idx2, queries, mode=mode), k))
 
 
-def test_chunked_broadcast_identical(pair):
+def test_chunked_broadcast_identical(pair, monkeypatch):
     idx1, idx2, queries = pair
     k = ["query_id", "rank"]
     spark = idx1.spark
     srv = BroadcastQueryServer(
         spark, idx2, terms=sorted({t for ts in queries for t in ts}))
-    rb = _pdf(srv.serve(queries, algo="block_max_wand_vec", k=10), k)
     r1 = _pdf(run_queries(spark, idx1, queries, algo="ranked_or", k=10), k)
-    assert rb.equals(r1)
+    for algo in ("block_max_wand_vec", "bmw_pruned"):
+        with monkeypatch.context() as mp:
+            rb = _pdf(srv.serve(queries, algo=_pin_pruned(mp, algo), k=10), k)
+        assert rb.equals(r1), algo

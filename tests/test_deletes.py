@@ -22,8 +22,8 @@ from fixtures import (build_dicts, build_segments, gen_collection,
 from dint_spark.queries import (KERNELS, Tombstones, _bmw_pruned, boolean_and,
                                 boolean_or)
 
-# the kernels plus block_max_wand_vec's pruned pass, which the cost rule
-# never picks on collections this small
+# the kernels plus block_max_wand_vec's pruned pass, which it runs only
+# on shards past the dense ceiling
 KERNELS = {**KERNELS, "bmw_pruned": _bmw_pruned}
 
 

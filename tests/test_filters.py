@@ -24,8 +24,8 @@ from fixtures import (build_dicts, build_segments, gen_collection,
 from dint_spark.queries import (DocMask, KERNELS, Tombstones, _bmw_pruned,
                                 boolean_and, boolean_or, build_doc_filter)
 
-# the kernels plus block_max_wand_vec's pruned pass, which the cost rule
-# never picks on collections this small
+# the kernels plus block_max_wand_vec's pruned pass, which it runs only
+# on shards past the dense ceiling
 KERNELS = {**KERNELS, "bmw_pruned": _bmw_pruned}
 
 

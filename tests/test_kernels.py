@@ -6,6 +6,7 @@ we require exact float32 equality for or/and/wand/bmw, rank-identity +
 import numpy as np
 import pytest
 
+from dint_spark import queries as Q
 from fixtures import (
     build_dicts,
     build_segments,
@@ -55,58 +56,39 @@ def test_exact_float32_rank_identity(collection, algo):
         assert fn(cs) == oracle
 
 
-# num_docs the kernels are told: the collection's own (the cost rule
-# scores densely) and one so large that the dense accumulator cannot pay
-# for short lists (the rule takes the pruned pass); cursors and scores
-# are the collection's either way
-@pytest.mark.parametrize("told", [None, 10**7])
-def test_bmw_vec_branches_agree(collection, told):
+# dense ceiling: the default (block_max_wand_vec scores densely under a
+# block-max floor) and 0 (it runs the pruned pass, whose own fallback and
+# ranked_or_vec then take the compacted path)
+@pytest.mark.parametrize("ceiling", [None, 0])
+def test_bmw_vec_paths_agree(collection, monkeypatch, ceiling):
     plists, doclens, N, queries, dd, fd, segs, norm = collection
-    nd = told or N
-    branches = set()
-    for q in queries:
-        cs = lambda: make_cursors(q, segs, dd, fd, norm, N)  # noqa: E731
-        counters = {}
-        ruled = block_max_wand_vec(cs(), norm, nd, 10, counters=counters)
-        assert ruled == _bmw_pruned(cs(), norm, nd, 10)
-        assert ruled == ranked_or_vec(cs(), norm, nd, 10)
-        branches.add(counters.get("branch"))
-    if told is None:
-        assert branches - {None} == {"dense"}
-    else:  # "fallback": the pruned pass's own post-bootstrap dense pass
-        assert "pruned" in branches
-        assert branches - {None} <= {"pruned", "fallback"}
-
-
-def test_bmw_vec_counter_laws(collection):
-    """Pruned blocks read <= dense blocks read == every block; candidates
-    scored >= k, or every match when fewer than k docs match."""
-    plists, doclens, N, queries, dd, fd, segs, norm = collection
+    if ceiling is not None:
+        monkeypatch.setattr(Q, "_DENSE_SCORE_MAX_DOCS", ceiling)
     for k in (1, 10, 10**4):
         for q in queries:
             cs = lambda: make_cursors(q, segs, dd, fd, norm, N)  # noqa: E731
-            if not cs():
-                continue
-            dense, pruned = {}, {}
-            top = block_max_wand_vec(cs(), norm, N, k, counters=dense)
-            assert _bmw_pruned(cs(), norm, 10**7, k, counters=pruned) == top
-            assert dense["branch"] == "dense"
-            assert pruned["branch"] in ("pruned", "fallback")
-            matches = len(set().union(*(
-                plists[t][0].tolist() for t in set(map(int, q))
-                if t in plists)))
-            for ctr in (dense, pruned):
-                assert ctr["postings"] == sum(c.n for c in cs())
-                assert ctr["blocks_total"] == sum(c.nblocks for c in cs())
-                assert (ctr["candidates"] >= k if matches >= k
-                        else ctr["candidates"] == matches)
-                assert ctr["theta"] == (top[k - 1][1] if len(top) >= k
-                                        else 0.0)
-            assert dense["blocks_read"] == dense["blocks_total"]
-            assert dense["postings_read"] == dense["postings"]
-            assert dense["candidates"] == matches
-            assert pruned["blocks_read"] <= dense["blocks_read"]
-            assert pruned["postings_read"] <= dense["postings_read"]
+            top = block_max_wand_vec(cs(), norm, N, k)
+            assert top == _bmw_pruned(cs(), norm, N, k)
+            assert top == ranked_or_vec(cs(), norm, N, k)
+
+
+def test_dense_floor_ties():
+    """A floor equal to a score many docs tie at keeps all of them, so the
+    doc-asc tie order at the k-th score is the unfloored one, wherever
+    the floor docs sit; floor docs that cannot certify (fewer than k, or
+    a zero k-th score) fall back to the full selection."""
+    docs = np.arange(0, 200, 2, dtype=np.int64)
+    lists = [(1.0, docs, np.ones(len(docs), dtype=np.int64)),
+             (2.0, np.array([7, 150], dtype=np.int64),
+              np.array([3, 1], dtype=np.int64))]
+    norm = np.ones(200, dtype=np.float32)
+    want = Q._dense_topk(lists, norm, 200, 10, np.float32)
+    assert [d for d, _ in want] == [7, 150] + list(range(0, 16, 2))
+    for floor_docs in (docs[:10], docs[-10:], docs[40:60], np.arange(200),
+                       docs[:9], np.array([1, 3, 5, 9, 11, 13, 15, 17, 19,
+                                           21])):
+        assert Q._dense_topk(lists, norm, 200, 10, np.float32,
+                             floor_docs=floor_docs) == want
 
 
 def test_maxscore_rank_identity(collection):

@@ -27,7 +27,8 @@ from fixtures import (
     make_cursors,
     oracle_topk,
 )
-from dint_spark.queries import block_max_wand_vec, maxscore, read_query_log, wand
+from dint_spark.queries import (_bmw_pruned, block_max_wand_vec, maxscore,
+                                read_query_log, wand)
 
 REF_QUERIES = "/root/reference/test/test_data/queries"
 VOCAB = 1500
@@ -58,6 +59,9 @@ def test_reference_query_set_rank_identity(collection):
         cs = make_cursors(q, segs, docs_dict, freqs_dict, norm, N)
         got = block_max_wand_vec(cs, norm, N, 10, np.float32)
         assert got == oracle, q
+        cs = make_cursors(q, segs, docs_dict, freqs_dict, norm, N)
+        got_p = _bmw_pruned(cs, norm, N, 10, np.float32)
+        assert got_p == oracle, q
         cs = make_cursors(q, segs, docs_dict, freqs_dict, norm, N)
         got_w = wand(cs, norm, N, 10, np.float32, block_max=True)
         assert got_w == oracle, q
