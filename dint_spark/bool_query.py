@@ -11,7 +11,7 @@ Semantics (the ES contract):
     terms (must_not never scores).
 
 Kernel shape: a per-query body on the one execute step
-(queries._execute: the index pin, one task per core). All clause lists
+(queries._execute: the index pin, tasks sized by work). All clause lists
 decode once (worker LRU), eligibility is three vectorized membership
 counts over the sorted match union (searchsorted scatter-adds — no
 per-doc Python), and scoring reuses the exact compacted accumulation

@@ -6,8 +6,8 @@ array (``DocFacets`` — u16/u32 ordinal per doc_id, built distributively
 like queries.build_doc_filter, shipped once per worker like norm_lens),
 and each query's matched docs are counted per ordinal with one bincount
 inside the same per-query body that ran the boolean kernel — a body on
-the one execute step (queries._execute: the index pin, one task per
-core). No (query_id, doc_id) match rows ever hit a shuffle or a join:
+the one execute step (queries._execute: the index pin, tasks sized
+by work). No (query_id, doc_id) match rows ever hit a shuffle or a join:
 the operator returns one row per (query, facet value) directly.
 
 Scale shape at 10^12 docs: the ordinal array is 2-4 bytes/doc and

@@ -1342,9 +1342,10 @@ def run_queries(
     Runs through _execute, the one execute step: the index's
     executor-pinned segments, built on the handle's first call (per Spark
     application) and reused by every later call, with queries in
-    LPT-balanced bins, one task per core. An index whose segments exceed
-    PIN_BUDGET_BYTES takes the step's shuffle fallback, with identical
-    results. Every argument below is per call: one pin serves them all.
+    LPT-balanced bins, as many tasks as the batch's work fills (at most
+    one per core). An index whose segments exceed PIN_BUDGET_BYTES takes
+    the step's shuffle fallback, with identical results. Every argument
+    below is per call: one pin serves them all.
 
     ``df_overrides``/``idf_docs``: global statistics for sharded serving
     (see _cursors).
@@ -1610,18 +1611,35 @@ def _index_pin(spark, index, positions: bool = False) -> _Pin | None:
         return pin
 
 
+# The LPT cost (postings, _lpt_bins' model) whose worker time pays for one
+# more task's fixed cost. Measured on a 4-core host, Unix-socket workers,
+# warm 10k-doc index: an empty mapInPandas job takes ~84 ms with 1 task
+# and ~110 ms with 2, so a task costs ~26 ms; one task's serve wall grows
+# ~52 ns per cost unit (115 ms at 71k, 398 ms at 5.47M). 26 ms / 52 ns
+# = 500k. Check: at 585k 1 and 2 tasks tie (126 vs 129 ms); at 1.26M
+# 2 tasks win (145 vs 180 ms). A 16-query call (~0.1M) runs one task,
+# a 1,000-query batch (~5.5M) one per core.
+TASK_MIN_COST = 500_000
+
+
 def _lpt_bins(spark, items: list, term_lists: list, term_cost: dict,
-              partitions: int | None) -> list[list[tuple]]:
+              partitions: int | None,
+              sized_by_work: bool = True) -> list[list[tuple]]:
     """(position, item) pairs of ``items`` in at most ``partitions``
     (default: defaultParallelism) non-empty bins, LPT-balanced — heaviest
     first onto the lightest bin — on a driver-side cost model: the sum of
     the item's distinct ``term_lists`` terms' posting counts, plus a fixed
     64 so empty and tail queries still count. Per-query kernel cost is
-    heavily skewed (head-term queries cost 10-100x tail ones)."""
-    nparts = partitions or spark.sparkContext.defaultParallelism
-    nparts = max(1, min(nparts, len(items)))
+    heavily skewed (head-term queries cost 10-100x tail ones).
+
+    ``sized_by_work``: also at most one bin per TASK_MIN_COST of total
+    cost, so a batch too light to fill the cores runs in fewer tasks."""
     costs = [sum(term_cost.get(t, 0) for t in {int(t) for t in ts}) + 64
              for ts in term_lists]
+    nparts = partitions or spark.sparkContext.defaultParallelism
+    if sized_by_work:
+        nparts = min(nparts, -(-sum(costs) // TASK_MIN_COST))
+    nparts = max(1, min(nparts, len(items)))
     heap = [(0, b) for b in range(nparts)]
     bins: list[list[tuple]] = [[] for _ in range(nparts)]
     for i in sorted(range(len(items)), key=lambda i: -costs[i]):
@@ -1667,13 +1685,14 @@ def _execute(spark, index, items: list, body, schema,
     streams) in place of cursors, under the same rules.
 
     Runs on ``pin`` (default: the handle's _index_pin, with positions for
-    a ``positions`` body) in LPT bins, one task per bin and one bin per
-    core (``partitions`` bins at most): the fewest tasks that still use
-    every core. A job's fixed cost grows with its task count and
-    dominates small batches (an empty mapInPandas job on a 4-core host:
-    ~0.18 s with 4 tasks, ~0.13 s with 1). A handle over PIN_BUDGET_BYTES
-    has no pin and takes the one shuffle fallback (_shuffle_execute); the
-    two differ only in how the parts arrive."""
+    a ``positions`` body) in LPT bins, one task per bin: one bin per core
+    (``partitions`` bins at most), but no more bins than TASK_MIN_COST
+    postings of work each can fill. A job's fixed cost grows with its
+    task count and dominates small batches (an empty mapInPandas job on a
+    4-core host: ~0.13 s with 4 tasks, ~0.08 s with 1), so a light call
+    runs as one task and a heavy batch still uses every core. A handle
+    over PIN_BUDGET_BYTES has no pin and takes the one shuffle fallback
+    (_shuffle_execute); the two differ only in how the parts arrive."""
     if pin is None:
         pin = _index_pin(spark, index, positions)
         if pin is None:
@@ -1894,7 +1913,8 @@ class BroadcastQueryServer:
               doc_filter: "DocMask | None" = None) -> DataFrame:
         """One batch against the pinned segments (_execute: LPT bins,
         one task per bin, ``partitions`` bins at most — default
-        defaultParallelism). Only the query term ids move; kernels run
+        defaultParallelism — and at most one per TASK_MIN_COST postings
+        of work). Only the query term ids move; kernels run
         executor-side against the broadcast. ``doc_filter``: optional
         DocMask applied batch-wide (filtered search with corpus-wide
         statistics); combined with the pin-time tombstones and broadcast
@@ -2023,7 +2043,8 @@ def query_latency_stats(spark: SparkSession, index, queries: list,
     folded = [_fold_query(q) for q in queries]
     bins = _lpt_bins(spark, folded, [t for t, _ in folded],
                      srv.pin.term_cost,
-                     spark.sparkContext.defaultParallelism * 4)
+                     spark.sparkContext.defaultParallelism * 4,
+                     sized_by_work=False)
     samples = _map_bins(spark, bins, work, LATENCY_SCHEMA).toPandas()
     us = np.sort(samples["usecs"].to_numpy())
     return {

@@ -7,9 +7,52 @@ parallelism).
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
+
+# Python workers talk to their JVM over Unix domain sockets on masters
+# whose executors all share the driver's host (worker_transport_conf).
+# A socket path is capped at 107 bytes, and Spark names its sockets
+# "<dir>/.<uuid4>.sock" (43 bytes past the directory), so the directory
+# sits under this short fixed base rather than under TMPDIR or
+# java.io.tmpdir, whose length is the caller's.
+SOCKET_BASE = "/tmp"
+
+
+def make_socket_dir() -> str:
+    """A new private (mode 0700) directory for worker sockets under
+    SOCKET_BASE, removed at interpreter exit. A Unix socket carries no
+    secret, unlike Spark's TCP worker transport, so the directory's
+    permissions are what keep other users' processes off it."""
+    path = tempfile.mkdtemp(prefix="dint-", dir=SOCKET_BASE)
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
+
+
+@functools.cache
+def _worker_socket_dir() -> str:
+    """The process's one socket directory, made on first use."""
+    return make_socket_dir()
+
+
+def worker_transport_conf(master: str) -> dict:
+    """Python workers on Unix domain sockets where every executor shares
+    the driver's host: local and local-cluster masters. Over loopback TCP
+    a task stalled ~33 ms (of 53 ms in pyspark's worker main, profiled in
+    the daemon on a 4-core host) in pyarrow.ipc.open_stream, waiting for
+    the input batch's schema: the Nagle/delayed-ACK pattern. Over a Unix
+    socket that wait is 0.5 ms, and an empty 1-task mapInPandas job takes
+    ~80 ms instead of ~110. Other masters keep Spark's authenticated TCP
+    ({}): a directory made on the driver does not exist on another host."""
+    if master == "local" or master.startswith(("local[", "local-cluster[")):
+        return {"spark.python.unix.domain.socket.enabled": "true",
+                "spark.python.unix.domain.socket.dir": _worker_socket_dir()}
+    return {}
 
 
 def get_spark(
@@ -103,7 +146,8 @@ def get_spark(
         .config("spark.driver.maxResultSize", "2g")
         .config("spark.ui.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**worker_transport_conf(master),
+                 **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

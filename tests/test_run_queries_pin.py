@@ -12,6 +12,8 @@ from __future__ import annotations
 
 import shutil
 import threading
+import time
+import uuid
 
 import numpy as np
 import pytest
@@ -480,3 +482,51 @@ def test_one_segment_pin_per_positional_handle(spark, pos_built,
     assert first == _rows(run_queries(spark, load_index(spark, d), queries))
     assert phrase == _all_rows(run_phrase_queries(
         spark, load_index(spark, d), phrases))
+
+
+def _job_shape(spark, run):
+    """run()'s result and the (jobs, tasks) of the Spark jobs it ran."""
+    sc = spark.sparkContext
+    group = f"shape-{uuid.uuid4()}"
+    sc.setJobGroup(group, group)
+    try:
+        out = run()
+    finally:
+        sc._jsc.clearJobGroup()
+    st = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    while True:  # the status store fills from an asynchronous listener
+        jobs = [st.getJobInfo(j) for j in st.getJobIdsForGroup(group)]
+        if (jobs and all(j is not None and j.status == "SUCCEEDED"
+                         for j in jobs)) or time.monotonic() > deadline:
+            break
+        time.sleep(0.05)
+    tasks = sum(st.getStageInfo(s).numTasks for j in jobs
+                for s in j.stageIds)
+    return out, len(jobs), tasks
+
+
+def test_task_count_sized_by_work(spark, built, monkeypatch):
+    """A light 16-query call runs as one job of one task. A batch whose
+    LPT cost exceeds 4 x TASK_MIN_COST runs one task per core, up to 4,
+    and serve's partitions=2 still caps it at 2. All three return the
+    same rows."""
+    _, idx, queries, _ = built
+    qs = queries[:16]
+    srv = Q.BroadcastQueryServer(spark, idx)
+    _rows(run_queries(spark, idx, qs))  # pins built outside the count
+    light, jobs, tasks = _job_shape(
+        spark, lambda: _rows(run_queries(spark, idx, qs)))
+    assert (jobs, tasks) == (1, 1)
+    pin = Q._index_pin(spark, idx)
+    cost = sum(sum(pin.term_cost.get(t, 0) for t in set(q)) + 64
+               for q in qs)
+    assert cost < Q.TASK_MIN_COST
+    monkeypatch.setattr(Q, "TASK_MIN_COST", cost // 5)
+    heavy, jobs, tasks = _job_shape(
+        spark, lambda: _rows(run_queries(spark, idx, qs)))
+    assert (jobs, tasks) == (1, min(4, spark.sparkContext.defaultParallelism))
+    capped, jobs, tasks = _job_shape(
+        spark, lambda: _rows(srv.serve(qs, partitions=2)))
+    assert (jobs, tasks) == (1, 2)
+    assert light and light == heavy == capped
