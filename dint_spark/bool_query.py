@@ -43,9 +43,10 @@ from dint_spark.queries import (
     _call_stats,
     _compacted_scores,
     _execute,
-    _fold_query,
+    _fold_queries,
     _live_bc,
     _quantized_order,
+    _term_weights,
     _value,
 )
 
@@ -110,9 +111,11 @@ def run_bool_queries(
             return None
         pos_lists, must_lists, should_lists, neg_docs = [], [], [], []
         for c in cursors:  # term_id asc — canonical accumulation order
-            docs, freqs = c.decode_all()
             if c.term_id in must or c.term_id in should:
-                pos_lists.append((c, docs, freqs))
+                docs, w, _ = _term_weights(c, norm_bc.value, DT)
+                pos_lists.append((c.q_weight, docs, w))
+            else:
+                docs = c.decode_all()[0]
             # a term in BOTH clauses counts toward both (ES: each clause
             # it appears in is satisfied by the same match)
             if c.term_id in must:
@@ -124,8 +127,7 @@ def run_bool_queries(
         if not pos_lists:
             return None
         live = _value(live_bc)
-        union, scores = _compacted_scores(pos_lists, norm_bc.value, DT,
-                                          live)
+        union, scores = _compacted_scores(pos_lists, DT, live)
         # vectorized clause counts over the sorted union
         mc = np.zeros(len(union), dtype=np.int32)
         for d in must_lists:
@@ -186,14 +188,13 @@ def run_boosting_queries(
         pos_lists, neg_docs = [], []
         for c in cursors:
             if c.term_id in pos:
-                docs, freqs = c.decode_all()
-                pos_lists.append((c, docs, freqs))
+                docs, w, _ = _term_weights(c, norm_bc.value, DT)
+                pos_lists.append((c.q_weight, docs, w))
             if c.term_id in neg:
                 neg_docs.append(c.decode_all()[0])
         if not pos_lists:
             return None
-        union, scores = _compacted_scores(pos_lists, norm_bc.value, DT,
-                                          _value(live_bc))
+        union, scores = _compacted_scores(pos_lists, DT, _value(live_bc))
         mult = np.ones(len(union), dtype=np.float64)
         if neg_docs:
             mult[np.isin(union, np.concatenate(neg_docs))] = nb
@@ -238,9 +239,9 @@ def run_terms_set_queries(
 
     def body(qid, item, cursors):
         live = _value(live_bc)
-        pos_lists = [(c, *c.decode_all()) for c in cursors]
-        union, scores = _compacted_scores(pos_lists, norm_bc.value, DT,
-                                          live)
+        pos_lists = [(c.q_weight, *_term_weights(c, norm_bc.value, DT)[:2])
+                     for c in cursors]
+        union, scores = _compacted_scores(pos_lists, DT, live)
         mc = np.zeros(len(union), dtype=np.int64)
         for _, d, _ in pos_lists:
             if live is not None:
@@ -255,5 +256,5 @@ def run_terms_set_queries(
                 docs[order].astype(np.int64), sq[order])
 
     return _execute(spark, index,
-                    [_fold_query({int(t) for t in ts}) for ts in specs],
+                    _fold_queries([{int(t) for t in ts} for ts in specs]),
                     body, BOOL_SCHEMA, stats, DT)

@@ -8,7 +8,8 @@ contribution; the sum of a doc's contributions reproduces its ranked
 score up to the quantization the ranked surface already exposes. One
 kernel pass: the top-k selection is the same exact compacted scoring
 used by collapse/pagination (queries.matched_scores), and the per-term
-tf lookups are |k| searchsorted probes per list — no second decode, no
+tf lookups are |k| searchsorted probes per list into the decoded and
+weighted lists the worker LRU already holds — no second decode, no
 per-doc Python. Output is |queries| x k x |terms| rows, driver-trivial.
 
 No reference counterpart: fanhualta/dint returns scores only
@@ -22,9 +23,9 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from dint_spark.queries import (DocMask, _call_stats, _execute, _fold_query,
-                                _live_bc, _quantized_order, _value,
-                                matched_scores)
+from dint_spark.queries import (DocMask, _call_stats, _execute, _fold_queries,
+                                _live_bc, _quantized_order, _term_weights,
+                                _value, matched_scores)
 
 EXPLAIN_SCHEMA = T.StructType([
     T.StructField("query_id", T.LongType(), False),
@@ -61,20 +62,17 @@ def run_queries_explain(
         order = _quantized_order(union, sq, k)
         top_docs = union[order].astype(np.int64)
         ranks = np.arange(1, len(order) + 1, dtype=np.int32)
-        nl = np.asarray(norm_bc.value)[top_docs].astype(DT, copy=False)
         out = [[] for _ in range(6)]
         for c in cursors:  # term_id asc
-            docs, freqs = c.decode_all()
+            docs, w, _ = _term_weights(c, norm_bc.value, DT)
+            freqs = c.decode_all()[1]
             pos = np.searchsorted(docs, top_docs)
             pos_c = np.minimum(pos, len(docs) - 1)
             hit = docs[pos_c] == top_docs
             if not hit.any():
                 continue
-            f = freqs[pos_c[hit]].astype(DT)
-            dtw = f / (f + DT(1.2) * (DT(1.0) - DT(0.5)
-                                      + DT(0.5) * nl[hit]))
             contrib = np.floor(
-                (c.q_weight * dtw).astype(np.float64) * quant
+                (c.q_weight * w[pos_c[hit]]).astype(np.float64) * quant
             ).astype(np.int64)
             nhit = int(hit.sum())
             for col, v in zip(out, (
@@ -85,5 +83,5 @@ def run_queries_explain(
                 col.append(v)
         return [np.concatenate(col) for col in out] if out[0] else None
 
-    return _execute(spark, index, [_fold_query(q) for q in queries], body,
+    return _execute(spark, index, _fold_queries(queries), body,
                     EXPLAIN_SCHEMA, stats, DT, merge_chunks=True)

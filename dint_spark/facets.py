@@ -31,7 +31,7 @@ from pyspark.sql import types as T
 
 from dint_spark.queries import (
     DocMask,
-    _fold_query,
+    _fold_queries,
     _match_op,
     _quantized_order,
     _scored_op,
@@ -83,7 +83,8 @@ def build_doc_facets(spark: SparkSession, docs: DataFrame, num_docs: int,
     DISTRIBUTED dense rank over the distinct values (ids.add_dense_index
     — range-partitioned sort, no driver collect, no single-partition
     window), persisted as a parquet dim sidecar (facet_ord, facet) at
-    ``dim_path`` (a fresh temp dir when omitted). The per-doc ordinal
+    ``dim_path`` (when omitted, a fresh directory that Spark removes
+    with the session). The per-doc ordinal
     join runs against that sidecar as a plain hash join — AQE broadcasts
     it when it is dimension-small, and a 10^8-value domain facet stays a
     shuffle join instead of an OOM. Each executor then packs its
@@ -96,7 +97,14 @@ def build_doc_facets(spark: SparkSession, docs: DataFrame, num_docs: int,
 
     if dim_path is None:
         import tempfile
-        dim_path = tempfile.mkdtemp(prefix="dint_facet_dim_")
+
+        from pyspark import SparkFiles
+
+        # under the driver's SparkFiles root, which Spark deletes when the
+        # SparkContext stops or its JVM exits: the sidecar lives exactly
+        # as long as the session whose DataFrames read it
+        dim_path = tempfile.mkdtemp(prefix="dint_facet_dim_",
+                                    dir=SparkFiles.getRootDirectory())
     distinct = (docs.select(F.col(facet_col).cast("string").alias("facet"))
                 .where(F.col("facet").isNotNull()).distinct())
     (add_dense_index(distinct, [F.col("facet").asc()], "facet_ord")
@@ -178,7 +186,7 @@ def run_facet_queries(
         nz = np.flatnonzero(counts)
         return nz.astype(np.int64), counts[nz].astype(np.int64)
 
-    out = _match_op(spark, index, [_fold_query(q) for q in queries], mode,
+    out = _match_op(spark, index, _fold_queries(queries), mode,
                     doc_filter, per_query, FACET_SCHEMA)
     # parquet-sidecar dim join (never a driver value list); AQE
     # broadcasts the dimension-small case
@@ -291,7 +299,7 @@ def run_collapsed_queries(
         return (np.arange(1, len(gorder) + 1, dtype=np.int32),
                 ords[gorder], docs[gorder], sq[gorder])
 
-    out = _scored_op(spark, index, [_fold_query(q) for q in queries], dtype,
+    out = _scored_op(spark, index, _fold_queries(queries), dtype,
                      doc_filter, per_query, COLLAPSE_SCHEMA)
     # left join on the parquet-sidecar dim: the missing-value group
     # (ordinal == num_values) has no dimension row and surfaces as facet
@@ -370,7 +378,7 @@ def run_grouped_topk(
         return (granks[out_order], (cum[out_order] + 1).astype(np.int32),
                 g[out_order], docs[rows[out_order]], sq[rows[out_order]])
 
-    out = _scored_op(spark, index, [_fold_query(q) for q in queries], dtype,
+    out = _scored_op(spark, index, _fold_queries(queries), dtype,
                      doc_filter, per_query, GROUPED_SCHEMA)
     return (out.join(facets.dim(), "facet_ord", "left")
             .select("query_id", "rank", "group_rank", "facet", "doc_id",
@@ -420,7 +428,7 @@ def run_range_facet_queries(
         return (nz.astype(np.int32), edges_arr[nz], edges_arr[nz + 1],
                 counts[nz].astype(np.int64))
 
-    return _match_op(spark, index, [_fold_query(q) for q in queries], mode,
+    return _match_op(spark, index, _fold_queries(queries), mode,
                      doc_filter, per_query, RANGE_FACET_SCHEMA)
 
 
@@ -474,7 +482,7 @@ def run_stats_queries(
             row.append([int((v * v).sum()) if len(v) else 0])
         return row
 
-    return _match_op(spark, index, [_fold_query(q) for q in queries], mode,
+    return _match_op(spark, index, _fold_queries(queries), mode,
                      doc_filter, per_query, out_schema)
 
 
@@ -505,7 +513,7 @@ def run_cardinality_queries(
         v = vals_bc.value[docs]
         return [len(docs)], [len(np.unique(v[v != _DV_MISSING]))]
 
-    return _match_op(spark, index, [_fold_query(q) for q in queries], mode,
+    return _match_op(spark, index, _fold_queries(queries), mode,
                      doc_filter, per_query, CARD_SCHEMA)
 
 
@@ -564,7 +572,7 @@ def run_percentile_queries(
         # nearest-rank: the value at 1-based rank ceil(p/100 * n)
         return [[n]] + [[int(v[-(-p * n // 100) - 1])] for p in ps]
 
-    return _match_op(spark, index, [_fold_query(q) for q in queries], mode,
+    return _match_op(spark, index, _fold_queries(queries), mode,
                      doc_filter, per_query, schema)
 
 
@@ -686,7 +694,7 @@ def _function_score_queries(
         return (np.arange(1, len(order) + 1, dtype=np.int32),
                 docs[order].astype(np.int64), sq[order])
 
-    return _scored_op(spark, index, [_fold_query(q) for q in queries], dtype,
+    return _scored_op(spark, index, _fold_queries(queries), dtype,
                       doc_filter, per_query, BOOSTED_SCHEMA)
 
 
@@ -729,7 +737,7 @@ def run_sorted_queries(
         return (np.arange(1, len(order) + 1, dtype=np.int32), docs[order],
                 v[order])
 
-    return _match_op(spark, index, [_fold_query(q) for q in queries], mode,
+    return _match_op(spark, index, _fold_queries(queries), mode,
                      doc_filter, per_query, SORTED_SCHEMA)
 
 

@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from dint_spark.facets import _DV_MISSING
-from dint_spark.queries import (DocMask, _fold_query, _quantized_order,
+from dint_spark.queries import (DocMask, _fold_queries, _quantized_order,
                                 _scored_op)
 
 NESTED_SCHEMA = T.StructType([
@@ -110,7 +110,7 @@ def run_nested_queries(
         return (np.arange(1, len(order) + 1, dtype=np.int32), upar[order],
                 rolled[order], n_ch[order])
 
-    return _scored_op(spark, index, [_fold_query(q) for q in queries], dtype,
+    return _scored_op(spark, index, _fold_queries(queries), dtype,
                       doc_filter, per_query, NESTED_SCHEMA)
 
 

@@ -32,7 +32,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from dint_spark.queries import (DocMask, _fold_query, _quantized_order,
+from dint_spark.queries import (DocMask, _fold_queries, _quantized_order,
                                 _scored_op)
 
 PAGE_SCHEMA = T.StructType([
@@ -63,8 +63,8 @@ def run_queries_after(
     after = list(after or [])
     after += [None] * (len(queries) - len(after))
     # each query's cursor rides in its item
-    items = [(*_fold_query(q), (int(c[0]), int(c[1])) if c is not None
-              else None) for q, c in zip(queries, after)]
+    items = [(*f, (int(c[0]), int(c[1])) if c is not None else None)
+             for f, c in zip(_fold_queries(queries), after)]
 
     def per_query(item, docs, scores):
         sq = np.floor(scores.astype(np.float64) * quant).astype(np.int64)

@@ -41,18 +41,22 @@ hands the same body the same input.
 
 from __future__ import annotations
 
+import hashlib
 import heapq
 import itertools
 import os
 import threading
+import weakref
 from collections import OrderedDict
 from typing import Iterator, NamedTuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from dint_spark.bm25 import BM25
 from dint_spark.dint.codec import (BLOCK_SIZE, decode_posting_blocks,
@@ -62,47 +66,75 @@ from dint_spark.dint.codec import (BLOCK_SIZE, decode_posting_blocks,
 class Cursor:
     """Enumerator over one compressed posting list. Blocks decode only when
     the scalar walk (docid/next/next_geq/move/freq) reaches them: the vec
-    kernels read the list through the block-max arrays and get_span, so a
+    kernels read the list through the worker LRU (_list_entry), so a
     cursor they never walk decodes nothing."""
 
     __slots__ = (
         "n", "block_maxs", "endpoints", "freq_offsets", "payload", "universe",
         "docs_dict", "freqs_dict",
         "nblocks", "cur_block", "pos", "docids", "freqs", "cur_docid",
-        "q_weight", "max_weight", "block_max_scores", "term_id", "bound_scale",
-        "_ckey", "_blk",
+        "q_weight", "block_max_scores", "term_id", "bound_scale",
+        "_part_max", "_max_weight", "_ckey", "_blk",
     )
 
     def __init__(self, n, block_maxs, endpoints, freq_offsets, payload,
                  universe, docs_dict, freqs_dict, block_max_scores=None,
                  term_id=-1):
-        self.n = int(n)
-        self.block_maxs = np.asarray(block_maxs, dtype=np.int64)
-        self.endpoints = np.asarray(endpoints, dtype=np.int64)
-        self.freq_offsets = np.asarray(freq_offsets, dtype=np.int64)
-        self.payload = bytes(payload)
-        self.universe = int(universe)
-        self.docs_dict = docs_dict
-        self.freqs_dict = freqs_dict
-        self.nblocks = len(self.block_maxs)
-        self.block_max_scores = (
-            np.asarray(block_max_scores, dtype=np.float32)
-            if block_max_scores is not None else None
-        )
-        self.term_id = term_id
+        self._set(int(n), np.asarray(block_maxs, dtype=np.int64),
+                  np.asarray(endpoints, dtype=np.int64),
+                  np.asarray(freq_offsets, dtype=np.int64), bytes(payload),
+                  (np.asarray(block_max_scores, dtype=np.float32)
+                   if block_max_scores is not None else None),
+                  int(universe), docs_dict, freqs_dict, term_id)
         self.q_weight = np.float32(0)
-        self.max_weight = np.float32(0)
+        self._max_weight = np.float32(0)
         # >1 only in float64 scoring mode: the stored per-block maxima are
         # float32, so a tiny inflation keeps them valid upper bounds for
         # float64-computed scores (never causes false exclusion, only
         # marginally less pruning)
         self.bound_scale = np.float32(1.0)
+
+    @classmethod
+    def _of_part(cls, part, term_id: int, universe: int, dd, fd,
+                 dict_tokens: tuple, q_weight, bound_scale) -> "Cursor":
+        """The cursor of one _seg_map part: its fields are already typed,
+        so nothing converts or copies; ``dict_tokens`` are dd's and fd's
+        _dict_token, the tail of its cache key; max_weight computes on
+        first read (only WAND and maxscore read it)."""
+        c = cls.__new__(cls)
+        c._set(part[1], part[2], part[4], part[5], part[6], part[3],
+               universe, dd, fd, term_id)
+        c._ckey = (term_id, part[1], len(part[6]), hash(part[6]),
+                   *dict_tokens)
+        c.q_weight, c.bound_scale = q_weight, bound_scale
+        c._part_max, c._max_weight = part[7], None
+        return c
+
+    def _set(self, n, block_maxs, endpoints, freq_offsets, payload,
+             block_max_scores, universe, docs_dict, freqs_dict, term_id):
+        self.n, self.block_maxs, self.endpoints = n, block_maxs, endpoints
+        self.freq_offsets, self.payload = freq_offsets, payload
+        self.block_max_scores, self.universe = block_max_scores, universe
+        self.docs_dict, self.freqs_dict = docs_dict, freqs_dict
+        self.term_id, self.nblocks = term_id, len(block_maxs)
         self._ckey = self._blk = None
         # not yet walked: no block decoded, cur_docid below every docid
-        self.cur_block = -1
-        self.pos = 0
+        self.cur_block, self.pos, self.cur_docid = -1, 0, -1
         self.docids = self.freqs = None
-        self.cur_docid = -1
+
+    @property
+    def max_weight(self):
+        """Upper bound of the list's score contribution: the stored part
+        maximum times q_weight and bound_scale."""
+        if self._max_weight is None:
+            DT = type(self.q_weight)
+            self._max_weight = DT(self.q_weight * DT(self._part_max)
+                                  * self.bound_scale)
+        return self._max_weight
+
+    @max_weight.setter
+    def max_weight(self, value) -> None:
+        self._max_weight = value
 
     def block_table(self, blocks=None) -> tuple[bytes, np.ndarray]:
         """codec.posting_blocks of ``blocks`` (None: every block): built
@@ -250,11 +282,21 @@ class ArrayCursor:
 # dictionaries (found by the 4-shard gate: two shards' single-codeword
 # lists for one term aliased and cross-served each other's postings).
 # The payload hash alone still separates rebuilt indexes and freq-variant
-# lists. Bounded so a 1000-executor deployment holds just its hot set per
-# worker.
+# lists. Each entry (_Decoded) also holds the list's BM25 document-term
+# weights per (norm array content, dtype) and its best block's docs, the
+# query-independent half of every ranked kernel's work. Bounded in bytes
+# (docs + freqs + every weight array) so a 1000-executor deployment holds
+# just its hot set per worker.
+#
+# Every reader reaches these caches through module-level functions. A
+# closure that Spark ships (the bodies and work functions of _execute)
+# is pickled by value together with a copy of the module globals it
+# names, so a cache named inside one would be a fresh, empty copy per
+# task that nothing else reads.
 _LIST_CACHE: OrderedDict = OrderedDict()
 _LIST_CACHE_BYTES = 0
 _LIST_CACHE_CAP = int(os.environ.get("DINT_SPARK_DECODE_CACHE_MB", "256")) * 2**20
+_LIST_CACHE_HITS = 0  # lookups served from the LRU, for tests and probes
 
 # Dense-accumulator scoring ceiling: exhaustive kernels switch from the
 # candidate-compaction path (np.unique + per-list searchsorted, O(P log P))
@@ -445,21 +487,107 @@ def _cache_key(c: "Cursor") -> tuple:
     return c._ckey
 
 
-def _cached_full_decode(c: "Cursor") -> tuple[np.ndarray, np.ndarray]:
+class _Decoded:
+    """One _LIST_CACHE entry: a list's decoded docs and freqs, the docs of
+    its best block (by stored block_max_score; None until first asked),
+    and its BM25 weights per (norm token, dtype). ``nbytes`` is what the
+    entry charges against _LIST_CACHE_CAP."""
+
+    __slots__ = ("docs", "freqs", "best", "weights", "nbytes")
+
+    def __init__(self, docs: np.ndarray, freqs: np.ndarray):
+        self.docs, self.freqs, self.best = docs, freqs, None
+        self.weights: dict = {}
+        self.nbytes = docs.nbytes + freqs.nbytes
+
+
+def _charge(nbytes: int) -> None:
+    """Add ``nbytes`` to the LRU's total, then evict least recently used
+    entries until it fits _LIST_CACHE_CAP."""
     global _LIST_CACHE_BYTES
-    key = _cache_key(c)
-    hit = _LIST_CACHE.get(key)
-    if hit is not None:
-        _LIST_CACHE.move_to_end(key)
-        return hit
-    docs, freqs = decode_posting_blocks(*c.block_table(), c.docs_dict,
-                                        c.freqs_dict)
-    _LIST_CACHE[key] = (docs, freqs)
-    _LIST_CACHE_BYTES += docs.nbytes + freqs.nbytes
+    _LIST_CACHE_BYTES += nbytes
     while _LIST_CACHE_BYTES > _LIST_CACHE_CAP and _LIST_CACHE:
-        _, (d, f) = _LIST_CACHE.popitem(last=False)
-        _LIST_CACHE_BYTES -= d.nbytes + f.nbytes
-    return docs, freqs
+        _LIST_CACHE_BYTES -= _LIST_CACHE.popitem(last=False)[1].nbytes
+
+
+def _list_entry(c: "Cursor", decode: bool = True) -> "_Decoded | None":
+    """Cursor ``c``'s _LIST_CACHE entry, decoding the full list on a miss
+    (with ``decode=False`` a miss returns None)."""
+    global _LIST_CACHE_HITS
+    key = _cache_key(c)
+    e = _LIST_CACHE.get(key)
+    if e is not None:
+        _LIST_CACHE.move_to_end(key)
+        _LIST_CACHE_HITS += 1
+        return e
+    if not decode:
+        return None
+    e = _LIST_CACHE[key] = _Decoded(*decode_posting_blocks(
+        *c.block_table(), c.docs_dict, c.freqs_dict))
+    _charge(e.nbytes)
+    return e
+
+
+def _cached_full_decode(c: "Cursor") -> tuple[np.ndarray, np.ndarray]:
+    e = _list_entry(c)
+    return e.docs, e.freqs
+
+
+def _tf_weights(freqs: np.ndarray, norm_lens: np.ndarray, DT) -> np.ndarray:
+    """BM25 document-term weights f / (f + k1(1 - b + b*nl)), k1 = 1.2 and
+    b = 0.5, elementwise over aligned ``freqs`` and ``norm_lens``: the
+    operation sequence of the scalar kernels' _dtw, so q_weight times a
+    weight is the same float in every kernel."""
+    f = freqs.astype(DT)
+    return f / (f + DT(1.2) * (DT(1.0) - DT(0.5)
+                               + DT(0.5) * norm_lens.astype(DT, copy=False)))
+
+
+# id(norm array) -> (weakref to it, content token): each norm array's
+# bytes hash once per worker, and the weakref's callback drops the memo
+# entry with the array, so a recycled id() never reads a stale token
+_NORM_TOKENS: dict = {}
+
+
+def _norm_token(nl: np.ndarray) -> tuple:
+    """Content token of norm array ``nl`` (dtype, length, 128-bit
+    digest): the norm half of a weight key. avg_len overrides and
+    appended-shard statistics hand one worker several norm arrays for the
+    same list, and equal arrays from different broadcasts share weights."""
+    i = id(nl)
+    hit = _NORM_TOKENS.get(i)
+    if hit is not None and hit[0]() is nl:
+        return hit[1]
+    tok = (nl.dtype.str, len(nl), hashlib.blake2b(
+        np.ascontiguousarray(nl), digest_size=16).digest())
+    _NORM_TOKENS[i] = (
+        weakref.ref(nl, lambda _, i=i: _NORM_TOKENS.pop(i, None)), tok)
+    return tok
+
+
+def _term_weights(c, norm_lens, DT) -> tuple:
+    """(docs, BM25 document-term weights under ``norm_lens``, best-block
+    docs or None) of cursor ``c``'s full list: the one place a ranked
+    kernel gets per-posting weights. A Cursor's weights are cached in its
+    _LIST_CACHE entry under the norm array's content token and DT, next
+    to the docs of its best block by stored block_max_score (the exactly
+    scored set behind block_max_wand_vec's floor). A merged ArrayCursor
+    (a chunked term under an intersection kernel) computes its weights."""
+    nl = np.asarray(norm_lens)
+    if isinstance(c, ArrayCursor):
+        return c.docs, _tf_weights(c.frs, nl[c.docs], DT), None
+    e = _list_entry(c)
+    wkey = (_norm_token(nl), DT)
+    w = e.weights.get(wkey)
+    if w is None:
+        w = e.weights[wkey] = _tf_weights(e.freqs, nl[e.docs], DT)
+        if _LIST_CACHE.get(_cache_key(c)) is e:  # still cached: charge it
+            e.nbytes += w.nbytes
+            _charge(w.nbytes)
+    if e.best is None and c.block_max_scores is not None:
+        b = int(np.argmax(c.block_max_scores)) * BLOCK_SIZE
+        e.best = e.docs[b:b + BLOCK_SIZE]
+    return e.docs, w, e.best
 
 
 class TopK:
@@ -499,9 +627,23 @@ def _dtw(freq: int, norm_len, DT):
     return f / (f + DT(1.2) * (DT(1.0) - DT(0.5) + DT(0.5) * norm_len))
 
 
-def _qtw(qf: int, df: int, num_docs: int, DT):
-    idf = np.log(DT((DT(num_docs) - DT(df) + DT(0.5)) / (DT(df) + DT(0.5))))
-    return DT(qf) * max(DT(1.0e-6), DT(idf)) * (DT(1.0) + DT(1.2))
+_QTW: dict = {}  # (qf, df, N, DT) -> query-term weight, per worker
+
+
+def _qtw(qf, df: int, num_docs: int, DT):
+    """BM25 query-term weight qf * max(1e-6, idf) * (1 + k1), memoized per
+    (qf, df, N, DT): numpy scalar math costs ~10 us a call, and head terms
+    repeat across a batch's queries."""
+    key = (qf, df, num_docs, DT)
+    w = _QTW.get(key)
+    if w is None:
+        if len(_QTW) >= 1 << 16:  # weighted (float qf) queries: stay bounded
+            _QTW.clear()
+        idf = np.log(DT((DT(num_docs) - DT(df) + DT(0.5))
+                        / (DT(df) + DT(0.5))))
+        w = _QTW[key] = DT(qf) * max(DT(1.0e-6), DT(idf)) * (DT(1.0)
+                                                              + DT(1.2))
+    return w
 
 
 # ---------------------------------------------------------------------------
@@ -533,17 +675,19 @@ def ranked_or(cursors, norm_lens, num_docs: int, k: int, DT=np.float32,
     return q.finalize()
 
 
-def _dense_topk(lists, norm_lens, num_docs: int, k: int, DT,
-                floor_docs=None, live=None):
+def _dense_topk(lists, num_docs: int, k: int, DT, floor_sets=(),
+                live=None):
     """Exhaustive BM25 top-k via a docid-indexed accumulator.
 
-    ``lists`` is (q_weight, docs, freqs) per cursor in term_id order — the
-    canonical accumulation order. Each list adds its per-posting float
-    contribution with one fancy-index scatter (docids are unique within a
-    list, so ``acc[docs] += x`` is a plain unbuffered add); a doc matched
-    by several lists receives its adds in exactly the same IEEE sequence
-    as the candidate-compaction path (which adds an exact 0 for unmatched
-    docs — a no-op on non-negative f32), so scores are bit-identical.
+    ``lists`` is (q_weight, docs, weights) per cursor in term_id order
+    (_term_weights) — the canonical accumulation order. Each list adds its
+    per-posting float contribution q_weight * weight with one fancy-index
+    scatter (docids are unique within a list, so ``acc[docs] += x`` is a
+    plain unbuffered add; the first list assigns, as 0 + x == x); a doc
+    matched by several lists receives its adds in exactly the same IEEE
+    sequence as the candidate-compaction path (which adds an exact 0 for
+    unmatched docs — a no-op on non-negative f32), so scores are
+    bit-identical.
     Top-k selection: k-th-value partition, then doc-asc lexsort of the
     >=t ties only — identical (doc_id, score) rows to a full lexsort.
 
@@ -552,13 +696,11 @@ def _dense_topk(lists, norm_lens, num_docs: int, k: int, DT,
     _DENSE_SCORE_MAX_DOCS — docid sharding bounds num_docs per shard).
     """
     acc = np.zeros(num_docs, dtype=DT)
-    K1 = DT(1.2)
-    NORM = DT(1.0) - DT(0.5)  # 1 - b
-    nl = np.asarray(norm_lens)
-    for qw, docs, freqs in lists:
-        f = freqs.astype(DT)
-        dtw = f / (f + K1 * (NORM + DT(0.5) * nl[docs].astype(DT, copy=False)))
-        acc[docs] += qw * dtw
+    for i, (qw, docs, w) in enumerate(lists):
+        if i:
+            acc[docs] += qw * w
+        else:
+            acc[docs] = qw * w
     # excluded docs (tombstones and/or DocMask filter): zero their slots so
     # selection can't pick them; live docs' accumulated scores are
     # untouched. Tombstones expose the excluded ids (O(|deleted|) zeroing);
@@ -571,18 +713,20 @@ def _dense_topk(lists, norm_lens, num_docs: int, k: int, DT,
                 acc[excl] = DT(0)
         else:
             acc[~live.mask] = DT(0)
-    # ``floor_docs``: distinct docs whose accumulated (exact) scores
-    # certify a floor, since the k-th best of any k docs' scores is <= the
-    # k-th best overall. A mask scan at the floor replaces the
-    # O(num_docs) introselect partition.
-    cand = None
-    if floor_docs is not None and len(floor_docs) >= k:
-        fv = acc[floor_docs]
-        floor = np.partition(fv, len(fv) - k)[len(fv) - k]
-        if floor > 0:
-            cand = np.flatnonzero(acc >= floor)
-            if len(cand) < k:  # unreachable for distinct docs; stay safe
-                cand = None
+    # ``floor_sets``: arrays of distinct docs whose accumulated (exact)
+    # scores certify a floor, since the k-th best of any k docs' scores
+    # is <= the k-th best overall; the best such floor is the max over the
+    # sets (no union and unique needed). A mask scan at the floor
+    # replaces the O(num_docs) introselect partition.
+    cand, floor = None, DT(0)
+    for fd in floor_sets:
+        if fd is not None and len(fd) >= k:
+            fv = acc[fd]
+            floor = max(floor, np.partition(fv, len(fv) - k)[len(fv) - k])
+    if floor > 0:
+        cand = np.flatnonzero(acc >= floor)
+        if len(cand) < k:  # unreachable for distinct docs; stay safe
+            cand = None
     if cand is None:
         # matched docs score strictly > 0 (q_weight is idf-floored
         # positive, dtw = f/(f+denom) with f >= 1 and finite denom — no
@@ -603,7 +747,7 @@ def _dense_topk(lists, norm_lens, num_docs: int, k: int, DT,
         sel = vals >= t
         cand, vals = cand[sel], vals[sel]
     order = np.lexsort((cand, -vals))[:k]
-    return [(int(cand[i]), float(vals[i])) for i in order]
+    return list(zip(cand[order].tolist(), vals[order].tolist()))
 
 
 def ranked_or_vec(cursors, norm_lens, num_docs: int, k: int, DT=np.float32,
@@ -621,43 +765,49 @@ def ranked_or_vec(cursors, norm_lens, num_docs: int, k: int, DT=np.float32,
     """
     if not cursors:
         return []
-    lists = []
-    for c in cursors:  # arrive sorted by term_id (_cursors)
-        docs, freqs = c.decode_all()
-        lists.append((c, docs, freqs))
+    # cursors arrive sorted by term_id (_cursors)
+    lists = [(c.q_weight, *_term_weights(c, norm_lens, DT)[:2])
+             for c in cursors]
     if num_docs <= _DENSE_SCORE_MAX_DOCS:
-        return _dense_topk(((c.q_weight, d, f) for c, d, f in lists),
-                           norm_lens, num_docs, k, DT, live=live)
-    union, scores = _compacted_scores(lists, norm_lens, DT, live)
+        return _dense_topk(lists, num_docs, k, DT, live=live)
+    union, scores = _compacted_scores(lists, DT, live)
     order = np.lexsort((union, -scores))[:k]
-    return [(int(union[i]), float(scores[i])) for i in order]
+    return list(zip(union[order].tolist(), scores[order].tolist()))
 
 
-def _compacted_scores(lists, norm_lens, DT, live=None):
+def _compacted_scores(lists, DT, live=None):
     """Exact OR-mode BM25 scores over the compacted match union.
 
-    ``lists`` is (cursor, docs, freqs) in term_id order. Scatters each
-    list's float contribution by searchsorted position into the sorted
-    union of matched docids — accumulation sequence identical to
-    ranked_or's per-doc adds, so scores are bit-equal. No dense
+    ``lists`` is (q_weight, docs, weights) in term_id order
+    (_term_weights). Scatters each list's float contribution by
+    searchsorted position into the sorted union of matched docids —
+    accumulation sequence identical to ranked_or's per-doc adds, so
+    scores are bit-equal. No dense
     num_docs array: memory is O(|match set|), partition-safe at
     10^12-doc scale."""
     if live is not None:
         # tombstoned postings must drop from BOTH the union and each list
         # (live docs' adds are per-doc independent — scores bit-identical)
-        lists = [(c, d[live.mask[d]], f[live.mask[d]]) for c, d, f in lists]
+        lists = [(qw, d[live.mask[d]], w[live.mask[d]]) for qw, d, w in lists]
     union = np.unique(np.concatenate([d for _, d, _ in lists]))
     scores = np.zeros(len(union), dtype=DT)
-    for c, docs, freqs in lists:
-        pos = np.searchsorted(union, docs)
-        nl = np.asarray(norm_lens)[docs].astype(DT, copy=False)
-        f = freqs.astype(DT)
-        dtw = f / (f + DT(1.2) * (DT(1.0) - DT(0.5) + DT(0.5) * nl))
-        scores[pos] += c.q_weight * dtw
+    for qw, docs, w in lists:
+        scores[np.searchsorted(union, docs)] += qw * w
     return union, scores
 
 
 _INDEX_CACHE_LOCK = threading.RLock()  # make() may nest (pin -> dicts)
+_APP_IDS: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+
+
+def _app_id(spark) -> str:
+    """``spark``'s applicationId, read once per SparkContext (each read is
+    two Py4J round trips)."""
+    sc = spark.sparkContext
+    app = _APP_IDS.get(sc)
+    if app is None:
+        app = _APP_IDS[sc] = sc.applicationId
+    return app
 
 
 def _index_cached(spark, index, name: str, make):
@@ -674,7 +824,7 @@ def _index_cached(spark, index, name: str, make):
                 index._bc_cache = cache
             except AttributeError:  # exotic index-like objects: no caching
                 return make()
-        key = (spark.sparkContext.applicationId, name)
+        key = (_app_id(spark), name)
         if key not in cache:
             cache[key] = make()
         return cache[key]
@@ -687,7 +837,7 @@ def _index_cache_peek(spark, index, name: str, pop: bool = False):
     cache = getattr(index, "_bc_cache", None)
     if not cache:
         return None
-    key = (spark.sparkContext.applicationId, name)
+    key = (_app_id(spark), name)
     with _INDEX_CACHE_LOCK:
         return cache.pop(key, None) if pop else cache.get(key)
 
@@ -709,11 +859,10 @@ def matched_scores(cursors, norm_lens, num_docs: int, DT=np.float32,
     for the same dtype (same compacted accumulation)."""
     if not cursors:
         return (np.empty(0, dtype=np.int64), np.empty(0, dtype=DT))
-    lists = []
-    for c in cursors:  # arrive sorted by term_id (_cursors)
-        docs, freqs = c.decode_all()
-        lists.append((c, docs, freqs))
-    union, scores = _compacted_scores(lists, norm_lens, DT, live)
+    # cursors arrive sorted by term_id (_cursors)
+    union, scores = _compacted_scores(
+        [(c.q_weight, *_term_weights(c, norm_lens, DT)[:2]) for c in cursors],
+        DT, live)
     return union.astype(np.int64, copy=False), scores
 
 
@@ -917,15 +1066,16 @@ def block_max_wand_vec(cursors, norm_lens, num_docs: int, k: int,
     Shards up to _DENSE_SCORE_MAX_DOCS score every list densely
     (_dense_topk, ranked_or_vec's accumulator), and the block-max
     metadata certifies the top-k threshold instead of pruning blocks: the
-    docs of each list's best block (by block_max_score, the pruned pass's
-    bootstrap set) hold exact scores in the accumulator, so their k-th
-    best is a floor under the k-th best overall, and a mask scan at that
-    floor replaces the O(num_docs) selection. Block skipping does not pay
-    there: on the generate_pages corpora (10k and 100k docs) the pruned
-    pass's bootstrap theta left more than half of all blocks alive on
-    nearly every query, so it fell back to this same dense pass after
-    paying for its bootstrap and interval grid. Larger shards run the
-    pruned pass (_bmw_pruned), which never materializes O(num_docs) state.
+    docs of each list's best block (by block_max_score, cached with the
+    list's weights) hold exact scores in the accumulator, so the k-th best
+    within any one of them is a floor under the k-th best overall, and a
+    mask scan at the highest such floor replaces the O(num_docs)
+    selection. Block skipping does not pay there: on the generate_pages
+    corpora (10k and 100k docs) the pruned pass's bootstrap theta left
+    more than half of all blocks alive on nearly every query, so it fell
+    back to this same dense pass after paying for its bootstrap and
+    interval grid. Larger shards run the pruned pass (_bmw_pruned), which
+    never materializes O(num_docs) state.
     """
     if not cursors:
         return []
@@ -933,12 +1083,10 @@ def block_max_wand_vec(cursors, norm_lens, num_docs: int, k: int,
         return _bmw_pruned(cursors, norm_lens, num_docs, k, DT, live)
     lists, best = [], []
     for c in cursors:  # arrive sorted by term_id (_cursors)
-        docs, freqs = c.decode_all()
-        lists.append((c.q_weight, docs, freqs))
-        b = int(np.argmax(c.block_max_scores)) * BLOCK_SIZE
-        best.append(docs[b:b + BLOCK_SIZE])
-    return _dense_topk(lists, norm_lens, num_docs, k, DT,
-                       floor_docs=np.unique(np.concatenate(best)), live=live)
+        docs, w, b = _term_weights(c, norm_lens, DT)
+        lists.append((c.q_weight, docs, w))
+        best.append(b)
+    return _dense_topk(lists, num_docs, k, DT, floor_sets=best, live=live)
 
 
 def _bmw_pruned(cursors, norm_lens, num_docs: int, k: int, DT=np.float32,
@@ -995,14 +1143,9 @@ def _bmw_pruned(cursors, norm_lens, num_docs: int, k: int, DT=np.float32,
         """Concatenated (docs, freqs) of `blocks` (sorted), bulk-decoded."""
         c = cursors[ci]
         all_blocks = np.arange(c.nblocks)
-        key = _cache_key(c)
-        hit = _LIST_CACHE.get(key)
+        hit = _list_entry(c, decode=len(blocks) * 2 > c.nblocks)
         if hit is not None:
-            _LIST_CACHE.move_to_end(key)  # LRU order reflects hits
-        elif len(blocks) * 2 > c.nblocks:
-            hit = _cached_full_decode(c)
-        if hit is not None:
-            return _slice_blocks(c, hit[0], hit[1], all_blocks, blocks)
+            return _slice_blocks(c, hit.docs, hit.freqs, all_blocks, blocks)
         sc = span_cache[ci]
         have = sc["blocks"]
         if (have is None or len(np.setdiff1d(blocks, have, assume_unique=True))
@@ -1018,13 +1161,9 @@ def _bmw_pruned(cursors, norm_lens, num_docs: int, k: int, DT=np.float32,
             sc["blocks"], sc["docs"], sc["freqs"] = union, docs, freqs
         return _slice_blocks(c, sc["docs"], sc["freqs"], sc["blocks"], blocks)
 
-    K1 = DT(1.2)
-    NORM = DT(1.0) - DT(0.5)  # 1 - b
-
     def exact_scores(C: np.ndarray) -> np.ndarray:
         scores = np.zeros(len(C), dtype=DT)
-        nlC = nl_arr[C].astype(DT, copy=False)
-        dtw_denom = K1 * (NORM + DT(0.5) * nlC)
+        nlC = nl_arr[C]
         for ci, c in enumerate(cursors):  # term_id order == accumulation order
             blk = np.searchsorted(c.block_maxs, C, side="left")
             valid = blk < c.nblocks
@@ -1037,8 +1176,7 @@ def _bmw_pruned(cursors, norm_lens, num_docs: int, k: int, DT=np.float32,
             idx2 = np.minimum(idx, len(docs) - 1)
             found = docs[idx2] == cm
             contrib = np.zeros(len(C), dtype=DT)
-            f = freqs[idx2].astype(DT)
-            dtw = f / (f + dtw_denom[valid])
+            dtw = _tf_weights(freqs[idx2], nlC[valid], DT)
             contrib[np.flatnonzero(valid)] = np.where(
                 found, c.q_weight * dtw, DT(0))
             scores = scores + contrib  # adding exact 0 keeps f32 bit-identity
@@ -1098,12 +1236,9 @@ def _bmw_pruned(cursors, norm_lens, num_docs: int, k: int, DT=np.float32,
         # order as exact_scores over the candidate union — bit-identical;
         # see _dense_topk) instead of paying unique/searchsorted over a
         # candidate set approaching num_docs.
-        lists = []
-        for ci, c in enumerate(cursors):
-            docs, freqs = get_span(ci, np.arange(c.nblocks), want_freqs=True)
-            lists.append((c.q_weight, docs, freqs))
-        return _dense_topk(lists, nl_arr, num_docs, k, DT, floor_docs=C0,
-                           live=live)
+        return _dense_topk(
+            [(c.q_weight, *_term_weights(c, nl_arr, DT)[:2])
+             for c in cursors], num_docs, k, DT, floor_sets=(C0,), live=live)
     for ci, c in enumerate(cursors):
         if exhaustive:
             docs, _ = get_span(ci, np.arange(c.nblocks), want_freqs=False)
@@ -1121,7 +1256,7 @@ def _bmw_pruned(cursors, norm_lens, num_docs: int, k: int, DT=np.float32,
     allC = np.concatenate([C0, new])
     allS = np.concatenate([s0, s_new])
     order = np.lexsort((allC, -allS))[:k]
-    return [(int(allC[i]), float(allS[i])) for i in order]
+    return list(zip(allC[order].tolist(), allS[order].tolist()))
 
 
 def maxscore(cursors, norm_lens, num_docs: int, k: int, DT=np.float32,
@@ -1266,26 +1401,21 @@ def _cursors(segs: dict, tids, qfs, num_docs: int, dd, fd, DT=np.float32,
     if bound_inflate != 1.0:
         scale = DT(scale * DT(bound_inflate))
     N = int(idf_docs) if idf_docs is not None else num_docs
+    tokens = (_dict_token(dd), _dict_token(fd))
     cursors = []
     for tid, qf in zip(tids, qfs):
         parts = segs.get(tid)
         if parts is None:
             continue
         df_total = (int(df_overrides[tid]) if df_overrides
+                    else parts[0][1] if len(parts) == 1
                     else sum(p[1] for p in parts))
         # qf is an int count for plain queries, a float for weighted
         # (RM3-expanded) ones — DT() of an exact int float is bit-equal
         # to DT() of the int
         qw = _qtw(qf, df_total, N, DT)
-        term_cursors = []
-        for _, n, bmax, bms, endp, foff, payload, mw in (
-                p[:8] for p in parts):  # positions pins carry 2 more
-            c = Cursor(n, bmax, endp, foff, payload, num_docs, dd, fd,
-                       block_max_scores=bms, term_id=tid)
-            c.q_weight = qw
-            c.bound_scale = scale
-            c.max_weight = DT(qw * DT(mw) * scale)
-            term_cursors.append(c)
+        term_cursors = [Cursor._of_part(p, tid, num_docs, dd, fd, tokens,
+                                        qw, scale) for p in parts]
         if merge_chunks and len(term_cursors) > 1:
             dec = [c.decode_all() for c in term_cursors]
             a = ArrayCursor(np.concatenate([d[0] for d in dec]),
@@ -1372,7 +1502,7 @@ def run_queries(
     stats = _call_stats(spark, index, dtype, avg_len_override,
                         df_overrides, idf_docs)
     return _execute(
-        spark, index, [_fold_query(q, weighted) for q in queries],
+        spark, index, _fold_queries(queries, weighted),
         _topk_body(algo, k, DT, index.num_docs, stats.norm_bc,
                    _live_bc(spark, index, doc_filter)),
         TOPK_SCHEMA, stats, DT, merge_chunks=algo == "ranked_and")
@@ -1441,7 +1571,7 @@ def run_queries_lm(
         return (np.arange(1, len(order) + 1, dtype=np.int32), cand[order],
                 scores[order])
 
-    return _execute(spark, index, [_fold_query(q) for q in queries], body,
+    return _execute(spark, index, _fold_queries(queries), body,
                     TOPK_SCHEMA, merge_chunks=True)
 
 
@@ -1451,7 +1581,7 @@ PIN_BUDGET_BYTES = 1 << 29  # segment bytes one executor-side pin may hold
 class _Pin(NamedTuple):
     """Segments pinned executor-side (_seg_map form) and the dictionaries
     their kernels decode with. ``term_cost``: driver-side posting count
-    per pinned term — the LPT cost model, and each term's df.
+    per pinned term (_TermCosts) — the LPT cost model, and each term's df.
     ``pos_dict_bc``: the position dictionary of a pin whose parts carry
     position streams; None on a pin without positions."""
     seg_bc: object
@@ -1460,6 +1590,18 @@ class _Pin(NamedTuple):
     freqs_dict_bc: object
     num_docs: int
     pos_dict_bc: object = None
+
+
+class _TermCosts(dict):
+    """term_id -> posting count of a pin's terms, also held as sorted
+    ``tids`` and aligned ``postings`` arrays for _lpt_bins' batch
+    lookups."""
+
+    def __init__(self, costs: dict):
+        super().__init__(costs)
+        self.tids = np.array(sorted(self), dtype=np.int64)
+        self.postings = np.array([self[t] for t in self.tids.tolist()],
+                                 dtype=np.int64)
 
 
 class _Stats(NamedTuple):
@@ -1480,16 +1622,35 @@ def _value(bc):
     return bc.value if bc is not None else None
 
 
-def _fold_query(query, weighted: bool = False) -> tuple[list, list]:
-    """(term ids asc, qfs) of one query: duplicate ids fold into an int
-    count, or with ``weighted`` ((term_id, weight) items) into the sum of
-    their float weights."""
-    qf: dict = {}
-    for item in query:
-        t, w = (int(item[0]), float(item[1])) if weighted else (int(item), 1)
-        qf[t] = qf.get(t, 0) + w
-    tids = sorted(qf)
-    return tids, [qf[t] for t in tids]
+def _fold_queries(queries, weighted: bool = False) -> list:
+    """(term ids asc, qfs) of each query, on arrays for the whole batch:
+    duplicate ids within a query fold into an int count, or with
+    ``weighted`` ((term_id, weight) items) into the sum of their float
+    weights, added in the query's item order (bincount adds its weights
+    in input order, as a left-to-right Python sum does)."""
+    nq = len(queries)
+    lens = np.fromiter(map(len, queries), dtype=np.int64, count=nq)
+    flat = list(itertools.chain.from_iterable(queries))
+    if weighted:
+        tw = np.array(flat, dtype=np.float64).reshape(-1, 2)
+        terms, ws = tw[:, 0].astype(np.int64), tw[:, 1]
+    else:
+        terms, ws = np.array(flat, dtype=np.int64), None
+    qidx = np.repeat(np.arange(nq), lens)
+    order = np.lexsort((terms, qidx))  # stable: item order within a term
+    q, t = qidx[order], terms[order]
+    new = np.ones(len(order), dtype=bool)
+    new[1:] = (q[1:] != q[:-1]) | (t[1:] != t[:-1])
+    group = np.cumsum(new) - 1
+    qf = (np.bincount(group, weights=ws[order]) if weighted
+          else np.bincount(group))
+    ends = np.cumsum(np.bincount(q[new], minlength=nq)).tolist()
+    tids, qfs = t[new].tolist(), qf.tolist()
+    out, a = [], 0
+    for b in ends:
+        out.append((tids[a:b], qfs[a:b]))
+        a = b
+    return out
 
 
 def _bm25_norms(index, dtype: str, avg_len_override) -> tuple:
@@ -1569,9 +1730,8 @@ def _collect_segments(pruned: DataFrame, with_positions: bool,
         return None
     cols = _BM25_SEG_COLS + (_POS_SEG_COLS if with_positions else [])
     seg_map = _seg_map(pruned.select(*cols).collect(), with_positions)
-    term_cost = {tid: sum(p[1] for p in parts)
-                 for tid, parts in seg_map.items()}
-    return seg_map, term_cost
+    return seg_map, _TermCosts({tid: sum(p[1] for p in parts)
+                                for tid, parts in seg_map.items()})
 
 
 def _index_pin(spark, index, positions: bool = False) -> _Pin | None:
@@ -1613,57 +1773,108 @@ def _index_pin(spark, index, positions: bool = False) -> _Pin | None:
 
 # The LPT cost (postings, _lpt_bins' model) whose worker time pays for one
 # more task's fixed cost. Measured on a 4-core host, Unix-socket workers,
-# warm 10k-doc index: an empty mapInPandas job takes ~84 ms with 1 task
-# and ~110 ms with 2, so a task costs ~26 ms; one task's serve wall grows
-# ~52 ns per cost unit (115 ms at 71k, 398 ms at 5.47M). 26 ms / 52 ns
-# = 500k. Check: at 585k 1 and 2 tasks tie (126 vs 129 ms); at 1.26M
-# 2 tasks win (145 vs 180 ms). A 16-query call (~0.1M) runs one task,
-# a 1,000-query batch (~5.5M) one per core.
-TASK_MIN_COST = 500_000
+# warm 10k-doc index, _map_bins' mapInArrow over the reused range: an
+# empty job takes ~52 ms with 1 task, ~58 ms with 2 and ~74 ms with 4, so
+# a task costs ~7 ms; one task's serve wall grows ~18 ns per cost unit
+# (85 ms at 329k, 187 ms at 5.38M). 7 ms / 18 ns = ~400k (two runs: 345k
+# and 484k). Check: at 329k 1 and 2 tasks tie (85 vs 85 ms); at 621k 2
+# tasks win (94 vs 98 ms). A 16-query call (~0.1M) runs one task, a
+# 1,000-query batch (~5.5M) one per core.
+TASK_MIN_COST = 400_000
 
 
-def _lpt_bins(spark, items: list, term_lists: list, term_cost: dict,
+def _lpt_bins(spark, items: list, term_lists: list, term_cost: _TermCosts,
               partitions: int | None,
               sized_by_work: bool = True) -> list[list[tuple]]:
     """(position, item) pairs of ``items`` in at most ``partitions``
     (default: defaultParallelism) non-empty bins, LPT-balanced — heaviest
     first onto the lightest bin — on a driver-side cost model: the sum of
-    the item's distinct ``term_lists`` terms' posting counts, plus a fixed
+    the item's ``term_lists`` terms' posting counts (``term_cost``; the
+    lists hold distinct ids, as _fold_queries gives them), plus a fixed
     64 so empty and tail queries still count. Per-query kernel cost is
-    heavily skewed (head-term queries cost 10-100x tail ones).
+    heavily skewed (head-term queries cost 10-100x tail ones). The sums
+    run on arrays for the whole batch.
 
     ``sized_by_work``: also at most one bin per TASK_MIN_COST of total
     cost, so a batch too light to fill the cores runs in fewer tasks."""
-    costs = [sum(term_cost.get(t, 0) for t in {int(t) for t in ts}) + 64
-             for ts in term_lists]
+    tids, post = term_cost.tids, term_cost.postings
+    n = len(items)
+    lens = np.fromiter(map(len, term_lists), dtype=np.int64, count=n)
+    flat = np.fromiter(itertools.chain.from_iterable(term_lists),
+                       dtype=np.int64, count=int(lens.sum()))
+    per_term = np.zeros(len(flat), dtype=np.int64)
+    if len(tids):
+        at = np.minimum(np.searchsorted(tids, flat), len(tids) - 1)
+        per_term = np.where(tids[at] == flat, post[at], 0)
+    costs = np.bincount(np.repeat(np.arange(n), lens), weights=per_term,
+                        minlength=n).astype(np.int64) + 64
     nparts = partitions or spark.sparkContext.defaultParallelism
     if sized_by_work:
-        nparts = min(nparts, -(-sum(costs) // TASK_MIN_COST))
-    nparts = max(1, min(nparts, len(items)))
+        nparts = min(nparts, -(-int(costs.sum()) // TASK_MIN_COST))
+    nparts = max(1, min(nparts, n))
     heap = [(0, b) for b in range(nparts)]
     bins: list[list[tuple]] = [[] for _ in range(nparts)]
-    for i in sorted(range(len(items)), key=lambda i: -costs[i]):
+    cl = costs.tolist()
+    for i in np.argsort(-costs, kind="stable").tolist():
         load, b = heapq.heappop(heap)
         bins[b].append((i, items[i]))
-        heapq.heappush(heap, (load + costs[i], b))
+        heapq.heappush(heap, (load + cl[i], b))
     return [b for b in bins if b]
 
 
+# one spark.range DataFrame per (session, bin count): _map_bins plans its
+# mapInArrow step on it, so a call does not build a new range plan
+_BIN_RANGES: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+
+
+def _bin_range(spark, n: int) -> DataFrame:
+    """spark.range(0, n, 1, n) of session ``spark``: one id per
+    partition, made once per (session, n)."""
+    per = _BIN_RANGES.get(spark)
+    if per is None:
+        per = _BIN_RANGES.setdefault(spark, {})
+    df = per.get(n)
+    if df is None:
+        df = per[n] = spark.range(0, n, 1, n)
+    return df
+
+
+def _batch(schema: pa.Schema, cols: list) -> pa.RecordBatch:
+    """The one column assembler: an Arrow batch of ``schema`` from
+    per-column output parts (_run_rows' form) — array parts concatenate,
+    Python sequences chain — converted as Spark converts a pandas frame
+    (None/NaN as null, unchecked casts)."""
+    return pa.RecordBatch.from_arrays([
+        pa.array(np.concatenate(parts)
+                 if all(isinstance(p, np.ndarray) for p in parts)
+                 else list(itertools.chain.from_iterable(parts)),
+                 type=f.type, from_pandas=True, safe=False)
+        for f, parts in zip(schema, cols)], schema=schema)
+
+
 def _map_bins(spark, bins: list, work, schema) -> DataFrame:
-    """One task per bin: ``work(bin)`` yields the bin's pandas frames.
-    A spark.range with one id per partition drives mapInPandas, and the
-    bins ride in the task closure (Spark broadcasts a large one), so no
-    query rows are scanned or shuffled and no session conf is touched."""
+    """One task per bin: ``work(bin)`` returns the bin's output columns
+    (_run_rows' form; [] for none), which leave the task as one Arrow
+    batch. The session's reused spark.range, one id per partition,
+    drives mapInArrow, and the bins ride in the task closure (Spark
+    broadcasts a large one), so no query rows are scanned or shuffled and
+    no session conf is touched.
+
+    ``work`` is pickled by value with a copy of the module globals it
+    names: it must reach worker state (the decode LRU) through
+    module-level functions such as _run_rows, never a global it names."""
     if not bins:
         return spark.createDataFrame([], schema=schema)
+    arrow = to_arrow_schema(schema)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for b in pdf["id"]:
-                yield from work(bins[int(b)])
+    def run(batches):
+        for batch in batches:
+            for b in batch.column(0).to_pylist():
+                cols = work(bins[b])
+                if cols:
+                    yield _batch(arrow, cols)
 
-    return (spark.range(0, len(bins), 1, len(bins))
-            .mapInPandas(run, schema=schema))
+    return _bin_range(spark, len(bins)).mapInArrow(run, schema=schema)
 
 
 def _execute(spark, index, items: list, body, schema,
@@ -1674,7 +1885,7 @@ def _execute(spark, index, items: list, body, schema,
     """The one execute step of every query op.
 
     ``items``: one per query, ``(term_ids asc, qfs, *side)`` — the
-    _fold_query form plus the op's own per-query data; a query's
+    _fold_queries form plus the op's own per-query data; a query's
     query_id is its position. Per query, _cursors builds the cursors
     (``merge_chunks``, ``stats``' global df/N and bound inflation) and
     ``body(qid, item, cursors)`` returns the query's output columns after
@@ -1688,8 +1899,8 @@ def _execute(spark, index, items: list, body, schema,
     a ``positions`` body) in LPT bins, one task per bin: one bin per core
     (``partitions`` bins at most), but no more bins than TASK_MIN_COST
     postings of work each can fill. A job's fixed cost grows with its
-    task count and dominates small batches (an empty mapInPandas job on a
-    4-core host: ~0.13 s with 4 tasks, ~0.08 s with 1), so a light call
+    task count and dominates small batches (an empty _map_bins job on a
+    4-core host: ~74 ms with 4 tasks, ~52 ms with 1), so a light call
     runs as one task and a heavy batch still uses every core. A handle
     over PIN_BUDGET_BYTES has no pin and takes the one shuffle fallback
     (_shuffle_execute); the two differ only in how the parts arrive."""
@@ -1700,14 +1911,14 @@ def _execute(spark, index, items: list, body, schema,
                                     DT, merge_chunks, positions)
     seg_bc, dd_bc, fd_bc = pin.seg_bc, pin.docs_dict_bc, pin.freqs_dict_bc
     pos_bc = pin.pos_dict_bc if positions else None
-    num_docs, names = pin.num_docs, schema.fieldNames()
+    num_docs = pin.num_docs
 
+    # shipped by value with copies of the globals it names: worker state
+    # (the decode LRU) is reached only through module-level functions
     def work(rows):
-        cols = _run_rows(rows, seg_bc.value, dd_bc.value, fd_bc.value,
+        return _run_rows(rows, seg_bc.value, dd_bc.value, fd_bc.value,
                          num_docs, DT, body, merge_chunks, stats,
                          _value(pos_bc))
-        if cols:
-            yield _frame(names, cols)
 
     return _map_bins(spark, _lpt_bins(spark, items, [it[0] for it in items],
                                       pin.term_cost, partitions),
@@ -1743,6 +1954,7 @@ def _shuffle_execute(spark, index, items: list, body, schema, stats: _Stats,
     pos_bc = (shared_index_bc(spark, index, "pos_dict",
                               lambda: index.pos_dict) if positions else None)
     num_docs, names = index.num_docs, schema.fieldNames()
+    arrow = to_arrow_schema(schema)
 
     def run_one(pdf: pd.DataFrame) -> pd.DataFrame:
         qid = int(pdf["query_id"].iloc[0])
@@ -1750,7 +1962,9 @@ def _shuffle_execute(spark, index, items: list, body, schema, stats: _Stats,
                          _seg_map(pdf.to_dict("records"), positions),
                          dd_bc.value, fd_bc.value, num_docs, DT, body,
                          merge_chunks, stats, _value(pos_bc))
-        return _frame(names, cols) if cols else pd.DataFrame(columns=names)
+        if not cols:
+            return pd.DataFrame(columns=names)
+        return _batch(arrow, cols).to_pandas(integer_object_nulls=True)
 
     return joined.groupBy("query_id").applyInPandas(run_one, schema=schema)
 
@@ -1777,6 +1991,7 @@ def _run_rows(rows, segs: dict, dd, fd, num_docs: int, DT, body,
             return (_Positions(parts, dd, fd, pos_dict, num_docs)
                     if parts else None)
     cols: list = []
+    qids, counts = [], []
     for qid, item in rows:
         got = view(item)
         out = body(qid, item, got) if got else None
@@ -1784,20 +1999,13 @@ def _run_rows(rows, segs: dict, dd, fd, num_docs: int, DT, body,
             continue
         if not cols:
             cols = [[] for _ in range(len(out) + 1)]
-        cols[0].append(np.full(len(out[0]), qid, dtype=np.int64))
+        qids.append(qid)
+        counts.append(len(out[0]))
         for acc, col in zip(cols[1:], out):
             acc.append(col)
+    if cols:
+        cols[0].append(np.repeat(np.array(qids, dtype=np.int64), counts))
     return cols
-
-
-def _frame(names: list, cols: list) -> pd.DataFrame:
-    """One frame of _run_rows' column parts: arrays concatenate, Python
-    lists chain."""
-    return pd.DataFrame({
-        n: (np.concatenate(parts)
-            if all(isinstance(p, np.ndarray) for p in parts)
-            else list(itertools.chain.from_iterable(parts)))
-        for n, parts in zip(names, cols)})
 
 
 def _topk_body(algo: str, k: int, DT, num_docs: int, norm_bc, live_bc):
@@ -1808,8 +2016,10 @@ def _topk_body(algo: str, k: int, DT, num_docs: int, norm_bc, live_bc):
     def body(qid, item, cursors):
         topk = kernel(cursors, norm_bc.value, num_docs, k, DT,
                       live=_value(live_bc))
-        return (range(1, len(topk) + 1), [d for d, _ in topk],
-                [s for _, s in topk])
+        if not topk:
+            return None
+        docs, scores = zip(*topk)
+        return range(1, len(topk) + 1), docs, scores
 
     return body
 
@@ -1928,7 +2138,7 @@ class BroadcastQueryServer:
         """serve() under a caller's statistics (ShardedQueryServer hands
         every shard the global df map this way)."""
         return _execute(
-            self.spark, None, [_fold_query(q) for q in queries],
+            self.spark, None, _fold_queries(queries),
             _topk_body(algo, k, self.DT, self.num_docs, stats.norm_bc,
                        self._live_for(doc_filter)),
             TOPK_SCHEMA, stats, self.DT, merge_chunks=algo == "ranked_and",
@@ -2037,10 +2247,9 @@ def query_latency_stats(spark: SparkSession, index, queries: list,
                 t0 = _time.perf_counter()
                 _run_rows([row], *args)
                 outs.append((row[0], r, (_time.perf_counter() - t0) * 1e6))
-        if outs:
-            yield pd.DataFrame(outs, columns=LATENCY_SCHEMA.fieldNames())
+        return [[c] for c in zip(*outs)]
 
-    folded = [_fold_query(q) for q in queries]
+    folded = _fold_queries(queries)
     bins = _lpt_bins(spark, folded, [t for t, _ in folded],
                      srv.pin.term_cost,
                      spark.sparkContext.defaultParallelism * 4,
@@ -2111,12 +2320,12 @@ def run_boolean_queries(
     num_docs = index.num_docs
     fn = boolean_and if mode == "and" else boolean_or
     if mode == "and_not":
-        items = []
-        for pos, neg in queries:
-            pos, neg = {int(t) for t in pos}, {int(t) for t in neg}
-            items.append((*_fold_query(pos | neg), pos, neg))
+        sides = [({int(t) for t in pos}, {int(t) for t in neg})
+                 for pos, neg in queries]
+        items = [(*f, pos, neg) for f, (pos, neg)
+                 in zip(_fold_queries([p | n for p, n in sides]), sides)]
     else:
-        items = [_fold_query(q) for q in queries]
+        items = _fold_queries(queries)
 
     def body(qid, item, cursors):
         live = _value(live_bc)
@@ -2241,8 +2450,9 @@ class _Positions(NamedTuple):
 
 def _seq_items(seqs: list) -> list:
     """_execute items of the sequence ops (phrase, proximity, span): the
-    _fold_query form plus the ordered term sequence as side data."""
-    return [(*_fold_query(s), [int(t) for t in s]) for s in seqs]
+    _fold_queries form plus the ordered term sequence as side data."""
+    return [(*f, [int(t) for t in s]) for f, s in zip(_fold_queries(seqs),
+                                                       seqs)]
 
 
 def _live_only(live_bc, docs: np.ndarray, *cols) -> tuple:
@@ -2379,7 +2589,7 @@ def run_kwic_queries(spark: SparkSession, index, docs: DataFrame,
         return _live_only(live_bc, docs_u, (keys[first] & np.uint64(
             0xFFFFFFFF)).astype(np.int64))
 
-    occ = _execute(spark, index, [_fold_query([t]) for t in terms], body,
+    occ = _execute(spark, index, _fold_queries([[t] for t in terms]), body,
                    KWIC_SCHEMA, positions=True)
     hit_docs = tokenize(occ.join(docs.select("doc_id", "text"), "doc_id"))
     lo = F.greatest(F.col("pos") + 1 - width, F.lit(1))
@@ -2500,8 +2710,8 @@ def run_highlight_queries(spark: SparkSession, index, docs: DataFrame,
         return tuple(zip(*out))
 
     hl = _execute(spark, index,
-                  [(*_fold_query(qs), cand_map.get(i))
-                   for i, qs in enumerate(queries)],
+                  [(*f, cand_map.get(i))
+                   for i, f in enumerate(_fold_queries(queries))],
                   body, HIGHLIGHT_SCHEMA, positions=True)
     hit_docs = tokenize(hl.join(docs.select("doc_id", "text"), "doc_id"))
     return hit_docs.select(
@@ -2644,13 +2854,11 @@ def _bm25_score_matched(docs: np.ndarray, term_infos, norm_lens,
     order — the same per-term accumulation sequence as the ranked kernels,
     so a phrase-ranked score equals what ranked_and would assign the doc."""
     score = np.zeros(len(docs), dtype=DT)
-    nl = np.asarray(norm_lens)[docs].astype(DT, copy=False)
-    K1 = DT(1.2)
-    NORM = DT(1.0) - DT(0.5)  # 1 - b
+    nl = np.asarray(norm_lens)[docs]
     for qf, df_total, dlist, flist in term_infos:
         qw = _qtw(qf, df_total, num_docs, DT)
-        f = flist[np.searchsorted(dlist, docs)].astype(DT)
-        score = score + qw * (f / (f + K1 * (NORM + DT(0.5) * nl)))
+        score = score + qw * _tf_weights(
+            flist[np.searchsorted(dlist, docs)], nl, DT)
     return score
 
 
@@ -2660,11 +2868,12 @@ def _phrase_term_infos(item, q: _Positions) -> list:
     full-list LRU (head phrase terms amortize across the batch exactly
     like the BM25 serve path)."""
     infos = []
+    tokens = (_dict_token(q.dd), _dict_token(q.fd))
     for tid, qf in zip(item[0], item[1]):
         parts = q.parts[tid]
-        dec = [_cached_full_decode(Cursor(p[1], p[2], p[4], p[5], p[6],
-                                          q.num_docs, q.dd, q.fd,
-                                          term_id=tid)) for p in parts]
+        dec = [_cached_full_decode(Cursor._of_part(
+            p, tid, q.num_docs, q.dd, q.fd, tokens, None, None))
+            for p in parts]
         docs, freqs = dec[0] if len(dec) == 1 else (
             np.concatenate([d[0] for d in dec]),
             np.concatenate([d[1] for d in dec]))

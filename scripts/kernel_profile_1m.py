@@ -33,7 +33,7 @@ import numpy as np  # noqa: E402
 import pyarrow.parquet as pq  # noqa: E402
 
 from dint_spark.dint.dictionary import load_dictionary  # noqa: E402
-from dint_spark.queries import (_fold_query, _run_rows,  # noqa: E402
+from dint_spark.queries import (_fold_queries, _run_rows,  # noqa: E402
                                 _seg_map, _topk_body)
 
 
@@ -84,7 +84,7 @@ def main() -> None:
     body = _topk_body("block_max_wand_vec", 10, DT, num_docs,
                       SimpleNamespace(value=norm), None)
     args = (seg_map, dd, fd, num_docs, DT, body)
-    rows_in = list(enumerate(map(_fold_query, queries)))
+    rows_in = list(enumerate(_fold_queries(queries)))
 
     # cold pass (decode-inclusive), then warm best-of-2 (steady-state
     # serving: the worker LRU persists across batches)

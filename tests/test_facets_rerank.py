@@ -181,6 +181,34 @@ def test_build_doc_facets_and_counts(spark, sidx, docs_pdf):
     assert got == expect
 
 
+def test_facet_dim_dir_lives_with_the_session(spark, sidx, docs_pdf):
+    """build_doc_facets with no dim_path writes its dimension under the
+    session's SparkFiles root, which Spark deletes when the context
+    stops: no dint_facet_dim_* directory is left in the temp dir."""
+    import glob
+    import os
+    import tempfile
+
+    from pyspark import SparkFiles
+
+    from dint_spark.facets import build_doc_facets
+
+    patterns = {os.path.join(d, "dint_facet_dim_*")
+                for d in ("/tmp", tempfile.gettempdir())}
+
+    def leftover():
+        return {p for pat in patterns for p in glob.glob(pat)}
+
+    before = leftover()
+    fac = build_doc_facets(spark, spark.createDataFrame(docs_pdf),
+                           sidx.num_docs, "lang")
+    assert fac.values == sorted({v for v in docs_pdf["lang"]
+                                 if v is not None})
+    assert leftover() == before
+    root = os.path.realpath(SparkFiles.getRootDirectory())
+    assert os.path.commonpath([os.path.realpath(fac.dim_path), root]) == root
+
+
 def test_facets_compose_with_docmask(spark, sidx, docs_pdf):
     from dint_spark.facets import build_doc_facets, run_facet_queries
 

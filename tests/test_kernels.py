@@ -56,20 +56,85 @@ def test_exact_float32_rank_identity(collection, algo):
         assert fn(cs) == oracle
 
 
+def _variant(collection, variant):
+    """(seg_map, [(norm, bound_inflate)], DT, live, df_overrides, idf_docs)
+    of one input variant: the fixture lists as _seg_map parts, under
+    float64, tombstones combined with a DocMask (as _live_bc combines
+    them), two avg_len norms plus an equal copy of the first (one
+    worker's weight entries must not alias), lists re-encoded as several
+    parts, or global df/N overrides."""
+    plists, doclens, N, queries, dd, fd, segs, norm = collection
+    chunk = 100 if variant == "chunked" else None
+    seg_map = {}
+    for t, (docs, freqs) in plists.items():
+        cuts = (range(0, len(docs), chunk) if chunk else [0])
+        for i, a in enumerate(cuts):
+            b = a + chunk if chunk else len(docs)
+            s = (build_segments({t: (docs[a:b], freqs[a:b])}, doclens, dd,
+                                fd)[0][t] if chunk else segs[t])
+            seg_map.setdefault(t, []).append((
+                i, s["n"], np.asarray(s["block_maxs"], dtype=np.int64),
+                s["block_max_scores"],
+                np.asarray(s["endpoints"], dtype=np.int64),
+                np.asarray(s["freq_offsets"], dtype=np.int64),
+                bytes(s["payload"]), float(s["max_weight"])))
+    DT, live, dfo, idf = np.float32, None, None, None
+    norms = [(norm, 1.0)]
+    if variant == "float64":
+        DT, norms = np.float64, [(norm.astype(np.float64), 1.0)]
+    elif variant == "tombstones_docmask":
+        rng = np.random.default_rng(11)
+        tomb = Q.Tombstones(rng.choice(N, N // 10, replace=False), N)
+        mask = rng.random(N) < 0.7
+        mask[tomb.ids] = False
+        live = Q.DocMask.from_mask(mask)
+    elif variant == "two_norms":
+        avg = np.sum(doclens, dtype=np.float64) / len(doclens)
+        grown = doclens.astype(np.float32) / np.float32(1.25 * avg)
+        norms = [(norm, 1.0), (grown, 1.25 * (1 + 1e-5)),
+                 (norm.copy(), 1.0)]
+    elif variant == "df_overrides":
+        dfo = {t: 3 * len(d) for t, (d, _) in plists.items()}
+        idf = 3 * N
+    return seg_map, norms, DT, live, dfo, idf
+
+
 # dense ceiling: the default (block_max_wand_vec scores densely under a
 # block-max floor) and 0 (it runs the pruned pass, whose own fallback and
-# ranked_or_vec then take the compacted path)
-@pytest.mark.parametrize("ceiling", [None, 0])
-def test_bmw_vec_paths_agree(collection, monkeypatch, ceiling):
+# ranked_or_vec then take the compacted path). The input variants run
+# through the one cursor builder, and every kernel must equal scalar
+# ranked_or on them.
+@pytest.mark.parametrize("ceiling,variant", [
+    pytest.param(c, v, id=str(c) if v is None else f"{c}-{v}")
+    for v in (None, "float64", "tombstones_docmask", "two_norms",
+              "chunked", "df_overrides")
+    for c in (None, 0)])
+def test_bmw_vec_paths_agree(collection, monkeypatch, ceiling, variant):
     plists, doclens, N, queries, dd, fd, segs, norm = collection
     if ceiling is not None:
         monkeypatch.setattr(Q, "_DENSE_SCORE_MAX_DOCS", ceiling)
-    for k in (1, 10, 10**4):
-        for q in queries:
-            cs = lambda: make_cursors(q, segs, dd, fd, norm, N)  # noqa: E731
-            top = block_max_wand_vec(cs(), norm, N, k)
-            assert top == _bmw_pruned(cs(), norm, N, k)
-            assert top == ranked_or_vec(cs(), norm, N, k)
+    if variant is None:
+        for k in (1, 10, 10**4):
+            for q in queries:
+                cs = lambda: make_cursors(q, segs, dd, fd, norm, N)  # noqa
+                top = block_max_wand_vec(cs(), norm, N, k)
+                assert top == _bmw_pruned(cs(), norm, N, k)
+                assert top == ranked_or_vec(cs(), norm, N, k)
+        return
+    seg_map, norms, DT, live, dfo, idf = _variant(collection, variant)
+    kernels = [ranked_or_vec, block_max_wand_vec, _bmw_pruned, wand,
+               lambda *a, **kw: wand(*a, block_max=True, **kw)]
+    for k in (1, 10):
+        for q in queries[:40]:
+            tids, qfs = Q._fold_queries([q])[0]
+            for nl, inflate in norms:
+                def cs():
+                    return Q._cursors(seg_map, tids, qfs, N, dd, fd, DT,
+                                      df_overrides=dfo, idf_docs=idf,
+                                      bound_inflate=inflate)
+                want = ranked_or(cs(), nl, N, k, DT, live=live)
+                for kern in kernels:
+                    assert kern(cs(), nl, N, k, DT, live=live) == want
 
 
 def test_dense_floor_ties():
@@ -78,17 +143,24 @@ def test_dense_floor_ties():
     the floor docs sit; floor docs that cannot certify (fewer than k, or
     a zero k-th score) fall back to the full selection."""
     docs = np.arange(0, 200, 2, dtype=np.int64)
-    lists = [(1.0, docs, np.ones(len(docs), dtype=np.int64)),
-             (2.0, np.array([7, 150], dtype=np.int64),
-              np.array([3, 1], dtype=np.int64))]
     norm = np.ones(200, dtype=np.float32)
-    want = Q._dense_topk(lists, norm, 200, 10, np.float32)
+    lists = [(np.float32(qw), d, Q._tf_weights(f, norm[d], np.float32))
+             for qw, d, f in [
+                 (1.0, docs, np.ones(len(docs), dtype=np.int64)),
+                 (2.0, np.array([7, 150], dtype=np.int64),
+                  np.array([3, 1], dtype=np.int64))]]
+    want = Q._dense_topk(lists, 200, 10, np.float32)
     assert [d for d, _ in want] == [7, 150] + list(range(0, 16, 2))
     for floor_docs in (docs[:10], docs[-10:], docs[40:60], np.arange(200),
                        docs[:9], np.array([1, 3, 5, 9, 11, 13, 15, 17, 19,
                                            21])):
-        assert Q._dense_topk(lists, norm, 200, 10, np.float32,
-                             floor_docs=floor_docs) == want
+        assert Q._dense_topk(lists, 200, 10, np.float32,
+                             floor_sets=(floor_docs,)) == want
+    # several sets certify their highest floor; an uncertifying set
+    # beside them changes nothing
+    assert Q._dense_topk(lists, 200, 10, np.float32,
+                         floor_sets=(docs[-10:], docs[:9], docs[40:60],
+                                     None)) == want
 
 
 def test_maxscore_rank_identity(collection):

@@ -17,6 +17,7 @@ import uuid
 
 import numpy as np
 import pytest
+from pyspark.sql import types as T
 
 from dint_spark import queries as Q
 from dint_spark.bool_query import (BoolSpec, run_bool_queries,
@@ -102,26 +103,100 @@ def _cases(idx, queries, df):
             avg_len_override=0.8 * idx.avg_len_f64),
         "doc_filter": dict(algo="block_max_wand_vec",
                            doc_filter=DocMask.from_mask(mask)),
+        "float64": dict(algo="block_max_wand_vec", dtype="float64"),
+        "tombstones_doc_filter": dict(algo="block_max_wand_vec",
+                                      deleted=True,
+                                      doc_filter=DocMask.from_mask(mask)),
+        # two avg_len overrides in turn on one handle and worker pool:
+        # each list's cached weights must be keyed by its norm array
+        "avg_len_up": dict(algo="block_max_wand_vec",
+                           avg_len_override=1.25 * idx.avg_len_f64),
+        "avg_len_down": dict(algo="block_max_wand_vec",
+                             avg_len_override=0.8 * idx.avg_len_f64),
+        "df_overrides": dict(
+            algo="block_max_wand_vec",
+            df_overrides={t: 3 * int(df[t]) for t in terms},
+            idf_docs=3 * idx.num_docs),
     }
 
 
 CASES = ["block_max_wand", "block_max_wand_vec", "wand", "maxscore",
          "ranked_and", "weighted", "global_stats", "global_stats_f64",
-         "doc_filter"]
+         "doc_filter", "float64", "tombstones_doc_filter", "avg_len_up",
+         "avg_len_down", "df_overrides"]
+
+
+@pytest.fixture(scope="module")
+def deleted(spark, built, tmp_path_factory):
+    """A copy of the pin index with every 17th doc deleted."""
+    d, idx, _, _ = built
+    copy = str(tmp_path_factory.mktemp("pin_deleted") / "idx")
+    shutil.copytree(d, copy)
+    h = load_index(spark, copy)
+    gone = list(range(0, idx.num_docs, 17))
+    assert delete_docs(spark, h, gone) == len(gone)
+    return copy, h
 
 
 @pytest.mark.parametrize("case", CASES)
-def test_pinned_matches_fallback(spark, built, monkeypatch, case):
+def test_pinned_matches_fallback(spark, built, deleted, monkeypatch, case):
+    """Pinned rows equal the fallback's, and every kernel but the
+    intersection one (ranked_and) equals scalar ranked_or under the same
+    per-call statistics, filter and tombstones. The index's head terms
+    span several segment parts (seg_chunk=64)."""
     d, idx, queries, df = built
     kw = dict(_cases(idx, queries, df)[case])
     qs = kw.pop("queries", queries)
+    if kw.pop("deleted", False):
+        d, idx = deleted
     pinned = run_queries(spark, idx, qs, k=10, **kw)
     assert Q._index_pin(spark, idx) is not None
+    a = _rows(pinned)
+    if kw["algo"] != "ranked_and":
+        assert a == _rows(run_queries(spark, idx, qs, k=10,
+                                      **{**kw, "algo": "ranked_or"}))
     fb = _fallback_handle(spark, d, monkeypatch)
     fallback = run_queries(spark, fb, qs, k=10, **kw)
-    a, b = _rows(pinned), _rows(fallback)
+    b = _rows(fallback)
     assert a, "the batch must return rows"
     assert a == b
+
+
+def test_workers_read_the_module_lru(spark, built):
+    """After one pinned call, a second call's workers read through the
+    real dint_spark.queries decode LRU. Spark pickles the step's closures
+    by value with a copy of the module globals they name, so a cache
+    reached from inside one would be a per-task copy and the module's
+    own LRU would stay empty. A _map_bins probe, one task per core with
+    the tasks overlapping so each lands on its own worker, reports every
+    worker's module LRU size and hit count."""
+    _, idx, queries, _ = built
+    n = spark.sparkContext.defaultParallelism
+    schema = T.StructType([T.StructField(c, T.LongType(), False)
+                           for c in ("pid", "entries", "hits")])
+
+    def probe(rows):
+        import os as _os
+        import time as _time
+
+        from dint_spark import queries as worker_q
+
+        _time.sleep(1.0)
+        return [[[_os.getpid()]], [[len(worker_q._LIST_CACHE)]],
+                [[worker_q._LIST_CACHE_HITS]]]
+
+    def report():
+        out = Q._map_bins(spark, [[i] for i in range(n)], probe,
+                          schema).collect()
+        return {r["pid"]: (r["entries"], r["hits"]) for r in out}
+
+    _rows(run_queries(spark, idx, queries))
+    before = report()
+    _rows(run_queries(spark, idx, queries))
+    after = report()
+    assert max(e for e, _ in after.values()) > 0
+    assert any(h > before.get(pid, (0, 0))[1]
+               for pid, (_, h) in after.items())
 
 
 @pytest.fixture(scope="module")
@@ -255,7 +330,7 @@ def test_op_deletes_read_per_call(spark, built, monkeypatch, tmp_path):
 
 def test_pinned_plan_has_no_exchange(spark, built, sidecars, pos_built,
                                      monkeypatch):
-    """A pinned call is one mapInPandas over a range: no scan, no
+    """A pinned call is one mapInArrow over a range: no scan, no
     exchange, no grouped applyInPandas — those stay in the fallback.
     run_facet_queries then joins its facet dimension: a broadcast of that
     small table is the only exchange its pinned plan has. The positional
@@ -274,7 +349,7 @@ def test_pinned_plan_has_no_exchange(spark, built, sidecars, pos_built,
 
     q, b, f, p = plans(idx, pidx)
     for plan in (q, b, f, p):
-        assert "MapInPandas" in plan
+        assert "MapInArrow" in plan
         assert "FlatMapGroupsInPandas" not in plan
     assert "Exchange" not in q and "Exchange" not in b
     assert "Exchange" not in p
@@ -443,13 +518,14 @@ def test_highlight_retrieves_once(spark, pos_built):
     """run_highlight_queries collects its retrieval once and carries each
     candidate's rank and score_q in the query's item: besides the
     documents frame's own, the result's plan holds the occurrence pass's
-    mapInPandas only."""
+    mapInArrow only."""
     _, idx, phrases, docs = pos_built
     df = run_highlight_queries(spark, idx, docs, phrases[:2], k=3)
     plan = df._jdf.queryExecution().executedPlan().toString()
     # the documents frame brings its own (doc-id assignment)
     own = docs._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("MapInPandas") == 1 + own.count("MapInPandas")
+    assert plan.count("MapInArrow") == 1 + own.count("MapInArrow")
+    assert plan.count("MapInPandas") == own.count("MapInPandas")
     rows = df.collect()
     assert rows and all(1 <= r["rank"] <= 3 for r in rows)
 
