@@ -716,13 +716,12 @@ def _entry_bm25_appended(spark, sf_dir):
     """Incremental indexing gate: a base epoch over 60% of the corpus plus
     an append_docs epoch over the rest must score EXACTLY like one index
     over everything — global (N, df) through the override channel, old-
-    epoch norms re-derived under the post-append avg_len, pruning bounds
-    inflated by avg_new/avg_old (sharding.append_docs; no reference
-    counterpart — the reference index is immutable once frozen,
-    src/create_freq_index.cpp:103-106). Queries go in as term STRINGS
-    (the appended vocabulary ranks old-epoch terms first, so raw term ids
-    don't transfer); the oracle is the very same full-corpus BM25 SQL the
-    search_text entry uses."""
+    epoch norms re-derived under the post-append avg_len
+    (sharding.append_docs; no reference counterpart — the reference index
+    is immutable once frozen, src/create_freq_index.cpp:103-106). Queries
+    go in as term STRINGS (the appended vocabulary ranks old-epoch terms
+    first, so raw term ids don't transfer); the oracle is the very same
+    full-corpus BM25 SQL the search_text entry uses."""
     from dint_spark.search import parse_queries
     from dint_spark.sharding import run_queries_sharded
 
@@ -1866,10 +1865,11 @@ ANDNOT_SPECS: list[tuple[list[int], list[int]]] = [
 
 def _entry_boolean_and_not(spark, sf_dir):
     """Boolean MUST/MUST_NOT (Lucene clause pair): docs containing every
-    positive term and none of the negative terms. The exclusion is a
-    next_geq leapfrog over the already-intersected matches, so negative
-    lists are block-skipped, never fully decoded (queries.boolean_and_not;
-    no reference counterpart — queries.hpp stops at AND/OR)."""
+    positive term and none of the negative terms. The positive lists
+    meet in a searchsorted intersection; each negative list then decodes
+    only the blocks over those matches, never the full list
+    (queries.boolean_and_not; no reference counterpart — queries.hpp
+    stops at AND/OR)."""
     idx = _get_index(spark, sf_dir)
     return run_boolean_queries(spark, idx, ANDNOT_SPECS, mode="and_not")
 

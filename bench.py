@@ -296,8 +296,9 @@ def main() -> None:
     # ---- query workload: 500 queries, 1 warmup + 3 timed ------------------
     vocab_pdf = idx.vocab().select("term_id", "df").toPandas()
     workload = make_query_workload(vocab_pdf, NUM_QUERIES, SEED)
-    # headline: the vectorized block-max WAND (same exact top-k as the
-    # scalar reference kernel, which is timed separately below)
+    # headline: the vectorized block-max WAND. The bm25_bmw_500q and
+    # bm25_maxscore_500q rows below keep their names, but block_max_wand
+    # and maxscore are aliases of this same kernel now
     run_queries(spark, idx, workload, algo="block_max_wand_vec", k=TOPK).count()  # warmup
     runs = []
     for _ in range(3):

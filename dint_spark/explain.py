@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from dint_spark.queries import (DocMask, _call_stats, _execute, _fold_queries,
-                                _live_bc, _quantized_order, _term_weights,
+                                _live_bc, _quantized_order, _term_lists,
                                 _value, matched_scores)
 
 EXPLAIN_SCHEMA = T.StructType([
@@ -54,8 +54,6 @@ def run_queries_explain(
     norm_bc, live_bc = stats.norm_bc, _live_bc(spark, index, doc_filter)
 
     def body(qid, item, cursors):
-        # cursors merge chunks, so each term probes as ONE sorted list
-        # whose length is the term's global df
         union, scores = matched_scores(cursors, norm_bc.value, num_docs, DT,
                                        live=_value(live_bc))
         sq = np.floor(scores.astype(np.float64) * quant).astype(np.int64)
@@ -63,9 +61,9 @@ def run_queries_explain(
         top_docs = union[order].astype(np.int64)
         ranks = np.arange(1, len(order) + 1, dtype=np.int32)
         out = [[] for _ in range(6)]
-        for c in cursors:  # term_id asc
-            docs, w, _ = _term_weights(c, norm_bc.value, DT)
-            freqs = c.decode_all()[1]
+        # each term probes as ONE sorted list (its chunk parts joined),
+        # whose length is the term's df
+        for c, docs, freqs, w in _term_lists(cursors, norm_bc.value, DT):
             pos = np.searchsorted(docs, top_docs)
             pos_c = np.minimum(pos, len(docs) - 1)
             hit = docs[pos_c] == top_docs
@@ -79,9 +77,9 @@ def run_queries_explain(
                     ranks[hit], top_docs[hit],
                     np.full(nhit, int(c.term_id), dtype=np.int64),
                     freqs[pos_c[hit]].astype(np.int64),
-                    np.full(nhit, c.n, dtype=np.int64), contrib)):
+                    np.full(nhit, len(docs), dtype=np.int64), contrib)):
                 col.append(v)
         return [np.concatenate(col) for col in out] if out[0] else None
 
     return _execute(spark, index, _fold_queries(queries), body,
-                    EXPLAIN_SCHEMA, stats, DT, merge_chunks=True)
+                    EXPLAIN_SCHEMA, stats, DT)

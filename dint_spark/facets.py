@@ -174,7 +174,7 @@ def run_facet_queries(
     any value. Deletes/DocMask compose exactly as in run_boolean_queries.
 
     The kernel appends one np.bincount over the matched ids' ordinals to
-    the existing leapfrog — the match list never leaves the worker; the
+    the boolean intersection — the match list never leaves the worker; the
     operator's output is |queries| x |facet values| rows."""
     _check_docs(index, facets.ords, "facets")
     ords_bc = spark.sparkContext.broadcast(facets.ords)
@@ -402,7 +402,7 @@ def run_range_facet_queries(
     """Numeric range facets (the ES ``range``/histogram aggregation):
     per query, the count of matching docs whose doc value falls in each
     half-open bucket ``[edges[i], edges[i+1])`` — computed over the FULL
-    match set in the same kernel pass as the boolean leapfrog. Bucketing
+    match set in the same kernel pass as the boolean intersection. Bucketing
     is one ``np.searchsorted`` + ``np.bincount`` over the matched ids'
     values; the match list never leaves the worker, and the output is
     |queries| x |buckets| rows. Docs with a missing value, or a value

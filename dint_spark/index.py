@@ -600,8 +600,8 @@ class Index:
         incremental-append query path (sharding.append_docs): epochs built
         before an append baked the then-current avg_len into their stored
         norms and max-weight metadata; scoring stays exact because norms
-        are derived from the RAW lens here, and pruning stays safe because
-        run_queries inflates the stale bounds by avg_new/avg_old."""
+        are derived from the RAW lens here. No kernel reads the stored
+        max-weight metadata as a bound, so it needs no correction."""
         key = (float(avg_len_f64), dtype)
         cache = getattr(self, "_norm_cache", None)
         if cache is None:

@@ -1,27 +1,34 @@
 """Query-time retrieval kernels over DINT-compressed segments.
 
-Single-list cursor (= the reference's document_enumerator,
-include/dint/dict_posting_list.hpp:88-342) with lazy per-block decode, plus
-the reference's DAAT operators (include/ds2i/queries.hpp):
+A query's terms arrive as Cursors, one per posting-list part (plain
+records; the lists decode once per worker into an LRU), and every
+kernel runs numpy over whole decoded lists. The reference's DAAT
+operators (include/ds2i/queries.hpp) fix what each query returns; the
+``algo`` names below are the reference's and select a kernel through
+KERNELS:
 
-  and/or             boolean leapfrog intersection / k-way union (34-130)
-  ranked_or          exhaustive DAAT scoring — the oracle slice (387-457)
+  and / or           boolean_and / boolean_or: sorted-list intersection,
+                     union (34-130)
   ranked_and         intersection + scoring (309-385)
-  wand               pivot-based threshold pruning (190-307)
-  block_max_wand     WAND + per-block max-score upper bounds (our extension
-                     of Q13 using the segments' block_max_scores metadata;
-                     the north rule's required operator)
-  block_max_wand_vec the same top-k over numpy arrays: dense scoring
-                     whose selection a block-max floor certifies, the
-                     pruned pass past the dense ceiling (the default
-                     ``algo`` of every op)
-  maxscore           essential/non-essential list split (459-573)
+  ranked_or          exhaustive top-k (387-457); ranked_or_vec is its
+                     numpy form
+  wand, maxscore     pruned top-k (190-307, 459-573); the same top-k as
+                     ranked_or
+  block_max_wand     WAND + per-block max-score bounds (our extension
+                     using the segments' block_max_scores metadata)
 
-All scoring is float32 in the reference's accumulation order (cursor list
-sorted by term_id for ranked_or/ranked_and; by docid for WAND), with the
-topk queue's strict `>` insertion (queries.hpp:150-188), so every optimized
-operator reproduces ranked_or's top-k (doc_id, score) exactly. A float64
-mode exists for cross-checking against SQL oracles.
+Every ranked-OR name is an alias of block_max_wand_vec, the default
+``algo`` of every op: dense scoring whose top-k selection a block-max
+floor certifies, ranked_or_vec's compaction past the dense ceiling.
+Pruning loops exist to skip work a scalar walk cannot afford; over
+numpy arrays they did not pay (block_max_wand_vec's docstring).
+
+All scoring is float32 in the reference's accumulation order (a doc's
+term contributions added in term_id order), with top-k ties broken by
+ascending doc_id as the reference's topk queue's strict `>` insertion
+does (queries.hpp:150-188), so every kernel reproduces the scalar
+exhaustive walk (tests/oracle.py) exactly. A float64 mode exists for
+cross-checking against SQL oracles.
 
 Distributed execution: every query op (run_queries, the boolean, LM,
 facet, bool-DSL, nested, paging and explain ops, and the positional
@@ -64,77 +71,46 @@ from dint_spark.dint.codec import (BLOCK_SIZE, decode_posting_blocks,
 
 
 class Cursor:
-    """Enumerator over one compressed posting list. Blocks decode only when
-    the scalar walk (docid/next/next_geq/move/freq) reaches them: the vec
-    kernels read the list through the worker LRU (_list_entry), so a
-    cursor they never walk decodes nothing."""
+    """One seg-map part of a query term, with the term's query weight: a
+    plain record. Kernels read the whole list through the worker LRU
+    (decode_all, _term_weights); block_table describes any subset of its
+    blocks for a partial decode (boolean_and_not)."""
 
-    __slots__ = (
-        "n", "block_maxs", "endpoints", "freq_offsets", "payload", "universe",
-        "docs_dict", "freqs_dict",
-        "nblocks", "cur_block", "pos", "docids", "freqs", "cur_docid",
-        "q_weight", "block_max_scores", "term_id", "bound_scale",
-        "_part_max", "_max_weight", "_ckey", "_blk",
-    )
+    __slots__ = ("n", "block_maxs", "endpoints", "freq_offsets", "payload",
+                 "block_max_scores", "docs_dict", "freqs_dict", "term_id",
+                 "q_weight", "_ckey")
 
     def __init__(self, n, block_maxs, endpoints, freq_offsets, payload,
-                 universe, docs_dict, freqs_dict, block_max_scores=None,
-                 term_id=-1):
+                 docs_dict, freqs_dict, block_max_scores=None, term_id=-1):
         self._set(int(n), np.asarray(block_maxs, dtype=np.int64),
                   np.asarray(endpoints, dtype=np.int64),
                   np.asarray(freq_offsets, dtype=np.int64), bytes(payload),
                   (np.asarray(block_max_scores, dtype=np.float32)
                    if block_max_scores is not None else None),
-                  int(universe), docs_dict, freqs_dict, term_id)
+                  docs_dict, freqs_dict, term_id)
         self.q_weight = np.float32(0)
-        self._max_weight = np.float32(0)
-        # >1 only in float64 scoring mode: the stored per-block maxima are
-        # float32, so a tiny inflation keeps them valid upper bounds for
-        # float64-computed scores (never causes false exclusion, only
-        # marginally less pruning)
-        self.bound_scale = np.float32(1.0)
 
     @classmethod
-    def _of_part(cls, part, term_id: int, universe: int, dd, fd,
-                 dict_tokens: tuple, q_weight, bound_scale) -> "Cursor":
+    def _of_part(cls, part, term_id: int, dd, fd, dict_tokens: tuple,
+                 q_weight) -> "Cursor":
         """The cursor of one _seg_map part: its fields are already typed,
         so nothing converts or copies; ``dict_tokens`` are dd's and fd's
-        _dict_token, the tail of its cache key; max_weight computes on
-        first read (only WAND and maxscore read it)."""
+        _dict_token, the tail of its cache key."""
         c = cls.__new__(cls)
-        c._set(part[1], part[2], part[4], part[5], part[6], part[3],
-               universe, dd, fd, term_id)
+        c._set(part[1], part[2], part[4], part[5], part[6], part[3], dd, fd,
+               term_id)
         c._ckey = (term_id, part[1], len(part[6]), hash(part[6]),
                    *dict_tokens)
-        c.q_weight, c.bound_scale = q_weight, bound_scale
-        c._part_max, c._max_weight = part[7], None
+        c.q_weight = q_weight
         return c
 
     def _set(self, n, block_maxs, endpoints, freq_offsets, payload,
-             block_max_scores, universe, docs_dict, freqs_dict, term_id):
+             block_max_scores, docs_dict, freqs_dict, term_id):
         self.n, self.block_maxs, self.endpoints = n, block_maxs, endpoints
         self.freq_offsets, self.payload = freq_offsets, payload
-        self.block_max_scores, self.universe = block_max_scores, universe
+        self.block_max_scores = block_max_scores
         self.docs_dict, self.freqs_dict = docs_dict, freqs_dict
-        self.term_id, self.nblocks = term_id, len(block_maxs)
-        self._ckey = self._blk = None
-        # not yet walked: no block decoded, cur_docid below every docid
-        self.cur_block, self.pos, self.cur_docid = -1, 0, -1
-        self.docids = self.freqs = None
-
-    @property
-    def max_weight(self):
-        """Upper bound of the list's score contribution: the stored part
-        maximum times q_weight and bound_scale."""
-        if self._max_weight is None:
-            DT = type(self.q_weight)
-            self._max_weight = DT(self.q_weight * DT(self._part_max)
-                                  * self.bound_scale)
-        return self._max_weight
-
-    @max_weight.setter
-    def max_weight(self, value) -> None:
-        self._max_weight = value
+        self.term_id, self._ckey = term_id, None
 
     def block_table(self, blocks=None) -> tuple[bytes, np.ndarray]:
         """codec.posting_blocks of ``blocks`` (None: every block): built
@@ -142,134 +118,9 @@ class Cursor:
         return posting_blocks([self.payload], [self.n], [self.block_maxs],
                               [self.endpoints], [self.freq_offsets], blocks)
 
-    def _decode_block(self, b: int) -> None:
-        self._blk = self.block_table((b,))  # kept for the lazy freqs
-        self.docids, _ = decode_posting_blocks(*self._blk, self.docs_dict,
-                                               None)
-        self.freqs = None  # lazy (ref dict_posting_list.hpp:164-169)
-        self.cur_block = b
-        self.pos = 0
-        self.cur_docid = int(self.docids[0])
-
-    def docid(self) -> int:
-        if self.cur_docid < 0:
-            self._decode_block(0)
-        return self.cur_docid
-
-    def next(self) -> None:
-        if self.cur_docid < 0:
-            self._decode_block(0)
-        self.pos += 1
-        if self.pos == len(self.docids):
-            if self.cur_block + 1 == self.nblocks:
-                self.cur_docid = self.universe
-                return
-            self._decode_block(self.cur_block + 1)
-        else:
-            self.cur_docid = int(self.docids[self.pos])
-
-    def next_geq(self, lb: int) -> None:
-        if self.cur_docid >= lb:
-            return
-        if self.cur_block < 0 or lb > int(self.block_maxs[self.cur_block]):
-            if lb > int(self.block_maxs[-1]):
-                self.cur_docid = self.universe
-                return
-            b = int(np.searchsorted(self.block_maxs, lb, side="left"))
-            self._decode_block(b)
-        if self.cur_docid < lb:
-            self.pos += int(np.searchsorted(self.docids[self.pos:], lb, side="left"))
-            self.cur_docid = int(self.docids[self.pos])
-
-    def move(self, pos: int) -> None:
-        """Random access by position (ref dict_posting_list.hpp:149-158)."""
-        if pos >= self.n:
-            self.cur_docid = self.universe
-            return
-        b = pos // BLOCK_SIZE
-        if b != self.cur_block:
-            self._decode_block(b)
-        self.pos = pos - b * BLOCK_SIZE
-        self.cur_docid = int(self.docids[self.pos])
-
-    def freq(self) -> int:
-        if self.cur_docid < 0:
-            self._decode_block(0)
-        if self.freqs is None:
-            _, self.freqs = decode_posting_blocks(*self._blk, None,
-                                                  self.freqs_dict)
-        return int(self.freqs[self.pos])
-
     def decode_all(self) -> tuple[np.ndarray, np.ndarray]:
         """Full-list decode (docs, freqs), via the worker-level LRU."""
         return _cached_full_decode(self)
-
-    # -- block-max WAND shallow pointers (no decode) ------------------------
-    def shallow_block_for(self, d: int) -> int:
-        """Index of the block that would contain the first docid >= d."""
-        return int(np.searchsorted(self.block_maxs, d, side="left"))
-
-    def block_upper_bound(self, d: int) -> np.float32:
-        b = self.shallow_block_for(d)
-        if b >= self.nblocks:
-            return np.float32(0)
-        return self.q_weight * self.block_max_scores[b] * self.bound_scale
-
-    def block_last_doc(self, d: int) -> int:
-        b = self.shallow_block_for(d)
-        if b >= self.nblocks:
-            return self.universe
-        return int(self.block_maxs[b])
-
-
-class ArrayCursor:
-    """Cursor API over fully-decoded arrays. Used to merge a head term's
-    chunk rows (disjoint increasing doc ranges, see postings.build_postings)
-    into ONE logical list for intersection kernels (ranked_and/boolean_and),
-    which require exactly one cursor per term. Union-style kernels instead
-    consume the chunk cursors directly — a doc matches at most one chunk, so
-    scores and accumulation order are identical to a single merged list."""
-
-    __slots__ = ("docs", "frs", "n", "pos", "universe", "cur_docid",
-                 "q_weight", "max_weight", "term_id", "bound_scale")
-
-    def __init__(self, docs: np.ndarray, freqs: np.ndarray, universe: int,
-                 term_id: int):
-        self.docs = docs
-        self.frs = freqs
-        self.n = len(docs)
-        self.universe = int(universe)
-        self.term_id = term_id
-        self.pos = 0
-        self.cur_docid = int(docs[0]) if self.n else self.universe
-
-    def docid(self) -> int:
-        return self.cur_docid
-
-    def next(self) -> None:
-        self.pos += 1
-        self.cur_docid = (int(self.docs[self.pos]) if self.pos < self.n
-                          else self.universe)
-
-    def next_geq(self, lb: int) -> None:
-        if self.cur_docid >= lb:
-            return
-        self.pos += int(np.searchsorted(self.docs[self.pos:], lb, side="left"))
-        self.cur_docid = (int(self.docs[self.pos]) if self.pos < self.n
-                          else self.universe)
-
-    def move(self, pos: int) -> None:
-        if pos >= self.n:
-            self.cur_docid = self.universe
-            return
-        self.pos = pos
-        self.cur_docid = int(self.docs[pos])
-
-    def freq(self) -> int:
-        return int(self.frs[self.pos])
-
-    def decode_all(self) -> tuple[np.ndarray, np.ndarray]:
-        return self.docs, self.frs
 
 
 # Worker-process-level LRU of fully-decoded posting lists. Zipfian query
@@ -298,17 +149,16 @@ _LIST_CACHE_BYTES = 0
 _LIST_CACHE_CAP = int(os.environ.get("DINT_SPARK_DECODE_CACHE_MB", "256")) * 2**20
 _LIST_CACHE_HITS = 0  # lookups served from the LRU, for tests and probes
 
-# Dense-accumulator scoring ceiling: exhaustive kernels switch from the
+# Dense-accumulator scoring ceiling: the top-k kernels switch from the
 # candidate-compaction path (np.unique + per-list searchsorted, O(P log P))
 # to a docid-indexed float accumulator (O(P + num_docs) pure scatter/scan)
 # when the shard's doc count fits the per-worker budget. 2^24 docs = 67 MB
-# f32 + 17 MB matched-mask per in-flight query; a 16-worker executor tops
-# out ~1.3 GB transient — the same order as the pinned seg broadcast it
-# serves. Shards above the ceiling (docid sharding bounds num_docs per
-# shard; README "Scale design") keep the compaction path, which never
+# f32 per in-flight query; a 16-worker executor tops out ~1.1 GB
+# transient — the same order as the pinned seg broadcast it serves.
+# Shards above the ceiling (docid sharding bounds num_docs per shard;
+# README "Scale design") keep the compaction path, which never
 # materializes O(num_docs) state.
-_DENSE_SCORE_MAX_DOCS = int(
-    os.environ.get("DINT_SPARK_DENSE_SCORE_MAX_DOCS", str(1 << 24)))
+_DENSE_SCORE_MAX_DOCS = 1 << 24
 
 
 class Tombstones:
@@ -510,9 +360,8 @@ def _charge(nbytes: int) -> None:
         _LIST_CACHE_BYTES -= _LIST_CACHE.popitem(last=False)[1].nbytes
 
 
-def _list_entry(c: "Cursor", decode: bool = True) -> "_Decoded | None":
-    """Cursor ``c``'s _LIST_CACHE entry, decoding the full list on a miss
-    (with ``decode=False`` a miss returns None)."""
+def _list_entry(c: "Cursor") -> "_Decoded":
+    """Cursor ``c``'s _LIST_CACHE entry, decoding the full list on a miss."""
     global _LIST_CACHE_HITS
     key = _cache_key(c)
     e = _LIST_CACHE.get(key)
@@ -520,8 +369,6 @@ def _list_entry(c: "Cursor", decode: bool = True) -> "_Decoded | None":
         _LIST_CACHE.move_to_end(key)
         _LIST_CACHE_HITS += 1
         return e
-    if not decode:
-        return None
     e = _LIST_CACHE[key] = _Decoded(*decode_posting_blocks(
         *c.block_table(), c.docs_dict, c.freqs_dict))
     _charge(e.nbytes)
@@ -536,8 +383,8 @@ def _cached_full_decode(c: "Cursor") -> tuple[np.ndarray, np.ndarray]:
 def _tf_weights(freqs: np.ndarray, norm_lens: np.ndarray, DT) -> np.ndarray:
     """BM25 document-term weights f / (f + k1(1 - b + b*nl)), k1 = 1.2 and
     b = 0.5, elementwise over aligned ``freqs`` and ``norm_lens``: the
-    operation sequence of the scalar kernels' _dtw, so q_weight times a
-    weight is the same float in every kernel."""
+    operation sequence of the scalar reference walk (tests/oracle.py), so
+    q_weight times a weight is the same float as its per-doc one."""
     f = freqs.astype(DT)
     return f / (f + DT(1.2) * (DT(1.0) - DT(0.5)
                                + DT(0.5) * norm_lens.astype(DT, copy=False)))
@@ -568,14 +415,11 @@ def _norm_token(nl: np.ndarray) -> tuple:
 def _term_weights(c, norm_lens, DT) -> tuple:
     """(docs, BM25 document-term weights under ``norm_lens``, best-block
     docs or None) of cursor ``c``'s full list: the one place a ranked
-    kernel gets per-posting weights. A Cursor's weights are cached in its
+    kernel gets per-posting weights. They are cached in the list's
     _LIST_CACHE entry under the norm array's content token and DT, next
     to the docs of its best block by stored block_max_score (the exactly
-    scored set behind block_max_wand_vec's floor). A merged ArrayCursor
-    (a chunked term under an intersection kernel) computes its weights."""
+    scored set behind block_max_wand_vec's floor)."""
     nl = np.asarray(norm_lens)
-    if isinstance(c, ArrayCursor):
-        return c.docs, _tf_weights(c.frs, nl[c.docs], DT), None
     e = _list_entry(c)
     wkey = (_norm_token(nl), DT)
     w = e.weights.get(wkey)
@@ -588,43 +432,6 @@ def _term_weights(c, norm_lens, DT) -> tuple:
         b = int(np.argmax(c.block_max_scores)) * BLOCK_SIZE
         e.best = e.docs[b:b + BLOCK_SIZE]
     return e.docs, w, e.best
-
-
-class TopK:
-    """k-min-heap with strict `>` insertion; ties keep earliest (= smallest
-    docid, since DAAT visits docids in increasing order) — equivalent to
-    top-k by (score desc, doc_id asc). (ref queries.hpp:150-188)"""
-
-    __slots__ = ("k", "heap")
-
-    def __init__(self, k: int):
-        self.k = k
-        self.heap: list = []
-
-    def would_enter(self, score) -> bool:
-        return len(self.heap) < self.k or score > self.heap[0][0]
-
-    def insert(self, score, doc_id: int) -> bool:
-        if len(self.heap) < self.k:
-            heapq.heappush(self.heap, (score, -doc_id))
-            return True
-        if score > self.heap[0][0]:
-            heapq.heapreplace(self.heap, (score, -doc_id))
-            return True
-        return False
-
-    def finalize(self) -> list[tuple[int, float]]:
-        out = sorted(self.heap, key=lambda t: (-t[0], -t[1]))
-        return [(-nd, float(s)) for s, nd in out]
-
-    @property
-    def threshold(self):
-        return self.heap[0][0] if len(self.heap) == self.k else None
-
-
-def _dtw(freq: int, norm_len, DT):
-    f = DT(freq)
-    return f / (f + DT(1.2) * (DT(1.0) - DT(0.5) + DT(0.5) * norm_len))
 
 
 _QTW: dict = {}  # (qf, df, N, DT) -> query-term weight, per worker
@@ -647,33 +454,9 @@ def _qtw(qf, df: int, num_docs: int, DT):
 
 
 # ---------------------------------------------------------------------------
-# kernels; `cursors` arrive sorted by term_id asc with q_weight/max_weight set
+# kernels; `cursors` arrive sorted by term_id asc, a term's parts in seg_id
+# order, each with its term's q_weight
 # ---------------------------------------------------------------------------
-
-def ranked_or(cursors, norm_lens, num_docs: int, k: int, DT=np.float32,
-              live=None):
-    q = TopK(k)
-    if not cursors:
-        return []
-    cur_doc = min(c.docid() for c in cursors)
-    while cur_doc < num_docs:
-        score = DT(0)
-        norm_len = DT(norm_lens[cur_doc])
-        next_doc = num_docs
-        for c in cursors:
-            if c.docid() == cur_doc:
-                score = score + c.q_weight * _dtw(c.freq(), norm_len, DT)
-                c.next()
-            if c.docid() < next_doc:
-                next_doc = c.docid()
-        # tombstoned docs never enter the heap (so they can never raise a
-        # pruning threshold above what live docs justify); same guard shape
-        # in every kernel below
-        if live is None or live.mask[cur_doc]:
-            q.insert(score, cur_doc)
-        cur_doc = next_doc
-    return q.finalize()
-
 
 def _dense_topk(lists, num_docs: int, k: int, DT, floor_sets=(),
                 live=None):
@@ -752,12 +535,13 @@ def _dense_topk(lists, num_docs: int, k: int, DT, floor_sets=(),
 
 def ranked_or_vec(cursors, norm_lens, num_docs: int, k: int, DT=np.float32,
                   live=None):
-    """Vectorized exhaustive DAAT: numerically identical to ranked_or.
+    """Exhaustive top-k (the reference's ranked_or, queries.hpp:387-457)
+    over numpy arrays, numerically identical to its per-doc walk.
 
     Per-doc accumulation order is term_id asc (the cursor order), exactly as
-    the scalar loop adds matching cursors per doc — each list contributes one
+    the walk adds matching cursors per doc — each list contributes one
     float32 add per doc, in the same sequence, with elementwise-identical
-    IEEE ops, so scores are bit-equal to ranked_or. Shards whose doc count
+    IEEE ops, so scores are bit-equal to the walk's. Shards whose doc count
     fits the per-worker budget score through the dense docid-indexed
     accumulator (_dense_topk — O(P) scatter, no posting-union sort); larger
     shards compact docid space via the union of list docids (no dense
@@ -781,8 +565,8 @@ def _compacted_scores(lists, DT, live=None):
     ``lists`` is (q_weight, docs, weights) in term_id order
     (_term_weights). Scatters each list's float contribution by
     searchsorted position into the sorted union of matched docids —
-    accumulation sequence identical to ranked_or's per-doc adds, so
-    scores are bit-equal. No dense
+    accumulation sequence identical to the exhaustive walk's per-doc adds,
+    so scores are bit-equal. No dense
     num_docs array: memory is O(|match set|), partition-safe at
     10^12-doc scale."""
     if live is not None:
@@ -855,8 +639,8 @@ def matched_scores(cursors, norm_lens, num_docs: int, DT=np.float32,
     """(docids asc, exact BM25 scores) for the FULL OR match set — the
     collection pass behind operators that rank the whole match list by
     something other than a plain top-k heap (field collapsing, cursor
-    pagination). Scores are bit-identical to ranked_or / ranked_or_vec
-    for the same dtype (same compacted accumulation)."""
+    pagination). Scores are bit-identical to ranked_or_vec's for the
+    same dtype (same compacted accumulation)."""
     if not cursors:
         return (np.empty(0, dtype=np.int64), np.empty(0, dtype=DT))
     # cursors arrive sorted by term_id (_cursors)
@@ -878,190 +662,99 @@ def _quantized_order(docs: np.ndarray, sq: np.ndarray, k: int
     return idx[np.lexsort((docs[idx], -sq[idx]))[:k]]
 
 
+def _term_lists(cursors, norm_lens=None, DT=np.float32) -> list:
+    """One (cursor, docs, freqs, weights) per query term, term_id asc: the
+    arrays of the term's parts joined — disjoint increasing doc ranges in
+    seg_id order (postings.build_postings), so the join is the term's
+    sorted list, whose length is its df — and ``cursor`` its first part
+    (q_weight, term_id). ``weights``: BM25 weights under ``norm_lens``
+    (_term_weights), None without them. The view of a term that
+    intersections and per-term readouts need."""
+    out = []
+    for _, group in itertools.groupby(cursors, key=lambda c: c.term_id):
+        parts = list(group)
+        arrs = [(*c.decode_all(), None if norm_lens is None
+                 else _term_weights(c, norm_lens, DT)[1]) for c in parts]
+        if len(arrs) > 1:
+            arrs = [[None if a[0] is None else np.concatenate(a)
+                     for a in zip(*arrs)]]
+        out.append((parts[0], *arrs[0]))
+    return out
+
+
+def _and_docs(doc_lists: list, live=None) -> np.ndarray:
+    """The docs present in every one of ``doc_lists`` (sorted, distinct)
+    and live: the shortest list probed into each longer one in turn."""
+    lists = sorted(doc_lists, key=len)
+    hits = lists[0]
+    for docs in lists[1:]:
+        at = np.minimum(np.searchsorted(docs, hits), len(docs) - 1)
+        hits = hits[docs[at] == hits]
+    return hits if live is None else hits[live.mask[hits]]
+
+
 def ranked_and(cursors, norm_lens, num_docs: int, k: int, DT=np.float32,
                live=None):
-    q = TopK(k)
-    if not cursors:
+    """Intersection + BM25 top-k (ref queries.hpp:309-385): the docs in
+    every query term's list (_and_docs), each scored by its lists' adds in
+    term_id order — _compacted_scores' sequence over the AND set, so a
+    doc's score is bit-identical to its ranked_or_vec score."""
+    terms = _term_lists(cursors, norm_lens, DT)
+    if not terms:
         return []
-    cs = sorted(cursors, key=lambda c: c.n)
-    candidate = cs[0].docid()
-    i = 1
-    while candidate < num_docs:
-        while i < len(cs):
-            cs[i].next_geq(candidate)
-            if cs[i].docid() != candidate:
-                candidate = cs[i].docid()
-                i = 0
-                break
-            i += 1
-        else:
-            norm_len = DT(norm_lens[candidate])
-            score = DT(0)
-            # canonical term_id accumulation order (see wand note)
-            for c in sorted(cs, key=lambda c: c.term_id):
-                score = score + c.q_weight * _dtw(c.freq(), norm_len, DT)
-            if live is None or live.mask[candidate]:
-                q.insert(score, candidate)
-            cs[0].next()
-            candidate = cs[0].docid()
-            i = 1
-    return q.finalize()
+    hits = _and_docs([docs for _, docs, _, _ in terms], live)
+    scores = np.zeros(len(hits), dtype=DT)
+    for c, docs, _, w in terms:
+        scores += c.q_weight * w[np.searchsorted(docs, hits)]
+    order = np.lexsort((hits, -scores))[:k]
+    return list(zip(hits[order].tolist(), scores[order].tolist()))
 
 
-def boolean_and(cursors, num_docs: int, live=None) -> list[int]:
+def boolean_and(cursors, num_docs: int, live=None) -> np.ndarray:
+    """Docs (asc) matching every query term (ref queries.hpp:34-130)."""
     if not cursors:
-        return []
-    cs = sorted(cursors, key=lambda c: c.n)
-    out = []
-    candidate = cs[0].docid()
-    i = 1
-    while candidate < num_docs:
-        while i < len(cs):
-            cs[i].next_geq(candidate)
-            if cs[i].docid() != candidate:
-                candidate = cs[i].docid()
-                i = 0
-                break
-            i += 1
-        else:
-            if live is None or live.mask[candidate]:
-                out.append(candidate)
-            cs[0].next()
-            candidate = cs[0].docid()
-            i = 1
-    return out
+        return np.empty(0, dtype=np.int64)
+    return _and_docs([docs for _, docs, _, _ in _term_lists(cursors)], live)
 
 
-def boolean_or(cursors, num_docs: int, live=None) -> list[int]:
+def boolean_or(cursors, num_docs: int, live=None) -> np.ndarray:
+    """Docs (asc) matching any query term (ref queries.hpp:34-130)."""
     if not cursors:
-        return []
-    out = []
-    cur_doc = min(c.docid() for c in cursors)
-    while cur_doc < num_docs:
-        if live is None or live.mask[cur_doc]:
-            out.append(cur_doc)
-        next_doc = num_docs
-        for c in cursors:
-            if c.docid() == cur_doc:
-                c.next()
-            if c.docid() < next_doc:
-                next_doc = c.docid()
-        cur_doc = next_doc
-    return out
+        return np.empty(0, dtype=np.int64)
+    docs = np.unique(np.concatenate([c.decode_all()[0] for c in cursors]))
+    return docs if live is None else docs[live.mask[docs]]
 
 
 def boolean_and_not(cursors, neg_cursors, num_docs: int, live=None
-                    ) -> list[int]:
+                    ) -> np.ndarray:
     """AND over ``cursors`` minus any doc present in a ``neg_cursors`` list
     (Lucene's MUST/MUST_NOT clause pair; no reference counterpart — the
     reference's boolean kernels stop at AND/OR, queries.hpp:34-130).
 
-    Exclusion is a next_geq leapfrog per negative list over the (sorted,
-    already-intersected) positive matches, so a huge negative list ("NOT
-    the") is *skipped through* via its block endpoints — never fully
-    decoded — and the work is O(|matches| * |neg_terms|) skip probes, the
-    same complexity class as the AND itself."""
+    Each negative list decodes only the blocks its block_maxs place over
+    the positive matches, so a huge negative list ("NOT the") is never
+    fully decoded and the work is bounded by |matches| blocks per
+    negative list, not by its length."""
     matches = boolean_and(cursors, num_docs, live=live)
-    if not matches or not neg_cursors:
-        return matches
-    keep = np.ones(len(matches), dtype=bool)
     for c in neg_cursors:
-        for i, d in enumerate(matches):
-            if not keep[i]:
-                continue
-            if c.docid() < d:
-                c.next_geq(d)
-            if c.docid() == d:
-                keep[i] = False
-            elif c.docid() >= num_docs:
-                break
-    return [d for d, k in zip(matches, keep) if k]
-
-
-def wand(cursors, norm_lens, num_docs: int, k: int, DT=np.float32,
-         block_max: bool = False, live=None):
-    """WAND (ref queries.hpp:190-307); block_max=True adds the per-block
-    max-score check + boundary skipping (Ding & Suel BMW)."""
-    q = TopK(k)
-    if not cursors:
-        return []
-    ordered = list(cursors)
-    ordered.sort(key=lambda c: c.docid())
-
-    while True:
-        # find pivot
-        upper_bound = DT(0)
-        found_pivot = False
-        pivot = 0
-        for pivot in range(len(ordered)):
-            if ordered[pivot].docid() >= num_docs:
-                break
-            upper_bound = upper_bound + ordered[pivot].max_weight
-            if q.would_enter(upper_bound):
-                found_pivot = True
-                break
-        if not found_pivot:
+        if not len(matches):
             break
-
-        pivot_id = ordered[pivot].docid()
-
-        if block_max:
-            # extend the pivot over the whole equal-docid group so the
-            # block-max bound covers every list that can contain pivot_id
-            while pivot + 1 < len(ordered) and ordered[pivot + 1].docid() == pivot_id:
-                pivot += 1
-            # shallow block-max refinement of the upper bound; each addend
-            # dominates the corresponding scoring addend in float32, and
-            # f32 ops are monotonic, so the bound is exact-safe
-            bm_ub = DT(0)
-            for i in range(pivot + 1):
-                bm_ub = bm_ub + ordered[i].block_upper_bound(pivot_id)
-            if not q.would_enter(bm_ub):
-                # safe skip target: past the tightest current-block boundary,
-                # capped by the next list's docid (Ding & Suel BMW)
-                d = min(c.block_last_doc(pivot_id) for c in ordered[: pivot + 1]) + 1
-                d = max(d, pivot_id + 1)
-                if pivot + 1 < len(ordered):
-                    d = min(d, ordered[pivot + 1].docid())
-                ordered[0].next_geq(d)
-                _bubble_down(ordered, 0)
-                continue
-
-        if pivot_id == ordered[0].docid():
-            norm_len = DT(norm_lens[pivot_id])
-            # score in term_id order (canonical accumulation: bit-identical
-            # to ranked_or; the reference scores in cursor order and accepts
-            # 0.1% tolerance instead — we pin the stronger contract)
-            matching = [c for c in ordered if c.docid() == pivot_id]
-            matching.sort(key=lambda c: c.term_id)
-            score = DT(0)
-            for c in matching:
-                score = score + c.q_weight * _dtw(c.freq(), norm_len, DT)
-            for c in matching:
-                c.next()
-            if live is None or live.mask[pivot_id]:
-                q.insert(score, pivot_id)
-            ordered.sort(key=lambda c: c.docid())
-        else:
-            next_list = pivot
-            while ordered[next_list].docid() == pivot_id:
-                next_list -= 1
-            ordered[next_list].next_geq(pivot_id)
-            _bubble_down(ordered, next_list)
-    return q.finalize()
-
-
-def _bubble_down(ordered, i: int) -> None:
-    for j in range(i + 1, len(ordered)):
-        if ordered[j].docid() < ordered[j - 1].docid():
-            ordered[j], ordered[j - 1] = ordered[j - 1], ordered[j]
-        else:
-            break
+        blocks = np.unique(np.searchsorted(c.block_maxs, matches))
+        blocks = blocks[blocks < len(c.block_maxs)]
+        if not len(blocks):
+            continue
+        docs, _ = decode_posting_blocks(
+            *c.block_table(blocks.tolist()), c.docs_dict, None)
+        # probe the sorted list: O(|matches| log |docs|), however long
+        at = np.minimum(np.searchsorted(docs, matches), len(docs) - 1)
+        matches = matches[docs[at] != matches]
+    return matches
 
 
 def block_max_wand_vec(cursors, norm_lens, num_docs: int, k: int,
                        DT=np.float32, live=None):
-    """Block-max top-k, exactly ranked_or's.
+    """Block-max top-k, exactly ranked_or_vec's: the kernel behind every
+    ranked-OR ``algo`` name (KERNELS).
 
     Shards up to _DENSE_SCORE_MAX_DOCS score every list densely
     (_dense_topk, ranked_or_vec's accumulator), and the block-max
@@ -1070,17 +763,20 @@ def block_max_wand_vec(cursors, norm_lens, num_docs: int, k: int,
     list's weights) hold exact scores in the accumulator, so the k-th best
     within any one of them is a floor under the k-th best overall, and a
     mask scan at the highest such floor replaces the O(num_docs)
-    selection. Block skipping does not pay there: on the generate_pages
-    corpora (10k and 100k docs) the pruned pass's bootstrap theta left
-    more than half of all blocks alive on nearly every query, so it fell
-    back to this same dense pass after paying for its bootstrap and
-    interval grid. Larger shards run the pruned pass (_bmw_pruned), which
-    never materializes O(num_docs) state.
+    selection. Block skipping does not pay on these shards: on the
+    generate_pages corpora (10k and 100k docs) a pruned pass's bootstrap
+    theta left more than half of all blocks alive on nearly every query.
+    Larger shards take ranked_or_vec's compaction path, which never
+    materializes O(num_docs) state: with the ceiling at 0 it ran 1.9-2.5x
+    faster than the pruned block-max pass it replaced on those corpora,
+    and faster on every query. Its edge shrank with corpus size (0.39x of
+    the pruned pass's time at 10k docs, 0.52x at 100k), and no shard past
+    the ceiling has been measured.
     """
     if not cursors:
         return []
     if num_docs > _DENSE_SCORE_MAX_DOCS:
-        return _bmw_pruned(cursors, norm_lens, num_docs, k, DT, live)
+        return ranked_or_vec(cursors, norm_lens, num_docs, k, DT, live)
     lists, best = [], []
     for c in cursors:  # arrive sorted by term_id (_cursors)
         docs, w, b = _term_weights(c, norm_lens, DT)
@@ -1089,252 +785,13 @@ def block_max_wand_vec(cursors, norm_lens, num_docs: int, k: int,
     return _dense_topk(lists, num_docs, k, DT, floor_sets=best, live=live)
 
 
-def _bmw_pruned(cursors, norm_lens, num_docs: int, k: int, DT=np.float32,
-                live=None):
-    """Block-level vectorized BMW: exact same top-k as ranked_or, with the
-    per-doc Python loop replaced by numpy over 256-int blocks.
-
-    Two phases:
-      1. bootstrap: exactly score the docs of each list's single best block
-         (by q_weight x block_max_score); theta = k-th best of those scores.
-      2. survival on the aligned interval grid: docid space is partitioned
-         at the union of all lists' 256-block boundaries, so each list's
-         covering block is constant on every interval; the interval's upper
-         bound is the sequential float32 sum, in term_id order, of
-         q_i * bms_i[covering block] (0 for exhausted lists). Every addend
-         dominates the corresponding scoring addend and f32 addition is
-         monotone, so ub(t) >= score(d) for any doc d in interval t;
-         pruning is strict (ub < theta) so boundary ties are kept. Docs in
-         surviving intervals are scored exactly (vectorized, zero-padded
-         adds in term_id order are bit-identical to ranked_or's
-         accumulation). This is the Ding & Suel block-max bound — per-block
-         LOCAL maxima of every list, not global maxima of the others — which
-         is what makes the pruning bite on skewed multi-term queries.
-
-    Per-query Python work is O(num_lists x num_blocks), all postings math
-    is Arrow/numpy. block_max_wand_vec runs it on shards past
-    _DENSE_SCORE_MAX_DOCS. (ref block-max metadata: our extension of
-    include/ds2i/wand_data.hpp; pruning logic per Ding & Suel BMW.)
-    """
-    if not cursors:
-        return []
-    nl_arr = np.asarray(norm_lens)
-
-    from dint_spark.dint.codec import BLOCK_SIZE as _BS
-
-    # per-cursor decoded-span state: (sorted block ids, concat docs, concat
-    # freqs or None). Served from the worker-level full-list LRU when the
-    # list is hot or mostly needed; otherwise a subset bulk-decode.
-    span_cache: list[dict] = [{"blocks": None} for _ in cursors]
-
-    def _slice_blocks(c, docs, freqs, have: np.ndarray, blocks: np.ndarray):
-        """Select `blocks` out of arrays decoded for block set `have`."""
-        if len(have) == len(blocks):
-            return docs, freqs
-        pos = np.searchsorted(have, blocks)
-        lens = np.minimum((blocks + 1) * _BS, c.n) - blocks * _BS
-        keep = (np.arange(_BS)[None, :] < lens[:, None]).ravel()
-        ulens = np.minimum((have + 1) * _BS, c.n) - have * _BS
-        uoffs = np.concatenate([[0], np.cumsum(ulens)])
-        sel = (uoffs[pos][:, None] + np.arange(_BS)[None, :]).ravel()[keep]
-        return docs[sel], (freqs[sel] if freqs is not None else None)
-
-    def get_span(ci: int, blocks: np.ndarray, want_freqs: bool):
-        """Concatenated (docs, freqs) of `blocks` (sorted), bulk-decoded."""
-        c = cursors[ci]
-        all_blocks = np.arange(c.nblocks)
-        hit = _list_entry(c, decode=len(blocks) * 2 > c.nblocks)
-        if hit is not None:
-            return _slice_blocks(c, hit.docs, hit.freqs, all_blocks, blocks)
-        sc = span_cache[ci]
-        have = sc["blocks"]
-        if (have is None or len(np.setdiff1d(blocks, have, assume_unique=True))
-                or (want_freqs and sc["freqs"] is None)):
-            union = (blocks if have is None
-                     else np.union1d(have, blocks))
-            # keep freqs once decoded so a later regrow can't lose them
-            want_freqs = want_freqs or (have is not None
-                                        and sc["freqs"] is not None)
-            docs, freqs = decode_posting_blocks(
-                *c.block_table(union.tolist()), c.docs_dict,
-                c.freqs_dict if want_freqs else None)
-            sc["blocks"], sc["docs"], sc["freqs"] = union, docs, freqs
-        return _slice_blocks(c, sc["docs"], sc["freqs"], sc["blocks"], blocks)
-
-    def exact_scores(C: np.ndarray) -> np.ndarray:
-        scores = np.zeros(len(C), dtype=DT)
-        nlC = nl_arr[C]
-        for ci, c in enumerate(cursors):  # term_id order == accumulation order
-            blk = np.searchsorted(c.block_maxs, C, side="left")
-            valid = blk < c.nblocks
-            need = np.unique(blk[valid])
-            if not len(need):
-                continue
-            docs, freqs = get_span(ci, need, want_freqs=True)
-            cm = C[valid]
-            idx = np.searchsorted(docs, cm)
-            idx2 = np.minimum(idx, len(docs) - 1)
-            found = docs[idx2] == cm
-            contrib = np.zeros(len(C), dtype=DT)
-            dtw = _tf_weights(freqs[idx2], nlC[valid], DT)
-            contrib[np.flatnonzero(valid)] = np.where(
-                found, c.q_weight * dtw, DT(0))
-            scores = scores + contrib  # adding exact 0 keeps f32 bit-identity
-        return scores
-
-    # ---- phase 1: bootstrap threshold ------------------------------------
-    parts0 = []
-    for ci, c in enumerate(cursors):
-        b = int(np.argmax(c.block_max_scores))
-        parts0.append(get_span(ci, np.array([b], dtype=np.int64), False)[0])
-    C0 = np.unique(np.concatenate(parts0))
-    if live is not None:
-        # theta must be certified from LIVE docs only: a tombstoned doc's
-        # score in the bootstrap could set a floor above what live docs
-        # justify and falsely prune intervals holding live answers
-        C0 = C0[live.mask[C0]]
-    s0 = exact_scores(C0)
-    theta = np.partition(s0, len(s0) - k)[len(s0) - k] if len(s0) >= k else None
-
-    # ---- phase 2: aligned-interval survival + exact scoring --------------
-    # B[t] = last docid of interval t; interval t covers (B[t-1], B[t]].
-    B = np.unique(np.concatenate([c.block_maxs for c in cursors]))
-    nt = len(B)
-    starts = np.empty(nt, dtype=np.int64)
-    starts[0] = 0
-    starts[1:] = B[:-1] + 1
-    cover = []  # per list: covering block index per interval
-    for c in cursors:
-        cover.append(np.searchsorted(c.block_maxs, starts, side="left"))
-    if theta is None:
-        cand = np.ones(nt, dtype=bool)
-    else:
-        ub = np.zeros(nt, dtype=DT)
-        for ci, c in enumerate(cursors):  # sequential f32 fold, term order
-            bi = cover[ci]
-            valid = bi < c.nblocks
-            u = np.zeros(nt, dtype=DT)
-            u[valid] = (c.q_weight
-                        * c.block_max_scores.astype(DT)[bi[valid]]
-                        * c.bound_scale)
-            ub = ub + u
-        cand = ub >= theta
-    parts = [C0]
-    cand_t = np.flatnonzero(cand)
-    needs = []
-    for ci, c in enumerate(cursors):
-        bi = cover[ci][cand_t]
-        needs.append(np.unique(bi[bi < c.nblocks]))
-    # adaptive: when pruning keeps most blocks anyway, the interval filter
-    # only adds overhead — fall back to exhaustive candidates (still exact,
-    # = ranked_or_vec over the bulk-decoded lists)
-    exhaustive = (sum(len(nd) for nd in needs)
-                  > 0.5 * sum(c.nblocks for c in cursors))
-    if exhaustive and num_docs <= _DENSE_SCORE_MAX_DOCS:
-        # head-term queries at shard scale: pruning kept most blocks, so
-        # score everything through the dense accumulator (same adds, same
-        # order as exact_scores over the candidate union — bit-identical;
-        # see _dense_topk) instead of paying unique/searchsorted over a
-        # candidate set approaching num_docs.
-        return _dense_topk(
-            [(c.q_weight, *_term_weights(c, nl_arr, DT)[:2])
-             for c in cursors], num_docs, k, DT, floor_sets=(C0,), live=live)
-    for ci, c in enumerate(cursors):
-        if exhaustive:
-            docs, _ = get_span(ci, np.arange(c.nblocks), want_freqs=False)
-            parts.append(docs)
-        elif len(needs[ci]):
-            docs, _ = get_span(ci, needs[ci], want_freqs=False)
-            iv = np.searchsorted(B, docs, side="left")
-            parts.append(docs[cand[iv]])
-    C = np.unique(np.concatenate(parts))
-    if live is not None:
-        C = C[live.mask[C]]  # C0 was filtered before scoring, so C stays ⊇ C0
-    # bootstrap docs are already scored; only score the new candidates
-    new = C[~np.isin(C, C0, assume_unique=True)]
-    s_new = exact_scores(new) if len(new) else np.empty(0, dtype=DT)
-    allC = np.concatenate([C0, new])
-    allS = np.concatenate([s0, s_new])
-    order = np.lexsort((allC, -allS))[:k]
-    return list(zip(allC[order].tolist(), allS[order].tolist()))
-
-
-def maxscore(cursors, norm_lens, num_docs: int, k: int, DT=np.float32,
-             live=None):
-    """ref queries.hpp:459-573."""
-    q = TopK(k)
-    if not cursors:
-        return []
-    ordered = sorted(cursors, key=lambda c: c.max_weight)
-    ub = []
-    acc = DT(0)
-    for c in ordered:
-        acc = acc + c.max_weight
-        ub.append(acc)
-
-    non_essential = 0
-    cur_doc = min(c.docid() for c in ordered)
-
-    while non_essential < len(ordered) and cur_doc < num_docs:
-        score = DT(0)
-        norm_len = DT(norm_lens[cur_doc])
-        next_doc = num_docs
-        matches = []  # (term_id, q_weight, freq) of every matched cursor
-        for i in range(non_essential, len(ordered)):
-            c = ordered[i]
-            if c.docid() == cur_doc:
-                matches.append((c.term_id, c.q_weight, c.freq()))
-                score = score + c.q_weight * _dtw(matches[-1][2], norm_len, DT)
-                c.next()
-            if c.docid() < next_doc:
-                next_doc = c.docid()
-
-        fully_scored = True
-        for i in range(non_essential - 1, -1, -1):
-            if not q.would_enter(score + ub[i]):
-                fully_scored = False
-                break
-            c = ordered[i]
-            c.next_geq(cur_doc)
-            if c.docid() == cur_doc:
-                matches.append((c.term_id, c.q_weight, c.freq()))
-                score = score + c.q_weight * _dtw(matches[-1][2], norm_len, DT)
-
-        if fully_scored:
-            # canonical term_id accumulation order: scores (hence docid
-            # tie-breaks) become bit-identical to ranked_or for every doc
-            # that was completely evaluated. Partially-scored docs keep the
-            # running sum — it cannot enter the heap (<= threshold), matching
-            # the reference's pruning (queries.hpp:528-556), whose scores are
-            # only 0.1%-close; ours are exact except at pruning boundaries.
-            matches.sort(key=lambda t: t[0])
-            score = DT(0)
-            for _, qw, f in matches:
-                score = score + qw * _dtw(f, norm_len, DT)
-
-        if (live is None or live.mask[cur_doc]) and q.insert(score, cur_doc):
-            while non_essential < len(ordered) and not q.would_enter(ub[non_essential]):
-                non_essential += 1
-
-        cur_doc = next_doc
-    return q.finalize()
-
-
+# ``algo`` -> kernel. Every ranked-OR name of the reference's operators
+# (queries.hpp) runs block_max_wand_vec: they differ in how they walk
+# the lists, not in the top-k they return, so the names stay as aliases.
 KERNELS = {
-    "ranked_or": lambda cs, nl, nd, k, DT, live=None: ranked_or(
-        cs, nl, nd, k, DT, live=live),
-    "ranked_or_vec": lambda cs, nl, nd, k, DT, live=None: ranked_or_vec(
-        cs, nl, nd, k, DT, live=live),
-    "ranked_and": lambda cs, nl, nd, k, DT, live=None: ranked_and(
-        cs, nl, nd, k, DT, live=live),
-    "wand": lambda cs, nl, nd, k, DT, live=None: wand(
-        cs, nl, nd, k, DT, block_max=False, live=live),
-    "block_max_wand": lambda cs, nl, nd, k, DT, live=None: wand(
-        cs, nl, nd, k, DT, block_max=True, live=live),
-    "block_max_wand_vec": lambda cs, nl, nd, k, DT, live=None:
-        block_max_wand_vec(cs, nl, nd, k, DT, live=live),
-    "maxscore": lambda cs, nl, nd, k, DT, live=None: maxscore(
-        cs, nl, nd, k, DT, live=live),
+    **dict.fromkeys(("ranked_or", "ranked_or_vec", "wand", "block_max_wand",
+                     "block_max_wand_vec", "maxscore"), block_max_wand_vec),
+    "ranked_and": ranked_and,
 }
 
 TOPK_SCHEMA = T.StructType(
@@ -1349,57 +806,40 @@ TOPK_SCHEMA = T.StructType(
 # the segment columns the BM25/boolean cursor kernels read — positional
 # indexes add pos_payload/pos_endpoints, which only positional bodies need
 _BM25_SEG_COLS = ["term_id", "seg_id", "n", "block_maxs", "block_max_scores",
-                  "endpoints", "freq_offsets", "payload", "max_weight"]
+                  "endpoints", "freq_offsets", "payload"]
 _POS_SEG_COLS = ["pos_payload", "pos_endpoints"]
 
 
 def build_cursors(group: pd.DataFrame, docs_dict, freqs_dict, num_docs: int,
-                  DT=np.float32, merge_chunks: bool = False,
-                  df_overrides: dict | None = None,
-                  idf_docs: int | None = None,
-                  bound_inflate: float = 1.0) -> list:
+                  DT=np.float32, df_overrides: dict | None = None,
+                  idf_docs: int | None = None) -> list:
     """Cursors of one query from its segment rows as pandas: one row per
     (distinct query term x segment chunk row), each carrying the term's
     qf. A thin adapter: the rows become _seg_map parts and go through
     _cursors, the one builder every query op uses (see there for the
-    chunk, global-statistics and bound-inflation semantics)."""
+    chunk and global-statistics semantics)."""
     qf = group.groupby("term_id", sort=True)["qf"].first()
     return _cursors(_seg_map(group.to_dict("records")),
                     [int(t) for t in qf.index], [float(q) for q in qf],
-                    num_docs, docs_dict, freqs_dict, DT, merge_chunks,
-                    df_overrides, idf_docs, bound_inflate)
+                    num_docs, docs_dict, freqs_dict, DT, df_overrides,
+                    idf_docs)
 
 
 def _cursors(segs: dict, tids, qfs, num_docs: int, dd, fd, DT=np.float32,
-             merge_chunks: bool = False, df_overrides: dict | None = None,
-             idf_docs: int | None = None,
-             bound_inflate: float = 1.0) -> list:
+             df_overrides: dict | None = None,
+             idf_docs: int | None = None) -> list:
     """The one cursor builder: cursors of the query terms ``tids`` (asc,
     with their ``qfs``) over the seg-map parts ``segs`` (_seg_map form:
-    term_id -> seg_id-sorted parts). Terms without parts get no cursor.
-    A term's parts are disjoint increasing doc ranges; the term's df for
-    the query weight is the SUM of their n. Union-style kernels receive
-    one cursor per part (exact by disjointness); intersection kernels
-    (merge_chunks=True) receive one merged ArrayCursor per multi-part
-    term.
+    term_id -> seg_id-sorted parts), one per part. Terms without parts
+    get no cursor. A term's parts are disjoint increasing doc ranges, so
+    union kernels score them as separate lists exactly (a doc is in at
+    most one), and the term's df for the query weight is the SUM of their
+    n; _term_lists joins them where a kernel needs the term's one list.
 
     Sharded serving (sharding.run_queries_sharded) passes GLOBAL
     statistics: df_overrides maps term_id -> corpus-wide df and idf_docs
     is the global N, so every shard computes the same query weights as
-    the unsharded index would.
-
-    ``bound_inflate`` > 1 certifies PRUNING under stale stored bounds: the
-    segment's max_weight / block_max_scores were computed at build time
-    with the then-current avg_len baked into norm_len, and incremental
-    appends (sharding.append_docs) can raise the global avg_len. Since
-    w(f, nl) = f/(f + k1(1-b) + k1*b*nl) grows by at most avg_new/avg_old
-    when nl shrinks by that factor, multiplying every stored bound by
-    that ratio (with a 1e-5 float-rounding margin) keeps WAND/BMW/maxscore
-    skipping safe; final scores are unaffected (computed from recomputed
-    norms, not bounds)."""
-    scale = DT(1.0 + 1e-5) if DT is np.float64 else DT(1.0)
-    if bound_inflate != 1.0:
-        scale = DT(scale * DT(bound_inflate))
+    the unsharded index would."""
     N = int(idf_docs) if idf_docs is not None else num_docs
     tokens = (_dict_token(dd), _dict_token(fd))
     cursors = []
@@ -1414,18 +854,8 @@ def _cursors(segs: dict, tids, qfs, num_docs: int, dd, fd, DT=np.float32,
         # (RM3-expanded) ones — DT() of an exact int float is bit-equal
         # to DT() of the int
         qw = _qtw(qf, df_total, N, DT)
-        term_cursors = [Cursor._of_part(p, tid, num_docs, dd, fd, tokens,
-                                        qw, scale) for p in parts]
-        if merge_chunks and len(term_cursors) > 1:
-            dec = [c.decode_all() for c in term_cursors]
-            a = ArrayCursor(np.concatenate([d[0] for d in dec]),
-                            np.concatenate([d[1] for d in dec]),
-                            num_docs, tid)
-            a.q_weight = qw
-            a.bound_scale = scale
-            a.max_weight = max(c.max_weight for c in term_cursors)
-            term_cursors = [a]
-        cursors.extend(term_cursors)
+        cursors.extend(Cursor._of_part(p, tid, dd, fd, tokens, qw)
+                       for p in parts)
     return cursors
 
 
@@ -1489,8 +919,7 @@ def run_queries(
     ``avg_len_override``: the CURRENT global average document length when
     it differs from the one baked into this index at build time (an epoch
     built before sharding.append_docs grew the corpus). Norms recompute
-    exactly from the raw lens (Index.norm_lens_for) and stored pruning
-    bounds inflate by avg_new/avg_old (see _cursors) so results are
+    exactly from the raw lens (Index.norm_lens_for), so results are
     identical to a fresh build over the grown corpus.
 
     ``doc_filter``: optional DocMask (build_doc_filter) restricting results
@@ -1505,7 +934,7 @@ def run_queries(
         spark, index, _fold_queries(queries, weighted),
         _topk_body(algo, k, DT, index.num_docs, stats.norm_bc,
                    _live_bc(spark, index, doc_filter)),
-        TOPK_SCHEMA, stats, DT, merge_chunks=algo == "ranked_and")
+        TOPK_SCHEMA, stats, DT)
 
 
 def run_queries_lm(
@@ -1532,12 +961,11 @@ def run_queries_lm(
 
     Execution shape: run_queries' execute step, scored EXHAUSTIVELY into
     a dense per-shard accumulator (the dense-accumulator path of
-    ranked_or) — cf_t comes free from the full decode the exhaustive
+    ranked_or_vec) — cf_t comes free from the full decode the exhaustive
     scorer performs anyway, and the raw lens array ships instead of BM25
-    norms (LM needs lengths, not norms). WAND-style pruning needs
-    per-term LM upper bounds the index doesn't store; at this engine's
-    measured decode rates the exhaustive path is the honest default, and
-    the pruned BM25 kernels remain the serving path. Tombstones/DocMask
+    norms (LM needs lengths, not norms). The BM25 kernels score densely
+    too; LM has no stored upper bounds even to certify a floor with.
+    A term's chunk parts join into one list (_term_lists). Tombstones/DocMask
     compose at selection time with build-time collection statistics (the
     liveDocs stale-stats contract, like BM25).
     """
@@ -1552,10 +980,9 @@ def run_queries_lm(
         acc = np.zeros(num_docs, dtype=np.float64)
         matched = np.zeros(num_docs, dtype=bool)
         ql = 0
-        for c in cursors:  # one merged cursor per term, term_id asc
+        for c, docs, frs, _ in _term_lists(cursors):  # term_id asc
             qf = qf_of[c.term_id]
             ql += qf
-            docs, frs = c.decode_all()
             cf = int(frs.sum())
             x = frs.astype(np.float64) / (mu_f * (cf / c_total))
             # a posting list holds each doc once -> fancy += is exact
@@ -1572,7 +999,7 @@ def run_queries_lm(
                 scores[order])
 
     return _execute(spark, index, _fold_queries(queries), body,
-                    TOPK_SCHEMA, merge_chunks=True)
+                    TOPK_SCHEMA)
 
 
 PIN_BUDGET_BYTES = 1 << 29  # segment bytes one executor-side pin may hold
@@ -1605,16 +1032,14 @@ class _TermCosts(dict):
 
 
 class _Stats(NamedTuple):
-    """One call's BM25 statistics: the norm broadcast, the pruning-bound
-    inflation for an avg_len override, and the global (df, N) overrides
-    of sharded serving (_cursors semantics)."""
+    """One call's BM25 statistics: the norm broadcast and the global
+    (df, N) overrides of sharded serving (_cursors semantics)."""
     norm_bc: object
-    bound_inflate: float
     dfo_bc: object
     idf_docs: int | None
 
 
-_NO_STATS = _Stats(None, 1.0, None, None)  # the index's own df and N
+_NO_STATS = _Stats(None, None, None)  # the index's own df and N
 
 
 def _value(bc):
@@ -1653,21 +1078,13 @@ def _fold_queries(queries, weighted: bool = False) -> list:
     return out
 
 
-def _bm25_norms(index, dtype: str, avg_len_override) -> tuple:
-    """(norm_lens, pruning-bound inflation) of one call, under an optional
-    override of the index's baked average doc length (run_queries)."""
+def _bm25_norms(index, dtype: str, avg_len_override) -> np.ndarray:
+    """norm_lens of one call, under an optional override of the index's
+    baked average doc length (run_queries)."""
     if avg_len_override is None:
         return (index.norm_lens if dtype == "float32"
-                else index.norm_lens64), 1.0
-    baked = (index.avg_len_f64 if dtype == "float64"
-             else float(index.avg_len))
-    ratio = float(avg_len_override) / baked
-    # ratio > 1: true weights can exceed stored bounds by up to that
-    # factor. ratio < 1: bounds stay valid in real arithmetic, but the
-    # norms were recomputed through different f32 roundings than the
-    # build saw — keep the 1e-5 margin either way.
-    inflate = 1.0 if ratio == 1.0 else max(ratio, 1.0) * (1.0 + 1e-5)
-    return index.norm_lens_for(float(avg_len_override), dtype), inflate
+                else index.norm_lens64)
+    return index.norm_lens_for(float(avg_len_override), dtype)
 
 
 def _call_stats(spark, index, dtype: str, avg_len_override=None,
@@ -1675,14 +1092,12 @@ def _call_stats(spark, index, dtype: str, avg_len_override=None,
                 idf_docs: int | None = None) -> _Stats:
     """One call's _Stats on ``index``: its norms (broadcast once per
     handle, dtype and avg_len override) plus the per-call overrides."""
-    norms, bound_inflate = _bm25_norms(index, dtype, avg_len_override)
     return _Stats(
         shared_index_bc(
             spark, index,
             f"norms-{dtype}" if avg_len_override is None
             else f"norms-{dtype}-{float(avg_len_override)!r}",
-            lambda: norms),
-        bound_inflate,
+            lambda: _bm25_norms(index, dtype, avg_len_override)),
         (spark.sparkContext.broadcast(df_overrides)
          if df_overrides is not None else None),
         idf_docs)
@@ -1690,9 +1105,9 @@ def _call_stats(spark, index, dtype: str, avg_len_override=None,
 
 def _seg_map(records, with_positions: bool = False) -> dict:
     """term_id -> seg_id-sorted (seg_id, n, block_maxs, block_max_scores,
-    endpoints, freq_offsets, payload, max_weight[, pos_payload,
-    pos_endpoints]) parts of segment ``records`` (Rows or dicts) — the
-    form _cursors reads, on the pin and in the fallback alike."""
+    endpoints, freq_offsets, payload[, pos_payload, pos_endpoints]) parts
+    of segment ``records`` (Rows or dicts) — the form _cursors reads, on
+    the pin and in the fallback alike."""
     seg_map: dict[int, list] = {}
     for r in records:
         entry = (
@@ -1703,7 +1118,6 @@ def _seg_map(records, with_positions: bool = False) -> dict:
             np.asarray(r["endpoints"], dtype=np.int64),
             np.asarray(r["freq_offsets"], dtype=np.int64),
             bytes(r["payload"]),
-            float(r["max_weight"]),
         )
         if with_positions:
             entry = entry + (bytes(r["pos_payload"]),
@@ -1742,7 +1156,7 @@ def _index_pin(spark, index, positions: bool = False) -> _Pin | None:
     bodies' pin, whose parts also carry the position streams (its budget
     counts them too). A handle holds one segment pin: once it has a
     positions pin, BM25 bodies run on it too (_cursors reads the first
-    eight fields of a part), and building it unpersists the BM25 pin.
+    seven fields of a part), and building it unpersists the BM25 pin.
     Never destroyed: DataFrames returned earlier may still reference it."""
     def make():
         got = _collect_segments(index.segments, positions, PIN_BUDGET_BYTES)
@@ -1879,7 +1293,7 @@ def _map_bins(spark, bins: list, work, schema) -> DataFrame:
 
 def _execute(spark, index, items: list, body, schema,
              stats: _Stats = _NO_STATS, DT=np.float32,
-             merge_chunks: bool = False, pin: _Pin | None = None,
+             pin: _Pin | None = None,
              partitions: int | None = None,
              positions: bool = False) -> DataFrame:
     """The one execute step of every query op.
@@ -1887,7 +1301,7 @@ def _execute(spark, index, items: list, body, schema,
     ``items``: one per query, ``(term_ids asc, qfs, *side)`` — the
     _fold_queries form plus the op's own per-query data; a query's
     query_id is its position. Per query, _cursors builds the cursors
-    (``merge_chunks``, ``stats``' global df/N and bound inflation) and
+    (under ``stats``' global df/N) and
     ``body(qid, item, cursors)`` returns the query's output columns after
     query_id — one sequence per remaining ``schema`` field — or None. A
     query with no cursors (every term absent) yields no rows, as an inner
@@ -1908,7 +1322,7 @@ def _execute(spark, index, items: list, body, schema,
         pin = _index_pin(spark, index, positions)
         if pin is None:
             return _shuffle_execute(spark, index, items, body, schema, stats,
-                                    DT, merge_chunks, positions)
+                                    DT, positions)
     seg_bc, dd_bc, fd_bc = pin.seg_bc, pin.docs_dict_bc, pin.freqs_dict_bc
     pos_bc = pin.pos_dict_bc if positions else None
     num_docs = pin.num_docs
@@ -1917,8 +1331,7 @@ def _execute(spark, index, items: list, body, schema,
     # (the decode LRU) is reached only through module-level functions
     def work(rows):
         return _run_rows(rows, seg_bc.value, dd_bc.value, fd_bc.value,
-                         num_docs, DT, body, merge_chunks, stats,
-                         _value(pos_bc))
+                         num_docs, DT, body, stats, _value(pos_bc))
 
     return _map_bins(spark, _lpt_bins(spark, items, [it[0] for it in items],
                                       pin.term_cost, partitions),
@@ -1926,7 +1339,7 @@ def _execute(spark, index, items: list, body, schema,
 
 
 def _shuffle_execute(spark, index, items: list, body, schema, stats: _Stats,
-                     DT, merge_chunks: bool, positions: bool) -> DataFrame:
+                     DT, positions: bool) -> DataFrame:
     """_execute's fallback for an index over PIN_BUDGET_BYTES: the
     batch's (query_id, term_id) rows join the term-pruned segment scan,
     hash-partition on query_id, and each query's group of segment rows
@@ -1961,7 +1374,7 @@ def _shuffle_execute(spark, index, items: list, body, schema, stats: _Stats,
         cols = _run_rows([(qid, items[qid])],
                          _seg_map(pdf.to_dict("records"), positions),
                          dd_bc.value, fd_bc.value, num_docs, DT, body,
-                         merge_chunks, stats, _value(pos_bc))
+                         stats, _value(pos_bc))
         if not cols:
             return pd.DataFrame(columns=names)
         return _batch(arrow, cols).to_pandas(integer_object_nulls=True)
@@ -1970,8 +1383,7 @@ def _shuffle_execute(spark, index, items: list, body, schema, stats: _Stats,
 
 
 def _run_rows(rows, segs: dict, dd, fd, num_docs: int, DT, body,
-              merge_chunks: bool = False, stats: _Stats = _NO_STATS,
-              pos_dict=None) -> list:
+              stats: _Stats = _NO_STATS, pos_dict=None) -> list:
     """The worker side of _execute over (query_id, item) ``rows`` against
     seg-map parts ``segs``: per-column lists of output parts, query_id
     first, or [] when no query produced a row. With ``pos_dict`` (a
@@ -1983,8 +1395,7 @@ def _run_rows(rows, segs: dict, dd, fd, num_docs: int, DT, body,
 
         def view(item):
             return _cursors(segs, item[0], item[1], num_docs, dd, fd, DT,
-                            merge_chunks, dfo, stats.idf_docs,
-                            stats.bound_inflate)
+                            dfo, stats.idf_docs)
     else:
         def view(item):
             parts = {t: segs[t] for t in item[0] if t in segs}
@@ -2081,9 +1492,8 @@ class BroadcastQueryServer:
                         sc.broadcast(index.freqs_dict), index.num_docs,
                         sc.broadcast(index.pos_dict)
                         if with_positions else None)
-        norms, bound_inflate = _bm25_norms(index, dtype, avg_len_override)
         self.stats = _Stats(
-            sc.broadcast(norms), bound_inflate,
+            sc.broadcast(_bm25_norms(index, dtype, avg_len_override)),
             (sc.broadcast({int(t): int(d) for t, d in df_overrides.items()})
              if df_overrides is not None else None),
             int(idf_docs) if idf_docs is not None else None)
@@ -2141,8 +1551,8 @@ class BroadcastQueryServer:
             self.spark, None, _fold_queries(queries),
             _topk_body(algo, k, self.DT, self.num_docs, stats.norm_bc,
                        self._live_for(doc_filter)),
-            TOPK_SCHEMA, stats, self.DT, merge_chunks=algo == "ranked_and",
-            pin=self.pin, partitions=partitions)
+            TOPK_SCHEMA, stats, self.DT, pin=self.pin,
+            partitions=partitions)
 
     def serve_phrases(self, phrases: list,
                       partitions: int | None = None,
@@ -2237,7 +1647,7 @@ def query_latency_stats(spark: SparkSession, index, queries: list,
 
     def work(rows):
         args = (seg_bc.value, dd_bc.value, fd_bc.value, num_docs, DT, body,
-                algo == "ranked_and", stats)
+                stats)
         outs = []
         for row in rows:
             # the full query op, reference-style: cursor setup + kernel;
@@ -2305,8 +1715,8 @@ def run_boolean_queries(
     spark: SparkSession, index, queries: list, mode: str = "and",
     doc_filter: DocMask | None = None,
 ) -> DataFrame:
-    """Boolean AND (leapfrog intersection) / OR (k-way union) / AND-NOT
-    (MUST terms minus MUST_NOT terms) over the compressed index; returns
+    """Boolean AND (list intersection) / OR (union) / AND-NOT (MUST
+    terms minus MUST_NOT terms) over the compressed index; returns
     (query_id, doc_id). (ref queries.hpp:34-130; AND-NOT has no reference
     counterpart — Lucene MUST/MUST_NOT scope.)
 
@@ -2342,8 +1752,7 @@ def run_boolean_queries(
                                 [c for c in cursors if c.term_id in neg],
                                 num_docs, live=live),)
 
-    return _execute(spark, index, items, body, BOOL_SCHEMA,
-                    merge_chunks=mode in ("and", "and_not"))
+    return _execute(spark, index, items, body, BOOL_SCHEMA)
 
 
 def _match_op(spark, index, items: list, mode: str, doc_filter,
@@ -2360,8 +1769,7 @@ def _match_op(spark, index, items: list, mode: str, doc_filter,
         return per_query(item, np.asarray(
             fn(cursors, num_docs, live=_value(live_bc)), dtype=np.int64))
 
-    return _execute(spark, index, items, body, schema,
-                    merge_chunks=mode == "and")
+    return _execute(spark, index, items, body, schema)
 
 
 def _scored_op(spark, index, items: list, dtype: str, doc_filter,
@@ -2428,7 +1836,7 @@ class _Positions(NamedTuple):
 
         out = []
         for p in self.parts[tid]:
-            ckey = (tid, p[0], p[1], len(p[8]), hash(p[8]),
+            ckey = (tid, p[0], p[1], len(p[7]), hash(p[7]),
                     _dict_token(self.dd), _dict_token(self.pdict))
             keys = _POS_CACHE.get(ckey)
             if keys is not None:
@@ -2437,7 +1845,7 @@ class _Positions(NamedTuple):
                 docs, freqs = decode_list_bulk(p[6], p[1], p[2], p[4], p[5],
                                                self.dd, self.fd)
                 pos = gaps_to_positions(
-                    decode_value_stream(p[8], int(freqs.sum()), p[9],
+                    decode_value_stream(p[7], int(freqs.sum()), p[8],
                                         self.pdict), freqs)
                 keys = (np.repeat(docs, freqs).astype(np.uint64)
                         << _POS_SHIFT) | pos.astype(np.uint64)
@@ -2870,14 +2278,10 @@ def _phrase_term_infos(item, q: _Positions) -> list:
     infos = []
     tokens = (_dict_token(q.dd), _dict_token(q.fd))
     for tid, qf in zip(item[0], item[1]):
-        parts = q.parts[tid]
-        dec = [_cached_full_decode(Cursor._of_part(
-            p, tid, q.num_docs, q.dd, q.fd, tokens, None, None))
-            for p in parts]
-        docs, freqs = dec[0] if len(dec) == 1 else (
-            np.concatenate([d[0] for d in dec]),
-            np.concatenate([d[1] for d in dec]))
-        infos.append((qf, sum(p[1] for p in parts), docs, freqs))
+        [(_, docs, freqs, _)] = _term_lists(
+            [Cursor._of_part(p, tid, q.dd, q.fd, tokens, None)
+             for p in q.parts[tid]])
+        infos.append((qf, len(docs), docs, freqs))
     return infos
 
 

@@ -205,8 +205,7 @@ def append_docs(
     Query-time exactness across epochs (run_queries_sharded): global
     (N, df) flow through the existing df_overrides/idf_docs channel, and
     epochs whose baked avg_len predates the append re-derive norms from
-    raw lens (Index.norm_lens_for) with pruning bounds inflated by
-    avg_new/avg_old (queries._cursors) — results are bit-identical to a
+    raw lens (Index.norm_lens_for) — results are bit-identical to a
     fresh build over the union corpus (tests/test_append.py).
 
     Scale shape: one tokenize pass over ONLY the new batch, one hash join
@@ -416,9 +415,9 @@ def run_queries_sharded(
         base = sidx.bases[s]
         # epochs built before an append baked a smaller corpus's avg_len;
         # hand them the CURRENT global average (norms re-derive from raw
-        # lens, pruning bounds inflate — run_queries docstring). Shards
-        # already baked at the global value get None: byte-identical to
-        # the pre-append behavior, norms straight off the Index cache.
+        # lens — run_queries docstring). Shards already baked at the
+        # global value get None: byte-identical to the pre-append
+        # behavior, norms straight off the Index cache.
         avg_ovr = (sidx.avg_len_f64
                    if idx.avg_len_f64 != sidx.avg_len_f64 else None)
         r = run_queries(
@@ -439,7 +438,8 @@ def _merge_topk(parts: list, k: int) -> DataFrame:
     """Union the shards' (query_id, doc_id, score) candidates and take the
     global exact top-k by (score desc, doc_id asc) — each shard already
     returned its local exact top-k, so the union holds every possible
-    global winner and the merge reproduces TopK's tie-breaks."""
+    global winner and the merge reproduces the kernels' (score desc,
+    doc_id asc) tie-breaks."""
     allr = parts[0]
     for p in parts[1:]:
         allr = allr.unionByName(p)
@@ -463,10 +463,10 @@ class ShardedQueryServer:
     num_docs, per-term df = the sum of every shard's pinned posting counts
     (each shard pin's ``term_cost`` is exactly its build-time df per term —
     no vocabulary scan), and epochs whose baked avg_len predates an append
-    re-pin their norm array under the CURRENT global average with the
-    certified pruning-bound inflation (queries.BroadcastQueryServer
-    override channel). Results are bit-identical to run_queries_sharded
-    and to a fresh unsharded build (tests/test_append.py).
+    re-pin their norm array under the CURRENT global average
+    (queries.BroadcastQueryServer override channel). Results are
+    bit-identical to run_queries_sharded and to a fresh unsharded build
+    (tests/test_append.py).
 
     ``terms=None`` pins each shard's whole index; a term list pins only
     those terms' segments (queries outside it see no postings). The

@@ -7,8 +7,8 @@ and measure against the monolithic 1M build on the SAME corpus:
   * correctness at scale: a sampled mixed-df query workload must be
     rank-identical (doc ids AND quantized scores) between the appended
     two-epoch index and the monolithic index — this exercises the
-    cross-epoch stats overrides (global df/N, re-derived norms, inflated
-    pruning bounds) at 92.6M postings, not at the sf-gate's 60k;
+    cross-epoch stats overrides (global df/N, re-derived norms) at 92.6M
+    postings, not at the sf-gate's 60k;
   * serving: ShardedQueryServer (pinned per-epoch fan-out) throughput vs
     the monolithic BroadcastQueryServer on the same 2000-query batch.
 

@@ -39,7 +39,7 @@ from dint_spark.queries import (_fold_queries, _run_rows,  # noqa: E402
 
 def load_seg_map(idx_dir: str):
     cols = ["term_id", "seg_id", "n", "block_maxs", "block_max_scores",
-            "endpoints", "freq_offsets", "payload", "max_weight"]
+            "endpoints", "freq_offsets", "payload"]
     t = pq.read_table(os.path.join(idx_dir, "segments"), columns=cols)
     return _seg_map(t.to_pylist())
 

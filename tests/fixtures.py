@@ -16,6 +16,7 @@ from dint_spark.dint.codec import encode_list
 from dint_spark.dint.dictionary import DintDictionary, select_patterns_dsf
 from dint_spark.dint.stats import (
     _compact_acc, _iter_pattern_groups, _merge_pending, _window_blobs)
+from dint_spark import queries as Q
 from dint_spark.queries import Cursor, _qtw
 
 VOCAB = 2000
@@ -115,12 +116,19 @@ def make_cursors(query, segs, docs_dict, freqs_dict, norm, num_docs,
             continue
         s = segs[int(t)]
         c = Cursor(s["n"], s["block_maxs"], s["endpoints"], s["freq_offsets"],
-                   s["payload"], num_docs, docs_dict, freqs_dict,
+                   s["payload"], docs_dict, freqs_dict,
                    block_max_scores=s["block_max_scores"], term_id=int(t))
         c.q_weight = _qtw(int(qf), s["n"], num_docs, DT)
-        c.max_weight = DT(c.q_weight * DT(s["max_weight"]))
         cursors.append(c)
     return cursors
+
+
+# block_max_wand_vec on its past-the-dense-ceiling (compaction) path at
+# any shard size; the kernel tests run it under the id "bmw_pruned". A
+# lambda, so Spark ships it to workers by value (they cannot import this
+# module); it reaches the kernel through dint_spark.queries.
+PAST_CEILING = lambda cs, nl, nd, k, DT=np.float32, live=None: (  # noqa: E731
+    Q.block_max_wand_vec(cs, nl, Q._DENSE_SCORE_MAX_DOCS + 1, k, DT, live))
 
 
 def oracle_topk(query, plists, doclens, num_docs, k=10):

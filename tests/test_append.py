@@ -8,9 +8,9 @@ The corpus is split BY URL RANK so a fresh full build assigns the same
 dense doc ids the append does (assign_doc_ids = url rank: old batch =
 urls below the pivot, appended batch = the rest). The appended half's
 text is doubled and salted with a term that exists nowhere in the old
-epoch, so the append raises the global avg_len (the direction where
-stale pruning bounds UNDER-estimate and need the certified inflation)
-and extends the vocabulary.
+epoch, so the append raises the global avg_len (old epochs' stored norms
+go stale and must be re-derived from raw lens) and extends the
+vocabulary.
 """
 
 import shutil
@@ -22,6 +22,7 @@ from dint_spark.corpus import generate_pages
 from dint_spark.index import IndexConfig, build_index, delete_docs
 from dint_spark import queries
 from dint_spark.queries import build_doc_filter, run_queries
+from fixtures import PAST_CEILING
 from dint_spark.sharding import (append_docs, build_doc_filters_sharded,
                                  build_sharded_index, delete_docs_sharded,
                                  run_queries_sharded)
@@ -33,9 +34,9 @@ NEW_TERM = "zzzappendonly"
 
 def _split_pages(spark, n, pivot, seed, grow="new"):
     """One corpus, split at the url-rank pivot. grow='new' doubles the
-    APPENDED half's text (global avg_len rises on append -> stale-bound
-    inflation path); grow='old' doubles the OLD half (avg_len falls ->
-    bounds stay valid untouched). The appended half always gains
+    APPENDED half's text (global avg_len rises on append); grow='old'
+    doubles the OLD half (avg_len falls). Either way the old epoch's
+    norms are re-derived. The appended half always gains
     NEW_TERM, absent from the old epoch."""
     pages = generate_pages(spark, n, seed=seed)
     urls = [r["url"] for r in
@@ -108,8 +109,8 @@ def test_append_layout(appended):
     assert len(sidx.shards) == 2
     assert sidx.bases == [0, PIVOT, N_DOCS]
     assert sidx.num_docs == N_DOCS
-    # the appended (doubled) docs must RAISE the global average — the
-    # direction where stale bounds need inflating — and the global value
+    # the appended (doubled) docs must RAISE the global average, and the
+    # global value
     # must equal the fresh full build's exactly
     assert sidx.avg_len_f64 > avg_before
     assert sidx.avg_len_f64 == idx_full.avg_len_f64
@@ -139,14 +140,13 @@ def test_vocab_extends_not_reranks(appended):
 
 
 def _pin_pruned(monkeypatch, algo: str) -> str:
-    """``algo``, with "bmw_pruned" run as block_max_wand_vec's pruned pass:
-    block_max_wand_vec scores these small indexes densely, and the inflated
-    and float64 bounds are only exercised when the pass prunes. The
-    kernel is looked up on the driver and ships by reference."""
+    """``algo``, with "bmw_pruned" run as block_max_wand_vec past the
+    dense ceiling (its compaction path): block_max_wand_vec scores these
+    small indexes densely otherwise. The kernel is looked up on the
+    driver and ships by value."""
     if algo != "bmw_pruned":
         return algo
-    monkeypatch.setitem(queries.KERNELS, "block_max_wand_vec",
-                        queries._bmw_pruned)
+    monkeypatch.setitem(queries.KERNELS, "block_max_wand_vec", PAST_CEILING)
     return "block_max_wand_vec"
 
 
@@ -166,8 +166,8 @@ def test_append_topk_identical(appended, algo, dtype, monkeypatch):
 
 
 def test_append_shrink_direction(spark, tmp_path):
-    """avg_len FALLS on append (old docs were the long ones): stale bounds
-    over-estimate — valid without inflation — and results still match the
+    """avg_len FALLS on append (old docs were the long ones): the old
+    epoch's norms re-derive the other way, and results still match the
     fresh build exactly."""
     full, old, new = _split_pages(spark, 240, 150, seed=31, grow="old")
     cfg = IndexConfig(num_buckets=2, input_tag="shrink")

@@ -2,16 +2,17 @@
 seg_chunk splits into multiple disjoint doc-range rows; every query path
 must return results identical to the single-row build.
 
-Chunk-cursor composition argument (queries.build_cursors): union-style
+Chunk-cursor composition argument (queries._cursors): union-style
 kernels see one cursor per chunk — a doc matches at most one chunk, so
-per-doc float32 accumulation order is unchanged; intersection kernels get
-one merged ArrayCursor per term."""
+per-doc float32 accumulation order is unchanged; intersection kernels
+join a term's chunks into one list (queries._term_lists)."""
 
 import shutil
 
 import pytest
 
 from dint_spark import queries as Q
+from fixtures import PAST_CEILING
 from dint_spark.corpus import generate_pages
 from dint_spark.index import IndexConfig, build_index
 from dint_spark.queries import (
@@ -52,13 +53,13 @@ def _pdf(df, keys):
 
 
 def _pin_pruned(monkeypatch, algo: str) -> str:
-    """``algo``, with "bmw_pruned" run as block_max_wand_vec's pruned pass
-    (which it takes only past the dense ceiling), so the pass sees chunk
-    cursors: several disjoint parts per term. The kernel is looked up on
-    the driver and ships by reference."""
+    """``algo``, with "bmw_pruned" run as block_max_wand_vec past the
+    dense ceiling (its compaction path), so that path sees chunk cursors:
+    several disjoint parts per term. The kernel is looked up on the
+    driver and ships by value."""
     if algo != "bmw_pruned":
         return algo
-    monkeypatch.setitem(Q.KERNELS, "block_max_wand_vec", Q._bmw_pruned)
+    monkeypatch.setitem(Q.KERNELS, "block_max_wand_vec", PAST_CEILING)
     return "block_max_wand_vec"
 
 

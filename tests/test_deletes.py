@@ -16,15 +16,14 @@ import shutil
 import numpy as np
 import pytest
 
-from fixtures import (build_dicts, build_segments, gen_collection,
-                      gen_queries, make_cursors, oracle_topk)
+from fixtures import (PAST_CEILING, build_dicts, build_segments,
+                      gen_collection, gen_queries, make_cursors, oracle_topk)
 
-from dint_spark.queries import (KERNELS, Tombstones, _bmw_pruned, boolean_and,
-                                boolean_or)
+from dint_spark.queries import KERNELS, Tombstones, boolean_and, boolean_or
 
-# the kernels plus block_max_wand_vec's pruned pass, which it runs only
-# on shards past the dense ceiling
-KERNELS = {**KERNELS, "bmw_pruned": _bmw_pruned}
+# every algo name, plus block_max_wand_vec's path on shards past the
+# dense ceiling
+KERNELS = {**KERNELS, "bmw_pruned": PAST_CEILING}
 
 
 # ---------------------------------------------------------------------------
@@ -82,14 +81,14 @@ def test_boolean_kernels_exclude_deleted(small):
     tomb = Tombstones(deleted, num_docs)
     q = queries[1][:2]
     cursors = make_cursors(q, segs, dd, fd, norm, num_docs)
-    got_and = boolean_and(cursors, num_docs, live=tomb)
+    got_and = boolean_and(cursors, num_docs, live=tomb).tolist()
     cursors = make_cursors(q, segs, dd, fd, norm, num_docs)
-    got_or = boolean_or(cursors, num_docs, live=tomb)
+    got_or = boolean_or(cursors, num_docs, live=tomb).tolist()
     assert all(d % 3 != 0 for d in got_and)
     assert all(d % 3 != 0 for d in got_or)
     # OR without tombstones minus deleted == OR with tombstones
     cursors = make_cursors(q, segs, dd, fd, norm, num_docs)
-    full_or = boolean_or(cursors, num_docs)
+    full_or = boolean_or(cursors, num_docs).tolist()
     assert [d for d in full_or if d % 3 != 0] == got_or
 
 

@@ -68,7 +68,7 @@ def test_kernel_and_not_matches_brute(small):
         for mask in (None, live):
             cs = make_cursors(pos, segs, dd, fd, norm, num_docs)
             ns = make_cursors(neg, segs, dd, fd, norm, num_docs)
-            got = boolean_and_not(cs, ns, num_docs, live=mask)
+            got = boolean_and_not(cs, ns, num_docs, live=mask).tolist()
             want = _brute_and_not(
                 plists, pos, neg, num_docs,
                 mask=None if mask is None else mask.mask)
@@ -80,10 +80,38 @@ def test_kernel_and_not_contradiction_and_empty_neg(small):
     t = next(iter(plists))
     cs = make_cursors([t], segs, dd, fd, norm, num_docs)
     ns = make_cursors([t], segs, dd, fd, norm, num_docs)
-    assert boolean_and_not(cs, ns, num_docs) == []
+    assert boolean_and_not(cs, ns, num_docs).tolist() == []
     cs = make_cursors([t], segs, dd, fd, norm, num_docs)
-    assert (boolean_and_not(cs, [], num_docs)
+    assert (boolean_and_not(cs, [], num_docs).tolist()
             == sorted(plists[t][0]))
+
+
+def test_kernel_and_not_skips_negative_blocks(monkeypatch):
+    """A negative list decodes only the blocks over the positive
+    matches — here 1 of its 10 — and never enters the LRU: a huge NOT
+    list is never fully decoded."""
+    from dint_spark import queries as Q
+
+    num_docs = 5000
+    plists = {1: (np.array([100, 101, 102, 103]), np.ones(4, dtype=np.int64)),
+              2: (np.arange(0, num_docs, 2), np.ones(2500, dtype=np.int64))}
+    dd, fd = build_dicts(plists)
+    segs, norm = build_segments(plists, np.full(num_docs, 10), dd, fd)
+    cs = make_cursors([1], segs, dd, fd, norm, num_docs)
+    ns = make_cursors([2], segs, dd, fd, norm, num_docs)
+    assert len(ns[0].block_maxs) == 10
+    asked = []
+    real = Q.decode_posting_blocks
+
+    def counting(buf, table, docs_dict, freqs_dict):
+        asked.append(table.shape[1])
+        return real(buf, table, docs_dict, freqs_dict)
+
+    monkeypatch.setattr(Q, "decode_posting_blocks", counting)
+    assert boolean_and_not(cs, ns, num_docs).tolist() == [101, 103]
+    # the positive list's one block, then one block of the negative list
+    assert asked == [1, 1]
+    assert Q._cache_key(ns[0]) not in Q._LIST_CACHE
 
 
 # ---------------------------------------------------------------------------

@@ -18,15 +18,15 @@ import pickle
 import numpy as np
 import pytest
 
-from fixtures import (build_dicts, build_segments, gen_collection,
-                      gen_queries, make_cursors, oracle_topk)
+from fixtures import (PAST_CEILING, build_dicts, build_segments,
+                      gen_collection, gen_queries, make_cursors, oracle_topk)
 
-from dint_spark.queries import (DocMask, KERNELS, Tombstones, _bmw_pruned,
-                                boolean_and, boolean_or, build_doc_filter)
+from dint_spark.queries import (DocMask, KERNELS, Tombstones, boolean_and,
+                                boolean_or, build_doc_filter)
 
-# the kernels plus block_max_wand_vec's pruned pass, which it runs only
-# on shards past the dense ceiling
-KERNELS = {**KERNELS, "bmw_pruned": _bmw_pruned}
+# every algo name, plus block_max_wand_vec's path on shards past the
+# dense ceiling
+KERNELS = {**KERNELS, "bmw_pruned": PAST_CEILING}
 
 
 # ---------------------------------------------------------------------------
@@ -111,9 +111,9 @@ def test_boolean_kernels_respect_docmask(small):
     dm = DocMask.from_mask(mask)
     q = queries[1][:2]
     cursors = make_cursors(q, segs, dd, fd, norm, num_docs)
-    got_and = boolean_and(cursors, num_docs, live=dm)
+    got_and = boolean_and(cursors, num_docs, live=dm).tolist()
     cursors = make_cursors(q, segs, dd, fd, norm, num_docs)
-    got_or = boolean_or(cursors, num_docs, live=dm)
+    got_or = boolean_or(cursors, num_docs, live=dm).tolist()
     docs_sets = [set(plists[t][0].tolist()) for t in set(q)]
     want_and = sorted(set.intersection(*docs_sets) & set(np.where(mask)[0]))
     want_or = sorted(set.union(*docs_sets) & set(np.where(mask)[0]))

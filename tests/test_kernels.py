@@ -1,13 +1,15 @@
 """Retrieval kernels vs the independent exhaustive float32 oracle
 (FIXTURES.md F3/F4; reference contract: test/test_ranked_queries.cpp —
-we require exact float32 equality for or/and/wand/bmw, rank-identity +
-1e-4 relative for maxscore whose accumulation order differs by design)."""
+we require exact float32 equality for every ``algo`` name, where the
+reference allows 0.1%) and vs the scalar DAAT walk of tests/oracle.py."""
 
 import numpy as np
 import pytest
 
 from dint_spark import queries as Q
+from dint_spark.dint.codec import BLOCK_SIZE, decode_posting_blocks
 from fixtures import (
+    PAST_CEILING,
     build_dicts,
     build_segments,
     gen_collection,
@@ -16,16 +18,17 @@ from fixtures import (
     oracle_topk,
 )
 from dint_spark.queries import (
-    _bmw_pruned,
     block_max_wand_vec,
     boolean_and,
     boolean_or,
-    maxscore,
     ranked_and,
-    ranked_or,
     ranked_or_vec,
-    wand,
 )
+from oracle import ranked_or
+
+# every algo name, plus block_max_wand_vec past the dense ceiling
+KERNELS = {**Q.KERNELS, "bmw_pruned": PAST_CEILING}
+_IDS = {"block_max_wand": "bmw", "block_max_wand_vec": "bmw_vec"}
 
 
 @pytest.fixture(scope="module")
@@ -37,32 +40,43 @@ def collection():
     return plists, doclens, N, queries, docs_dict, freqs_dict, segs, norm
 
 
-@pytest.mark.parametrize(
-    "algo", ["ranked_or", "ranked_or_vec", "wand", "bmw", "bmw_vec",
-             "bmw_pruned"])
+def _and_docs(plists, q) -> set:
+    """Docs holding every term of ``q`` (the empty set when one term has
+    no postings)."""
+    sets = [set(plists[int(t)][0].tolist()) if int(t) in plists else set()
+            for t in set(q)]
+    return set.intersection(*sets) if sets else set()
+
+
+def _and_rows(ranked, plists, q, k) -> list:
+    """ranked_and's expected top-``k``: a full OR ranking restricted to
+    the docs holding every query term (their OR and AND scores agree)."""
+    inter = _and_docs(plists, q)
+    return [(d, s) for d, s in ranked if d in inter][:k]
+
+
+@pytest.mark.parametrize("algo", [*Q.KERNELS, "bmw_pruned"],
+                         ids=lambda a: _IDS.get(a, a))
 def test_exact_float32_rank_identity(collection, algo):
     plists, doclens, N, queries, dd, fd, segs, norm = collection
-    fn = {
-        "ranked_or": lambda cs: ranked_or(cs, norm, N, 10),
-        "ranked_or_vec": lambda cs: ranked_or_vec(cs, norm, N, 10),
-        "wand": lambda cs: wand(cs, norm, N, 10),
-        "bmw": lambda cs: wand(cs, norm, N, 10, block_max=True),
-        "bmw_vec": lambda cs: block_max_wand_vec(cs, norm, N, 10),
-        "bmw_pruned": lambda cs: _bmw_pruned(cs, norm, N, 10),
-    }[algo]
+    kern = KERNELS[algo]
     for q in queries:
-        oracle = oracle_topk(q, plists, doclens, N, k=10)
+        if algo == "ranked_and":
+            want = _and_rows(oracle_topk(q, plists, doclens, N, k=N),
+                             plists, q, 10)
+        else:
+            want = oracle_topk(q, plists, doclens, N, k=10)
         cs = make_cursors(q, segs, dd, fd, norm, N)
-        assert fn(cs) == oracle
+        assert kern(cs, norm, N, 10, np.float32) == want
 
 
 def _variant(collection, variant):
-    """(seg_map, [(norm, bound_inflate)], DT, live, df_overrides, idf_docs)
-    of one input variant: the fixture lists as _seg_map parts, under
-    float64, tombstones combined with a DocMask (as _live_bc combines
-    them), two avg_len norms plus an equal copy of the first (one
-    worker's weight entries must not alias), lists re-encoded as several
-    parts, or global df/N overrides."""
+    """(seg_map, [norm], DT, live, df_overrides, idf_docs) of one input
+    variant: the fixture lists as _seg_map parts, under float64,
+    tombstones combined with a DocMask (as _live_bc combines them), two
+    avg_len norms plus an equal copy of the first (one worker's weight
+    entries must not alias), lists re-encoded as several parts, or
+    global df/N overrides."""
     plists, doclens, N, queries, dd, fd, segs, norm = collection
     chunk = 100 if variant == "chunked" else None
     seg_map = {}
@@ -77,11 +91,11 @@ def _variant(collection, variant):
                 s["block_max_scores"],
                 np.asarray(s["endpoints"], dtype=np.int64),
                 np.asarray(s["freq_offsets"], dtype=np.int64),
-                bytes(s["payload"]), float(s["max_weight"])))
+                bytes(s["payload"])))
     DT, live, dfo, idf = np.float32, None, None, None
-    norms = [(norm, 1.0)]
+    norms = [norm]
     if variant == "float64":
-        DT, norms = np.float64, [(norm.astype(np.float64), 1.0)]
+        DT, norms = np.float64, [norm.astype(np.float64)]
     elif variant == "tombstones_docmask":
         rng = np.random.default_rng(11)
         tomb = Q.Tombstones(rng.choice(N, N // 10, replace=False), N)
@@ -91,8 +105,7 @@ def _variant(collection, variant):
     elif variant == "two_norms":
         avg = np.sum(doclens, dtype=np.float64) / len(doclens)
         grown = doclens.astype(np.float32) / np.float32(1.25 * avg)
-        norms = [(norm, 1.0), (grown, 1.25 * (1 + 1e-5)),
-                 (norm.copy(), 1.0)]
+        norms = [norm, grown, norm.copy()]
     elif variant == "df_overrides":
         dfo = {t: 3 * len(d) for t, (d, _) in plists.items()}
         idf = 3 * N
@@ -100,10 +113,10 @@ def _variant(collection, variant):
 
 
 # dense ceiling: the default (block_max_wand_vec scores densely under a
-# block-max floor) and 0 (it runs the pruned pass, whose own fallback and
-# ranked_or_vec then take the compacted path). The input variants run
-# through the one cursor builder, and every kernel must equal scalar
-# ranked_or on them.
+# block-max floor) and 0 (it and ranked_or_vec take the compacted path).
+# The input variants run through the one cursor builder, and every algo
+# name must equal the scalar walk (ranked_and: its AND-restricted
+# ranking) on them.
 @pytest.mark.parametrize("ceiling,variant", [
     pytest.param(c, v, id=str(c) if v is None else f"{c}-{v}")
     for v in (None, "float64", "tombstones_docmask", "two_norms",
@@ -118,23 +131,22 @@ def test_bmw_vec_paths_agree(collection, monkeypatch, ceiling, variant):
             for q in queries:
                 cs = lambda: make_cursors(q, segs, dd, fd, norm, N)  # noqa
                 top = block_max_wand_vec(cs(), norm, N, k)
-                assert top == _bmw_pruned(cs(), norm, N, k)
+                assert top == ranked_or(cs(), norm, N, k)
                 assert top == ranked_or_vec(cs(), norm, N, k)
         return
     seg_map, norms, DT, live, dfo, idf = _variant(collection, variant)
-    kernels = [ranked_or_vec, block_max_wand_vec, _bmw_pruned, wand,
-               lambda *a, **kw: wand(*a, block_max=True, **kw)]
     for k in (1, 10):
         for q in queries[:40]:
             tids, qfs = Q._fold_queries([q])[0]
-            for nl, inflate in norms:
+            for nl in norms:
                 def cs():
                     return Q._cursors(seg_map, tids, qfs, N, dd, fd, DT,
-                                      df_overrides=dfo, idf_docs=idf,
-                                      bound_inflate=inflate)
-                want = ranked_or(cs(), nl, N, k, DT, live=live)
-                for kern in kernels:
-                    assert kern(cs(), nl, N, k, DT, live=live) == want
+                                      df_overrides=dfo, idf_docs=idf)
+                full = ranked_or(cs(), nl, N, N, DT, live=live)
+                for algo, kern in Q.KERNELS.items():
+                    want = (_and_rows(full, plists, q, k)
+                            if algo == "ranked_and" else full[:k])
+                    assert kern(cs(), nl, N, k, DT, live=live) == want, algo
 
 
 def test_dense_floor_ties():
@@ -168,7 +180,7 @@ def test_maxscore_rank_identity(collection):
     for q in queries:
         oracle = oracle_topk(q, plists, doclens, N, k=10)
         cs = make_cursors(q, segs, dd, fd, norm, N)
-        got = maxscore(cs, norm, N, 10)
+        got = Q.KERNELS["maxscore"](cs, norm, N, 10)
         assert [d for d, _ in got] == [d for d, _ in oracle]
         assert np.allclose([s for _, s in got], [s for _, s in oracle],
                            rtol=1e-4)
@@ -195,55 +207,65 @@ def test_boolean_set_semantics(collection):
             continue
         sets = [set(plists[t][0].tolist()) for t in terms]
         cs = make_cursors(q, segs, dd, fd, norm, N)
-        assert boolean_and(cs, N) == sorted(set.intersection(*sets))
+        assert boolean_and(cs, N).tolist() == sorted(set.intersection(*sets))
         cs = make_cursors(q, segs, dd, fd, norm, N)
-        assert boolean_or(cs, N) == sorted(set.union(*sets))
+        assert boolean_or(cs, N).tolist() == sorted(set.union(*sets))
+
+
+def _block(c, b: int):
+    """(docs, freqs) of block ``b`` of cursor ``c`` alone, decoded through
+    its block_table: the engine's skip primitive (boolean_and_not)."""
+    return decode_posting_blocks(*c.block_table([b]), c.docs_dict,
+                                 c.freqs_dict)
 
 
 def test_enumerator_laws(collection):
-    """next/next_geq/move-equivalents vs the plain arrays
-    (port of test_generic_sequence.hpp:28-163 semantics)."""
+    """next/next_geq-equivalents vs the plain arrays (port of
+    test_generic_sequence.hpp:28-163 semantics): the blocks decoded one
+    by one visit exactly the list, and for every lower bound the one
+    block searchsorted(block_maxs, lb) names holds the true successor."""
     plists, doclens, N, queries, dd, fd, segs, norm = collection
     rng = np.random.default_rng(11)
     terms = rng.choice(list(plists), size=30, replace=False)
     for t in terms:
         docs, freqs = plists[int(t)]
-        cs = make_cursors([int(t)], segs, dd, fd, norm, N)
-        c = cs[0]
-        # full scan: next() visits exactly the list
-        for i in range(len(docs)):
-            assert c.docid() == docs[i]
-            assert c.freq() == freqs[i]
-            c.next()
-        assert c.docid() == N
+        c = make_cursors([int(t)], segs, dd, fd, norm, N)[0]
+        # full scan: the blocks in turn visit exactly the list
+        got = [_block(c, b) for b in range(len(c.block_maxs))]
+        assert np.concatenate([d for d, _ in got]).tolist() == docs.tolist()
+        assert np.concatenate([f for _, f in got]).tolist() == freqs.tolist()
 
         # next_geq sweeps: every lower bound lands on the true successor
-        cs = make_cursors([int(t)], segs, dd, fd, norm, N)
-        c = cs[0]
         for lb in sorted(rng.integers(0, N + 1, size=50).tolist()):
-            c.next_geq(lb)
+            b = int(np.searchsorted(c.block_maxs, lb, side="left"))
             j = np.searchsorted(docs, lb, side="left")
             if j == len(docs):
-                assert c.docid() == N
+                assert b == len(c.block_maxs)
             else:
-                assert c.docid() == docs[j]
-                assert c.freq() == freqs[j]
+                bd, bf = _block(c, b)
+                i = int(np.searchsorted(bd, lb, side="left"))
+                assert bd[i] == docs[j]
+                assert bf[i] == freqs[j]
 
 
 def test_cursor_move(collection):
-    """Q3 move(pos) random access (ref dict_posting_list.hpp:149-158)."""
+    """Q3 move(pos) random access (ref dict_posting_list.hpp:149-158):
+    block pos // BLOCK_SIZE, decoded alone, holds posting ``pos``."""
     plists, doclens, N, queries, dd, fd, segs, norm = collection
     rng = np.random.default_rng(13)
     for t in rng.choice(list(plists), size=10, replace=False):
         docs, freqs = plists[int(t)]
         c = make_cursors([int(t)], segs, dd, fd, norm, N)[0]
         for pos in rng.integers(0, len(docs) + 2, size=20).tolist():
-            c.move(int(pos))
+            b = pos // BLOCK_SIZE
             if pos >= len(docs):
-                assert c.docid() == N
+                # past the end: no block holds position pos
+                assert (b >= len(c.block_maxs)
+                        or pos - b * BLOCK_SIZE >= len(_block(c, b)[0]))
             else:
-                assert c.docid() == docs[pos]
-                assert c.freq() == freqs[pos]
+                bd, bf = _block(c, b)
+                assert bd[pos - b * BLOCK_SIZE] == docs[pos]
+                assert bf[pos - b * BLOCK_SIZE] == freqs[pos]
 
 
 def test_decode_cache_no_freq_aliasing(collection):

@@ -63,7 +63,8 @@ def test_decode_verify_matches_postings(spark, index):
 
 def test_distributed_queries_match_driver_kernels(spark, index):
     """run_queries (applyInPandas) == direct driver-side kernel calls."""
-    from dint_spark.queries import Cursor, ranked_or, _qtw
+    from dint_spark.queries import Cursor, _qtw
+    from oracle import ranked_or
 
     vocab = index.vocab().orderBy("term_id").limit(200).collect()
     tids = [r["term_id"] for r in vocab]
@@ -82,11 +83,10 @@ def test_distributed_queries_match_driver_kernels(spark, index):
         for t, qf in zip(terms, qfs):
             s = segs[int(t)]
             c = Cursor(s["n"], s["block_maxs"], s["endpoints"],
-                       s["freq_offsets"], s["payload"], index.num_docs,
+                       s["freq_offsets"], s["payload"],
                        index.docs_dict, index.freqs_dict,
                        block_max_scores=s["block_max_scores"], term_id=int(t))
             c.q_weight = _qtw(int(qf), s["n"], index.num_docs, np.float32)
-            c.max_weight = np.float32(c.q_weight * np.float32(s["max_weight"]))
             cursors.append(c)
         expect = ranked_or(cursors, norm, index.num_docs, 10)
         sub = got[got.query_id == qid]

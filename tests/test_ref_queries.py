@@ -21,14 +21,14 @@ import numpy as np
 import pytest
 
 from fixtures import (
+    PAST_CEILING,
     build_dicts,
     build_segments,
     gen_collection,
     make_cursors,
     oracle_topk,
 )
-from dint_spark.queries import (_bmw_pruned, block_max_wand_vec, maxscore,
-                                read_query_log, wand)
+from dint_spark.queries import KERNELS, block_max_wand_vec, read_query_log
 
 REF_QUERIES = "/root/reference/test/test_data/queries"
 VOCAB = 1500
@@ -60,11 +60,11 @@ def test_reference_query_set_rank_identity(collection):
         got = block_max_wand_vec(cs, norm, N, 10, np.float32)
         assert got == oracle, q
         cs = make_cursors(q, segs, docs_dict, freqs_dict, norm, N)
-        got_p = _bmw_pruned(cs, norm, N, 10, np.float32)
+        got_p = PAST_CEILING(cs, norm, N, 10, np.float32)
         assert got_p == oracle, q
         cs = make_cursors(q, segs, docs_dict, freqs_dict, norm, N)
-        got_w = wand(cs, norm, N, 10, np.float32, block_max=True)
+        got_w = KERNELS["block_max_wand"](cs, norm, N, 10, np.float32)
         assert got_w == oracle, q
         cs = make_cursors(q, segs, docs_dict, freqs_dict, norm, N)
-        got_ms = maxscore(cs, norm, N, 10, np.float32)
+        got_ms = KERNELS["maxscore"](cs, norm, N, 10, np.float32)
         assert [d for d, _ in got_ms] == [d for d, _ in oracle], q

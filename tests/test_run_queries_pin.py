@@ -40,6 +40,7 @@ from dint_spark.queries import (DocMask, run_boolean_queries,
                                 run_proximity_queries, run_queries,
                                 run_queries_lm, run_span_near_queries)
 from dint_spark.tokenizer import assign_doc_ids, tokenize
+from oracle import ranked_or
 
 N_DOCS = 400
 
@@ -48,8 +49,8 @@ N_DOCS = 400
 def built(spark, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("pin") / "idx")
     shutil.rmtree(d, ignore_errors=True)
-    # small seg_chunk: head terms split into several segment rows, so the
-    # chunk-merge of ranked_and runs on both paths
+    # small seg_chunk: head terms split into several segment rows, so
+    # ranked_and joins a term's parts on both paths
     idx = build_index(spark, generate_pages(spark, N_DOCS, seed=23), d,
                       IndexConfig(num_buckets=2, input_tag="pin",
                                   seg_chunk=64, skew_chunk=32))
@@ -126,6 +127,42 @@ CASES = ["block_max_wand", "block_max_wand_vec", "wand", "maxscore",
          "avg_len_down", "df_overrides"]
 
 
+def _oracle_rows(idx, qs, kw) -> list:
+    """run_queries(idx, qs, k=10, **kw)'s expected rows from the scalar
+    walk (tests/oracle.py) on the driver, under the same statistics,
+    tombstones and filter; ranked_and's are the walk's full ranking
+    restricted to the docs holding every query term."""
+    from dint_spark.dint.codec import decode_list_bulk
+
+    dtype = kw.get("dtype", "float32")
+    DT = np.float32 if dtype == "float32" else np.float64
+    norms = Q._bm25_norms(idx, dtype, kw.get("avg_len_override"))
+    live = np.ones(idx.num_docs, dtype=bool)
+    if idx.has_deletes:
+        live[idx.deleted_docs()] = False
+    if kw.get("doc_filter") is not None:
+        live &= kw["doc_filter"].mask
+    live = DocMask.from_mask(live)
+    segs = Q._seg_map(idx.segments.select(*Q._BM25_SEG_COLS).collect())
+    rows = []
+    for qid, (tids, qfs) in enumerate(
+            Q._fold_queries(qs, kw.get("weighted", False))):
+        cs = Q._cursors(segs, tids, qfs, idx.num_docs, idx.docs_dict,
+                        idx.freqs_dict, DT, kw.get("df_overrides"),
+                        kw.get("idf_docs"))
+        top = ranked_or(cs, norms, idx.num_docs, idx.num_docs, DT, live)
+        if kw["algo"] == "ranked_and":
+            held = {}
+            for c in cs:
+                held.setdefault(c.term_id, set()).update(decode_list_bulk(
+                    c.payload, c.n, c.block_maxs, c.endpoints,
+                    c.freq_offsets, c.docs_dict, None)[0].tolist())
+            inter = set.intersection(*held.values()) if held else set()
+            top = [(d, sc) for d, sc in top if d in inter]
+        rows += [(qid, r, d, sc) for r, (d, sc) in enumerate(top[:10], 1)]
+    return sorted(rows)
+
+
 @pytest.fixture(scope="module")
 def deleted(spark, built, tmp_path_factory):
     """A copy of the pin index with every 17th doc deleted."""
@@ -140,10 +177,10 @@ def deleted(spark, built, tmp_path_factory):
 
 @pytest.mark.parametrize("case", CASES)
 def test_pinned_matches_fallback(spark, built, deleted, monkeypatch, case):
-    """Pinned rows equal the fallback's, and every kernel but the
-    intersection one (ranked_and) equals scalar ranked_or under the same
-    per-call statistics, filter and tombstones. The index's head terms
-    span several segment parts (seg_chunk=64)."""
+    """Pinned rows equal the fallback's and the scalar walk's
+    (tests/oracle.py; ranked_and: its AND-restricted ranking) under the
+    same per-call statistics, filter and tombstones. The index's head
+    terms span several segment parts (seg_chunk=64)."""
     d, idx, queries, df = built
     kw = dict(_cases(idx, queries, df)[case])
     qs = kw.pop("queries", queries)
@@ -152,9 +189,7 @@ def test_pinned_matches_fallback(spark, built, deleted, monkeypatch, case):
     pinned = run_queries(spark, idx, qs, k=10, **kw)
     assert Q._index_pin(spark, idx) is not None
     a = _rows(pinned)
-    if kw["algo"] != "ranked_and":
-        assert a == _rows(run_queries(spark, idx, qs, k=10,
-                                      **{**kw, "algo": "ranked_or"}))
+    assert a == _oracle_rows(idx, qs, kw)
     fb = _fallback_handle(spark, d, monkeypatch)
     fallback = run_queries(spark, fb, qs, k=10, **kw)
     b = _rows(fallback)

@@ -1,7 +1,8 @@
 """Docid sharding (round-2): a two-shard index over a split corpus must
 return top-k (doc_id AND score) identical to the single-shard build —
 per-shard kernels run with global (N, df, avg_len), so per-doc float32
-scores are bit-equal and the shard merge reproduces TopK's tie-breaks."""
+scores are bit-equal and the shard merge reproduces the kernels' (score
+desc, doc_id asc) tie-breaks."""
 
 import logging
 import os
@@ -179,8 +180,8 @@ def test_decode_cache_keys_by_dictionary_content():
     p2, bm2, ep2, fo2 = encode_list(np.array([801]), np.array([1]), d2, f2)
     assert p1 == p2, "fixture must reproduce the byte-identical payloads"
 
-    c1 = Cursor(1, bm1, ep1, fo1, p1, 5000, d1, f1, term_id=42)
-    c2 = Cursor(1, bm2, ep2, fo2, p2, 5000, d2, f2, term_id=42)
+    c1 = Cursor(1, bm1, ep1, fo1, p1, d1, f1, term_id=42)
+    c2 = Cursor(1, bm2, ep2, fo2, p2, d2, f2, term_id=42)
     assert _cache_key(c1) != _cache_key(c2)
     docs1, _ = _cached_full_decode(c1)   # populate the LRU
     docs2, _ = _cached_full_decode(c2)   # must NOT alias c1's entry
