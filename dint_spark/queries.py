@@ -48,6 +48,7 @@ hands the same body the same input.
 
 from __future__ import annotations
 
+import gc
 import hashlib
 import heapq
 import itertools
@@ -1047,6 +1048,23 @@ def _value(bc):
     return bc.value if bc is not None else None
 
 
+def _pin_segs(seg_bc) -> dict:
+    """The seg map of pin broadcast ``seg_bc``, as a worker reads it. A
+    reused worker runs a full gc.collect() after every task
+    (pyspark/daemon.py), and the map unpickles into ~10^5 tracked objects
+    (a memoryview and a managed buffer per array, a list per term): on
+    the 10k-doc perfbench index that walk took 0.1-0.2 s per task. So
+    the worker's first load collects once and freezes everything live
+    (gc.freeze), which no later collection walks. The map's containers
+    hold no cycles, so a dropped pin still frees by refcount."""
+    if hasattr(seg_bc, "_value"):  # loaded: Broadcast.value's own test
+        return seg_bc.value
+    segs = seg_bc.value
+    gc.collect()
+    gc.freeze()
+    return segs
+
+
 def _fold_queries(queries, weighted: bool = False) -> list:
     """(term ids asc, qfs) of each query, on arrays for the whole batch:
     duplicate ids within a query fold into an int count, or with
@@ -1276,7 +1294,10 @@ def _map_bins(spark, bins: list, work, schema) -> DataFrame:
 
     ``work`` is pickled by value with a copy of the module globals it
     names: it must reach worker state (the decode LRU) through
-    module-level functions such as _run_rows, never a global it names."""
+    module-level functions such as _run_rows, never a global it names.
+    A reused worker runs a full gc.collect() after every task, so state
+    that outlives the task must be frozen out of it when it loads, as
+    _pin_segs does for a pin."""
     if not bins:
         return spark.createDataFrame([], schema=schema)
     arrow = to_arrow_schema(schema)
@@ -1317,7 +1338,9 @@ def _execute(spark, index, items: list, body, schema,
     4-core host: ~74 ms with 4 tasks, ~52 ms with 1), so a light call
     runs as one task and a heavy batch still uses every core. A handle
     over PIN_BUDGET_BYTES has no pin and takes the one shuffle fallback
-    (_shuffle_execute); the two differ only in how the parts arrive."""
+    (_shuffle_execute); the two differ only in how the parts arrive.
+    A worker reads the pin through _pin_segs, whose first load freezes
+    it out of the collection each reused worker runs after a task."""
     if pin is None:
         pin = _index_pin(spark, index, positions)
         if pin is None:
@@ -1330,7 +1353,7 @@ def _execute(spark, index, items: list, body, schema,
     # shipped by value with copies of the globals it names: worker state
     # (the decode LRU) is reached only through module-level functions
     def work(rows):
-        return _run_rows(rows, seg_bc.value, dd_bc.value, fd_bc.value,
+        return _run_rows(rows, _pin_segs(seg_bc), dd_bc.value, fd_bc.value,
                          num_docs, DT, body, stats, _value(pos_bc))
 
     return _map_bins(spark, _lpt_bins(spark, items, [it[0] for it in items],
@@ -1646,8 +1669,8 @@ def query_latency_stats(spark: SparkSession, index, queries: list,
     body = _topk_body(algo, k, DT, num_docs, stats.norm_bc, srv.tomb_bc)
 
     def work(rows):
-        args = (seg_bc.value, dd_bc.value, fd_bc.value, num_docs, DT, body,
-                stats)
+        args = (_pin_segs(seg_bc), dd_bc.value, fd_bc.value, num_docs, DT,
+                body, stats)
         outs = []
         for row in rows:
             # the full query op, reference-style: cursor setup + kernel;

@@ -1,8 +1,9 @@
 """Physical-plan audit: capture .explain("formatted") for the engine's key
 dataflows and assert/record the scale-critical plan properties:
 
-  1. query batch: the segments parquet scan must carry PushedFilters on
-     term_id (row-group pruning via the IN-list) and prune columns
+  1. query batch: the pinned execute step is one MapInArrow over a Range,
+     with no parquet scan, exchange or join (the segments are pinned
+     executor-side, so a call scans and shuffles nothing)
   2. postings build: the (term, doc) aggregation must be a partial+final
      hash aggregate (map-side combine before the shuffle)
   3. ops projections (e.g. text_quality) must read only the needed columns
@@ -14,6 +15,7 @@ from __future__ import annotations
 
 import io
 import os
+import re
 import sys
 from contextlib import redirect_stdout
 
@@ -43,6 +45,27 @@ def _join_shapes(plan: str) -> str:
     return "\n".join(lines)
 
 
+def _tree(plan: str) -> str:
+    """The tree sketch that heads a formatted plan."""
+    return plan.split("\n\n", 1)[0]
+
+
+def _kernel_over_range(tree: str) -> bool:
+    """The query kernel runs as a MapInArrow whose child is a Range
+    (queries._map_bins: one id per task, the bins in the closure)."""
+    return re.search(r"MapInArrow \(\d+\)\n[ :|]*\+- (\* )?Range ",
+                     tree) is not None
+
+
+def _pinned_step(plan: str) -> bool:
+    """The pinned execute step (queries._execute) alone: the kernel's
+    MapInArrow over a Range, with no parquet scan, exchange or join."""
+    tree = _tree(plan)
+    return (_kernel_over_range(tree)
+            and not any(k in tree for k in ("Scan parquet", "Exchange",
+                                            "Join", "CartesianProduct")))
+
+
 def main() -> None:
     from dint_spark.corpus import pages_from_documents
     from dint_spark.index import IndexConfig, build_index, load_index
@@ -61,18 +84,20 @@ def main() -> None:
 
     sections: list[tuple[str, str, bool, str]] = []
 
-    # 1. query batch scan pruning
+    # 1. query batch: the pinned execute step
     from dint_spark.queries import run_queries
 
     q = run_queries(spark, idx, [[0, 3, 7], [1, 2]], algo="block_max_wand")
     p1 = plan_of(q)
-    ok1 = "PushedFilters" in p1 and "term_id" in p1.split("PushedFilters", 1)[1][:400]
     sections.append((
-        "Query batch: segments scan pruning",
+        "Query batch: pinned execute step, no scan",
         p1,
-        ok1,
-        "segments parquet scan lists term_id filters in PushedFilters "
-        "(row-group pruning; replaces the reference's EF endpoint index)",
+        _pinned_step(p1),
+        "one MapInArrow over a Range: the index's segments are pinned "
+        "executor-side on the handle's first call, and the query bins "
+        "ride in the task closure, so a call reads no parquet and has "
+        "no exchange or join (replaces the reference's EF endpoint "
+        "index lookups with in-memory seg-map lookups)",
     ))
 
     # 2. postings build: partial hash agg before the shuffle
@@ -449,22 +474,28 @@ def main() -> None:
 
     # 19. field collapsing: the ordinal->value dimension join on the
     # k-row output must be a broadcast hash LEFT join (missing group ->
-    # NULL facet); segments scan stays pruned.
+    # NULL facet) onto the pinned step's output; the only parquet scan
+    # is the dim sidecar's, and nothing shuffles.
     from dint_spark.facets import build_doc_facets, run_collapsed_queries
 
     fac19 = build_doc_facets(spark, docs, idx.num_docs, "source")
     p19 = plan_of(run_collapsed_queries(spark, idx, [[0, 3], [1]], fac19,
                                         k=5))
-    ok19 = ("BroadcastHashJoin" in p19 and "LeftOuter" in p19
-            and "CartesianProduct" not in p19
-            and "PushedFilters: [In(term_id" in p19)
+    tree19 = _tree(p19)
+    ok19 = (_kernel_over_range(tree19)
+            and "BroadcastHashJoin LeftOuter" in tree19
+            and tree19.count("Join") == 1
+            and tree19.count("Scan parquet") == 1 and "term_id" not in p19
+            and "Exchange" not in tree19.replace("BroadcastExchange", "")
+            and "CartesianProduct" not in tree19)
     sections.append((
         "field collapsing: broadcast dim join on the k-row output",
-        _join_shapes(p19),
+        p19,
         ok19,
         "the facet dimension (ordinal -> value, facet-cardinality rows) "
-        "broadcast-left-joins the |queries| x k collapsed output; the "
-        "segment scan keeps its term_id pushdown.",
+        "broadcast-left-joins the |queries| x k collapsed output of the "
+        "pinned step's MapInArrow over a Range; the dim sidecar is the "
+        "only parquet scan (no segments scan) and nothing shuffles.",
     ))
 
     # 20. percolate: the registered-query table must broadcast against
@@ -592,37 +623,30 @@ def main() -> None:
     ))
 
     # 25. nested rollup: child->parent join is an ARRAY LOOKUP inside the
-    # SAME applyInPandas group that ran the scoring kernel — exactly one
-    # FlatMapGroupsInPandas, pruned term_id scan, and NO join/exchange
-    # after the kernel (the rollup emits parent rows directly)
+    # per-query body that ran the scoring kernel — the plan is the pinned
+    # step alone, NO join/exchange after the kernel (the rollup emits
+    # parent rows directly)
     import numpy as np
 
     from dint_spark.nested import run_nested_queries
 
     ords = np.arange(idx.num_docs, dtype=np.int64) // 4
     p25 = plan_of(run_nested_queries(spark, idx, [[0, 3], [1]], ords))
-    # tree sketch prints top-down: every line ABOVE the kernel node is a
-    # consumer of its output — none may be a join or exchange
-    tree = p25.split("\n\n", 1)[0].splitlines()
-    kpos = next((j for j, ln in enumerate(tree)
-                 if "FlatMapGroupsInPandas" in ln), -1)
-    consumers = "\n".join(tree[:kpos])
-    ok25 = (kpos >= 0 and "PushedFilters" in p25
-            and "Join" not in consumers and "Exchange" not in consumers)
     sections.append((
         "nested: block-join rollup inside the kernel, no post-join",
-        _join_shapes(p25),
-        ok25,
+        p25,
+        _pinned_step(p25),
         "the parent-ordinal sidecar ships as a broadcast array and the "
         "child->parent rollup happens inside the scoring kernel's "
-        "applyInPandas group — one row per matched parent leaves the "
-        "worker; no (child, parent) join or second exchange exists in "
-        "the plan, so the 'join' costs an array gather at any scale.",
+        "per-query body — one row per matched parent leaves the "
+        "worker; the plan is the pinned step's MapInArrow over a Range, "
+        "with no (child, parent) join or exchange, so the 'join' costs "
+        "an array gather at any scale.",
     ))
 
     # 26. geo-filtered search: a DocMask filter must not change the plan
-    # class — same pruned segments scan, no corpus-sized join (the mask
-    # is a broadcast bitmap applied in-kernel)
+    # class — the same pinned step, no corpus-sized join (the mask is a
+    # broadcast bitmap applied in-kernel)
     from dint_spark.geo import geo_bbox_mask
 
     lat = np.abs((np.arange(idx.num_docs, dtype=np.int64)
@@ -632,18 +656,15 @@ def main() -> None:
     dm = geo_bbox_mask(lat, lon, 0, -1800000000, 900000000, 1800000000)
     p26 = plan_of(run_queries(spark, idx, [[0, 3], [1]],
                               algo="block_max_wand", doc_filter=dm))
-    ok26 = ("PushedFilters" in p26
-            and "term_id" in p26.split("PushedFilters", 1)[1][:400]
-            and "CartesianProduct" not in p26)
     sections.append((
         "geo: bbox DocMask keeps the standard filtered-search plan",
-        _join_shapes(p26),
-        ok26,
+        p26,
+        _pinned_step(p26),
         "geo_bounding_box/geo_distance filters pack into the DocMask "
         "bitmap (1 bit/doc, broadcast, shard-local under docid "
         "sharding) — the query plan is IDENTICAL to unfiltered search "
-        "(pruned term_id scan, no geometry join): geo selectivity costs "
-        "zero plan complexity at any corpus size.",
+        "(the pinned step's MapInArrow over a Range, no geometry join): "
+        "geo selectivity costs zero plan complexity at any corpus size.",
     ))
 
     md = ["# PLANS — physical-plan audit (scale-critical properties)\n"]

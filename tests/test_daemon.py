@@ -1,12 +1,15 @@
-"""Pins the worker daemon's zip-directory patch (dint_spark/daemon.py).
+"""Pins the worker daemon's zip-directory patch and its gc freeze
+(dint_spark/daemon.py).
 
 importlib.invalidate_caches() must not re-read an unchanged zip archive,
 yet must still pick up a rewritten one. On Python >= 3.13 the stdlib
-already behaves this way and the daemon leaves zipimport alone.
+already behaves this way and the daemon leaves zipimport alone. Workers
+fork from a daemon that froze its imports out of the cyclic GC.
 """
 
 import importlib
 import os
+import subprocess
 import sys
 import zipfile
 import zipimport
@@ -109,3 +112,33 @@ def test_workers_do_not_reread_spark_archives(spark):
         assert any(os.path.basename(z).startswith("spark-core")
                    for z in zips), zips
         assert row["reads"] == 0
+
+
+def test_workers_start_frozen(spark):
+    """The daemon freezes its imports (gc.freeze) before manager() forks
+    any worker, so a worker's per-task gc.collect() never walks them.
+    Run as the daemon runs, with manager() stubbed out, it reports a
+    freeze count that covers the imported numpy; and a get_spark worker
+    reports a frozen generation too."""
+    stub = ("import gc, runpy, pyspark.daemon\n"
+            "def manager():\n"
+            "    import numpy\n"
+            "    ids = {id(o) for o in gc.get_objects()}\n"
+            "    print(gc.get_freeze_count(), id(numpy.__dict__) in ids)\n"
+            "pyspark.daemon.manager = manager\n"
+            "runpy.run_module('dint_spark.daemon', run_name='__main__')\n")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run([sys.executable, "-c", stub], cwd=root, check=True,
+                         capture_output=True, text=True).stdout.split()
+    assert int(out[0]) > 10_000 and out[1] == "False", out
+
+    def freeze_count(_):
+        import gc
+
+        import pandas as pd
+
+        yield pd.DataFrame({"frozen": [gc.get_freeze_count()]})
+
+    row = (spark.range(0, 1, 1, 1).mapInPandas(freeze_count, "frozen long")
+           .toPandas().iloc[0])
+    assert row["frozen"] > 0

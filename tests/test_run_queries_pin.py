@@ -234,6 +234,46 @@ def test_workers_read_the_module_lru(spark, built):
                for pid, (_, h) in after.items())
 
 
+def test_pin_is_out_of_worker_gc(spark, built):
+    """A reused worker runs a full gc.collect() after every task, so the
+    pin a worker loads must be frozen out of it (queries._pin_segs): a
+    body run through _execute on the pin finds none of the pin's objects
+    among the worker's collected ones — the seg-map dict, its per-term
+    lists and part tuples, and the memoryview and managed buffer behind
+    each unpickled array. The body runs on the pin itself: a probe job
+    without the pin's broadcasts makes the worker drop the pin."""
+    _, idx, queries, _ = built
+    seg_bc = Q._index_pin(spark, idx).seg_bc
+    schema = T.StructType([T.StructField(c, T.LongType(), False)
+                           for c in ("query_id", "objects", "collected")])
+
+    def body(qid, item, cursors):
+        import gc
+
+        def buffers(a):
+            while isinstance(a, np.ndarray):
+                a = a.base
+            return [] if a is None else [a, *gc.get_referents(a)]
+
+        segs = seg_bc.value
+        objs = [segs]
+        for parts in segs.values():
+            objs.append(parts)
+            for part in parts:
+                objs.append(part)
+                for a in part[2:6]:
+                    objs.extend(buffers(a))
+        collected = {id(o) for o in gc.get_objects()}
+        return [len(objs)], [sum(id(o) in collected for o in objs)]
+
+    items = Q._fold_queries([q for q in queries if q][:4])
+    out = Q._execute(spark, idx, items, body, schema).collect()
+    assert out
+    for r in out:
+        assert r["objects"] > 4 * len(seg_bc.value)
+        assert r["collected"] == 0, r
+
+
 @pytest.fixture(scope="module")
 def sidecars(spark, built):
     """A facet column with missing docs, an i64 doc value with missing
